@@ -205,30 +205,7 @@ def main() -> None:
     # line must stay compact and be printed LAST.
     full = dict(summary, rows=rows)
 
-    # The driver records only the LAST 2000 stdout chars (BENCH_r*.json
-    # "tail") — at 70 entries the 3-decimal line outgrew it, so degrade
-    # gracefully: drop sidecar-only metadata first, then per-query
-    # precision (10 ms resolution is ample for round-over-round
-    # comparisons; the sidecar keeps 3 decimals + row counts).
-    def _fits(s):
-        # 2000-char tail minus the trailing newline, minus a small
-        # margin for stray final stderr/stdout interleaving
-        return len(json.dumps(s, separators=(",", ":"))) <= 1985
-    if not _fits(summary):
-        for k in ("stream_batches", "stream_matches", "repeat",
-                  "wall_sec", "cpus"):
-            summary.pop(k, None)
-    for nd in (2, 1):
-        if _fits(summary):
-            break
-        summary["queries"] = {k: round(v, nd)
-                              for k, v in summary["queries"].items()}
-        summary["value"] = round(sum(summary["queries"].values()), 2)
-    if not _fits(summary):
-        # last resort at 73+ entries: host health lives in the sidecar
-        # (BENCH_LOCAL.json) and BENCH/*.md — drop it from the compact
-        # line rather than let the driver's tail capture truncate JSON
-        summary.pop("cpu_health_mips", None)
+    _compact(summary)
     try:
         sidecar = os.path.join(
             os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"
@@ -239,6 +216,36 @@ def main() -> None:
         pass
     print(json.dumps({"rows": rows}, separators=(",", ":")), file=sys.stderr)
     print(json.dumps(summary, separators=(",", ":")))
+
+
+def _fits(summary) -> bool:
+    # a bench record (BENCH_r*.json "tail") keeps only the LAST 2000
+    # stdout chars: 2000 minus the trailing newline, minus a small margin
+    # for stray final stderr/stdout interleaving
+    return len(json.dumps(summary, separators=(",", ":"))) <= 1985
+
+
+def _compact(summary) -> None:
+    """Shrink the compact stdout line in place until it fits the tail
+    capture: drop sidecar-only metadata, then per-query precision to 10
+    ms, then the common ``cep_`` prefix of entry names, then precision
+    to 100 ms (ample for round-over-round comparisons; the sidecar
+    keeps 3 decimals, full names and row counts).  Host health always
+    stays on the line: a bench number without it cannot be compared."""
+    if _fits(summary):
+        return
+    for k in ("stream_batches", "stream_matches", "repeat", "wall_sec", "cpus"):
+        summary.pop(k, None)
+    steps = (
+        lambda q: {k: round(v, 2) for k, v in q.items()},
+        lambda q: {(k[4:] if k.startswith("cep_") else k): v for k, v in q.items()},
+        lambda q: {k: round(v, 1) for k, v in q.items()},
+    )
+    for step in steps:
+        if _fits(summary):
+            return
+        summary["queries"] = step(summary["queries"])
+        summary["value"] = round(sum(summary["queries"].values()), 2)
 
 
 if __name__ == "__main__":

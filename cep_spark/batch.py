@@ -2,12 +2,16 @@
 
 Two physical strategies (SURVEY.md §3.4 / §4.2):
 
-* ``run_batch``  — groupBy(key).applyInPandas over (ts, tiebreak)-sorted
-  groups, advancing the compiled NFA with NumPy/pandas *vectorized over
-  the partial-match set* per event (no per-row Python in the inner
-  candidate evaluation).  Handles everything incl. unbounded Kleene.
-  The same group matcher backs the streaming processor (stream.py), so
-  batch≡stream parity is structural.
+* ``run_batch``  — repartition(key) + sortWithinPartitions(key, ts,
+  tiebreak) + one mapInPandas per partition.  The compiled NFA advances
+  every key group of the partition in LOCKSTEP (``advance_groups``):
+  step t applies the t-th firing event of each key that has one, as
+  NumPy operations over the union of all keys' partial-match tables,
+  so a partition costs as many Python steps as its busiest key has
+  firing events — not one per event.  Handles everything incl.
+  unbounded Kleene.  The streaming processor (stream.py) runs the same
+  advance over one key (``advance_core``), so batch≡stream parity is
+  structural.
 
 * ``plan_join``  (join_planner.py) — fixed-arity patterns lowered to
   pure DataFrame self-joins: all-Catalyst, whole-stage-codegen'd, the
@@ -18,6 +22,8 @@ Replaces the reference's single-threaded evaluation-tree loop
 """
 
 from __future__ import annotations
+
+from itertools import repeat
 
 import numpy as np
 import pandas as pd
@@ -51,6 +57,16 @@ def cpu_parallelism(df) -> int:
         return int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
         return spark.sparkContext.defaultParallelism
+
+
+def group_bounds(*cols) -> np.ndarray:
+    """Row offsets of the key groups of a frame sorted by ``cols``:
+    group g is rows [bounds[g], bounds[g + 1])."""
+    n = len(cols[0])
+    change = np.zeros(max(n - 1, 0), dtype=bool)
+    for c in cols:
+        change |= c[1:] != c[:-1]
+    return np.concatenate([[0], np.nonzero(change)[0] + 1, [n]]).astype(np.int64)
 
 
 def _obj_array(items) -> np.ndarray:
@@ -101,9 +117,15 @@ class _VarView:
 
 
 class _Partials:
-    """Columnar partial-match table for one NFA state."""
+    """Columnar partial-match table for one NFA state.
 
-    __slots__ = ("scalar", "kleene", "first_pos", "last_pos", "first_ts")
+    One table holds the partials of EVERY key group of a partition:
+    row j belongs to key group ``grp[j]`` and its positions index the
+    partition-wide column store.  Rows of one group keep their
+    insertion order (oldest first), which the state guard and the
+    emission order rely on."""
+
+    __slots__ = ("scalar", "kleene", "first_pos", "last_pos", "first_ts", "grp")
 
     def __init__(self, scalar_vars, kleene_vars):
         self.scalar = {v: np.empty(0, dtype=np.int64) for v in scalar_vars}
@@ -111,40 +133,90 @@ class _Partials:
         self.first_pos = np.empty(0, dtype=np.int64)
         self.last_pos = np.empty(0, dtype=np.int64)
         self.first_ts = np.empty(0, dtype=np.int64)  # ns epoch
+        self.grp = np.empty(0, dtype=np.int64)
+
+    @classmethod
+    def of(cls, scalar, kleene, first_pos, last_pos, first_ts, grp) -> "_Partials":
+        out = cls.__new__(cls)
+        out.scalar, out.kleene = scalar, kleene
+        out.first_pos, out.last_pos, out.first_ts, out.grp = first_pos, last_pos, first_ts, grp
+        return out
 
     def __len__(self):
         return len(self.first_pos)
 
     def select(self, mask_or_idx):
-        out = _Partials.__new__(_Partials)
-        out.scalar = {v: a[mask_or_idx] for v, a in self.scalar.items()}
-        out.kleene = {v: a[mask_or_idx] for v, a in self.kleene.items()}
-        out.first_pos = self.first_pos[mask_or_idx]
-        out.last_pos = self.last_pos[mask_or_idx]
-        out.first_ts = self.first_ts[mask_or_idx]
-        return out
+        return _Partials.of(
+            {v: a[mask_or_idx] for v, a in self.scalar.items()},
+            {v: a[mask_or_idx] for v, a in self.kleene.items()},
+            self.first_pos[mask_or_idx], self.last_pos[mask_or_idx],
+            self.first_ts[mask_or_idx], self.grp[mask_or_idx],
+        )
 
-    def extend(self, other: "_Partials"):
-        for v in self.scalar:
-            self.scalar[v] = np.concatenate([self.scalar[v], other.scalar[v]])
-        for v in self.kleene:
-            self.kleene[v] = np.concatenate([self.kleene[v], other.kleene[v]])
-        self.first_pos = np.concatenate([self.first_pos, other.first_pos])
-        self.last_pos = np.concatenate([self.last_pos, other.last_pos])
-        self.first_ts = np.concatenate([self.first_ts, other.first_ts])
+    @staticmethod
+    def concat(parts: list) -> "_Partials":
+        if len(parts) == 1:
+            return parts[0]
+        p0 = parts[0]
+        return _Partials.of(
+            {v: np.concatenate([p.scalar[v] for p in parts]) for v in p0.scalar},
+            {v: np.concatenate([p.kleene[v] for p in parts]) for v in p0.kleene},
+            np.concatenate([p.first_pos for p in parts]),
+            np.concatenate([p.last_pos for p in parts]),
+            np.concatenate([p.first_ts for p in parts]),
+            np.concatenate([p.grp for p in parts]),
+        )
 
 
-def _eval_conds(conds, store, partials, cur_var, cur_row, extra_scalar=None,
+def _last_elems(tuples, n: int, k: int = 1) -> np.ndarray:
+    """k-th-from-last element of each Kleene tuple (-1 when shorter)."""
+    return np.fromiter(
+        (t[-k] if len(t) >= k else -1 for t in tuples), dtype=np.int64, count=n
+    )
+
+
+def _ranges(lo, hi):
+    """Expand per-row half-open index ranges [lo, hi) into (row, index)
+    pairs, row-major — the vectorized form of concatenating
+    ``arange(lo[j], hi[j])`` over rows j with a non-empty range."""
+    counts = np.maximum(hi - lo, 0)
+    rows = np.repeat(np.arange(len(counts)), counts)
+    offs = np.cumsum(counts) - counts
+    idx = np.arange(len(rows)) - offs[rows] + lo[rows]
+    return rows, idx
+
+
+def _seg_searchsorted(a, lo, hi, x, side):
+    """``np.searchsorted`` of each x[j] within its own sorted segment
+    a[lo[j]:hi[j]], returning indices into ``a``.  A partition's
+    timestamps are sorted only within each key group, so a window bound
+    is searched inside the group's slice: one vectorized bisection
+    step over all queries per halving."""
+    lo = np.asarray(lo, dtype=np.int64).copy()
+    hi = np.asarray(hi, dtype=np.int64).copy()
+    while True:
+        act = lo < hi
+        if not act.any():
+            return lo
+        mid = (lo + hi) // 2
+        v = a[np.where(act, mid, 0)]
+        right = act & ((v < x) if side == "left" else (v <= x))
+        lo = np.where(right, mid + 1, lo)
+        hi = np.where(act & ~right, mid, hi)
+
+
+def _eval_conds(conds, store, partials, cur_var, cur, extra_scalar=None,
                 var_group=None, aligned=()):
     """Vectorized evaluation of conjuncts over a partial table.
 
-    cur_var's attributes come from the current event (scalars, broadcast);
-    bound vars gather from the store.  A conjunct referencing an
-    already-bound Kleene variable evaluates per ELEMENT of each
-    partial's tuple via (partial, element) pair expansion — ALL elements
-    must satisfy it.  ``aligned`` (composite-Kleene group mates of the
-    slot being bound) evaluate as the CURRENT repetition's element —
-    the last element of their tuple.  Returns boolean ndarray."""
+    ``cur`` holds, per partial, the position of its key's current event:
+    cur_var's attributes gather from there; bound vars gather from the
+    store.  A conjunct referencing an already-bound Kleene variable
+    evaluates per ELEMENT of each partial's tuple via (partial, element)
+    pair expansion — ALL elements must satisfy it.  ``aligned``
+    (composite-Kleene group mates of the slot being bound) evaluate as
+    the CURRENT repetition's element — the last element of their tuple.
+    Returns boolean ndarray."""
     n = len(partials)
     mask = np.ones(n, dtype=bool)
     if not conds:
@@ -156,15 +228,14 @@ def _eval_conds(conds, store, partials, cur_var, cur_row, extra_scalar=None,
         aligned_pos = {}
         for v in aligned:
             if v in partials.kleene and v not in extra:
-                last_pos = np.fromiter(
-                    (t[-1] for t in partials.kleene[v]), dtype=np.int64, count=n
-                )
+                last_pos = _last_elems(partials.kleene[v], n)
                 extra[v] = store.gather(last_pos)
                 # pair-expansion path (a conjunct ALSO referencing an
                 # independent leaf Kleene var) needs the raw positions
                 # to gather per (partial, element) pair
                 aligned_pos[v] = last_pos
         extra_scalar = extra
+    cur_row = store.gather(cur)
 
     class _Env:
         def __getitem__(self, var):
@@ -185,7 +256,7 @@ def _eval_conds(conds, store, partials, cur_var, cur_row, extra_scalar=None,
         ]
         if kref:
             mask &= _eval_kleene_cond(
-                c, kref, store, partials, cur_var, cur_row, var_group,
+                c, kref, store, partials, cur_var, cur, var_group,
                 extra_pos=aligned_pos,
             )
             continue
@@ -198,7 +269,7 @@ def _eval_conds(conds, store, partials, cur_var, cur_row, extra_scalar=None,
     return mask
 
 
-def _eval_kleene_cond(c, kref, store, partials, cur_var, cur_row, var_group=None,
+def _eval_kleene_cond(c, kref, store, partials, cur_var, cur, var_group=None,
                       extra_pos=None):
     """ALL-combinations evaluation of a conjunct over each partial's
     bound Kleene tuples for variables `kref` (cross-variable conditions
@@ -217,10 +288,11 @@ def _eval_kleene_cond(c, kref, store, partials, cur_var, cur_row, var_group=None
     slot being bound (their evaluation element is the CURRENT
     repetition's, i.e. the last of their tuple — _eval_conds keeps them
     out of kref); a conjunct pairing such a var with an independent
-    leaf Kleene var gathers them per expanded pair here.  Over the
-    run, each repetition's completing bind contributes (all leaf
-    elements) x (that repetition's element) — accumulating to exactly
-    the chain expansion's cross product."""
+    leaf Kleene var gathers them per expanded pair here, as it does
+    the current event (``cur``).  Over the run, each repetition's
+    completing bind contributes (all leaf elements) x (that
+    repetition's element) — accumulating to exactly the chain
+    expansion's cross product."""
     n = len(partials)
     if n == 0:
         return np.ones(0, dtype=bool)
@@ -287,7 +359,7 @@ def _eval_kleene_cond(c, kref, store, partials, cur_var, cur_row, var_group=None
             if var in views:
                 return views[var]
             if var == cur_var:
-                return cur_row
+                return store.gather(cur[pair_partial])
             if extra_pos is not None and var in extra_pos:
                 # aligned group mate: current repetition's element,
                 # gathered per expanded pair
@@ -316,10 +388,7 @@ def _br_guard_applies(spec, partials):
 
     def lastel(v):
         if v in partials.kleene:
-            return np.fromiter(
-                (t[-1] if len(t) else -1 for t in partials.kleene[v]),
-                dtype=np.int64, count=n,
-            )
+            return _last_elems(partials.kleene[v], n)
         if v in partials.scalar:
             return partials.scalar[v]
         return np.full(n, -1, dtype=np.int64)
@@ -336,17 +405,59 @@ def _br_guard_applies(spec, partials):
     return (bl >= 0) & (bl == mx), bl
 
 
-def _gap_ok(spec_positions, spec, store, partials, cur_var, cur_row, i,
+def _neg_pairs_bad(np_pos, lo, hi, spec, store, partials, env_extra, exclude_bound):
+    """Shared tail of the negation checks: expand each partial's
+    candidate range np_pos[lo:hi] into (partial, neg event) pairs,
+    optionally drop events bound to the partial's own variables, apply
+    the spec's multi-variable conjuncts, and return per-partial
+    "a qualifying negative event exists"."""
+    n = len(partials)
+    pair_partial, idx = _ranges(lo, hi)
+    if len(pair_partial) == 0:
+        return np.zeros(n, dtype=bool)
+    pair_neg = np_pos[idx]
+    sub = partials.select(pair_partial)
+    keep = np.ones(len(pair_partial), dtype=bool)
+    if exclude_bound:
+        for arr in sub.scalar.values():
+            keep &= pair_neg != arr
+        for karr in sub.kleene.values():
+            keep &= np.fromiter(
+                (int(pn) not in t for pn, t in zip(pair_neg, karr)),
+                dtype=bool, count=len(pair_partial),
+            )
+    if spec.multi:
+        neg_view = store.gather(pair_neg)
+        extra = env_extra(pair_partial) if env_extra else {}
+
+        class _Env:
+            def __getitem__(self, var):
+                if var == spec.var:
+                    return neg_view
+                if var in extra:
+                    return extra[var]
+                return store.gather(sub.scalar[var])
+
+        env = _Env()
+        for c in spec.multi:
+            r = c.pd(env)
+            keep = keep & (np.asarray(r, dtype=bool)
+                           if not isinstance(r, (bool, np.bool_)) else r)
+    return np.bincount(pair_partial[keep], minlength=n) > 0
+
+
+def _gap_ok(spec_positions, spec, store, partials, cur_var, cur, seg_lo,
             pre_off=None):
     """For each partial: True if NO qualifying negative event lies strictly
-    inside the gap ending at i.  The gap's left boundary is the latest
-    bound position among the spec's STRUCTURAL predecessors (pre_vars)
-    — NOT the partial's last_pos, which overshoots when another
-    variable (an And_ sibling) binds inside the gap.  Events bound to
-    other variables of the partial are not negation candidates (pinned
-    semantics, same as _span_ok and the replica).  Vectorized via
-    searchsorted (+ pair expansion only when the neg condition
-    references bound variables)."""
+    inside the gap ending at its key's current event ``cur``.  The
+    gap's left boundary is the latest bound position among the spec's
+    STRUCTURAL predecessors (pre_vars) — NOT the partial's last_pos,
+    which overshoots when another variable (an And_ sibling) binds
+    inside the gap — and never reaches below the key's first row
+    ``seg_lo``.  Events bound to other variables of the partial are
+    not negation candidates (pinned semantics, same as _span_ok and
+    the replica).  Vectorized via searchsorted (+ pair expansion only
+    when the neg condition references bound variables)."""
     np_pos = spec_positions
     n = len(partials)
     if len(np_pos) == 0:
@@ -357,11 +468,7 @@ def _gap_ok(spec_positions, spec, store, partials, cur_var, cur_row, i,
             if v in partials.scalar:
                 np.maximum(left, partials.scalar[v], out=left)
             elif v in partials.kleene:
-                lastel = np.fromiter(
-                    (t[-1] if len(t) else -1 for t in partials.kleene[v]),
-                    dtype=np.int64, count=n,
-                )
-                np.maximum(left, lastel, out=left)
+                np.maximum(left, _last_elems(partials.kleene[v], n), out=left)
     else:
         left = partials.last_pos
     if spec.br_guard:
@@ -378,62 +485,26 @@ def _gap_ok(spec_positions, spec, store, partials, cur_var, cur_row, i,
         off1, off2 = pre_off
         for v in off1:
             if v in partials.kleene:
-                np.maximum(left, np.fromiter(
-                    (t[-1] if len(t) else -1 for t in partials.kleene[v]),
-                    dtype=np.int64, count=n,
-                ), out=left)
+                np.maximum(left, _last_elems(partials.kleene[v], n), out=left)
             elif v in partials.scalar:
                 np.maximum(left, partials.scalar[v], out=left)
         for v in off2:
             if v in partials.kleene:
-                np.maximum(left, np.fromiter(
-                    (t[-2] if len(t) >= 2 else -1
-                     for t in partials.kleene[v]),
-                    dtype=np.int64, count=n,
-                ), out=left)
+                np.maximum(left, _last_elems(partials.kleene[v], n, 2), out=left)
+    left = np.maximum(left, seg_lo - 1)
     lo = np.searchsorted(np_pos, left, side="right")
-    hi = int(np.searchsorted(np_pos, i, side="left"))
-    counts = hi - lo
+    hi = np.searchsorted(np_pos, cur, side="left")
     if spec.br_guard:
-        counts = np.where(applies, counts, 0)
-    hot = np.nonzero(counts > 0)[0]
-    if len(hot) == 0:
+        hi = np.where(applies, hi, lo)
+    if not (hi > lo).any():
         return np.ones(n, dtype=bool)
     # expand (partial, neg event) pairs; exclude events bound to the
     # partial's own positive variables, then evaluate any multi-var
     # conditions vectorized
-    reps = counts[hot]
-    pair_partial = np.repeat(hot, reps)
-    pair_neg = np.concatenate([np_pos[lo[h] : hi] for h in hot])
-    sub = partials.select(pair_partial)
-    keep = np.ones(len(pair_partial), dtype=bool)
-    for v, arr in sub.scalar.items():
-        keep &= pair_neg != arr
-    for v, karr in sub.kleene.items():
-        keep &= np.fromiter(
-            (int(pn) not in t for pn, t in zip(pair_neg, karr)),
-            dtype=bool, count=len(pair_partial),
-        )
-    if not spec.multi:
-        bad = np.bincount(pair_partial[keep], minlength=n) > 0
-        return ~bad
-    neg_view = store.gather(pair_neg)
-
-    class _Env:
-        def __getitem__(self, var):
-            if var == spec.var:
-                return neg_view
-            if var == cur_var:
-                return cur_row
-            return store.gather(sub.scalar[var])
-
-    env = _Env()
-    m = keep
-    for c in spec.multi:
-        r = c.pd(env)
-        m &= np.asarray(r, dtype=bool) if not isinstance(r, (bool, np.bool_)) else r
-    bad = np.bincount(pair_partial[m], minlength=n) > 0
-    return ~bad
+    return ~_neg_pairs_bad(
+        np_pos, lo, hi, spec, store, partials,
+        lambda pp: {cur_var: store.gather(cur[pp])}, exclude_bound=True,
+    )
 
 
 def _span_ok(spec_positions, spec, store, partials, alt):
@@ -444,91 +515,47 @@ def _span_ok(spec_positions, spec, store, partials, alt):
     np_pos = spec_positions
     lo = np.searchsorted(np_pos, partials.first_pos, side="right")
     hi = np.searchsorted(np_pos, partials.last_pos, side="left")
-    counts = hi - lo
-    ok = np.ones(len(partials), dtype=bool)
-    hot = np.nonzero(counts > 0)[0]
-    if len(hot) == 0:
-        return ok
-    reps = counts[hot]
-    pair_partial = np.repeat(hot, reps)
-    pair_neg = np.concatenate([np_pos[lo[h] : hi[h]] for h in hot])
-    sub = partials.select(pair_partial)
-    # exclude events bound to positive variables (scalar AND kleene tuples)
-    keep = np.ones(len(pair_partial), dtype=bool)
-    for v, arr in sub.scalar.items():
-        keep &= pair_neg != arr
-    for v, karr in sub.kleene.items():
-        keep &= np.fromiter(
-            (int(pn) not in t for pn, t in zip(pair_neg, karr)),
-            dtype=bool, count=len(pair_partial),
-        )
-    neg_view = store.gather(pair_neg)
-
-    class _Env:
-        def __getitem__(self, var):
-            if var == spec.var:
-                return neg_view
-            return store.gather(sub.scalar[var])
-
-    env = _Env()
-    m = keep
-    for c in spec.multi:
-        r = c.pd(env)
-        m = m & (np.asarray(r, dtype=bool) if not isinstance(r, (bool, np.bool_)) else r)
-    bad = np.bincount(pair_partial[m], minlength=len(partials)) > 0
-    return ~bad
+    if not (hi > lo).any():
+        return np.ones(len(partials), dtype=bool)
+    return ~_neg_pairs_bad(np_pos, lo, hi, spec, store, partials, None,
+                           exclude_bound=True)
 
 
-def _edge_ok(spec_positions, spec, store, partials, ts_ns, w_ns, leading: bool):
+def _edge_ok(spec_positions, spec, store, partials, ts_ns, w_ns, leading: bool,
+             bounds):
     """Leading/trailing negation (accept-time, window-bounded).
 
     leading:  no qualifying neg strictly before first_pos with
               last.ts - neg.ts <= window;
     trailing: no qualifying neg strictly after last_pos with
               neg.ts - first.ts <= window.
-    Positions are (ts, tiebreak)-sorted, so position order IS the event
-    order and ts_ns[spec_positions] is non-decreasing — both bounds are
-    searchsorted lookups."""
+    Positions are (ts, tiebreak)-sorted within a key, so position order
+    IS the event order and ts_ns[spec_positions] is non-decreasing per
+    key — both bounds are searchsorted lookups.  ``bounds`` (the key
+    groups' row offsets) confines each partial's look-back/look-ahead to
+    its own key's rows."""
     if len(spec_positions) == 0:
         return np.ones(len(partials), dtype=bool)
     np_pos = spec_positions
     neg_ts = ts_ns[np_pos]
     if leading:
         hi = np.searchsorted(np_pos, partials.first_pos, side="left")
-        lo = np.searchsorted(neg_ts, ts_ns[partials.last_pos] - w_ns, side="left")
+        glo = np.searchsorted(np_pos, bounds[partials.grp], side="left")
+        lo = _seg_searchsorted(neg_ts, glo, hi, ts_ns[partials.last_pos] - w_ns, "left")
     else:
         lo = np.searchsorted(np_pos, partials.last_pos, side="right")
-        hi = np.searchsorted(neg_ts, partials.first_ts + w_ns, side="right")
-    counts = np.maximum(hi - lo, 0)
+        ghi = np.searchsorted(np_pos, bounds[partials.grp + 1], side="left")
+        hi = _seg_searchsorted(neg_ts, lo, ghi, partials.first_ts + w_ns, "right")
     if spec.br_guard:
         # trailing Neg inside an Or_ branch: window-bounded look-ahead
         # applies only when the FINAL repetition chose the branch
-        counts = np.where(_br_guard_applies(spec, partials)[0], counts, 0)
+        hi = np.where(_br_guard_applies(spec, partials)[0], hi, lo)
     if not spec.multi:
-        return counts <= 0
-    ok = np.ones(len(partials), dtype=bool)
-    hot = np.nonzero(counts > 0)[0]
-    if len(hot) == 0:
-        return ok
-    reps = counts[hot]
-    pair_partial = np.repeat(hot, reps)
-    pair_neg = np.concatenate([np_pos[lo[h] : hi[h]] for h in hot])
-    sub = partials.select(pair_partial)
-    neg_view = store.gather(pair_neg)
-
-    class _Env:
-        def __getitem__(self, var):
-            if var == spec.var:
-                return neg_view
-            return store.gather(sub.scalar[var])
-
-    env = _Env()
-    m = np.ones(len(pair_partial), dtype=bool)
-    for c in spec.multi:
-        r = c.pd(env)
-        m = m & (np.asarray(r, dtype=bool) if not isinstance(r, (bool, np.bool_)) else r)
-    bad = np.bincount(pair_partial[m], minlength=len(partials)) > 0
-    return ~bad
+        return hi <= lo
+    if not (hi > lo).any():
+        return np.ones(len(partials), dtype=bool)
+    return ~_neg_pairs_bad(np_pos, lo, hi, spec, store, partials, None,
+                           exclude_bound=False)
 
 
 def unary_masks(cp: CompiledPattern, cols: dict, n: int, start: int = 0,
@@ -541,7 +568,7 @@ def unary_masks(cp: CompiledPattern, cols: dict, n: int, start: int = 0,
 
     ``start`` > 0 (the incremental streaming executor resuming over a
     persisted buffer): SLOT masks are evaluated only over rows
-    [start, n) — `advance_core` never probes a slot mask below its
+    [start, n) — `advance_groups` never probes a slot mask below its
     resume point, so rows [0, start) are left False.  NEGATION masks
     stay full-range: gap/span/edge checks scan candidate positions
     across the whole retained buffer.  This keeps per-batch mask cost
@@ -613,18 +640,53 @@ def match_core(cp: CompiledPattern, store, ts_ns, masks, cap=None, stats=None) -
 
 def advance_core(cp: CompiledPattern, store, ts_ns, masks, tables_in=None, start=0,
                  cap=None, stats=None):
-    """Resumable NFA advance: process events [start, n) against partial
-    tables carried over from a previous call (the incremental streaming
-    executor persists them in the state store and advances only over
-    newly-sealed arrivals — stream.py).  `tables_in` maps
-    alt_id -> {state_sid: _Partials} with positions indexing `store`;
-    returns (matches, tables_out) — tables_out is safe to persist.
-    tables_in=None, start=0 is a full from-scratch match.
+    """Resumable NFA advance over ONE key group: ``advance_groups`` with
+    the whole store as the group.  The incremental streaming executor
+    persists the returned tables in the state store and resumes over
+    newly-sealed arrivals (``tables_in``, ``start``) — stream.py.
+    Returns (matches, tables_out)."""
+    res, _, tables = advance_groups(
+        cp, store, ts_ns, masks, np.array([0, len(ts_ns)], dtype=np.int64),
+        tables_in=tables_in, start=start, cap=cap, stats=stats,
+    )
+    return res, tables
+
+
+def advance_groups(cp: CompiledPattern, store, ts_ns, masks, bounds, tables_in=None,
+                   start=0, cap=None, stats=None):
+    """Lockstep NFA advance over every key group of a sorted partition.
+
+    ``store``/``ts_ns``/``masks`` cover the whole partition, sorted by
+    (key, ts, tiebreak); key group g is rows [bounds[g], bounds[g+1]).
+    Step t applies the t-th FIRING event (an event some slot's unary
+    mask accepts) of every group that has one, so a partition takes as
+    many steps as its busiest key has firing events.  Each step is a
+    NumPy operation over the union of all groups' partial tables
+    (_Partials rows carry their group); the current position, its
+    timestamp and the slot-mask gate are per-partial arrays gathered at
+    the current event of the partial's key.  Keys never interact:
+    negation searches are clamped to the key's own rows, window expiry
+    and the state guard touch only keys stepping now, and a key's
+    partials leave the working tables after its last firing event.
+    The result is exactly the per-key advance of each group,
+    concatenated in group order.
+
+    Skipping non-firing events is exact: an event on which NO slot's
+    unary mask is true cannot start, extend, loop or complete anything,
+    and window expiry at the key's NEXT firing event (later cur_ts)
+    prunes at least as much as it would have at the skipped one.
+
+    ``tables_in`` maps alt_id -> {state_sid: _Partials} with positions
+    indexing ``store``; events below ``start`` are already consumed.
+    Returns (matches, match_groups, tables_out): matches are
+    (alt_id | merge tag, {var: pos | tuple(pos)}) in per-key emission
+    order, match_groups the key group of each, and tables_out is safe
+    to persist.
 
     ``cap`` (state guard, opt-in): hard bound on the number of partial
     matches retained per NFA state per key.  On breach the OLDEST
-    partials (front of the insertion-ordered table — earliest starts)
-    are dropped deterministically and counted into
+    partials of that key (front of its insertion-ordered rows —
+    earliest starts) are dropped deterministically and counted into
     ``stats["dropped_partials"]``.  Dropping a partial can only LOSE
     matches, never fabricate one; with cap=None semantics are exact.
     This is the hot-key safety valve for powerset-Kleene patterns whose
@@ -633,8 +695,10 @@ def advance_core(cp: CompiledPattern, store, ts_ns, masks, tables_in=None, start
     not OOM its executor or blow the state store."""
     pat = cp.pattern
     n = len(ts_ns)
+    bounds = np.asarray(bounds, dtype=np.int64)
+    n_groups = len(bounds) - 1
     w_ns = None if pat.window is None else int(pat.window.total_seconds() * 1e9)
-    out = []
+    out, out_grp = [], []
     tables_out = {}
 
     for alt in cp.alternatives:
@@ -661,45 +725,6 @@ def advance_core(cp: CompiledPattern, store, ts_ns, masks, tables_in=None, start
                     tables[st.sid] = _Partials(svars[st.sid], kvars[st.sid])
         else:
             tables = {st.sid: _Partials(svars[st.sid], kvars[st.sid]) for st in alt.states}
-        tables_out[alt.alt_id] = tables
-
-        # Fast path (round 5): an event on which NO slot's unary mask is
-        # true cannot start, extend, loop, or complete anything — partial
-        # tables are only read at firing events, and window expiry at the
-        # NEXT firing event (with its later cur_ts) prunes at least as
-        # much as it would have at the skipped event, so iterating the
-        # precomputed firing positions only is EXACT (including the
-        # cap-guard drop accounting, which is a no-op when nothing is
-        # staged).  On selective patterns this skips the per-event Python
-        # loop for the large majority of rows.  Masks may be shared via
-        # the unary-mask memo — union into a fresh array, never in place.
-        any_fire = np.zeros(n, dtype=bool)
-        for m in slot_mask.values():
-            np.logical_or(any_fire, m, out=any_fire)
-        fire_pos = np.nonzero(any_fire)[0]
-        if start:
-            fire_pos = fire_pos[fire_pos >= start]
-
-        # The current event's attribute dict is only consulted by
-        # multi-variable transition conjuncts, adjacent-pair Kleene
-        # conditions, and gap-negation conjuncts — collect the columns
-        # those can reference and materialize just them per firing event
-        # (unary-only patterns pay nothing).
-        row_cols: set = set()
-        for st in alt.states:
-            for tr in st.transitions:
-                for c in tr.conds:
-                    row_cols.update(col for _, col in c.cols())
-            for _ksid, kconds in st.kleene_loops:
-                for c in kconds:
-                    row_cols.update(col for _, col in c.cols())
-        for s in alt.slots:
-            if s.adjacent is not None:
-                row_cols.update(col for _, col in s.adjacent.cols())
-        for sp in alt.negs:
-            for c in sp.multi:
-                row_cols.update(col for _, col in c.cols())
-        row_arrays = [(c, store._cols[c]) for c in sorted(row_cols)]
 
         # seq-group repetition-count ANCHOR variables per group: the
         # repetition count of a partial is the TOTAL number of binds at
@@ -747,9 +772,19 @@ def advance_core(cp: CompiledPattern, store, ts_ns, masks, tables_in=None, start
                 else:
                     okm &= _edge_ok(
                         neg_positions[si], spec, store, sub, ts_ns, edge_w,
-                        leading=(spec.kind == "leading"),
+                        leading=(spec.kind == "leading"), bounds=bounds,
                     )
             return okm
+
+        def _bind(sel, tag, vmap=None):
+            scal = [(v if vmap is None else vmap[v], a.tolist()) for v, a in sel.scalar.items()]
+            kle = [(v if vmap is None else vmap[v], a) for v, a in sel.kleene.items()]
+            for j in range(len(sel)):
+                b = {v: a[j] for v, a in scal}
+                for v, a in kle:
+                    b[v] = tuple(a[j])
+                out.append((tag, b))
+            out_grp.extend(sel.grp.tolist())
 
         def emit(sub: _Partials, state_sid):
             if alt.accept_tags is not None:
@@ -771,71 +806,111 @@ def advance_core(cp: CompiledPattern, store, ts_ns, masks, tables_in=None, start
                             sub.first_ts
                             >= ts_ns[sub.last_pos] - tag.w_ns
                         )
-                    sel = sub.select(okm) if not okm.all() else sub
-                    vmap = tag.var_map
-                    for j in range(len(sel)):
-                        b = {vmap[v]: int(sel.scalar[v][j]) for v in sel.scalar}
-                        for v in sel.kleene:
-                            b[vmap[v]] = tuple(sel.kleene[v][j])
-                        out.append((tag.key, b))
+                    _bind(sub.select(okm) if not okm.all() else sub, tag.key, tag.var_map)
                 return
             okm = _accept_negs(sub, alt.span_negs)
-            sel = sub.select(okm) if not okm.all() else sub
-            for j in range(len(sel)):
-                b = {v: int(sel.scalar[v][j]) for v in sel.scalar}
-                for v in sel.kleene:
-                    b[v] = tuple(sel.kleene[v][j])
-                out.append((alt.alt_id, b))
+            _bind(sub.select(okm) if not okm.all() else sub, alt.alt_id)
 
-        for i in fire_pos:
-            i = int(i)
-            cur_ts = ts_ns[i]
-            cur_row = {c: a[i] for c, a in row_arrays}
-            staged = []  # (target_state_id, _Partials)
+        # step schedule: firing events ordered by (rank within key, key)
+        any_fire = np.zeros(n, dtype=bool)
+        for m in slot_mask.values():  # masks may be shared: never in place
+            np.logical_or(any_fire, m, out=any_fire)
+        fire_pos = np.nonzero(any_fire)[0]
+        if start:
+            fire_pos = fire_pos[fire_pos >= start]
+        sids = list(slot_mask)
+        slot_k = {sid: k for k, sid in enumerate(sids)}
+        fire_grp = np.searchsorted(bounds, fire_pos, side="right") - 1
+        n_fire = np.bincount(fire_grp, minlength=n_groups)
+        rank = np.arange(len(fire_pos)) - (np.cumsum(n_fire) - n_fire)[fire_grp]
+        order = np.argsort(rank, kind="stable")
+        step_pos, step_grp = fire_pos[order], fire_grp[order]
+        offs = np.concatenate([[0], np.cumsum(np.bincount(rank))]).tolist()
+        steps = list(zip(offs[:-1], offs[1:]))
+        fire_mat = np.stack([slot_mask[sid][step_pos] for sid in sids])
+        if steps:
+            fire_any = np.logical_or.reduceat(fire_mat, offs[:-1], axis=1).T.tolist()
+            fire_all = np.logical_and.reduceat(fire_mat, offs[:-1], axis=1).T.tolist()
+        last_step = n_fire - 1
+        n_steps = len(steps)
+        # a key's partials leave the working tables after its last firing
+        # step (keys with none never enter them), so every working row
+        # belongs to a key stepping now
+        retired = {sid: [] for sid in tables}
 
-            for st in alt.states:
+        def retire(done):
+            for sid, tbl in tables.items():
+                if len(tbl):
+                    m = done[tbl.grp]
+                    if m.any():
+                        retired[sid].append(tbl.select(m))
+                        tables[sid] = tbl.select(~m)
+
+        if n_steps and (last_step < 0).any():
+            retire(last_step < 0)
+        ends = set(last_step[last_step >= 0].tolist())
+        ends.discard(n_steps - 1)  # the final step's keys simply stay put
+
+        trans = [
+            (st, [
+                (tr, slots[tr.slot],
+                 {g: (o1, o2) for g, o1, o2 in tr.gap_pre} if tr.gap_pre else None)
+                for tr in st.transitions
+            ], [(ksid, kconds, slots[ksid]) for ksid, kconds in st.kleene_loops])
+            for st in alt.states
+        ]
+        cur_g = np.zeros(n_groups, dtype=np.int64)  # group -> current event
+
+        for t, (a, b) in enumerate(steps):
+            ev, eg = step_pos[a:b], step_grp[a:b]
+            cur_g[eg] = ev
+            f_any, f_all = fire_any[t], fire_all[t]
+            staged: dict = {}  # target state -> [_Partials], in stage order
+
+            for st, st_trans, st_loops in trans:
                 tbl = tables[st.sid]
-                has = len(tbl) > 0
-                # window expiry: partials that can no longer complete
-                if has and w_ns is not None:
-                    alive = tbl.first_ts >= cur_ts - w_ns
-                    if not alive.all():
-                        tbl = tbl.select(alive)
-                        tables[st.sid] = tbl
-                        has = len(tbl) > 0
 
                 # initial transitions out of the empty state
                 if st.sid == 0 and not st.bound:
-                    for tr in st.transitions:
-                        if not slot_mask[tr.slot][i]:
+                    for tr, s, _ in st_trans:
+                        k = slot_k[tr.slot]
+                        if not f_any[k]:
                             continue
-                        s = slots[tr.slot]
-                        npart = _Partials(svars[tr.target], kvars[tr.target])
-                        if s.kleene:
-                            npart.kleene[s.var] = _obj_array([(i,)])
-                        else:
-                            npart.scalar[s.var] = np.array([i], dtype=np.int64)
-                        for v in svars[tr.target]:
-                            if v != s.var and v not in npart.scalar:
-                                npart.scalar[v] = np.array([i], dtype=np.int64)
-                        npart.first_pos = np.array([i], dtype=np.int64)
-                        npart.last_pos = np.array([i], dtype=np.int64)
-                        npart.first_ts = np.array([cur_ts], dtype=np.int64)
-                        staged.append((tr.target, npart))
+                        pos, g = ev, eg
+                        if not f_all[k]:
+                            f = slot_mask[tr.slot][ev]
+                            pos, g = ev[f], eg[f]
+                        tup = _obj_array([(p,) for p in pos.tolist()])
+                        npart = _Partials.of(
+                            {v: pos for v in svars[tr.target]},
+                            {v: tup for v in kvars[tr.target]},
+                            pos, pos, ts_ns[pos], g,
+                        )
+                        staged.setdefault(tr.target, []).append(npart)
                         if tr.accepting:
                             emit(npart, tr.target)
                     continue
 
-                if not has:
+                if not len(tbl.first_pos):
                     continue
+                cur = cur_g[tbl.grp]  # each row's key's current event
+                # window expiry: partials that can no longer complete
+                if w_ns is not None:
+                    alive = tbl.first_ts >= ts_ns[cur] - w_ns
+                    if not alive.all():
+                        tbl = tbl.select(alive)
+                        cur = cur[alive]
+                        tables[st.sid] = tbl
+                        if not len(tbl.first_pos):
+                            continue
 
                 # regular transitions
-                for tr in st.transitions:
-                    if not slot_mask[tr.slot][i]:
+                for tr, s, gp in st_trans:
+                    ptbl, pcur = _gate(slot_mask, slot_k, tr.slot, tbl, cur, f_any, f_all)
+                    if ptbl is None:
                         continue
-                    s = slots[tr.slot]
                     mask = _eval_conds(
-                        tr.conds, store, tbl, s.var, cur_row,
+                        tr.conds, store, ptbl, s.var, pcur,
                         var_group=var_group,
                         aligned=slot_aligned.get(tr.slot, ()),
                     )
@@ -846,12 +921,9 @@ def advance_core(cp: CompiledPattern, store, ts_ns, masks, tables_in=None, start
                         # only (an entry bind starts a fresh run; the
                         # tuple's last element is always the CURRENT
                         # repetition's previous choice here)
-                        prev_pos = np.fromiter(
-                            (t[-1] for t in tbl.kleene[s.var]),
-                            dtype=np.int64, count=len(tbl),
-                        )
+                        prev_pos = _last_elems(ptbl.kleene[s.var], len(ptbl))
                         mask &= _eval_conds(
-                            (s.adjacent,), store, tbl, s.var, cur_row,
+                            (s.adjacent,), store, ptbl, s.var, pcur,
                             extra_scalar={
                                 f"{s.var}__prev": store.gather(prev_pos)
                             },
@@ -868,100 +940,132 @@ def advance_core(cp: CompiledPattern, store, ts_ns, masks, tables_in=None, start
                             grp_anchor_vars[s.group]
                             if s.grp_kind != "and" else [s.var]
                         )
-                        lens = np.zeros(len(tbl), dtype=np.int64)
+                        lens = np.zeros(len(ptbl), dtype=np.int64)
                         for v in vs:
-                            if v in tbl.kleene:
+                            if v in ptbl.kleene:
                                 lens += np.fromiter(
-                                    (len(t) for t in tbl.kleene[v]),
-                                    dtype=np.int64, count=len(tbl),
+                                    (len(t) for t in ptbl.kleene[v]),
+                                    dtype=np.int64, count=len(ptbl),
                                 )
                         mask &= lens < s.kleene_max
-                    gp = (
-                        {g: (o1, o2) for g, o1, o2 in tr.gap_pre}
-                        if tr.gap_pre else None
-                    )
                     for gi in tr.gap_negs:
                         mask &= _gap_ok(
-                            neg_positions[gi], alt.negs[gi], store, tbl, s.var, cur_row, i,
-                            pre_off=None if gp is None else gp.get(gi),
+                            neg_positions[gi], alt.negs[gi], store, ptbl, s.var, pcur,
+                            bounds[ptbl.grp], pre_off=None if gp is None else gp.get(gi),
                         )
                     if not mask.any():
                         continue
-                    sub = tbl.select(mask)
-                    npart = _Partials(svars[tr.target], kvars[tr.target])
-                    for v in svars[tr.target]:
-                        npart.scalar[v] = (
-                            sub.scalar[v]
-                            if v in sub.scalar
-                            else np.full(len(sub), i, dtype=np.int64)
-                        )
+                    if mask.all():
+                        sub, last = ptbl, pcur
+                    else:
+                        sub, last = ptbl.select(mask), pcur[mask]
+                    kleene = {}
                     for v in kvars[tr.target]:
-                        if v in sub.kleene:
-                            npart.kleene[v] = (
-                                _obj_array([t + (i,) for t in sub.kleene[v]])
-                                if (tr.repeat and v == s.var)
-                                else sub.kleene[v]
-                            )
+                        if v not in sub.kleene:
+                            kleene[v] = _obj_array([(c,) for c in last.tolist()])
+                        elif tr.repeat and v == s.var:
+                            kleene[v] = _appended(sub.kleene[v], last)
                         else:
-                            npart.kleene[v] = _obj_array([(i,)] * len(sub))
-                    npart.first_pos = sub.first_pos
-                    npart.last_pos = np.full(len(sub), i, dtype=np.int64)
-                    npart.first_ts = sub.first_ts
-                    staged.append((tr.target, npart))
+                            kleene[v] = sub.kleene[v]
+                    npart = _Partials.of(
+                        {v: sub.scalar.get(v, last) for v in svars[tr.target]},
+                        kleene, sub.first_pos, last, sub.first_ts, sub.grp,
+                    )
+                    staged.setdefault(tr.target, []).append(npart)
                     if tr.accepting:
                         emit(npart, tr.target)
 
                 # kleene self-extension (take/skip fork: original rows stay)
-                for ksid, kconds in st.kleene_loops:
-                    if not slot_mask[ksid][i]:
+                for ksid, kconds, s in st_loops:
+                    ptbl, pcur = _gate(slot_mask, slot_k, ksid, tbl, cur, f_any, f_all)
+                    if ptbl is None:
                         continue
-                    s = slots[ksid]
-                    mask = _eval_conds(kconds, store, tbl, s.var, cur_row)
+                    mask = _eval_conds(kconds, store, ptbl, s.var, pcur)
                     if s.adjacent is not None:
                         # consecutive-chosen condition: prev = each
                         # partial's last chosen event, next = current
-                        prev_pos = np.fromiter(
-                            (t[-1] for t in tbl.kleene[s.var]),
-                            dtype=np.int64, count=len(tbl),
-                        )
+                        prev_pos = _last_elems(ptbl.kleene[s.var], len(ptbl))
                         mask &= _eval_conds(
-                            (s.adjacent,), store, tbl, s.var, cur_row,
+                            (s.adjacent,), store, ptbl, s.var, pcur,
                             extra_scalar={f"{s.var}__prev": store.gather(prev_pos)},
                         )
                     if s.kleene_max is not None:
                         lens = np.fromiter(
-                            (len(t) for t in tbl.kleene[s.var]), dtype=np.int64, count=len(tbl)
+                            (len(t) for t in ptbl.kleene[s.var]), dtype=np.int64,
+                            count=len(ptbl),
                         )
                         mask &= lens < s.kleene_max
                     if not mask.any():
                         continue
-                    sub = tbl.select(mask)
-                    npart = _Partials(svars[st.sid], kvars[st.sid])
-                    npart.scalar = {v: a.copy() for v, a in sub.scalar.items()}
-                    npart.kleene = {v: a.copy() for v, a in sub.kleene.items()}
-                    npart.kleene[s.var] = _obj_array(
-                        [t + (i,) for t in sub.kleene[s.var]]
+                    if mask.all():
+                        sub, last = ptbl, pcur
+                    else:
+                        sub, last = ptbl.select(mask), pcur[mask]
+                    kleene = dict(sub.kleene)
+                    kleene[s.var] = _appended(sub.kleene[s.var], last)
+                    npart = _Partials.of(
+                        dict(sub.scalar), kleene, sub.first_pos, last, sub.first_ts, sub.grp,
                     )
-                    npart.first_pos = sub.first_pos
-                    npart.last_pos = np.full(len(sub), i, dtype=np.int64)
-                    npart.first_ts = sub.first_ts
-                    staged.append((st.sid, npart))
+                    staged.setdefault(st.sid, []).append(npart)
                     if st.accepting:
                         emit(npart, st.sid)
 
-            for target, npart in staged:
-                tables[target].extend(npart)
+            for target, parts in staged.items():
+                old = tables[target]
+                tables[target] = _Partials.concat(parts if not len(old.first_pos) else [old] + parts)
             if cap is not None:
                 for sid, tbl in tables.items():
-                    over = len(tbl) - cap
-                    if over > 0:
-                        tables[sid] = tbl.select(np.arange(over, len(tbl)))
-                        if stats is not None:
-                            stats["dropped_partials"] = (
-                                stats.get("dropped_partials", 0) + over
-                            )
+                    if len(tbl) > cap:
+                        tables[sid] = _cap_rows(tbl, cap, n_groups, stats)
+            if t in ends:
+                retire(last_step == t)
 
-    return out, tables_out
+        for sid in tables:
+            tables[sid] = _Partials.concat(retired[sid] + [tables[sid]])
+        tables_out[alt.alt_id] = tables
+
+    grp = np.asarray(out_grp, dtype=np.int64)
+    if n_groups > 1 and out:
+        order = np.argsort(grp, kind="stable")
+        out = [out[k] for k in order]
+        grp = grp[order]
+    return out, grp, tables_out
+
+
+def _appended(tuples, last: np.ndarray) -> np.ndarray:
+    """Each Kleene tuple with its row's ``last`` event appended."""
+    return _obj_array([t + (c,) for t, c in zip(tuples, last.tolist())])
+
+
+def _gate(slot_mask, slot_k, sid, tbl, cur, f_any, f_all):
+    """Rows of ``tbl`` whose key's current event fires slot ``sid``
+    (``f_any``/``f_all``: the step's per-slot any/every-key summary) and
+    their current events; (None, None) when there are none."""
+    k = slot_k[sid]
+    if not f_any[k]:
+        return None, None
+    if f_all[k]:
+        return tbl, cur
+    f = slot_mask[sid][cur]
+    if not f.any():
+        return None, None
+    return tbl.select(f), cur[f]
+
+
+def _cap_rows(tbl: _Partials, cap: int, n_groups: int, stats) -> _Partials:
+    """State guard: keep each key's newest ``cap`` rows of ``tbl``."""
+    cnt = np.bincount(tbl.grp, minlength=n_groups)
+    over = cnt - cap
+    if not (over > 0).any():
+        return tbl
+    order = np.argsort(tbl.grp, kind="stable")
+    rank = np.empty(len(tbl), dtype=np.int64)
+    rank[order] = np.arange(len(tbl)) - (np.cumsum(cnt) - cnt)[tbl.grp[order]]
+    if stats is not None:
+        stats["dropped_partials"] = (
+            stats.get("dropped_partials", 0) + int(over[over > 0].sum())
+        )
+    return tbl.select(rank >= over[tbl.grp])
 
 
 # --------------------------------------------------------------------------
@@ -1016,15 +1120,18 @@ def matches_to_pdf_array(cp, gdf, key_val, emit_cols, res=None, cols=None):
     if cols is None:
         need = set(emit_cols) | {pat.ts_col, pat.tiebreak_col}
         cols = {c: gdf[c].to_numpy() for c in gdf.columns if c in need}
-    rows = array_match_rows(cp, key_val, emit_cols, res, cols)
+    rows = array_match_rows(cp, repeat(key_val), emit_cols, res, cols)
     return pd.DataFrame(rows, columns=out_cols)
 
 
-def array_match_rows(cp, key_val, emit_cols, res, cols) -> list:
+def array_match_rows(cp, key_vals, emit_cols, res, cols) -> list:
     """Array-mode rows as plain tuples (key, pattern_id, alt_id, matched)
-    — the partition executor accumulates these across ALL groups and
-    builds ONE pandas frame per partition (a frame per small group costs
-    more than the gathers themselves)."""
+    — the partition executor builds these for ALL groups at once and
+    ONE pandas frame per partition (a frame per small group costs more
+    than the gathers themselves).  ``key_vals`` holds each match's key;
+    the bindings' positions index ``cols``."""
+    if not res:
+        return []
     pat = cp.pattern
 
     # flatten (match, var, position) triples
@@ -1075,42 +1182,70 @@ def array_match_rows(cp, key_val, emit_cols, res, cols) -> list:
     pid = pat.pattern_id
     return [
         (key_val, pid, alt_ids[i], recs[offs[i] : offs[i + 1]])
-        for i in range(len(res))
+        for i, key_val in zip(range(len(res)), key_vals)
     ]
+
+
+def tagged_array_rows(cps, res, key_vals, emit_cols, cols) -> list:
+    """Array-mode rows for a merged automaton's emissions, tagged
+    ``((pattern_index, alt_id), binding)``: each owning pattern's
+    matches go through its own ``array_match_rows``."""
+    by_pi: dict = {}
+    for k, ((pi, _), _) in enumerate(res):
+        by_pi.setdefault(pi, []).append(k)
+    rows = []
+    for pi, ks in by_pi.items():
+        rows.extend(array_match_rows(
+            cps[pi], [key_vals[k] for k in ks], emit_cols,
+            [(res[k][0][1], res[k][1]) for k in ks], cols,
+        ))
+    return rows
+
+
+def flat_columns(cp) -> list:
+    """Flat-mode column names: key, alt_id, then per var its tiebreak
+    column (kleene vars: len/first/last summary)."""
+    pat = cp.pattern
+    cols = [pat.key, "alt_id"]
+    for v in cp.all_vars():
+        if any(v in a.kleene_vars for a in cp.alternatives):
+            cols += [f"{v}_len", f"{v}_first", f"{v}_last"]
+        else:
+            cols.append(f"{v}_{pat.tiebreak_col}")
+    return cols
 
 
 def match_schema_flat(cp, key_type=None):
     """key + per-var tiebreak columns; kleene -> len/first/last summary."""
     from pyspark.sql import types as T
 
-    pat = cp.pattern
-    kt = key_type if key_type is not None else T.StringType()
-    fields = [T.StructField(pat.key, kt), T.StructField("alt_id", T.IntegerType())]
-    for v in cp.all_vars():
-        if any(v in a.kleene_vars for a in cp.alternatives):
-            fields += [
-                T.StructField(f"{v}_len", T.LongType()),
-                T.StructField(f"{v}_first", T.LongType()),
-                T.StructField(f"{v}_last", T.LongType()),
-            ]
-        else:
-            fields.append(T.StructField(f"{v}_{pat.tiebreak_col}", T.LongType()))
-    return T.StructType(fields)
+    key, _, *per_var = flat_columns(cp)
+    return T.StructType(
+        [T.StructField(key, key_type if key_type is not None else T.StringType()),
+         T.StructField("alt_id", T.IntegerType())]
+        + [T.StructField(c, T.LongType()) for c in per_var]
+    )
 
 
 def matches_to_pdf_flat(cp, gdf, key_val, res=None):
-    pat = cp.pattern
-    tb = gdf[pat.tiebreak_col].to_numpy()
     if res is None:
         res = match_group_nfa(cp, gdf)
-    all_vars = cp.all_vars()
+    rows = flat_match_rows(cp, repeat(key_val), res, gdf[cp.pattern.tiebreak_col].to_numpy())
+    return pd.DataFrame(rows, columns=flat_columns(cp))
+
+
+def flat_match_rows(cp, key_vals, res, tb) -> list:
+    """Flat-mode rows as tuples (key, alt_id, per-var tiebreak columns;
+    kleene -> len/first/last) — tuple rows are ~5x cheaper than dicts
+    at millions of emissions per batch.  ``key_vals`` holds each
+    match's key; the bindings' positions index ``tb``."""
     kleene_all = set()
     for a in cp.alternatives:
         kleene_all |= set(a.kleene_vars)
-    var_is_kleene = [(v, v in kleene_all) for v in all_vars]
+    var_is_kleene = [(v, v in kleene_all) for v in cp.all_vars()]
     rows = []
-    for alt_id, binding in res:  # tuple rows: ~5x cheaper than dicts at
-        row = [key_val, alt_id]  # millions of emissions per batch
+    for key_val, (alt_id, binding) in zip(key_vals, res):
+        row = [key_val, alt_id]
         for v, is_k in var_is_kleene:
             p = binding.get(v)
             if is_k:
@@ -1122,13 +1257,7 @@ def matches_to_pdf_flat(cp, gdf, key_val, res=None):
             else:
                 row.append(None if p is None else int(tb[p]))
         rows.append(tuple(row))
-    cols = [pat.key, "alt_id"]
-    for v, is_k in var_is_kleene:
-        if is_k:
-            cols += [f"{v}_len", f"{v}_first", f"{v}_last"]
-        else:
-            cols.append(f"{v}_{pat.tiebreak_col}")
-    return pd.DataFrame(rows, columns=cols)
+    return rows
 
 
 def _guard_drops_acc(df, cap):
@@ -1158,17 +1287,20 @@ def run_batch(df, cp: CompiledPattern, mode="flat", emit_cols=("turn_idx", "role
               strategy="auto", assume_clustered=False, max_partials_per_state=None):
     """Batch NFA execution.  Two physical strategies:
 
-    * ``partition`` (default for flat output) — repartition(key) +
+    * ``partition`` (default) — repartition(key) +
       sortWithinPartitions(key, ts, tb) + ONE mapInPandas over each
       whole partition: unary conditions evaluated vectorized ONCE per
-      partition, group boundaries found by key-change scan, one output
-      frame per partition.  Small-group fixed costs (per-group pandas
-      frames, per-group condition eval, per-group Arrow round trip)
-      amortize across the partition — the difference between ~10k and
-      ~100k turns/s when conversations are short.
-    * ``group`` — groupBy(key).applyInPandas, one call per key (used
-      for array output mode; also the reference implementation the
-      partition strategy is tested against).
+      partition, group boundaries found by key-change scan, ONE lockstep
+      NFA advance over all key groups (``advance_groups``: one NumPy
+      step per firing-event rank, not one Python iteration per event),
+      one output frame per partition.  Small-group fixed costs
+      (per-group pandas frames, per-group condition eval, per-group
+      Arrow round trip, per-event interpreter overhead) amortize across
+      the partition.  Array output runs as the one-pattern case of
+      ``run_batch_multi``.
+    * ``group`` — groupBy(key).applyInPandas, one call per key (the
+      reference implementation the partition strategy is tested
+      against).
 
     Both push the union of unary conditions + column pruning into the
     scan (Catalyst forwards them to parquet).
@@ -1181,7 +1313,7 @@ def run_batch(df, cp: CompiledPattern, mode="flat", emit_cols=("turn_idx", "role
 
     ``max_partials_per_state`` (opt-in state guard, default None=exact):
     bound the per-key per-NFA-state partial-match tables, dropping the
-    oldest partials deterministically on breach — see advance_core.
+    oldest partials deterministically on breach — see advance_groups.
     Drop counts surface on the returned DataFrame's ``guard_drops``
     accumulator (read ``.value`` after an action) and as executor-side
     warnings; never silent."""
@@ -1239,11 +1371,6 @@ def _run_batch_partition(df, cp: CompiledPattern, assume_clustered=False, cap=No
         rep = base.repartition(cpu_parallelism(df), pat.key).sortWithinPartitions(
             pat.key, pat.ts_col, pat.tiebreak_col
         )
-    all_vars = cp.all_vars()
-    kleene_all = set()
-    for a in cp.alternatives:
-        kleene_all |= set(a.kleene_vars)
-    var_is_kleene = [(v, v in kleene_all) for v in all_vars]
     ts_col, tb_col, key_col = pat.ts_col, pat.tiebreak_col, pat.key
 
     def gen(batches):
@@ -1256,40 +1383,15 @@ def _run_batch_partition(df, cp: CompiledPattern, assume_clustered=False, cap=No
             return
         cols_all = {c: pdf[c].to_numpy() for c in pdf.columns}
         keys = cols_all[key_col]
-        change = np.nonzero(keys[1:] != keys[:-1])[0] + 1
-        bounds = np.concatenate([[0], change, [n]])
+        bounds = group_bounds(keys)
         ts_all = cols_all[ts_col].astype("datetime64[ns]").astype(np.int64)
-        masks_all = unary_masks(cp, cols_all, n)
-        tb_all = cols_all[tb_col]
-        rows = []
         stats = {}
-        for gi in range(len(bounds) - 1):
-            s, e = int(bounds[gi]), int(bounds[gi + 1])
-            sub_cols = {c: a[s:e] for c, a in cols_all.items()}
-            store = _ColStore.from_cols(sub_cols)
-            masks = {
-                aid: ({sid: m[s:e] for sid, m in sm.items()}, [m[s:e] for m in nm])
-                for aid, (sm, nm) in masks_all.items()
-            }
-            res = match_core(cp, store, ts_all[s:e], masks, cap=cap, stats=stats)
-            if not res:
-                continue
-            key_val = keys[s]
-            tb = tb_all[s:e]
-            for alt_id, binding in res:
-                row = [key_val, alt_id]
-                for v, is_k in var_is_kleene:
-                    p = binding.get(v)
-                    if is_k:
-                        if p is None:
-                            row += [None, None, None]
-                        else:
-                            pp = p if isinstance(p, tuple) else (p,)
-                            row += [len(pp), int(tb[pp[0]]), int(tb[pp[-1]])]
-                    else:
-                        row.append(None if p is None else int(tb[p]))
-                rows.append(tuple(row))
+        res, grp, _ = advance_groups(
+            cp, _ColStore.from_cols(cols_all), ts_all, unary_masks(cp, cols_all, n),
+            bounds, cap=cap, stats=stats,
+        )
         _flush_guard_stats(stats, acc)
+        rows = flat_match_rows(cp, keys[bounds[grp]], res, cols_all[tb_col])
         yield pd.DataFrame(rows, columns=out_cols)
 
     out = rep.mapInPandas(gen, schema=schema)
@@ -1431,9 +1533,9 @@ def _run_batch_multi_partition(df, cps, emit_cols, assume_clustered=False, cap=N
     """Partition-amortized multi-pattern execution (see run_batch_multi).
 
     With ``merged`` (a merge.merge_compiled automaton) the N patterns
-    advance as ONE prefix-shared NFA per group; emissions come back
-    tagged ``((pattern_index, alt_id), binding)`` and are regrouped per
-    pattern for row building."""
+    advance as ONE prefix-shared NFA over all key groups of a partition;
+    emissions come back tagged ``((pattern_index, alt_id), binding)``
+    and are regrouped per pattern for row building."""
     p0 = cps[0].pattern
     key_type = df.schema[p0.key].dataType
     schema = match_schema_array(p0, emit_cols, key_type)
@@ -1445,7 +1547,7 @@ def _run_batch_multi_partition(df, cps, emit_cols, assume_clustered=False, cap=N
         rep = base.repartition(cpu_parallelism(df), p0.key).sortWithinPartitions(
             p0.key, p0.ts_col, p0.tiebreak_col
         )
-    ts_col, tb_col, key_col = p0.ts_col, p0.tiebreak_col, p0.key
+    ts_col, key_col = p0.ts_col, p0.key
 
     def gen(batches):
         chunks = list(batches)
@@ -1457,38 +1559,21 @@ def _run_batch_multi_partition(df, cps, emit_cols, assume_clustered=False, cap=N
             return
         cols_all = {c: pdf[c].to_numpy() for c in pdf.columns}
         keys = cols_all[key_col]
-        change = np.nonzero(keys[1:] != keys[:-1])[0] + 1
-        bounds = np.concatenate([[0], change, [n]])
+        bounds = group_bounds(keys)
         ts_all = cols_all[ts_col].astype("datetime64[ns]").astype(np.int64)
+        store = _ColStore.from_cols(cols_all)
         shared = {}  # one evaluation per distinct predicate across ALL patterns
-        run_cps = [merged] if merged is not None else cps
-        masks_by_cp = [unary_masks(cp, cols_all, n, cache=shared) for cp in run_cps]
-        rows = []
         stats = {}
-        for gi in range(len(bounds) - 1):
-            s, e = int(bounds[gi]), int(bounds[gi + 1])
-            sub_cols = {c: a[s:e] for c, a in cols_all.items()}
-            store = _ColStore.from_cols(sub_cols)
-            for ci, cp in enumerate(run_cps):
-                masks = {
-                    aid: ({sid: m[s:e] for sid, m in sm.items()}, [m[s:e] for m in nm])
-                    for aid, (sm, nm) in masks_by_cp[ci].items()
-                }
-                res = match_core(cp, store, ts_all[s:e], masks, cap=cap, stats=stats)
-                if not res:
-                    continue
-                if merged is not None:
-                    by_cp: dict = {}
-                    for (pi, alt_id), b in res:
-                        by_cp.setdefault(pi, []).append((alt_id, b))
-                    for pi, lst in by_cp.items():
-                        rows.extend(
-                            array_match_rows(cps[pi], keys[s], emit_cols, lst, sub_cols)
-                        )
-                else:
-                    rows.extend(
-                        array_match_rows(cp, keys[s], emit_cols, res, sub_cols)
-                    )
+        rows = []
+        for cp in [merged] if merged is not None else cps:
+            masks = unary_masks(cp, cols_all, n, cache=shared)
+            res, grp, _ = advance_groups(cp, store, ts_all, masks, bounds,
+                                         cap=cap, stats=stats)
+            key_vals = keys[bounds[grp]]
+            if merged is None:
+                rows.extend(array_match_rows(cp, key_vals, emit_cols, res, cols_all))
+            else:
+                rows.extend(tagged_array_rows(cps, res, key_vals, emit_cols, cols_all))
         _flush_guard_stats(stats, acc)
         if rows:
             yield pd.DataFrame(rows, columns=schema.fieldNames())

@@ -1042,7 +1042,7 @@ def _expand_composite_kleene(node: Node, reps: list, force_group: bool = False) 
     them unchanged).  UNBOUNDED composites — or any composite under
     ``force_group`` — are left in place: `_collect` lowers them to a
     looping GROUP of kleene slots executed as a sub-automaton
-    repetition in the NFA (batch.advance_core)."""
+    repetition in the NFA (batch.advance_groups)."""
     if isinstance(node, (Ev, Neg)):
         return node
     if isinstance(node, Kleene):

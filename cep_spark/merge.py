@@ -38,13 +38,13 @@ multi-pattern property sweep.
 
 Accept-time negations (span / leading / trailing) do NOT affect partial
 tables and therefore stay out of state signatures: they are applied per
-tag at emission (batch.advance_core emit).
+tag at emission (batch.advance_groups emit).
 
 All patterns must share (key, ts_col, tiebreak_col).  Windows may
 DIFFER (round 4): the merged automaton runs under the MAX window (the
 shared pruning horizon — so tables stay identical across tags and the
 signature-equality induction still holds), and each ``AcceptTag``
-carries its owning pattern's ``w_ns``; ``batch.advance_core`` re-checks
+carries its owning pattern's ``w_ns``; ``batch.advance_groups`` re-checks
 ``span <= W_tag`` at emission and bounds that tag's leading/trailing
 negation intervals by ``W_tag``.  This is exact: the per-pattern
 executor's window enforcement is "an event never extends a partial
@@ -196,10 +196,19 @@ class AcceptTag:
     var_map: dict  # canonical var -> original var (all slots of the alt)
     accept_negs: tuple  # indices into the merged alternative's negs
     # the owning pattern's window in ns (None = unbounded).  The merged
-    # automaton prunes at the MAX window; advance_core re-checks
+    # automaton prunes at the MAX window; advance_groups re-checks
     # span <= w_ns per tag at emission and bounds this tag's edge-neg
     # intervals by it.
     w_ns: int | None = None
+
+
+def _canon_br_guard(br_guard, cmap) -> tuple:
+    """NegSpec.br_guard renamed to canonical vars: the branch's last
+    leaf first, then the position's vars as a sorted set (the gate only
+    takes their max, and the compiler's order follows original names)."""
+    if not br_guard:
+        return ()
+    return (cmap[br_guard[0]],) + tuple(sorted(cmap[v] for v in br_guard[1:]))
 
 
 def _cond_sig(cond, cmap):
@@ -232,7 +241,7 @@ def merge_compiled(cps) -> CompiledPattern:
     """Merge compiled patterns into one CompiledPattern with a single
     merged alternative carrying ``accept_tags``.
 
-    The result runs through ``batch.advance_core`` unchanged: emissions
+    The result runs through ``batch.advance_groups`` unchanged: emissions
     are ``(tag.key, binding)`` = ``((pattern_index, alt_id), {orig_var:
     pos})`` instead of ``(alt_id, binding)``."""
     from .conditions import subst
@@ -390,7 +399,7 @@ def merge_compiled(cps) -> CompiledPattern:
                     # branch gate of a trailing-in-branch Neg (round 5):
                     # part of spec identity — two specs differing only
                     # in the guarded branch must not merge
-                    tuple(cmap[v] for v in spec.br_guard),
+                    _canon_br_guard(spec.br_guard, cmap),
                 ) + (
                     # member-scoped gap (session 8) changes evaluation
                     # (mid-position firing) — appended conditionally so
@@ -419,7 +428,7 @@ def merge_compiled(cps) -> CompiledPattern:
                             per_repeat=spec.per_repeat,
                             repeat_only=spec.repeat_only,
                             pre_vars=tuple(sorted(cmap[v] for v in spec.pre_vars)),
-                            br_guard=tuple(cmap[v] for v in spec.br_guard),
+                            br_guard=_canon_br_guard(spec.br_guard, cmap),
                             mem_gap=spec.mem_gap,
                             mem_lead=spec.mem_lead,
                         )
@@ -498,7 +507,7 @@ def merge_compiled(cps) -> CompiledPattern:
                         )
                     )
             # every alternative's empty state MUST land on merged sid 0:
-            # advance_core fires initial transitions only from sid 0, so a
+            # advance_groups fires initial transitions only from sid 0, so a
             # diverged empty-state signature would silently never start
             # this alternative's automaton.  (Unreachable today — the
             # empty state's signature components are all trivially equal —
@@ -517,12 +526,17 @@ def merge_compiled(cps) -> CompiledPattern:
                     # remapped) — appended to the signature
                     # conditionally so gap_pre-free families keep their
                     # signatures
-                    m_gap_pre = tuple(
+                    # (the boundary is a max over each var set, so the
+                    # sets are sorted AFTER renaming: the compiler
+                    # sorts original names, and two patterns identical
+                    # up to renaming must produce one signature, not
+                    # two duplicate transitions)
+                    m_gap_pre = tuple(sorted(
                         (m_neg_idx[g],
-                         tuple(cmap[v] for v in o1),
-                         tuple(cmap[v] for v in o2))
+                         tuple(sorted(cmap[v] for v in o1)),
+                         tuple(sorted(cmap[v] for v in o2)))
                         for g, o1, o2 in tr.gap_pre
-                    )
+                    ))
                     tsig = (
                         m_slot[tr.slot].sid,
                         st_of[tr.target].sid,

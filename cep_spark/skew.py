@@ -133,11 +133,12 @@ def run_batch_multi_sliced(df, cps, emit_cols=("turn_idx", "role", "tool", "ts")
     from ._serde import ensure_shippable
     from .batch import (
         _ColStore,
-        array_match_rows,
+        advance_groups,
         cpu_parallelism,
-        match_core,
+        group_bounds,
         match_schema_array,
         prefilter_multi,
+        tagged_array_rows,
         unary_masks,
     )
     from .merge import merge_compiled, mergeable
@@ -201,38 +202,23 @@ def run_batch_multi_sliced(df, cps, emit_cols=("turn_idx", "role", "tool", "ts")
         cols_all = {c: pdf[c].to_numpy() for c in pdf.columns}
         keys = cols_all[key_col]
         slices = cols_all["__slice"]
-        change = (
-            np.nonzero((keys[1:] != keys[:-1]) | (slices[1:] != slices[:-1]))[0]
-            + 1
-        )
-        bounds = np.concatenate([[0], change, [n]])
+        bounds = group_bounds(keys, slices)
         ts_all = cols_all[ts_col].astype("datetime64[ns]").astype(np.int64)
-        masks_all = unary_masks(merged, cols_all, n)
-        rows = []
-        for gi in range(len(bounds) - 1):
-            s, e = int(bounds[gi]), int(bounds[gi + 1])
-            sub_cols = {c: a[s:e] for c, a in cols_all.items()}
-            store = _ColStore.from_cols(sub_cols)
-            masks = {
-                aid: ({sid: m[s:e] for sid, m in sm.items()}, [m[s:e] for m in nm])
-                for aid, (sm, nm) in masks_all.items()
-            }
-            k = int(slices[s])
-            lo, hi = k * w_ns, (k + 1) * w_ns
-            ts_g = ts_all[s:e]
-            by_cp: dict = {}
-            for (pi, alt_id), binding in match_core(merged, store, ts_g, masks):
-                first = min(
-                    pos
-                    for p in binding.values()
-                    for pos in (p if isinstance(p, tuple) else (p,))
-                )
-                if lo <= ts_g[first] < hi:  # this slice owns the match
-                    by_cp.setdefault(pi, []).append((alt_id, binding))
-            for pi, lst in by_cp.items():
-                rows.extend(
-                    array_match_rows(cps[pi], keys[s], emit_cols, lst, sub_cols)
-                )
+        res, grp, _ = advance_groups(
+            merged, _ColStore.from_cols(cols_all), ts_all,
+            unary_masks(merged, cols_all, n), bounds,
+        )
+        # a (key, slice) group owns the matches whose first event lies
+        # in its slice [k*W, (k+1)*W)
+        first = np.fromiter(
+            (min(pos for p in b.values() for pos in (p if isinstance(p, tuple) else (p,)))
+             for _, b in res),
+            dtype=np.int64, count=len(res),
+        )
+        lo = slices[bounds[grp]].astype(np.int64) * w_ns
+        own = np.nonzero((ts_all[first] >= lo) & (ts_all[first] < lo + w_ns))[0]
+        rows = tagged_array_rows(cps, [res[k] for k in own], keys[bounds[grp[own]]],
+                                 emit_cols, cols_all)
         if rows:
             yield pd.DataFrame(rows, columns=out_cols)
 

@@ -117,10 +117,9 @@ def _de_tables(raw: bytes | None) -> dict:
     for alt_id, sub in pickle.loads(raw).items():
         tmap = {}
         for sid, (scalar, kleene, fp, lp, fts) in sub.items():
-            p = _Partials(scalar, kleene)
-            p.scalar, p.kleene = scalar, kleene
-            p.first_pos, p.last_pos, p.first_ts = fp, lp, fts
-            tmap[sid] = p
+            # one key per table: every row is group 0
+            tmap[sid] = _Partials.of(scalar, kleene, fp, lp, fts,
+                                     np.zeros(len(fp), dtype=np.int64))
         out[alt_id] = tmap
     return out
 
@@ -575,6 +574,7 @@ def _park_partials(alt, bindings, ts_ns) -> "_Partials":
     p.first_pos = firsts
     p.last_pos = lasts
     p.first_ts = ts_ns[firsts]
+    p.grp = np.zeros(m, dtype=np.int64)
     return p
 
 
@@ -743,6 +743,7 @@ def _make_incremental_fn(cp: CompiledPattern, mode, emit_cols, w_ns, cap=None,
                                 ok &= _edge_ok(
                                     fresh_pos, alt.negs[si], store, p,
                                     ts_ns, w_ns, leading=False,
+                                    bounds=np.array([0, len(ts_ns)]),
                                 )
                         if not ok.all():
                             p = p.select(ok)
@@ -772,7 +773,7 @@ def _make_incremental_fn(cp: CompiledPattern, mode, emit_cols, w_ns, cap=None,
                         newp = _park_partials(alts_by_id[a], blist, ts_ns)
                         old = parked.get(a, {}).get(0)
                         if old is not None and len(old):
-                            old.extend(newp)
+                            parked[a][0] = _Partials.concat([old, newp])
                         else:
                             parked[a] = {0: newp}
                     res = now
@@ -1440,6 +1441,7 @@ def _make_multi_fn(cps, emit_cols, w_ns_of, trailing_of, w_ns,
                                     ok &= _edge_ok(
                                         fresh_pos, alt.negs[si], store, p,
                                         ts_s, tag_w(ci, alt_id), leading=False,
+                                        bounds=np.array([0, len(ts_s)]),
                                     )
                             if not ok.all():
                                 p = p.select(ok)
@@ -1469,7 +1471,7 @@ def _make_multi_fn(cps, emit_cols, w_ns_of, trailing_of, w_ns,
                             newp = _park_partials(unit_alts[ci][a], blist, ts_s)
                             old = parked.get(a, {}).get(0)
                             if old is not None and len(old):
-                                old.extend(newp)
+                                parked[a][0] = _Partials.concat([old, newp])
                             else:
                                 parked[a] = {0: newp}
                         res = now

@@ -549,7 +549,7 @@ def _family(draw):
     return pats
 
 
-@settings(max_examples=150, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@settings(max_examples=600, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(pats=_family(), seed=st.integers(0, 2**31))
 def test_random_family_merge_parity(pats, seed):
     try:
@@ -564,6 +564,73 @@ def test_random_family_merge_parity(pats, seed):
         by_cp.setdefault(pi, []).append((alt, b))
     for i, cp in enumerate(cps):
         assert _canon(by_cp.get(i, [])) == _canon(match_group_nfa(cp, g))
+
+
+def _renamed_twins(roles, windows=(timedelta(minutes=10), timedelta(minutes=10)),
+                   where1=None):
+    """Seq(w1, Kleene(And_(Seq(Neg(n), x, y), z)), w6) twice, identical up
+    to renaming: a leading member Neg in a bare And_ body, whose gap
+    boundary comes from the per-transition override Transition.gap_pre.
+    The second copy's names (w8, w9, w10) sort differently from the
+    first's (w3, w4, w5)."""
+    def fam(names, pid, win, where):
+        r = iter(roles)
+        n, x, y, z, t = (Ev(v, role=next(r)) for v in names)
+        return _pat(Seq(Ev("w1", role=roles[-1]),
+                        Kleene(And_(Seq(Neg(n), x, y), z), max_len=None), t),
+                    where=where, window=win, pid=pid)
+
+    return [fam(("w2", "w3", "w4", "w5", "w6"), "t0", windows[0], None),
+            fam(("w7", "w8", "w9", "w10", "w11"), "t1", windows[1], where1)]
+
+
+@pytest.mark.parametrize("roles", [
+    ("user", "user", "user", "user", "user", "user"),
+    ("user", "user", "user", "assistant", "assistant", "user"),
+    ("tool", "user", "assistant", "user", "assistant", "user"),
+])
+def test_renamed_twins_lead_member_neg(roles):
+    """Falsifying family of test_random_family_merge_parity, pinned.  The
+    compiler stores gap_pre var sets sorted by ORIGINAL name; renamed to
+    canonical vars, the twins' sets came out in different orders, their
+    transitions never deduplicated, and every partial advanced along
+    two identical transitions (96 vs 50 matches for pattern 0 on this
+    group).  The merge now sorts the renamed sets."""
+    g = _group(1, n=18)
+    pats = _renamed_twins(roles)
+    merged = _assert_parity(pats, g)
+    # identical twins share every state and transition
+    single = compile_pattern(pats[0]).alternatives[0]
+    m = merged.alternatives[0]
+    assert len(m.states) == len(single.states)
+    assert sum(len(st.transitions) for st in m.states) == sum(
+        len(st.transitions) for st in single.states)
+    # ... and stay exact when windows and conditions differ
+    _assert_parity(_renamed_twins(roles, (timedelta(minutes=10), timedelta(minutes=3)),
+                                  attr("w11", "value") > attr("w1", "value")), g)
+
+
+def test_renamed_twins_spark_shared_equals_partition(spark):
+    from cep_spark.batch import run_batch_multi
+
+    pdf = pd.concat([_group(s, n=18).assign(conv_id=f"c{s}") for s in range(1, 7)],
+                    ignore_index=True)
+    df = spark.createDataFrame(pdf)
+    cps = [compile_pattern(p) for p in _renamed_twins(
+        ("user", "user", "user", "assistant", "assistant", "user"),
+        (timedelta(minutes=10), timedelta(minutes=3)))]
+
+    def rows(strategy):
+        out = run_batch_multi(df, cps, emit_cols=("turn_idx",), strategy=strategy)
+        return sorted(
+            (r["conv_id"], r["pattern_id"], r["alt_id"],
+             tuple((m["var"], m["turn_idx"]) for m in r["matched"]))
+            for r in out.collect()
+        )
+
+    shared = rows("shared")
+    assert shared == rows("partition")
+    assert len(shared) > 0
 
 
 # ---------------------------------------------------------------------------
