@@ -290,8 +290,7 @@ def job_stream(cpus: int) -> dict:
     health = cpu_health_mips()
     t0 = time.perf_counter()
     q = (
-        run_stream(spark, STREAM_SRC, cp, watermark="0 seconds", max_files_per_trigger=1,
-                   strategy=os.environ.get("BENCH_STREAM_STRATEGY", "auto"))
+        run_stream(spark, STREAM_SRC, cp, watermark="0 seconds", max_files_per_trigger=1)
         .writeStream.foreachBatch(sink.foreach_batch())
         .outputMode("append")
         .option("checkpointLocation", ckpt)

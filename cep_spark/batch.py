@@ -1296,8 +1296,9 @@ def run_batch(df, cp: CompiledPattern, mode="flat", emit_cols=("turn_idx", "role
       one output frame per partition.  Small-group fixed costs
       (per-group pandas frames, per-group condition eval, per-group
       Arrow round trip, per-event interpreter overhead) amortize across
-      the partition.  Array output runs as the one-pattern case of
-      ``run_batch_multi``.
+      the partition.  Flat and array output both run as the
+      one-pattern case of ``run_batch_multi``'s partition executor;
+      only the row builder differs.
     * ``group`` — groupBy(key).applyInPandas, one call per key (the
       reference implementation the partition strategy is tested
       against).
@@ -1324,10 +1325,9 @@ def run_batch(df, cp: CompiledPattern, mode="flat", emit_cols=("turn_idx", "role
     if strategy == "auto":
         strategy = "partition"
     if strategy == "partition":
-        if mode == "flat":
-            return _run_batch_partition(df, cp, assume_clustered, cap=cap)
-        # array mode: the N=1 case of the partition-amortized multi executor
-        return _run_batch_multi_partition(df, [cp], emit_cols, assume_clustered, cap=cap)
+        # the N=1 case of the partition-amortized multi executor
+        return _run_batch_multi_partition(df, [cp], emit_cols, assume_clustered,
+                                          cap=cap, mode=mode)
     pat = cp.pattern
     key_type = df.schema[pat.key].dataType
     acc = _guard_drops_acc(df, cap)
@@ -1357,69 +1357,11 @@ def run_batch(df, cp: CompiledPattern, mode="flat", emit_cols=("turn_idx", "role
     return out
 
 
-def _run_batch_partition(df, cp: CompiledPattern, assume_clustered=False, cap=None):
-    """Partition-amortized NFA execution (see run_batch docstring)."""
-    pat = cp.pattern
-    key_type = df.schema[pat.key].dataType
-    schema = match_schema_flat(cp, key_type)
-    out_cols = schema.fieldNames()
-    acc = _guard_drops_acc(df, cap)
-    base = prefilter(df, cp)
-    if assume_clustered:
-        rep = base.sortWithinPartitions(pat.key, pat.ts_col, pat.tiebreak_col)
-    else:
-        rep = base.repartition(cpu_parallelism(df), pat.key).sortWithinPartitions(
-            pat.key, pat.ts_col, pat.tiebreak_col
-        )
-    ts_col, tb_col, key_col = pat.ts_col, pat.tiebreak_col, pat.key
-
-    def gen(batches):
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        n = len(pdf)
-        if n == 0:
-            return
-        cols_all = {c: pdf[c].to_numpy() for c in pdf.columns}
-        keys = cols_all[key_col]
-        bounds = group_bounds(keys)
-        ts_all = cols_all[ts_col].astype("datetime64[ns]").astype(np.int64)
-        stats = {}
-        res, grp, _ = advance_groups(
-            cp, _ColStore.from_cols(cols_all), ts_all, unary_masks(cp, cols_all, n),
-            bounds, cap=cap, stats=stats,
-        )
-        _flush_guard_stats(stats, acc)
-        rows = flat_match_rows(cp, keys[bounds[grp]], res, cols_all[tb_col])
-        yield pd.DataFrame(rows, columns=out_cols)
-
-    out = rep.mapInPandas(gen, schema=schema)
-    out.guard_drops = acc
-    return out
-
-
 def prefilter(df, cp: CompiledPattern, extra_cols=()):
     """Scan-side reduction: keep only rows any slot/neg could use, and only
     the columns the pattern references (→ parquet predicate pushdown +
-    column pruning via Catalyst)."""
-    pat = cp.pattern
-    ors = None
-    needed = {pat.key, pat.ts_col, pat.tiebreak_col, *extra_cols}
-    for alt in cp.alternatives:
-        for s in alt.slots:
-            c = s.unary.spark_col({s.var: df})
-            ors = c if ors is None else (ors | c)
-        for ng in alt.negs:
-            c = ng.unary.spark_col({ng.var: df})
-            ors = c if ors is None else (ors | c)
-    for v, cols in cp.needed_cols.items():
-        needed.update(cols)
-    needed_present = [c for c in df.columns if c in needed]
-    out = df.select(*needed_present)
-    if ors is not None:
-        out = out.filter(ors)
-    return out
+    column pruning via Catalyst).  The one-pattern prefilter_multi."""
+    return prefilter_multi(df, [cp], extra_cols)
 
 
 # --------------------------------------------------------------------------
@@ -1529,17 +1471,24 @@ def run_batch_multi(df, cps, emit_cols=("turn_idx", "role", "tool", "ts"),
 
 
 def _run_batch_multi_partition(df, cps, emit_cols, assume_clustered=False, cap=None,
-                               merged=None):
+                               merged=None, mode="array"):
     """Partition-amortized multi-pattern execution (see run_batch_multi).
 
     With ``merged`` (a merge.merge_compiled automaton) the N patterns
     advance as ONE prefix-shared NFA over all key groups of a partition;
     emissions come back tagged ``((pattern_index, alt_id), binding)``
-    and are regrouped per pattern for row building."""
+    and are regrouped per pattern for row building.
+
+    ``mode='flat'`` (one unmerged pattern: run_batch's flat output)
+    builds flat rows and reads no emit columns."""
     p0 = cps[0].pattern
     key_type = df.schema[p0.key].dataType
-    schema = match_schema_array(p0, emit_cols, key_type)
     acc = _guard_drops_acc(df, cap)
+    if mode == "flat":
+        schema = match_schema_flat(cps[0], key_type)
+        emit_cols = ()
+    else:
+        schema = match_schema_array(p0, emit_cols, key_type)
     base = prefilter_multi(df, cps, extra_cols=emit_cols)
     if assume_clustered:
         rep = base.sortWithinPartitions(p0.key, p0.ts_col, p0.tiebreak_col)
@@ -1547,7 +1496,7 @@ def _run_batch_multi_partition(df, cps, emit_cols, assume_clustered=False, cap=N
         rep = base.repartition(cpu_parallelism(df), p0.key).sortWithinPartitions(
             p0.key, p0.ts_col, p0.tiebreak_col
         )
-    ts_col, key_col = p0.ts_col, p0.key
+    ts_col, tb_col, key_col = p0.ts_col, p0.tiebreak_col, p0.key
 
     def gen(batches):
         chunks = list(batches)
@@ -1570,7 +1519,9 @@ def _run_batch_multi_partition(df, cps, emit_cols, assume_clustered=False, cap=N
             res, grp, _ = advance_groups(cp, store, ts_all, masks, bounds,
                                          cap=cap, stats=stats)
             key_vals = keys[bounds[grp]]
-            if merged is None:
+            if mode == "flat":
+                rows.extend(flat_match_rows(cp, key_vals, res, cols_all[tb_col]))
+            elif merged is None:
                 rows.extend(array_match_rows(cp, key_vals, emit_cols, res, cols_all))
             else:
                 rows.extend(tagged_array_rows(cps, res, key_vals, emit_cols, cols_all))

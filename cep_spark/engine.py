@@ -92,12 +92,13 @@ class CepEngine:
                    emit_cols=_DEFAULT_EMIT, strategy: str = "auto",
                    max_partials_per_state: int | None = None):
         """Stateful streaming execution (watermark-sealed emission).
-        mode=None auto-picks like run_batch; `strategy` selects the
-        incremental vs rematch executor (stream_matches docstring) and,
-        on multi-pattern engines, `'shared'` for the prefix-merged
-        automaton in the state store (stream_matches_multi docstring);
-        ``max_partials_per_state`` is the opt-in hot-key state guard
-        (incremental executors only — single and multi)."""
+        mode=None auto-picks like run_batch.  A single-pattern engine
+        runs stream_matches (the one-pattern case of the multi-pattern
+        state function); ``strategy`` applies to multi-pattern engines
+        only (stream_matches_multi: 'auto', 'incremental', 'rematch',
+        'shared') and single-pattern engines reject a non-default value
+        rather than ignoring it.  ``max_partials_per_state`` is the
+        opt-in hot-key state guard."""
         if mode is None:
             mode = "flat" if self._single is not None else "array"
         if mode == "flat" and self._single is None:
@@ -106,8 +107,13 @@ class CepEngine:
                 "multi-pattern output carries a pattern_id column"
             )
         if self._single is not None:
+            if strategy != "auto":
+                raise ValueError(
+                    "strategy applies to multi-pattern engines only "
+                    "(single-pattern streaming has one executor)"
+                )
             return stream_matches(stream_df, self._single, watermark, mode=mode,
-                                  emit_cols=emit_cols, strategy=strategy,
+                                  emit_cols=emit_cols,
                                   max_partials_per_state=max_partials_per_state)
         return stream_matches_multi(stream_df, self.compiled, watermark,
                                     emit_cols=emit_cols, strategy=strategy,

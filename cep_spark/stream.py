@@ -8,9 +8,11 @@ replaces the reference's push-loop over an in-memory queue — reference
       .filter(union of unary conditions)        <- Catalyst pushdown
       .withWatermark(ts, delay)
       .groupBy(key)
-      .applyInPandasWithState(nfa_fn)           <- per-key event buffer
-                                                   (Arrow IPC in the state
-                                                   store), NFA re-advance,
+      .applyInPandasWithState(state fn)         <- per-key event buffer and
+                                                   partial-match tables in
+                                                   the state store; NFA
+                                                   advance over newly
+                                                   sealed events only;
                                                    watermark-sealed emission
 
 Semantics (the parity contract — BASELINE "same input stream and
@@ -19,29 +21,41 @@ watermark"):
 * A match is EMITTED in the first micro-batch whose watermark W is >=
   the match's last event-time ("sealed"): no in-order event arriving
   later can create, extend, or (via gap-negation) invalidate a match
-  with last.ts <= W, because such events have ts > W.
+  with last.ts <= W, because such events have ts > W.  A match of an
+  alternative with a trailing negation seals at first.ts + window
+  instead (its look-ahead must close first).
 * An arrival whose ts is <= the PREVIOUS emission watermark is LATE and
   dropped (counted in state): admitting it could mint a match that was
   already sealed shut, breaking exactly-once.  Arrivals inside the
   current bracket (prev_wm, W] are admitted even though they are
   behind max(event time) — bounded disorder is handled for free.
-* State per key = the retained event buffer: events with
-  ts > watermark - window cannot yet be excluded from a future match;
-  everything older is pruned.  With a window, state is bounded by the
-  key's event rate x window span.  Unbounded-window patterns keep the
-  full key history (documented limit; the reference behaves the same).
+* State per key: the sealed buffer (events with ts <= watermark inside
+  the retention horizon, the attribute store for partial positions and
+  negation candidates), the limbo (events above the watermark, not yet
+  matched), the persisted partial-match tables, and parked matches
+  (accepted, waiting for a trailing negation's look-ahead to seal).
+  Partials that can no longer complete and buffer rows older than
+  watermark - window are pruned every batch, so with a window state is
+  bounded by the key's event rate x window span.  Unbounded-window
+  patterns keep the full key history (documented limit; the reference
+  behaves the same).
 * Exactly-once: a match seals in exactly one bracket (last_emit_wm, W].
   On failure Spark replays the batch from the checkpoint with the same
   state and the same watermark, reproducing the bracket byte-for-byte;
   the sink (sink.py) is idempotent per batch id.
 
-The matcher is the SAME `match_group_nfa` as batch mode — batch ≡
-stream parity is structural.  Each batch re-advances the NFA over the
-retained buffer and emits only newly-sealed matches; partial-match
-tables are recomputed from the (window-bounded) buffer rather than
-persisted — the recompute-vs-checkpoint tradeoff taken on the
-recompute side because buffers are bounded while partial-match sets
-are not (Kleene is super-linear in buffer length in the worst case).
+The matcher is the SAME advance as batch mode (batch.advance_core) —
+batch ≡ stream parity is structural.  It runs incrementally: each batch
+advances the persisted partial tables over ONLY the events that sealed
+in it (a sealed match involves only sealed events), so every event is
+matched once, in the batch where it seals.  A key whose partial tables
+outgrow 8x its buffer (Kleene-dense input) falls back, per pattern, to
+re-running ``match_group_nfa`` over the retained buffer each batch.
+
+One state function (``_make_multi_fn``) serves every query: a
+single-pattern query (``stream_matches`` / ``run_stream``) is the
+one-pattern case of ``stream_matches_multi``, with flat rows when
+``mode='flat'``.
 """
 
 from __future__ import annotations
@@ -60,7 +74,7 @@ from .batch import (
     match_schema_flat,
     matches_to_pdf_array,
     matches_to_pdf_flat,
-    prefilter,
+    prefilter_multi,
     unary_masks,
 )
 
@@ -211,324 +225,32 @@ def _seal_ts_ns(binding: dict, ts_ns: np.ndarray, alt_id, trailing_ids, w_ns) ->
 
 def stream_matches(df, cp: CompiledPattern, watermark: str, mode: str = "flat",
                    emit_cols=("turn_idx", "role", "tool", "ts"),
-                   strategy: str = "auto", max_partials_per_state=None):
+                   max_partials_per_state=None):
     """Attach the stateful NFA to a streaming DataFrame.
 
     Returns the streaming match DataFrame (append mode); the caller
     attaches the sink (memory sink in tests, exactly-once parquet via
-    sink.py in production).
+    sink.py in production).  ``mode='flat'`` emits run_batch's flat
+    schema; ``'array'`` the array schema with ``emit_cols``.
 
-    ``strategy``:
-      * ``"incremental"`` — persist the per-state partial-match tables in
-        the state store and advance the NFA ONLY over newly-sealed
-        arrivals (O(new events) per batch instead of O(buffer)).  Sealed
-        matches involve only sealed events (every event of a match has
-        ts <= the match's seal instant <= watermark), so limbo events
-        above the watermark need no matching at all — each event is
-        matched exactly once, in the batch where it seals, which is also
-        exactly the batch the rematch executor would emit it in
-        (identical emission brackets).  A per-key guard falls back to
-        rematch when the partial set outgrows the buffer (Kleene-dense
-        patterns — the powerset partial count can exceed serialization
-        budget).  Trailing negations are handled by PARKING: an accepted
-        match whose trailing look-ahead is still open (seal =
-        first.ts + window > watermark) is stored as a parked partial and
-        re-verified each batch against ONLY the freshly-sealed negation
-        candidates — no per-batch buffer rematch.
-      * ``"rematch"`` — re-run the matcher over the retained buffer each
-        batch (the v1 path; also the checkpoint-compatibility pin for
-        queries started before the incremental executor existed).
-      * ``"auto"`` — incremental (or $CEP_SPARK_STREAM_STRATEGY).
+    Runs as the one-pattern case of ``stream_matches_multi`` on its
+    incremental executor (module docstring): persisted partial tables
+    advanced over newly-sealed events only, trailing negations handled
+    by parking accepted matches until first.ts + window, and a per-key
+    rematch fallback when the partial set outgrows the buffer.
 
-    The two strategies use different state-store schemas, so switching
-    strategy for an existing query requires a fresh checkpoint (Spark
-    rejects the mismatch at restart — it cannot corrupt state).
+    ``max_partials_per_state``: the opt-in hot-key state guard
+    (stream_matches_multi docstring); drops are counted on the result's
+    ``guard_drops`` accumulator.
+
+    The state store uses the multi-pattern layout (with its ``fmt``
+    fingerprint column).  Checkpoints written by the earlier
+    single-pattern executors have a different state schema and are
+    refused at restart; start a fresh checkpoint (README, "Streaming
+    state-schema migration").
     """
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from ._serde import ensure_shippable
-
-    ensure_shippable()
-    pat = cp.pattern
-    key_type = df.schema[pat.key].dataType
-    w_ns = None if pat.window is None else int(pat.window.total_seconds() * 1e9)
-    trailing_ids = _trailing_alt_ids(cp)
-    ret_ns = _retention_w_ns(cp, w_ns)
-
-    # watermarks require TIMESTAMP (tz-aware); the engine's event time is
-    # tz-naive — reinterpret under the pinned UTC session timezone
-    if isinstance(df.schema[pat.ts_col].dataType, T.TimestampNTZType):
-        df = df.withColumn(pat.ts_col, df[pat.ts_col].cast(T.TimestampType()))
-    # Watermark semantics: Spark advances the watermark from the rows
-    # reaching the EventTimeWatermark node, and Catalyst pushes the
-    # deterministic unary prefilter below it — so the effective
-    # watermark tracks PATTERN-RELEVANT events (standard Spark
-    # behavior).  Parity is stated against that watermark ("same input
-    # stream and watermark").
-    df = df.withWatermark(pat.ts_col, watermark)
-    df = prefilter(df, cp, extra_cols=emit_cols if mode == "array" else ())
-
-    if mode == "flat":
-        out_schema = match_schema_flat(cp, key_type)
-    else:
-        out_schema = match_schema_array(pat, emit_cols, key_type)
-
-    if strategy == "auto":
-        # CEP_SPARK_STREAM_STRATEGY overrides the auto default — the
-        # operational escape hatch for restarting a checkpoint written by
-        # an older executor (the two strategies use different state
-        # schemas; Spark refuses the mismatch loudly, and pinning
-        # rematch here resumes a v1 checkpoint without code changes)
-        import os as _os
-
-        strategy = _os.environ.get("CEP_SPARK_STREAM_STRATEGY") or "incremental"
-    if strategy not in ("incremental", "rematch"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    if strategy == "incremental":
-        return _stream_incremental(df, cp, out_schema, mode, emit_cols, w_ns,
-                                   cap=max_partials_per_state)
-    if max_partials_per_state is not None:
-        # the rematch executor's state is the event buffer, not partial
-        # tables — the guard has nothing to bound there; fail loudly
-        # rather than silently ignore the knob
-        raise ValueError(
-            "max_partials_per_state requires the incremental strategy"
-        )
-
-    state_schema = T.StructType(
-        [
-            T.StructField("buf", T.BinaryType()),
-            T.StructField("pending", T.BinaryType()),
-            T.StructField("last_emit_wm_ms", T.LongType()),
-            T.StructField("late_dropped", T.LongType()),
-        ]
-    )
-    fn = _make_rematch_fn(cp, mode, emit_cols, w_ns, trailing_ids, ret_ns)
-
-    return df.groupBy(pat.key).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def _make_rematch_fn(cp: CompiledPattern, mode, emit_cols, w_ns, trailing_ids, ret_ns):
-    """Per-key state function for the rematch executor (exposed for the
-    fake-GroupState harness and the executor A/B microbench)."""
-    pat = cp.pattern
-    ts_col, tb_col = pat.ts_col, pat.tiebreak_col
-
-    def fn(key, pdf_iter, state):
-        wm_ms = state.getCurrentWatermarkMs()
-        wm_ns = wm_ms * 1_000_000
-        if state.exists:
-            buf_raw, pend_raw, last_emit_wm_ms, late_dropped = state.get
-            buf = _de_buf(buf_raw) if buf_raw else None
-            pend = _de_buf(pend_raw) if pend_raw else None
-        else:
-            buf, pend, last_emit_wm_ms, late_dropped = None, None, -1, 0
-        lo_ns = last_emit_wm_ms * 1_000_000
-
-        chunks = [] if state.hasTimedOut else list(pdf_iter)
-        arrivals = pd.concat(chunks, ignore_index=True) if chunks else None
-        if arrivals is not None and len(arrivals):
-            a_ns = arrivals[ts_col].to_numpy().astype("datetime64[ns]").astype(np.int64)
-            late = a_ns <= lo_ns
-            if late.any():
-                late_dropped += int(late.sum())
-                arrivals = arrivals.loc[~late]
-            if buf is None or not len(buf):
-                buf = arrivals
-            elif len(arrivals):
-                buf = pd.concat([buf, arrivals], ignore_index=True)
-        else:
-            arrivals = None
-
-        min_unsealed_ns = None
-        if arrivals is not None and len(arrivals) and buf is not None and len(buf):
-            # NEW EVENTS: rematch the buffer; emit the freshly-sealed
-            # bracket; park not-yet-sealed matches as PENDING rows (with
-            # their last-event-time) so timer wakeups below never rerun
-            # the matcher — they just filter this table.
-            g = buf.sort_values([ts_col, tb_col], kind="mergesort").reset_index(drop=True)
-            ts_ns = g[ts_col].to_numpy().astype("datetime64[ns]").astype(np.int64)
-            res = match_group_nfa(cp, g)
-            sealed, pending = [], []
-            for a, b in res:
-                lts = _seal_ts_ns(b, ts_ns, a, trailing_ids, w_ns)
-                if lo_ns < lts <= wm_ns:
-                    sealed.append((a, b))
-                elif lts > wm_ns:
-                    pending.append((lts, a, b))
-            if sealed:
-                if mode == "flat":
-                    yield matches_to_pdf_flat(cp, g, key[0], res=sealed)
-                else:
-                    yield matches_to_pdf_array(cp, g, key[0], emit_cols, res=sealed)
-            if pending:
-                min_unsealed_ns = min(x[0] for x in pending)
-                # Park pending rows only while the table is small relative
-                # to the buffer: for selective patterns (the common case)
-                # timer wakeups then skip the matcher entirely; for
-                # match-dense patterns the Arrow round trip of a huge
-                # pending table costs more than the rematch, so store
-                # nothing and let the timer branch fall back to rematch.
-                if len(pending) <= max(4 * len(g), 256):
-                    if mode == "flat":
-                        pend = matches_to_pdf_flat(cp, g, key[0], res=[x[1:] for x in pending])
-                    else:
-                        pend = matches_to_pdf_array(
-                            cp, g, key[0], emit_cols, res=[x[1:] for x in pending]
-                        )
-                    pend["__lts"] = np.array([x[0] for x in pending], dtype=np.int64)
-                else:
-                    pend = None
-            else:
-                pend = None
-                pending = None
-            if ret_ns is not None and wm_ns > 0:
-                g = g.loc[ts_ns > wm_ns - ret_ns]
-        elif buf is not None and len(buf):
-            if pend is not None and len(pend):
-                # TIMER WAKEUP with parked rows: emit the newly-sealed
-                # bracket; no matcher run, no sort — O(pending) only.
-                lts_arr = pend["__lts"].to_numpy()
-                emit_mask = (lts_arr > lo_ns) & (lts_arr <= wm_ns)
-                if emit_mask.any():
-                    yield pend.loc[emit_mask].drop(columns="__lts")
-                pend = pend.loc[~emit_mask & (lts_arr > wm_ns)]
-                if not len(pend):
-                    pend = None
-                else:
-                    min_unsealed_ns = int(pend["__lts"].min())
-                g = buf
-                ts_ns = None
-            else:
-                # TIMER WAKEUP, match-dense fallback: rematch the buffer
-                g = buf.sort_values([ts_col, tb_col], kind="mergesort").reset_index(drop=True)
-                ts_ns = g[ts_col].to_numpy().astype("datetime64[ns]").astype(np.int64)
-                sealed = []
-                for a, b in match_group_nfa(cp, g):
-                    lts = _seal_ts_ns(b, ts_ns, a, trailing_ids, w_ns)
-                    if lo_ns < lts <= wm_ns:
-                        sealed.append((a, b))
-                    elif lts > wm_ns and (min_unsealed_ns is None or lts < min_unsealed_ns):
-                        min_unsealed_ns = lts
-                if sealed:
-                    if mode == "flat":
-                        yield matches_to_pdf_flat(cp, g, key[0], res=sealed)
-                    else:
-                        yield matches_to_pdf_array(cp, g, key[0], emit_cols, res=sealed)
-            if ret_ns is not None and wm_ns > 0:
-                if ts_ns is None:
-                    ts_ns = g[ts_col].to_numpy().astype("datetime64[ns]").astype(np.int64)
-                g = g.loc[ts_ns > wm_ns - ret_ns]
-        else:
-            g = pd.DataFrame()
-            pend = None
-
-        if not len(g) and min_unsealed_ns is None:
-            # drained key: free the state-store entry entirely (at
-            # 10^12-turn scale a tombstone per finished conversation is
-            # the difference between bounded and unbounded state).  A
-            # later arrival for this key restarts from empty state and
-            # its stale events are re-admitted only if still inside the
-            # current watermark bracket — same contract as a new key.
-            state.remove()
-            return
-        state.update(
-            (
-                _ser_buf(g) if len(g) else None,
-                _ser_buf(pend) if pend is not None and len(pend) else None,
-                max(wm_ms, last_emit_wm_ms),
-                late_dropped,
-            )
-        )
-        # Seal-driven timers (not a wakeup per watermark advance — at
-        # 10^12-turn scale a global per-key no-data sweep each batch is
-        # the difference between O(active keys) and O(all keys)):
-        #   * pending unsealed match -> fire when the watermark can first
-        #     seal it (ceil to ms, watermark granularity);
-        #   * else a non-empty buffer with a window -> one cleanup fire
-        #     after the window fully passes, so silent keys free their
-        #     state-store entry;
-        #   * else no timer — the next arrival re-triggers processing.
-        timer = None
-        if min_unsealed_ns is not None:
-            timer = max(-(-min_unsealed_ns // 1_000_000), wm_ms + 1)
-        elif len(g) and ret_ns is not None:
-            timer = max(wm_ms + ret_ns // 1_000_000 + 1, 1)
-        if timer is not None:
-            state.setTimeoutTimestamp(timer)
-        import os as _os
-
-        if _os.environ.get("CEP_STREAM_DEBUG"):
-            with open(_os.environ["CEP_STREAM_DEBUG"], "a") as _f:
-                _f.write(
-                    f"{key[0]} wm={wm_ms} lo={last_emit_wm_ms} timed_out={state.hasTimedOut} "
-                    f"buf={len(g)} timer={timer}\n"
-                )
-
-    return fn
-
-
-def _stream_incremental(df, cp: CompiledPattern, out_schema, mode, emit_cols, w_ns,
-                        cap=None):
-    """Incremental stateful executor (stream_matches strategy docstring).
-
-    State per key:
-      * ``buf``   — SEALED events (ts <= watermark) inside the retention
-        horizon, in (ts, tiebreak) order; the attribute store for partial
-        positions and negation candidates.
-      * ``limbo`` — events above the watermark, unmatched (no sealed
-        match can involve them; they advance the NFA when they seal).
-      * ``parts`` — pickled per-(alt, state) partial tables, positions
-        indexing ``buf``.
-      * ``parked`` — accepted matches awaiting their trailing-negation
-        seal (first.ts + window), stored as per-alternative partial
-        tables; re-verified against freshly-sealed negation candidates
-        only, emitted (or killed) by the batch whose watermark crosses
-        the seal.
-    Sealed arrivals sort strictly after the stored buffer (their ts is
-    above the previous watermark, the buffer's below), so the advance is
-    a pure append; buffer eviction is a sorted prefix, so stored
-    positions re-base by a uniform shift.
-    """
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    pat = cp.pattern
-    state_schema = T.StructType(
-        [
-            T.StructField("buf", T.BinaryType()),
-            T.StructField("limbo", T.BinaryType()),
-            T.StructField("parts", T.BinaryType()),
-            T.StructField("parked", T.BinaryType()),
-            T.StructField("last_wm_ms", T.LongType()),
-            T.StructField("late_dropped", T.LongType()),
-            T.StructField("fellback", T.IntegerType()),
-        ]
-    )
-    from .batch import _guard_drops_acc
-
-    acc = _guard_drops_acc(df, cap)
-    fn = _make_incremental_fn(cp, mode, emit_cols, w_ns, cap=cap, acc=acc)
-
-    out = df.groupBy(pat.key).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    # dropped-partial count (None when the guard is off): read .value on
-    # the driver, or hand it to CepMetricsListener(guard_drops=...) for
-    # per-batch exposure + alerting
-    out.guard_drops = acc
-    return out
+    return _stream_query(df, [cp], watermark, emit_cols, mode=mode,
+                         strategy="incremental", cap=max_partials_per_state)
 
 
 def _binding_of(p: "_Partials", j: int) -> dict:
@@ -578,292 +300,6 @@ def _park_partials(alt, bindings, ts_ns) -> "_Partials":
     return p
 
 
-def _make_incremental_fn(cp: CompiledPattern, mode, emit_cols, w_ns, cap=None,
-                         acc=None):
-    """Build the per-key state function for the incremental executor.
-    Exposed separately so tests can drive it directly against a fake
-    GroupState (fast randomized semantics checks without a Spark
-    streaming query).
-
-    ``cap``: per-state partial-table bound (advance_core's state guard)
-    — bounds the state-store footprint of a hot key instead of letting
-    it grow to the fallback threshold; dropped-oldest, warn-logged,
-    opt-in (None = exact)."""
-    from .batch import _edge_ok, _flush_guard_stats
-
-    pat = cp.pattern
-    ts_col, tb_col = pat.ts_col, pat.tiebreak_col
-    trailing_ids = _trailing_alt_ids(cp)
-    alts_by_id = {alt.alt_id: alt for alt in cp.alternatives}
-    trail_specs = {
-        alt.alt_id: [
-            si for si, sp in enumerate(alt.negs) if sp.kind == "trailing"
-        ]
-        for alt in cp.alternatives
-        if alt.alt_id in trailing_ids
-    }
-
-    def _ts_i8(pdf):
-        return pdf[ts_col].to_numpy().astype("datetime64[ns]").astype(np.int64)
-
-    def _emit(g, key_val, res):
-        if mode == "flat":
-            return matches_to_pdf_flat(cp, g, key_val, res=res)
-        return matches_to_pdf_array(cp, g, key_val, emit_cols, res=res)
-
-    def fn(key, pdf_iter, state):
-        wm_ms = state.getCurrentWatermarkMs()
-        wm_ns = wm_ms * 1_000_000
-        if state.exists:
-            (buf_raw, limbo_raw, parts_raw, parked_raw,
-             last_wm_ms, late_dropped, fellback) = state.get
-            sealed = _de_buf(buf_raw) if buf_raw else None
-            limbo = _de_buf(limbo_raw) if limbo_raw else None
-        else:
-            sealed, limbo, parts_raw, parked_raw = None, None, None, None
-            last_wm_ms, late_dropped, fellback = -1, 0, 0
-        lo_ns = last_wm_ms * 1_000_000
-
-        chunks = [] if state.hasTimedOut else list(pdf_iter)
-        arrivals = pd.concat(chunks, ignore_index=True) if chunks else None
-        if arrivals is not None and len(arrivals):
-            a_ns = _ts_i8(arrivals)
-            late = a_ns <= lo_ns
-            if late.any():
-                late_dropped += int(late.sum())
-                arrivals = arrivals.loc[~late]
-            if len(arrivals):
-                limbo = (
-                    arrivals
-                    if limbo is None or not len(limbo)
-                    else pd.concat([limbo, arrivals], ignore_index=True)
-                )
-
-        # move limbo events at or below the watermark into the sealed buffer
-        n_new = 0
-        if limbo is not None and len(limbo):
-            l_ns = _ts_i8(limbo)
-            seal_mask = l_ns <= wm_ns
-            if seal_mask.any():
-                fresh = limbo.loc[seal_mask].sort_values(
-                    [ts_col, tb_col], kind="mergesort"
-                )
-                limbo = limbo.loc[~seal_mask]
-                n_new = len(fresh)
-                sealed = (
-                    fresh
-                    if sealed is None or not len(sealed)
-                    else pd.concat([sealed, fresh], ignore_index=True)
-                )
-            if not len(limbo):
-                limbo = None
-
-        tables = {}
-        parked = {}
-        min_parked_seal = None
-        if fellback:
-            # per-key rematch fallback (partial set outgrew the buffer):
-            # matcher over everything retained, emission by seal bracket.
-            # sealed/limbo stay SPLIT at the watermark: the limbo side
-            # drives the sealing timer (a pending match's seal is the ts
-            # of one of its limbo events), without which an
-            # unbounded-window key would never wake to emit.  Parked
-            # matches are discarded on fallback — the rematch re-derives
-            # them every batch (trailing checks included) and emits them
-            # in the same seal bracket.  Trailing-pending matches whose
-            # events are ALL sealed have no limbo event to wake on, so
-            # their min seal drives an explicit timer (min_parked_seal).
-            allb = [x for x in (sealed, limbo) if x is not None and len(x)]
-            if allb:
-                g = pd.concat(allb, ignore_index=True).sort_values(
-                    [ts_col, tb_col], kind="mergesort"
-                ).reset_index(drop=True)
-                ts_ns = _ts_i8(g)
-                res = []
-                fb_stats = {}
-                for a, b in match_group_nfa(cp, g, cap=cap, stats=fb_stats):
-                    lts = _seal_ts_ns(b, ts_ns, a, trailing_ids, w_ns)
-                    if lo_ns < lts <= wm_ns:
-                        res.append((a, b))
-                    elif lts > wm_ns and a in trailing_ids and (
-                        min_parked_seal is None or lts < min_parked_seal
-                    ):
-                        min_parked_seal = lts
-                _flush_guard_stats(fb_stats, acc)
-                if res:
-                    yield _emit(g, key[0], res)
-                if w_ns is not None and wm_ns > 0:
-                    keep = ts_ns > wm_ns - w_ns
-                    g = g.loc[keep].reset_index(drop=True)
-                    ts_ns = ts_ns[keep]
-                if len(g):
-                    below = ts_ns <= wm_ns
-                    sealed = g.loc[below] if below.any() else None
-                    limbo = g.loc[~below] if (~below).any() else None
-                else:
-                    sealed = limbo = None
-            parts_out = None
-        else:
-            tables = _de_tables(parts_raw)
-            parked = _de_tables(parked_raw)
-            res = []
-            g = sealed.reset_index(drop=True) if sealed is not None else None
-            sealed = g
-            if n_new:
-                store = _ColStore(g)
-                ts_ns = _ts_i8(g)
-                start = len(g) - n_new
-                # slot masks only over the new suffix (negation masks are
-                # full-range) — per-batch mask cost is O(new events)
-                masks = unary_masks(cp, store._cols, len(g), start=start)
-                stats = {}
-                res, tables = advance_core(
-                    cp, store, ts_ns, masks,
-                    tables_in=tables or None, start=start,
-                    cap=cap, stats=stats,
-                )
-                _flush_guard_stats(stats, acc)
-                # re-verify parked matches against ONLY the freshly-
-                # sealed trailing-negation candidates (earlier sealed
-                # candidates were checked at accept / prior batches;
-                # later ones are above the watermark and cannot belong
-                # to a parked match's look-ahead once it seals)
-                if parked:
-                    for alt_id in list(parked):
-                        p = parked[alt_id].get(0)
-                        if p is None or len(p) == 0:
-                            del parked[alt_id]
-                            continue
-                        alt = alts_by_id[alt_id]
-                        _, neg_mask = masks[alt_id]
-                        ok = np.ones(len(p), dtype=bool)
-                        for si in trail_specs[alt_id]:
-                            fresh_pos = np.nonzero(neg_mask[si][start:])[0] + start
-                            if len(fresh_pos):
-                                ok &= _edge_ok(
-                                    fresh_pos, alt.negs[si], store, p,
-                                    ts_ns, w_ns, leading=False,
-                                    bounds=np.array([0, len(ts_ns)]),
-                                )
-                        if not ok.all():
-                            p = p.select(ok)
-                        if len(p):
-                            parked[alt_id] = {0: p}
-                        else:
-                            del parked[alt_id]
-                # split fresh accepts: trailing matches whose look-ahead
-                # is still open get parked; everything else emits now
-                if res and trailing_ids:
-                    now = []
-                    to_park: dict = {}
-                    for a, b in res:
-                        if a in trailing_ids:
-                            pos = [
-                                x for vv in b.values()
-                                for x in (vv if isinstance(vv, tuple) else (vv,))
-                            ]
-                            seal = int(ts_ns[min(pos)]) + w_ns
-                            if seal <= wm_ns:
-                                now.append((a, b))
-                            else:
-                                to_park.setdefault(a, []).append(b)
-                        else:
-                            now.append((a, b))
-                    for a, blist in to_park.items():
-                        newp = _park_partials(alts_by_id[a], blist, ts_ns)
-                        old = parked.get(a, {}).get(0)
-                        if old is not None and len(old):
-                            parked[a][0] = _Partials.concat([old, newp])
-                        else:
-                            parked[a] = {0: newp}
-                    res = now
-            # emit parked matches whose seal the watermark just crossed
-            # (survivors of every fresh-candidate check — their whole
-            # look-ahead is sealed now, so the verdict is final)
-            if parked:
-                for alt_id in list(parked):
-                    p = parked[alt_id][0]
-                    seal_arr = p.first_ts + w_ns
-                    emit_mask = (seal_arr > lo_ns) & (seal_arr <= wm_ns)
-                    if emit_mask.any():
-                        sel = p.select(emit_mask)
-                        res.extend(
-                            (alt_id, _binding_of(sel, j)) for j in range(len(sel))
-                        )
-                        p = p.select(~emit_mask)
-                    if len(p):
-                        parked[alt_id] = {0: p}
-                        m = int((p.first_ts + w_ns).min())
-                        if min_parked_seal is None or m < min_parked_seal:
-                            min_parked_seal = m
-                    else:
-                        del parked[alt_id]
-            if res:
-                yield _emit(g, key[0], res)
-            # prune dead partials, then evict the buffer prefix and
-            # re-base stored positions (order matters: the prune bound
-            # first_ts > wm - W guarantees no live partial — or parked
-            # match (its seal first_ts + W > wm) — references an
-            # evicted row)
-            if w_ns is not None and wm_ns > 0:
-                _prune_tables(tables, wm_ns - w_ns)
-                if sealed is not None and len(sealed):
-                    keep = _ts_i8(sealed) > wm_ns - w_ns
-                    off = int((~keep).sum())
-                    if off:
-                        sealed = sealed.loc[keep].reset_index(drop=True)
-                        _shift_tables(tables, off)
-                        _shift_tables(parked, off)
-                        if not len(sealed):
-                            sealed = None
-            nrows = _tables_rows(tables)
-            buflen = (len(sealed) if sealed is not None else 0) + (
-                len(limbo) if limbo is not None else 0
-            )
-            if nrows > max(256, 8 * buflen):
-                fellback = 1
-                parts_out = None
-                parked = {}  # the rematch fallback re-derives pending matches
-                min_parked_seal = None
-            else:
-                parts_out = _ser_tables(tables)
-
-        parked_out = _ser_tables(parked) if parked else None
-        has_buf = sealed is not None and len(sealed)
-        has_limbo = limbo is not None and len(limbo)
-        if (not has_buf and not has_limbo and parts_out is None
-                and parked_out is None and min_parked_seal is None):
-            state.remove()
-            return
-        state.update(
-            (
-                _ser_buf(sealed) if has_buf else None,
-                _ser_buf(limbo) if has_limbo else None,
-                parts_out,
-                parked_out,
-                max(wm_ms, last_wm_ms),
-                late_dropped,
-                fellback,
-            )
-        )
-        # timers: wake at the earliest of (first limbo event seals,
-        # first parked match seals); else one cleanup fire after the
-        # window passes so silent keys free state
-        timer = None
-        if has_limbo:
-            min_limbo = int(_ts_i8(limbo).min())
-            timer = max(-(-min_limbo // 1_000_000), wm_ms + 1)
-        if min_parked_seal is not None:
-            t2 = max(-(-min_parked_seal // 1_000_000), wm_ms + 1)
-            timer = t2 if timer is None else min(timer, t2)
-        if timer is None and (has_buf or parts_out is not None) and w_ns is not None:
-            timer = max(wm_ms + w_ns // 1_000_000 + 1, 1)
-        if timer is not None:
-            state.setTimeoutTimestamp(timer)
-
-    return fn
-
-
 def run_stream(
     spark,
     source_dir: str,
@@ -873,9 +309,9 @@ def run_stream(
     mode: str = "flat",
     emit_cols=("turn_idx", "role", "tool", "ts"),
     max_files_per_trigger: int | None = 1,
-    strategy: str = "auto",
 ):
-    """readStream a parquet directory -> streaming match DataFrame.
+    """readStream a parquet directory -> streaming match DataFrame
+    (stream_matches).
 
     The parquet-dir source stands in for the BASELINE's Iceberg stream
     (the Iceberg runtime jar is unavailable offline); the source is
@@ -890,8 +326,7 @@ def run_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     df = reader.parquet(source_dir)
-    return stream_matches(df, cp, watermark, mode=mode, emit_cols=emit_cols,
-                          strategy=strategy)
+    return stream_matches(df, cp, watermark, mode=mode, emit_cols=emit_cols)
 
 
 def stream_matches_multi(df, cps, watermark: str,
@@ -904,19 +339,15 @@ def stream_matches_multi(df, cps, watermark: str,
     (retention = the LARGEST pattern window).  Each pattern uses the
     incremental executor (persisted partial tables, advance over
     newly-sealed events; trailing negations handled by PARKING accepted
-    matches until their first.ts + window seal, exactly like the
-    single-pattern executor) unless its partial set outgrew the buffer
-    (per-pattern rematch fallback, tracked as a state bitmask).  Output
-    is the array schema with ``pattern_id``.
+    matches until their first.ts + window seal) unless its partial set
+    outgrew the buffer (per-pattern rematch fallback, tracked as a state
+    bitmask).  Output is the array schema with ``pattern_id``.
 
     ``strategy``: ``"auto"`` — per-pattern incremental-with-fallback,
     overridable via $CEP_SPARK_STREAM_STRATEGY (rematch / incremental /
-    shared — the single-pattern surface's operational escape hatch;
-    explicit arguments are never overridden); ``"rematch"`` — force
-    EVERY pattern onto the rematch path (e.g. restarting a checkpoint
-    written before the incremental executor existed);
-    ``"incremental"`` — same as auto's default (kept for symmetry with
-    the single-pattern surface); ``"shared"`` — merge the patterns into
+    shared; explicit arguments are never overridden); ``"rematch"`` —
+    force EVERY pattern onto the rematch path; ``"incremental"`` — same
+    as auto's default; ``"shared"`` — merge the patterns into
     prefix-shared automata, ONE per connected component
     (merge.merge_components; windows may differ — max-window pruning
     with exact per-tag span re-checks): shared prefix states live ONCE
@@ -949,13 +380,50 @@ def stream_matches_multi(df, cps, watermark: str,
     behavior).  Changing the value re-partitions components — the state
     fingerprint refuses stale checkpoints loudly.
     """
-    import pandas as pd
+    if strategy not in ("auto", "rematch", "incremental", "shared"):
+        raise ValueError(f"unknown strategy {strategy!r}")
+    if strategy == "auto":
+        # CEP_SPARK_STREAM_STRATEGY pins the executor for an existing
+        # checkpoint without code changes (e.g. shared to opt a fleet
+        # in); explicit strategy= arguments are never overridden
+        import os as _os
 
+        env = _os.environ.get("CEP_SPARK_STREAM_STRATEGY")
+        if env and env not in ("rematch", "incremental", "shared"):
+            # a typo in the pin must fail loudly, not silently run the
+            # wrong executor
+            raise ValueError(
+                f"unknown CEP_SPARK_STREAM_STRATEGY {env!r} (expected "
+                "rematch / incremental / shared)"
+            )
+        strategy = env or "incremental"
+    return _stream_query(df, cps, watermark, emit_cols, mode="array",
+                         strategy=strategy, cap=max_partials_per_state,
+                         window_bucket_spread=window_bucket_spread)
+
+
+def _windows(cps):
+    """Per-pattern window in ns (None = unbounded) and per-pattern
+    buffer retention horizon (_retention_w_ns)."""
+    w_ns_of = [
+        None if cp.pattern.window is None
+        else int(cp.pattern.window.total_seconds() * 1e9)
+        for cp in cps
+    ]
+    return w_ns_of, [_retention_w_ns(cp, wn) for cp, wn in zip(cps, w_ns_of)]
+
+
+def _stream_query(df, cps, watermark, emit_cols, mode, strategy, cap,
+                  window_bucket_spread=None):
+    """The keyed stateful query behind stream_matches (one pattern) and
+    stream_matches_multi: watermark, union prefilter, one
+    applyInPandasWithState running ``_make_multi_fn``.  ``strategy`` is
+    resolved ('incremental', 'rematch' or 'shared')."""
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from ._serde import ensure_shippable
-    from .batch import prefilter_multi
+    from .batch import _guard_drops_acc
 
     ensure_shippable()
     if not cps:
@@ -969,36 +437,8 @@ def stream_matches_multi(df, cps, watermark: str,
     if len(set(ids)) != len(ids):
         raise ValueError(f"pattern_id values must be distinct, got {ids}")
     key_type = df.schema[p0.key].dataType
-    windows = [cp.pattern.window for cp in cps]
-    w_ns_of = [
-        None if w is None else int(w.total_seconds() * 1e9) for w in windows
-    ]
-    trailing_of = [_trailing_alt_ids(cp) for cp in cps]
-    rets = [_retention_w_ns(cp, wn) for cp, wn in zip(cps, w_ns_of)]
-    w_ns = None if any(r is None for r in rets) else max(rets)
-
-    if strategy not in ("auto", "rematch", "incremental", "shared"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    if strategy == "auto":
-        # the same operational escape hatch as the single-pattern path:
-        # CEP_SPARK_STREAM_STRATEGY pins the executor for an existing
-        # checkpoint without code changes (e.g. rematch for pre-v2
-        # state, or shared to opt a fleet in); explicit strategy=
-        # arguments are never overridden
-        import os as _os
-
-        env = _os.environ.get("CEP_SPARK_STREAM_STRATEGY")
-        if env and env not in ("rematch", "incremental", "shared"):
-            # a typo in the restart-pin env var must fail loudly, not
-            # silently run the wrong executor (matches the single-pattern
-            # path, which routes the env value through the same check)
-            raise ValueError(
-                f"unknown CEP_SPARK_STREAM_STRATEGY {env!r} (expected "
-                "rematch / incremental / shared)"
-            )
-        strategy = env or "incremental"
     force_rematch = strategy == "rematch"
-    if force_rematch and max_partials_per_state is not None:
+    if force_rematch and cap is not None:
         raise ValueError(
             "max_partials_per_state requires the incremental strategy"
         )
@@ -1019,15 +459,26 @@ def stream_matches_multi(df, cps, watermark: str,
         # so sharing never inflates a short rule's retained state past
         # that factor.
         merged = merge_components_bucketed(
-            cps, rets, max_spread=window_bucket_spread
+            cps, _windows(cps)[1], max_spread=window_bucket_spread
         )
 
+    # watermarks require TIMESTAMP (tz-aware); the engine's event time is
+    # tz-naive — reinterpret under the pinned UTC session timezone
     if isinstance(df.schema[p0.ts_col].dataType, T.TimestampNTZType):
         df = df.withColumn(p0.ts_col, df[p0.ts_col].cast(T.TimestampType()))
+    # Watermark semantics: Spark advances the watermark from the rows
+    # reaching the EventTimeWatermark node, and Catalyst pushes the
+    # deterministic unary prefilter below it — so the effective
+    # watermark tracks PATTERN-RELEVANT events (standard Spark
+    # behavior).  Parity is stated against that watermark ("same input
+    # stream and watermark").
     df = df.withWatermark(p0.ts_col, watermark)
+    if mode == "flat":
+        out_schema = match_schema_flat(cps[0], key_type)
+        emit_cols = ()
+    else:
+        out_schema = match_schema_array(p0, emit_cols, key_type)
     df = prefilter_multi(df, cps, extra_cols=emit_cols)
-
-    out_schema = match_schema_array(p0, emit_cols, key_type)
     state_schema = T.StructType(
         [
             T.StructField("buf", T.BinaryType()),
@@ -1047,12 +498,9 @@ def stream_matches_multi(df, cps, watermark: str,
             T.StructField("fmt", T.StringType()),
         ]
     )
-    from .batch import _guard_drops_acc
-
-    acc = _guard_drops_acc(df, max_partials_per_state)
-    fn = _make_multi_fn(cps, emit_cols, w_ns_of, trailing_of, w_ns,
-                        force_rematch=force_rematch,
-                        cap=max_partials_per_state, merged=merged, acc=acc)
+    acc = _guard_drops_acc(df, cap)
+    fn = _make_multi_fn(cps, emit_cols, mode=mode, force_rematch=force_rematch,
+                        cap=cap, merged=merged, acc=acc)
 
     out = df.groupBy(p0.key).applyInPandasWithState(
         fn,
@@ -1156,11 +604,18 @@ def _family_fp(cps, w_ns_of, unit_pats) -> str:
     return hashlib.md5(repr(fam).encode()).hexdigest()[:12]
 
 
-def _make_multi_fn(cps, emit_cols, w_ns_of, trailing_of, w_ns,
-                   force_rematch: bool = False, cap=None, merged=None,
-                   acc=None):
-    """Per-key state function for multi-pattern streaming (exposed for
-    the fake-GroupState property harness, like _make_incremental_fn).
+def _make_multi_fn(cps, emit_cols=(), mode="array", force_rematch: bool = False,
+                   cap=None, merged=None, acc=None):
+    """The per-key state function of every streaming query (module
+    docstring), exposed for the fake-GroupState property harness.
+
+    ``mode``: ``'array'`` rows (array schema, ``emit_cols``) or
+    ``'flat'`` rows (run_batch's flat schema; one unmerged pattern only —
+    the single-pattern surface).
+
+    ``force_rematch``: every pattern re-runs the matcher over the
+    retained buffer each batch instead of advancing persisted partial
+    tables (stream_matches_multi strategy='rematch').
 
     ``cap``: per-pattern per-NFA-state partial-table bound
     (advance_core's state guard) — see stream_matches_multi.
@@ -1174,8 +629,16 @@ def _make_multi_fn(cps, emit_cols, w_ns_of, trailing_of, w_ns,
     (parked bindings carry original variable names) — the shared
     predicate-mask cache makes those evaluations hits, not re-work."""
     from .batch import _edge_ok, _flush_guard_stats
+    if mode not in ("flat", "array"):
+        raise ValueError(f"mode must be 'flat' or 'array', got {mode!r}")
+    if mode == "flat" and (merged is not None or len(cps) != 1):
+        raise ValueError("flat rows need exactly one unmerged pattern")
     p0 = cps[0].pattern
     ts_col, tb_col = p0.ts_col, p0.tiebreak_col
+    w_ns_of, rets = _windows(cps)
+    # shared eviction horizon = the largest per-pattern retention
+    w_ns = None if any(r is None for r in rets) else max(rets)
+    trailing_of = [_trailing_alt_ids(cp) for cp in cps]
     merged_mode = merged is not None
     # v2: shared state is keyed by CONNECTED-COMPONENT index
     # (merge_components) instead of one whole-family unit — v1 shared
@@ -1183,9 +646,6 @@ def _make_multi_fn(cps, emit_cols, w_ns_of, trailing_of, w_ns,
     _SHARED_FMT = "shared-v2"
     _PERPAT_FMT = "perpat-v1"
     my_fmt = _SHARED_FMT if merged_mode else _PERPAT_FMT
-    # strategy='rematch' pins every pattern (checkpoint compatibility);
-    # trailing negations ride the incremental path via parked matches
-    # (single-pattern parity — _make_incremental_fn)
     alts_of = [{alt.alt_id: alt for alt in cp.alternatives} for cp in cps]
     trail_specs_of = [
         {
@@ -1266,6 +726,25 @@ def _make_multi_fn(cps, emit_cols, w_ns_of, trailing_of, w_ns,
     else:
         def tag_w(ci, alt_id):
             return unit_w_ns[ci]
+
+    def unit_rows(g, key_val, res, ci):
+        """Output rows for execution unit ci's matches (bindings index g)."""
+        if mode == "flat":
+            return matches_to_pdf_flat(run_cps[ci], g, key_val, res=res)
+        if not merged_mode:
+            return matches_to_pdf_array(run_cps[ci], g, key_val, emit_cols, res=res)
+        # merged emissions are tagged (LOCAL pattern idx, alt_id):
+        # regroup per original (global) pattern for row building
+        by: dict = {}
+        for (li, aid), b in res:
+            by.setdefault(unit_pats[ci][li], []).append((aid, b))
+        return pd.concat(
+            [
+                matches_to_pdf_array(cps[gi], g, key_val, emit_cols, res=lst)
+                for gi, lst in by.items()
+            ],
+            ignore_index=True,
+        )
 
     def fn(key, pdf_iter, state):
         import pickle
@@ -1352,22 +831,6 @@ def _make_multi_fn(cps, emit_cols, w_ns_of, trailing_of, w_ns,
         mask_cache = {}  # shared predicate masks across patterns, per batch
         orig_masks_cache = {}
 
-        def unit_rows(g, res, ci):
-            # merged emissions are tagged (LOCAL pattern idx, alt_id):
-            # regroup per original (global) pattern for row building
-            if not merged_mode:
-                return None  # caller uses its own cp directly
-            by: dict = {}
-            for (li, aid), b in res:
-                by.setdefault(unit_pats[ci][li], []).append((aid, b))
-            return pd.concat(
-                [
-                    matches_to_pdf_array(cps[gi], g, key[0], emit_cols, res=lst)
-                    for gi, lst in by.items()
-                ],
-                ignore_index=True,
-            )
-
         for ci, cp in enumerate(run_cps):
             if rematch_mask & (1 << ci):
                 if g_all is None:
@@ -1388,10 +851,7 @@ def _make_multi_fn(cps, emit_cols, w_ns_of, trailing_of, w_ns,
                         min_unsealed_ns = lts
                 _flush_guard_stats(fb_stats, acc)
                 if res_sealed:
-                    outs.append(
-                        unit_rows(g_all, res_sealed, ci) if merged_mode
-                        else matches_to_pdf_array(cp, g_all, key[0], emit_cols, res=res_sealed)
-                    )
+                    outs.append(unit_rows(g_all, key[0], res_sealed, ci))
             else:
                 tables = _de_tables(parts.get(ci))
                 parked = _de_tables(parked_by_ci.get(ci))
@@ -1411,8 +871,10 @@ def _make_multi_fn(cps, emit_cols, w_ns_of, trailing_of, w_ns,
                     )
                     _flush_guard_stats(stats, acc)
                     # re-verify parked matches against ONLY the freshly-
-                    # sealed trailing-negation candidates (single-pattern
-                    # executor parity — _make_incremental_fn)
+                    # sealed trailing-negation candidates (earlier sealed
+                    # candidates were checked at accept / prior batches;
+                    # later ones are above the watermark and cannot
+                    # belong to a parked match's look-ahead once it seals)
                     if parked:
                         for alt_id in list(parked):
                             p = parked[alt_id].get(0)
@@ -1495,15 +957,12 @@ def _make_multi_fn(cps, emit_cols, w_ns_of, trailing_of, w_ns,
                         else:
                             del parked[alt_id]
                 if res:
-                    outs.append(
-                        unit_rows(g_sealed, res, ci) if merged_mode
-                        else matches_to_pdf_array(cp, g_sealed, key[0], emit_cols, res=res)
-                    )
+                    outs.append(unit_rows(g_sealed, key[0], res, ci))
                 tables_out[ci] = tables
                 if parked:
                     parked_out_by_ci[ci] = parked
         if outs:
-            yield pd.concat(outs, ignore_index=True)
+            yield outs[0] if len(outs) == 1 else pd.concat(outs, ignore_index=True)
 
         # prune per-pattern partials; evict at the SHARED max-retention
         # horizon; shift positions by the shared prefix offset
@@ -1524,12 +983,6 @@ def _make_multi_fn(cps, emit_cols, w_ns_of, trailing_of, w_ns,
                         _shift_tables(parked, off)
                     if not len(sealed):
                         sealed = None
-            if limbo is not None and len(limbo):
-                keepl = ts_i8(limbo) > wm_ns - w_ns
-                if not keepl.all():
-                    limbo = limbo.loc[keepl]
-                    if not len(limbo):
-                        limbo = None
 
         buflen = (len(sealed) if sealed is not None else 0) + (
             len(limbo) if limbo is not None else 0

@@ -198,18 +198,14 @@ def run_stream(name: str, pats: list, df: pd.DataFrame, n_batches=20) -> None:
     """Streaming state-fn A/B: per-pattern multi executor vs
     strategy='shared' (merged tables in the state store), identical
     watermark schedule, identical emissions asserted."""
-    from cep_spark.stream import _make_multi_fn, _retention_w_ns, _trailing_alt_ids
+    from cep_spark.stream import _make_multi_fn
 
     cps = [compile_pattern(p) for p in pats]
-    w_ns_of = [int(cp.pattern.window.total_seconds() * 1e9) for cp in cps]
-    trailing_of = [_trailing_alt_ids(cp) for cp in cps]
-    w_ns = max(_retention_w_ns(cp, wn) for cp, wn in zip(cps, w_ns_of))
     bounds = np.linspace(0, len(df), n_batches + 1).astype(int)
     batches = [df.iloc[bounds[i]:bounds[i + 1]] for i in range(n_batches)]
 
     def drive(merged):
-        fn = _make_multi_fn(cps, ("event_id",), w_ns_of, trailing_of, w_ns,
-                            merged=merged)
+        fn = _make_multi_fn(cps, ("event_id",), merged=merged)
         state = _FakeState()
         wm = 0
         n_rows = 0

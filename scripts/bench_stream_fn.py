@@ -1,12 +1,13 @@
 #!/usr/bin/env python
-"""Executor A/B microbench: incremental vs rematch state function,
-driven directly (fake GroupState, no Spark query) over one hot
-conversation whose window spans many micro-batches — the regime the
-incremental executor targets (matcher work O(new) vs O(buffer) per
-batch).
+"""Executor A/B microbench: the streaming state function's incremental
+advance vs its rematch path (``_make_multi_fn([cp])`` vs
+``force_rematch=True``), driven directly (fake GroupState, no Spark
+query) over one hot conversation whose window spans many micro-batches
+— the regime the incremental advance targets (matcher work O(new) vs
+O(buffer) per batch).
 
 Spark-free on purpose: per-batch fixed costs (JVM, shuffle, state-store
-IPC) are identical between the two executors, so the matcher-side
+IPC) are identical between the two paths, so the matcher-side
 difference measured here is the true algorithmic delta, and the ratio
 is robust to host contention (both sides run seconds apart in one
 process).
@@ -32,12 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cep_spark.compiler import compile_pattern
 from cep_spark.pattern import Ev, Pattern, Seq
-from cep_spark.stream import (
-    _make_incremental_fn,
-    _make_rematch_fn,
-    _retention_w_ns,
-    _trailing_alt_ids,
-)
+from cep_spark.stream import _make_multi_fn
 
 N_TURNS = int(os.environ.get("AB_TURNS", "40000"))
 N_BATCHES = int(os.environ.get("AB_BATCHES", "200"))
@@ -112,21 +108,15 @@ def cpu_health_mips(seconds=1.0):
 
 def run_ab(workload: str, pat: Pattern, g, batches, final_wm):
     cp = compile_pattern(pat)
-    w_ns = int(WINDOW.total_seconds() * 1e9)
-    trailing = _trailing_alt_ids(cp)
-    ret = _retention_w_ns(cp, w_ns)
 
     health_before = cpu_health_mips()
     results = {}
-    for name, mk in [
-        ("rematch", lambda: _make_rematch_fn(cp, "flat", (), w_ns, trailing, ret)),
-        ("incremental", lambda: _make_incremental_fn(cp, "flat", (), w_ns)),
-        # second pass of each to damp noise; min is reported
-        ("rematch2", lambda: _make_rematch_fn(cp, "flat", (), w_ns, trailing, ret)),
-        ("incremental2", lambda: _make_incremental_fn(cp, "flat", (), w_ns)),
-    ]:
+    # second pass of each to damp noise; min is reported
+    for name, rematch in [("rematch", True), ("incremental", False),
+                          ("rematch2", True), ("incremental2", False)]:
+        fn = _make_multi_fn([cp], mode="flat", force_rematch=rematch)
         t0 = time.perf_counter()
-        n = drive(mk(), batches, final_wm)
+        n = drive(fn, batches, final_wm)
         results[name] = (time.perf_counter() - t0, n)
 
     re_sec = min(results["rematch"][0], results["rematch2"][0])

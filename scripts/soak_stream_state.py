@@ -36,9 +36,7 @@ from cep_spark.stream import (
     _de_buf,
     _de_tables,
     _make_multi_fn,
-    _retention_w_ns,
     _tables_rows,
-    _trailing_alt_ids,
 )
 
 # the SAME fake GroupState the parity tests pin against real Spark —
@@ -69,14 +67,10 @@ def main() -> None:
                 window=timedelta(seconds=120), pattern_id="groupneg"),
     ]
     cps = [compile_pattern(p) for p in pats]
-    w_ns_of = [int(cp.pattern.window.total_seconds() * 1e9) for cp in cps]
-    trailing_of = [_trailing_alt_ids(cp) for cp in cps]
-    w_ns = max(_retention_w_ns(cp, wn) for cp, wn in zip(cps, w_ns_of))
 
     from cep_spark.merge import merge_components
 
-    fn = _make_multi_fn(cps, ("turn_idx",), w_ns_of, trailing_of, w_ns,
-                        merged=merge_components(cps))
+    fn = _make_multi_fn(cps, ("turn_idx",), merged=merge_components(cps))
 
     rng = np.random.default_rng(2026)
     state = FakeState()
@@ -151,11 +145,7 @@ def _drive(cps, merged, n_batches, events_per_batch, seed=2026):
     (matches_emitted, buffer-rows series, partial-rows series)."""
     import pickle
 
-    w_ns_of = [int(cp.pattern.window.total_seconds() * 1e9) for cp in cps]
-    trailing_of = [_trailing_alt_ids(cp) for cp in cps]
-    w_ns = max(_retention_w_ns(cp, wn) for cp, wn in zip(cps, w_ns_of))
-    fn = _make_multi_fn(cps, ("turn_idx",), w_ns_of, trailing_of, w_ns,
-                        merged=merged)
+    fn = _make_multi_fn(cps, ("turn_idx",), merged=merged)
     rng = np.random.default_rng(seed)
     state = FakeState()
     ts0 = pd.Timestamp("2026-01-01")

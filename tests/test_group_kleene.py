@@ -617,17 +617,33 @@ def _canon_rep(res):
 import pytest
 
 
+# the replica enumerates chain alternatives exponentially in the group
+# size; shapes whose 1-event units make that blow up get smaller groups
+# (exclusive bound on n, like _DIST_MAX_N) plus the variables of which
+# each repetition binds exactly one, so the test can check that some
+# trial still matches more than one repetition
+_GROUP_MAX_N = {"seq_branch_bare_or": (8, ("w", "y")),
+                "double_or_in_group": (8, ("a", "b"))}
+
+
 @pytest.mark.parametrize("name", sorted(PATTERNS))
 def test_group_kleene_vs_replica(name):
     pat = PATTERNS[name]
     cp = compile_pattern(pat)
     rng = np.random.default_rng(0xC0FFEE)
+    hi, rep_vars = _GROUP_MAX_N.get(name, (11, ()))
+    multirep = 0
     for trial in range(60):
-        g = _gen_group(trial * 7 + 1, int(rng.integers(2, 11)))
+        g = _gen_group(trial * 7 + 1, int(rng.integers(2, hi)))
         gs = g.sort_values(["ts", "turn_idx"]).reset_index(drop=True)
         m = _canon_nfa(match_group_nfa(cp, gs))
         o = _canon_rep(match_group(pat, g.copy()))
         assert m == o, f"{name} trial {trial}\nnfa={m}\nrep={o}\n{g}"
+        multirep += any(
+            sum(len(ps) for v, ps in b if v in rep_vars) > 1 for _, b in m
+        )
+    if rep_vars:
+        assert multirep > 0, name  # the cap still leaves multi-repetition matches
 
 
 def test_bounded_group_equals_chain_expansion():
@@ -725,15 +741,15 @@ def test_group_interleaving_and_alignment():
 
 
 def test_group_streaming_incremental_parity():
-    """Group pattern through the incremental streaming state function
-    (fake GroupState): union of per-batch emissions == batch matcher."""
+    """Group pattern through the streaming state function (one-pattern
+    multi query, fake GroupState): union of per-batch emissions ==
+    batch matcher."""
     from cep_spark.batch import matches_to_pdf_flat
-    from cep_spark.stream import _make_incremental_fn
+    from cep_spark.stream import _make_multi_fn
     from test_stream_fn_property import FakeState, _canon_rows
 
     pat = PATTERNS["group_then_var"]
     cp = compile_pattern(pat)
-    w_ns = int(pat.window.total_seconds() * 1e9)
     rng = np.random.default_rng(99)
     for trial in range(25):
         g = _gen_group(trial * 11 + 5, int(rng.integers(4, 14)))
@@ -743,7 +759,7 @@ def test_group_streaming_incremental_parity():
         bounds = [0] + cuts + [len(g)]
         batches = [g.iloc[bounds[i]:bounds[i + 1]] for i in range(len(bounds) - 1)]
 
-        fn = _make_incremental_fn(cp, "flat", (), w_ns)
+        fn = _make_multi_fn([cp], mode="flat")
         state = FakeState()
         out, wm, seen = [], 0, 0
         for b in batches:

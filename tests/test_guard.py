@@ -6,6 +6,7 @@ store at 100 TB."""
 
 from __future__ import annotations
 
+import pickle
 from datetime import timedelta
 
 import numpy as np
@@ -15,7 +16,7 @@ import pytest
 from cep_spark.batch import _ColStore, advance_core, unary_masks
 from cep_spark.compiler import compile_pattern
 from cep_spark.pattern import Ev, Kleene, Neg, Pattern, Seq
-from cep_spark.stream import _de_tables, _make_incremental_fn, _tables_rows
+from cep_spark.stream import _de_tables, _make_multi_fn, _tables_rows
 
 PAT = Pattern(
     Seq(Ev("a", role="user"), Kleene(Ev("k", role="assistant")), Ev("c", role="tool")),
@@ -154,8 +155,7 @@ class _FakeState:
 
 
 def _drive(cp, g, cap, n_batches=4):
-    w_ns = int(cp.pattern.window.total_seconds() * 1e9)
-    fn = _make_incremental_fn(cp, "flat", (), w_ns, cap=cap)
+    fn = _make_multi_fn([cp], mode="flat", cap=cap)
     state = _FakeState()
     out = []
     max_state_rows = 0
@@ -170,7 +170,11 @@ def _drive(cp, g, cap, n_batches=4):
         if len(b):
             wm = max(wm, int(b["ts"].max().value // 1_000_000))
         if state.exists and state._val[2] is not None:
-            max_state_rows = max(max_state_rows, _tables_rows(_de_tables(state._val[2])))
+            parts = pickle.loads(state._val[2])
+            max_state_rows = max(
+                max_state_rows,
+                sum(_tables_rows(_de_tables(r)) for r in parts.values()),
+            )
     # drain timers
     for _ in range(32):
         if not state.exists or state.timer_ms is None or state.timer_ms > wm + 10**9:
@@ -201,17 +205,6 @@ def test_incremental_stream_guard_bounds_state():
     assert capped_peak < exact_peak
 
 
-def test_rematch_strategy_rejects_guard(spark):
-    from cep_spark.stream import stream_matches
-
-    cp = compile_pattern(PAT)
-    df = spark.createDataFrame(_hot_frame(n_assist=3, reps=1))
-    with pytest.raises(ValueError, match="incremental strategy"):
-        stream_matches(
-            df, cp, "10 seconds", strategy="rematch", max_partials_per_state=8
-        )
-
-
 def _multi_cps():
     import dataclasses
 
@@ -228,18 +221,7 @@ def _multi_cps():
 
 
 def _drive_multi(cps, g, cap, n_batches=4):
-    import pickle
-
-    from cep_spark.stream import (
-        _make_multi_fn,
-        _retention_w_ns,
-        _trailing_alt_ids,
-    )
-
-    w_ns_of = [int(cp.pattern.window.total_seconds() * 1e9) for cp in cps]
-    trailing_of = [_trailing_alt_ids(cp) for cp in cps]
-    w_ns = max(_retention_w_ns(cp, wn) for cp, wn in zip(cps, w_ns_of))
-    fn = _make_multi_fn(cps, ("turn_idx",), w_ns_of, trailing_of, w_ns, cap=cap)
+    fn = _make_multi_fn(cps, ("turn_idx",), cap=cap)
     state = _FakeState()
     out = []
     max_state_rows = 0
@@ -297,20 +279,9 @@ def test_multi_trailing_neg_parks_instead_of_rematch():
     (single-pattern parity), not by pinning the pattern onto the
     per-batch buffer rematch: mid-stream the parked state field is
     populated while the fallback bitmask stays 0."""
-    import pickle
-
-    from cep_spark.stream import (
-        _make_multi_fn,
-        _retention_w_ns,
-        _trailing_alt_ids,
-    )
-
     cps = _multi_cps()
     g = _hot_frame(n_assist=6)
-    w_ns_of = [int(cp.pattern.window.total_seconds() * 1e9) for cp in cps]
-    trailing_of = [_trailing_alt_ids(cp) for cp in cps]
-    w_ns = max(_retention_w_ns(cp, wn) for cp, wn in zip(cps, w_ns_of))
-    fn = _make_multi_fn(cps, ("turn_idx",), w_ns_of, trailing_of, w_ns)
+    fn = _make_multi_fn(cps, ("turn_idx",))
     state = _FakeState()
     # batch 1: everything arrives, wm still 0 → all limbo
     list(fn(("hot",), iter([g]), state))
@@ -361,9 +332,8 @@ def test_incremental_fn_reports_drops_to_accumulator():
     not just executor warn-logs."""
     cp = compile_pattern(PAT)
     g = _hot_frame(n_assist=12)
-    w_ns = int(cp.pattern.window.total_seconds() * 1e9)
     acc = _FakeAcc()
-    fn = _make_incremental_fn(cp, "flat", (), w_ns, cap=16, acc=acc)
+    fn = _make_multi_fn([cp], mode="flat", cap=16, acc=acc)
     state = _FakeState()
     wm = 0
     bounds = np.linspace(0, len(g), 5).astype(int)
@@ -404,8 +374,7 @@ def test_stream_guard_metrics_listener(spark, tmp_path):
         str(src)
     )
     out = stream_matches(sdf, cp, watermark="5 seconds", mode="flat",
-                         emit_cols=("turn_idx",), strategy="incremental",
-                         max_partials_per_state=16)
+                         emit_cols=("turn_idx",), max_partials_per_state=16)
     assert out.guard_drops is not None
     listener = CepMetricsListener(guard_drops=out.guard_drops)
     spark.streams.addListener(listener)

@@ -689,6 +689,9 @@ def test_engine_facade_strategy_validation():
     single = CepEngine(_pat(Seq(Ev("a", role="user"), Ev("b", role="tool"))))
     with pytest.raises(ValueError, match="multi-pattern engines only"):
         single.run_batch(None, strategy="shared")  # validated before df use
+    # single-pattern streaming has one executor: no strategy to pick
+    with pytest.raises(ValueError, match="multi-pattern engines only"):
+        single.run_stream(None, "0 seconds", strategy="rematch")
 
 
 def test_group_identity_in_slot_signature():
@@ -846,17 +849,10 @@ def test_stream_shared_checkpoint_format_guard():
 
     def drive_then_switch(first, then):
         from cep_spark.merge import merge_compiled
-        from cep_spark.stream import (
-            _make_multi_fn,
-            _retention_w_ns,
-            _trailing_alt_ids,
-        )
+        from cep_spark.stream import _make_multi_fn
 
-        w_ns_of = [int(cp.pattern.window.total_seconds() * 1e9) for cp in cps]
-        trailing_of = [_trailing_alt_ids(cp) for cp in cps]
-        w_ns = max(_retention_w_ns(cp, wn) for cp, wn in zip(cps, w_ns_of))
         mk_fn = lambda s: _make_multi_fn(
-            cps, ("turn_idx",), w_ns_of, trailing_of, w_ns,
+            cps, ("turn_idx",),
             merged=merge_compiled(cps) if s == "shared" else None,
         )
         state = FakeState()
@@ -888,22 +884,15 @@ def test_stream_shared_fellback_state_guard():
     from test_stream_fn_property import FakeState
 
     from cep_spark.merge import merge_compiled
-    from cep_spark.stream import (
-        _make_multi_fn,
-        _retention_w_ns,
-        _trailing_alt_ids,
-    )
+    from cep_spark.stream import _make_multi_fn
 
     cps = [compile_pattern(p) for p in _mergeable_stream_family()]
     g = _group(7, n=16)
 
-    w_ns_of = [int(cp.pattern.window.total_seconds() * 1e9) for cp in cps]
-    trailing_of = [_trailing_alt_ids(cp) for cp in cps]
-    w_ns = max(_retention_w_ns(cp, wn) for cp, wn in zip(cps, w_ns_of))
     # force_rematch stands in for the 8x-buffer fallback: the shared
     # unit keeps NO partial tables, only buffer + fellback bits
     fn_shared = _make_multi_fn(
-        cps, ("turn_idx",), w_ns_of, trailing_of, w_ns,
+        cps, ("turn_idx",),
         merged=merge_compiled(cps), force_rematch=True,
     )
     state = FakeState()
@@ -916,9 +905,7 @@ def test_stream_shared_fellback_state_guard():
     # ...but the layout + family fingerprint ARE recorded
     assert state._val[7].startswith("shared-v2:")
 
-    fn_perpat = _make_multi_fn(
-        cps, ("turn_idx",), w_ns_of, trailing_of, w_ns, merged=None,
-    )
+    fn_perpat = _make_multi_fn(cps, ("turn_idx",), merged=None)
     with pytest.raises(RuntimeError, match="fresh checkpoint"):
         for _ in fn_perpat(("c0",), iter([g.iloc[8:]]), state):
             pass
@@ -932,20 +919,12 @@ def test_stream_family_fingerprint_guard():
     of restoring partial tables against a different automaton."""
     from test_stream_fn_property import FakeState
 
-    from cep_spark.stream import (
-        _make_multi_fn,
-        _retention_w_ns,
-        _trailing_alt_ids,
-    )
+    from cep_spark.stream import _make_multi_fn
 
     cps = [compile_pattern(p) for p in _mergeable_stream_family()]
     g = _group(7, n=16)
-    w_ns_of = [int(cp.pattern.window.total_seconds() * 1e9) for cp in cps]
-    trailing_of = [_trailing_alt_ids(cp) for cp in cps]
-    w_ns = max(_retention_w_ns(cp, wn) for cp, wn in zip(cps, w_ns_of))
 
-    fn = _make_multi_fn(cps, ("turn_idx",), w_ns_of, trailing_of, w_ns,
-                        merged=None)
+    fn = _make_multi_fn(cps, ("turn_idx",), merged=None)
     state = FakeState()
     state.wm_ms = 0
     for _ in fn(("c0",), iter([g.iloc[:8]]), state):
@@ -954,16 +933,14 @@ def test_stream_family_fingerprint_guard():
 
     # same layout (perpat), REORDERED family — component-index keys no
     # longer line up; must refuse with the fingerprint message
-    fn_rev = _make_multi_fn(cps[::-1], ("turn_idx",), w_ns_of[::-1],
-                            trailing_of[::-1], w_ns, merged=None)
+    fn_rev = _make_multi_fn(cps[::-1], ("turn_idx",), merged=None)
     with pytest.raises(RuntimeError, match="pattern family"):
         for _ in fn_rev(("c0",), iter([g.iloc[8:]]), state):
             pass
 
     # unchanged family restores cleanly (fingerprint is deterministic
     # across separately-constructed closures)
-    fn_same = _make_multi_fn(cps, ("turn_idx",), w_ns_of, trailing_of,
-                             w_ns, merged=None)
+    fn_same = _make_multi_fn(cps, ("turn_idx",), merged=None)
     for _ in fn_same(("c0",), iter([g.iloc[8:]]), state):
         pass
 
@@ -1082,21 +1059,13 @@ def test_stream_shared_with_state_guard():
     from test_stream_fn_property import FakeState
 
     from cep_spark.merge import merge_compiled
-    from cep_spark.stream import (
-        _make_multi_fn,
-        _retention_w_ns,
-        _trailing_alt_ids,
-    )
+    from cep_spark.stream import _make_multi_fn
 
     cps = [compile_pattern(p) for p in _mergeable_stream_family()]
     g = _group(11, n=24)
-    w_ns_of = [int(cp.pattern.window.total_seconds() * 1e9) for cp in cps]
-    trailing_of = [_trailing_alt_ids(cp) for cp in cps]
-    w_ns = max(_retention_w_ns(cp, wn) for cp, wn in zip(cps, w_ns_of))
 
     def drive(cap):
-        fn = _make_multi_fn(cps, ("turn_idx",), w_ns_of, trailing_of, w_ns,
-                            merged=merge_compiled(cps), cap=cap)
+        fn = _make_multi_fn(cps, ("turn_idx",), merged=merge_compiled(cps), cap=cap)
         state = FakeState()
         rows = []
         wm = 0
@@ -1159,11 +1128,7 @@ def test_stream_shared_per_component_fallback():
 
     from cep_spark.batch import matches_to_pdf_array
     from cep_spark.merge import merge_components
-    from cep_spark.stream import (
-        _make_multi_fn,
-        _retention_w_ns,
-        _trailing_alt_ids,
-    )
+    from cep_spark.stream import _make_multi_fn
 
     w = timedelta(minutes=30)
     pats = [
@@ -1206,11 +1171,7 @@ def test_stream_shared_per_component_fallback():
 
     # A/B state inspection: drive the fn directly (not via _drive_multi)
     # so the fellback bitmask / parts can be asserted mid-stream
-    w_ns_of = [int(cp.pattern.window.total_seconds() * 1e9) for cp in cps]
-    trailing_of = [_trailing_alt_ids(cp) for cp in cps]
-    w_ns = max(_retention_w_ns(cp, wn) for cp, wn in zip(cps, w_ns_of))
-    fn = _make_multi_fn(cps, ("turn_idx",), w_ns_of, trailing_of, w_ns,
-                        merged=units)
+    fn = _make_multi_fn(cps, ("turn_idx",), merged=units)
     state = FakeState()
     out = []
     wm = 0

@@ -726,6 +726,80 @@ def test_resume_from_checkpoint_exactly_once(spark, events_pdf, tmp_path):
     assert got_rows == _canon(batch.collect())  # no loss, no duplicates
 
 
+def test_single_pattern_v1_checkpoint_refused(spark, events_pdf, tmp_path):
+    """Single-pattern queries keep their state in the multi-pattern
+    layout (with its fmt column).  A checkpoint written with the
+    earlier single-pattern state schema (buf, limbo, parts, parked,
+    last_wm_ms, late_dropped, fellback) must be refused loudly at
+    restart, not reinterpreted."""
+    from pyspark.sql import types as T
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from cep_spark.batch import match_schema_flat, prefilter
+
+    pat = _pat(Seq(Ev("a", event_type="signup"), Ev("b", event_type="purchase")))
+    cp = compile_pattern(pat)
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    out = ExactlyOnceParquetSink(str(tmp_path / "out"))
+    sorted_ev = events_pdf.sort_values("ts").reset_index(drop=True)
+    n = len(sorted_ev)
+    os.makedirs(src, exist_ok=True)
+    _write_pq(sorted_ev.iloc[: n // 2], f"{src}/p000.parquet")
+
+    old_state = T.StructType([
+        T.StructField("buf", T.BinaryType()),
+        T.StructField("limbo", T.BinaryType()),
+        T.StructField("parts", T.BinaryType()),
+        T.StructField("parked", T.BinaryType()),
+        T.StructField("last_wm_ms", T.LongType()),
+        T.StructField("late_dropped", T.LongType()),
+        T.StructField("fellback", T.IntegerType()),
+    ])
+
+    def old_fn(key, pdf_iter, state):
+        for _ in pdf_iter:
+            pass
+        state.update((None, None, None, None, state.getCurrentWatermarkMs(), 0, 0))
+        return iter([])
+
+    sdf = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    sdf = sdf.withColumn("ts", sdf["ts"].cast(T.TimestampType()))
+    sdf = prefilter(sdf.withWatermark("ts", "0 seconds"), cp)
+    q = (
+        sdf.groupBy("user_id").applyInPandasWithState(
+            old_fn,
+            outputStructType=match_schema_flat(cp, sdf.schema["user_id"].dataType),
+            stateStructType=old_state,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        )
+        .writeStream.foreachBatch(out.foreach_batch())
+        .outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(240)
+    assert q.exception() is None
+    committed = out.committed_batches()
+
+    _write_pq(sorted_ev.iloc[n // 2:], f"{src}/p001.parquet")
+    with pytest.raises(Exception) as err:
+        q = (
+            run_stream(spark, src, cp, watermark="0 seconds")
+            .writeStream.foreachBatch(out.foreach_batch())
+            .outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(240)
+    # Spark's state-schema check refuses the restart before any batch
+    assert "STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE" in str(err.value)
+    assert out.committed_batches() == committed
+
+
 def test_resume_from_checkpoint_group_units(spark, events_pdf, tmp_path):
     """Session 9/10 state-restore pin: stop and RESTART a query over an
     Or_-member group family — partials holding conjunctive (unit, cnt)
@@ -987,29 +1061,22 @@ def test_stream_edge_negation_parity(spark, events_pdf, tmp_path):
     assert 0 < got.count() < plain.count()
 
 
-def test_incremental_equals_rematch_strategy(spark, events_pdf, tmp_path):
+def test_incremental_kleene_equals_batch(spark, events_pdf, tmp_path):
     """The incremental executor (persisted partial tables, advance over
-    newly-sealed events only) emits exactly what the rematch executor
-    emits, on a multi-batch out-of-order feed."""
+    newly-sealed events only) emits exactly the batch match set for a
+    bounded Kleene pattern on a six-file, multi-batch feed."""
     pat = _pat(
         Seq(Ev("a", event_type="signup"), Kleene(Ev("k", event_type="click"), max_len=2),
             Ev("c", event_type="purchase"))
     )
     cp = compile_pattern(pat)
     with_flush = pd.concat([events_pdf, _flush_row(events_pdf)], ignore_index=True)
-    outs = {}
-    for strat in ("incremental", "rematch"):
-        src = str(tmp_path / f"src_{strat}")
-        _split_files(with_flush, src, k=6)
-        sm = run_stream(spark, src, cp, watermark="0 seconds", strategy=strat)
-        q = (
-            sm.writeStream.format("memory").queryName(f"m_{strat}").outputMode("append")
-            .option("checkpointLocation", str(tmp_path / f"ckpt_{strat}"))
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination(240)
-        outs[strat] = _canon(spark.sql(f"SELECT * FROM m_{strat}").collect())
-    assert outs["incremental"] == outs["rematch"] and len(outs["incremental"]) > 0
+    src = str(tmp_path / "src")
+    _split_files(with_flush, src, k=6)
+    got = _run(spark, src, cp, "0 seconds", str(tmp_path / "ckpt"), "m_kleene_inc")
+    batch = run_batch(spark.read.parquet(f"{SF}/events.parquet"), cp, mode="flat")
+    want = _canon(batch.collect())
+    assert _canon(got.collect()) == want and len(want) > 0
 
 
 def test_incremental_fallback_on_partial_explosion(spark, tmp_path):
@@ -1034,7 +1101,7 @@ def test_incremental_fallback_on_partial_explosion(spark, tmp_path):
     pat = _pat(Seq(Ev("a", event_type="signup"), Kleene(Ev("k", event_type="click")),
                    Ev("c", event_type="purchase")), window=timedelta(hours=1))
     cp = compile_pattern(pat)
-    sm = run_stream(spark, src, cp, watermark="0 seconds", strategy="incremental")
+    sm = run_stream(spark, src, cp, watermark="0 seconds")
     q = (
         sm.writeStream.format("memory").queryName("m_boom").outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt"))

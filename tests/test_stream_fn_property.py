@@ -1,5 +1,6 @@
-"""Randomized semantics checks of the incremental streaming state
-function, driven DIRECTLY against a fake GroupState — no Spark
+"""Randomized semantics checks of the streaming state function
+(stream._make_multi_fn; single patterns run as a one-pattern multi
+query with flat rows), driven DIRECTLY against a fake GroupState — no Spark
 streaming query, so hypothesis can explore arrival orders, batch
 splits, watermark lags, and timer wakeups orders of magnitude faster
 than end-to-end tests.
@@ -22,7 +23,7 @@ from cep_spark.batch import match_group_nfa, matches_to_pdf_flat
 from cep_spark.compiler import compile_pattern
 from cep_spark.conditions import attr
 from cep_spark.pattern import And_, Ev, Kleene, Neg, Or_, Pattern, Seq
-from cep_spark.stream import _make_incremental_fn
+from cep_spark.stream import _make_multi_fn
 
 ROLES = ["user", "assistant", "tool"]
 
@@ -409,8 +410,7 @@ def _drive(cp, batches, final_wm_ms):
     """Feed arrival batches through the state fn; watermark after batch i
     = max event ms seen so far (delay 0, applied NEXT batch like Spark);
     then fire timers until drained.  Returns (emitted rows, state)."""
-    fn = _make_incremental_fn(cp, "flat", (), None if cp.pattern.window is None
-                              else int(cp.pattern.window.total_seconds() * 1e9))
+    fn = _make_multi_fn([cp], mode="flat")
     state = FakeState()
     out = []
     wm = 0
@@ -509,32 +509,26 @@ def random_pattern_scenario(draw):
           suppress_health_check=[HealthCheck.too_slow])
 @given(sc=random_pattern_scenario())
 def test_random_pattern_stream_fn_parity(sc):
-    """RANDOM pattern ASTs through BOTH streaming executors — the
-    incremental executor (incl. trailing-neg parking) and, for
-    trailing-neg patterns, the rematch executor too — union of
-    emissions == batch over effective rows, exactly once, for each."""
-    from cep_spark.stream import (
-        _make_rematch_fn,
-        _retention_w_ns,
-        _trailing_alt_ids,
-    )
+    """RANDOM pattern ASTs through BOTH paths of the state function —
+    the incremental advance (incl. trailing-neg parking) and, for
+    trailing-neg patterns, the rematch fallback too (force_rematch) —
+    union of emissions == batch over effective rows, exactly once, for
+    each."""
+    from cep_spark.stream import _trailing_alt_ids
 
     pat, g, cuts = sc
     try:
         cp = compile_pattern(pat)
     except ValueError:
         return  # documented compile-time rejection
-    w_ns = (None if pat.window is None
-            else int(pat.window.total_seconds() * 1e9))
     trailing = _trailing_alt_ids(cp)
     bounds = [0] + cuts + [len(g)]
     batches = [g.iloc[bounds[i]:bounds[i + 1]] for i in range(len(bounds) - 1)]
     final_wm = int(g["ts"].max().value // 1_000_000) + 10_000_000
 
-    fns = [("incremental", _make_incremental_fn(cp, "flat", (), w_ns))]
+    fns = [("incremental", _make_multi_fn([cp], mode="flat"))]
     if trailing:
-        ret = _retention_w_ns(cp, w_ns)
-        fns.append(("rematch", _make_rematch_fn(cp, "flat", (), w_ns, trailing, ret)))
+        fns.append(("rematch", _make_multi_fn([cp], mode="flat", force_rematch=True)))
 
     eff = _effective_rows(batches)
     want = []
@@ -627,20 +621,12 @@ def _effective_rows(batches):
 
 def _drive_multi(cps, batches, final_wm_ms, emit_cols=("turn_idx",),
                  strategy=None):
-    from cep_spark.stream import _make_multi_fn, _retention_w_ns, _trailing_alt_ids
-
-    w_ns_of = [None if cp.pattern.window is None
-               else int(cp.pattern.window.total_seconds() * 1e9) for cp in cps]
-    trailing_of = [_trailing_alt_ids(cp) for cp in cps]
-    rets = [_retention_w_ns(cp, wn) for cp, wn in zip(cps, w_ns_of)]
-    w_ns = None if any(r is None for r in rets) else max(rets)
     merged = None
     if strategy == "shared":
         from cep_spark.merge import merge_components
 
         merged = merge_components(cps)
-    fn = _make_multi_fn(cps, emit_cols, w_ns_of, trailing_of, w_ns,
-                        merged=merged)
+    fn = _make_multi_fn(cps, emit_cols, merged=merged)
     state = FakeState()
     out = []
     wm = 0
