@@ -36,18 +36,14 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def build_spark(cpus: int):
-    from pyspark.sql import SparkSession
+    from cep_spark.session import get_spark
 
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("cep_spark-bench")
-        .config("spark.sql.shuffle.partitions", str(max(cpus * 2, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("BENCH_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    return get_spark(
+        f"local[{cpus}]",
+        app_name="cep_spark-bench",
+        shuffle_partitions=max(cpus * 2, 8),
+        driver_memory=os.environ.get("BENCH_DRIVER_MEM", "16g"),
+        extra_conf={"spark.sql.execution.arrow.maxRecordsPerBatch": "65536"},
     )
 
 

@@ -15,28 +15,38 @@ conditions over a time window), re-expressed Spark-first:
   similarity, text stats, multimodal binary plumbing (pipeline)
 
 See SURVEY.md for the blueprint and semantics pinning.
+
+The exports below load on first use (PEP 562), so importing a light
+submodule — the Python worker daemon ``cep_spark._pydaemon`` — does not
+pull in NumPy, pandas or PyArrow.
 """
 
-from .batch import run_batch
-from .engine import CepEngine
-from .compiler import compile_pattern
-from .conditions import TRUE, attr, lit
-from .pattern import And_, Ev, Kleene, Neg, Or_, Pattern, Seq
-from .sources import PushStream
+from importlib import import_module
 
-__all__ = [
-    "PushStream",
-    "attr",
-    "lit",
-    "TRUE",
-    "And_",
-    "Ev",
-    "Kleene",
-    "Neg",
-    "Or_",
-    "Pattern",
-    "Seq",
-    "compile_pattern",
-    "run_batch",
-    "CepEngine",
-]
+_EXPORTS = {
+    "PushStream": "sources",
+    "attr": "conditions",
+    "lit": "conditions",
+    "TRUE": "conditions",
+    "And_": "pattern",
+    "Ev": "pattern",
+    "Kleene": "pattern",
+    "Neg": "pattern",
+    "Or_": "pattern",
+    "Pattern": "pattern",
+    "Seq": "pattern",
+    "compile_pattern": "compiler",
+    "run_batch": "batch",
+    "CepEngine": "engine",
+}
+
+__all__ = list(_EXPORTS)
+
+
+def __getattr__(name):
+    mod = _EXPORTS.get(name)
+    if mod is None:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(import_module(f".{mod}", __name__), name)
+    globals()[name] = value
+    return value

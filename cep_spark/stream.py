@@ -173,16 +173,6 @@ def _shift_tables(tables, off: int) -> None:
             p.last_pos = p.last_pos - off
 
 
-def _match_last_ts_ns(binding: dict, ts_ns: np.ndarray) -> int:
-    last = -1
-    for p in binding.values():
-        for pos in p if isinstance(p, tuple) else (p,):
-            t = int(ts_ns[pos])
-            if t > last:
-                last = t
-    return last
-
-
 def _trailing_alt_ids(cp: CompiledPattern) -> frozenset:
     """Alternatives carrying a trailing negation: their matches can be
     invalidated by a neg event up to first.ts + window, so they seal at

@@ -75,6 +75,15 @@ def _canon(rows):
     return sorted(tuple(r) for r in rows)
 
 
+def _match_last_ts_ns(binding: dict, ts_ns: np.ndarray) -> int:
+    """Event-time (ns) of a match's last bound event."""
+    last = -1
+    for p in binding.values():
+        for pos in p if isinstance(p, tuple) else (p,):
+            last = max(last, int(ts_ns[pos]))
+    return last
+
+
 def _sealed_batch(spark, events_pdf, cp, wm_ms):
     """Batch matches restricted to last-event-ts <= watermark (ms)."""
     rows = []
@@ -82,7 +91,6 @@ def _sealed_batch(spark, events_pdf, cp, wm_ms):
         g = g.sort_values(["ts", "event_id"]).reset_index(drop=True)
         ts_ns = g["ts"].to_numpy().astype("datetime64[ns]").astype(np.int64)
         from cep_spark.batch import matches_to_pdf_flat
-        from cep_spark.stream import _match_last_ts_ns
 
         res = [
             (a, b)
