@@ -25,6 +25,7 @@ from cep_spark.compiler import compile_pattern
 from cep_spark.conditions import TRUE, attr, lit
 from cep_spark.join_planner import oracle_sql_for, plan_join
 from cep_spark.pattern import And_, Ev, Kleene, Neg, Or_, Pattern, Seq
+from cep_spark.session import read_parquet
 
 # ---------------------------------------------------------------------------
 # CEP pattern catalog (events table) — one entry per operator family of
@@ -181,11 +182,16 @@ CEP_PATTERNS = {
 }
 
 
+def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table, its schema inferred once per application."""
+    return read_parquet(spark, f"{sf_dir}/events.parquet")
+
+
 def _cep_query(pat: Pattern) -> Callable[[SparkSession, str], DataFrame]:
     cp = compile_pattern(pat)
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        df = spark.read.parquet(f"{sf_dir}/events.parquet")
+        df = _events(spark, sf_dir)
         return plan_join(df, cp)
 
     return run
@@ -204,7 +210,7 @@ def _cep_query_nfa(pat: Pattern) -> Callable[[SparkSession, str], DataFrame]:
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         from cep_spark.batch import run_batch
 
-        df = spark.read.parquet(f"{sf_dir}/events.parquet")
+        df = _events(spark, sf_dir)
         return run_batch(df, cp, mode="flat")
 
     return run
@@ -229,7 +235,7 @@ _KLEENE_UNBOUNDED_PAT = _p(
 def _kleene_unbounded_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_UNBOUNDED_PAT), mode="flat")
 
 
@@ -283,7 +289,7 @@ _KLEENE_GROUP_PAT = _p(
 def _kleene_group_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_GROUP_PAT), mode="flat")
 
 
@@ -347,7 +353,7 @@ _KLEENE_GROUP_LEAD_NEG_PAT = _p(
 def _kleene_group_lead_neg_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_GROUP_LEAD_NEG_PAT), mode="flat")
 
 
@@ -423,7 +429,7 @@ _KLEENE_GROUP_NEG_PAT = _p(
 def _kleene_group_neg_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_GROUP_NEG_PAT), mode="flat")
 
 
@@ -497,7 +503,7 @@ _KLEENE_GROUP_TRAIL_NEG_PAT = _p(
 def _kleene_group_trail_neg_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_GROUP_TRAIL_NEG_PAT), mode="flat")
 
 
@@ -577,7 +583,7 @@ _KLEENE_GROUP_OR_PAT = _p(
 def _kleene_group_or_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_GROUP_OR_PAT), mode="flat")
 
 
@@ -659,7 +665,7 @@ _KLEENE_GROUP_LEAD_EDGE_PAT = _p(
 def _kleene_group_lead_edge_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_GROUP_LEAD_EDGE_PAT),
                      mode="flat")
 
@@ -734,7 +740,7 @@ _KLEENE_BARE_OR_PAT = _p(
 def _kleene_bare_or_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_BARE_OR_PAT), mode="flat")
 
 
@@ -810,7 +816,7 @@ _KLEENE_AND_GROUP_PAT = _p(
 def _kleene_and_group_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_AND_GROUP_PAT), mode="flat")
 
 
@@ -880,7 +886,7 @@ _KLEENE_GROUP_SEQ_OR_PAT = _p(
 def _kleene_group_seq_or_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_GROUP_SEQ_OR_PAT), mode="flat")
 
 
@@ -974,7 +980,7 @@ _KLEENE_NESTED_BOUNDED_PAT = _p(
 def _kleene_nested_bounded_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_NESTED_BOUNDED_PAT),
                      mode="flat")
 
@@ -1076,7 +1082,7 @@ _KLEENE_NESTED_UNBOUNDED_PAT = _p(
 def _kleene_nested_unbounded_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_NESTED_UNBOUNDED_PAT),
                      mode="flat")
 
@@ -1149,7 +1155,7 @@ _KLEENE_LOOP_FIRST_PAT = _p(
 def _kleene_loop_first_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_LOOP_FIRST_PAT),
                      mode="flat")
 
@@ -1228,7 +1234,7 @@ _KLEENE_LOOP_UNIT_PAT = _p(
 def _kleene_loop_unit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_LOOP_UNIT_PAT),
                      mode="flat")
 
@@ -1310,7 +1316,7 @@ _KLEENE_LOOP_UNIT_NEG_PAT = _p(
 def _kleene_loop_unit_neg_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_LOOP_UNIT_NEG_PAT),
                      mode="flat")
 
@@ -1405,7 +1411,7 @@ _KLEENE_DIST_OR_PAT = _p(
 def _kleene_dist_or_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_DIST_OR_PAT), mode="flat")
 
 
@@ -1536,7 +1542,7 @@ _KLEENE_DIST_AND_PAT = _p(
 def _kleene_dist_and_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_DIST_AND_PAT), mode="flat")
 
 
@@ -1670,7 +1676,7 @@ _KLEENE_DIST_AND_EXT_PAT = _p(
 def _kleene_dist_and_ext_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_DIST_AND_EXT_PAT), mode="flat")
 
 
@@ -1791,7 +1797,7 @@ _KLEENE_DIST_AND_MEM_NEG_PAT = _p(
 def _kleene_dist_and_mem_neg_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_DIST_AND_MEM_NEG_PAT),
                      mode="flat")
 
@@ -1938,7 +1944,7 @@ _KLEENE_DIST_AND_MEM_LEAD_NEG_PAT = _p(
 def _kleene_dist_and_mem_lead_neg_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_DIST_AND_MEM_LEAD_NEG_PAT),
                      mode="flat")
 
@@ -1978,7 +1984,7 @@ _KLEENE_DIST_KLEENE_PAT = _p(
 def _kleene_dist_kleene_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_DIST_KLEENE_PAT), mode="flat")
 
 
@@ -2120,7 +2126,7 @@ _KLEENE_AND_POS_PAT = _p(
 def _kleene_and_pos_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_AND_POS_PAT), mode="flat")
 
 
@@ -2208,7 +2214,7 @@ _KLEENE_AND_POS_SEQ_PAT = _p(
 def _kleene_and_pos_seq_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_AND_POS_SEQ_PAT), mode="flat")
 
 
@@ -2299,7 +2305,7 @@ _KLEENE_AND_POS_MEM_NEG_PAT = _p(
 def _kleene_and_pos_mem_neg_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_AND_POS_MEM_NEG_PAT),
                      mode="flat")
 
@@ -2325,7 +2331,7 @@ _KLEENE_AND_POS_MEM_LEAD_NEG_PAT = _p(
 def _kleene_and_pos_mem_lead_neg_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_AND_POS_MEM_LEAD_NEG_PAT),
                      mode="flat")
 
@@ -2373,7 +2379,7 @@ _KLEENE_AND_POS_OR_MEM_PAT = _p(
 def _kleene_and_pos_or_mem_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_AND_POS_OR_MEM_PAT),
                      mode="flat")
 
@@ -2474,7 +2480,7 @@ _KLEENE_BARE_AND_MEM_PAT = _p(
 def _kleene_bare_and_mem_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_BARE_AND_MEM_PAT),
                      mode="flat")
 
@@ -2562,7 +2568,7 @@ _KLEENE_BARE_AND_MEM_LEAD_NEG_PAT = _p(
 def _kleene_bare_and_mem_lead_neg_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_BARE_AND_MEM_LEAD_NEG_PAT),
                      mode="flat")
 
@@ -2668,7 +2674,7 @@ _KLEENE_OR_MEM_BR_NEG_PAT = _p(
 def _kleene_or_mem_br_neg_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_OR_MEM_BR_NEG_PAT),
                      mode="flat")
 
@@ -2795,7 +2801,7 @@ _KLEENE_GROUP_BR_NEG_PAT = _p(
 def _kleene_group_br_neg_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_GROUP_BR_NEG_PAT),
                      mode="flat")
 
@@ -2823,7 +2829,7 @@ _KLEENE_GROUP_BR_LEAD_NEG_PAT = _p(
 def _kleene_group_br_lead_neg_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_GROUP_BR_LEAD_NEG_PAT),
                      mode="flat")
 
@@ -2873,7 +2879,7 @@ _KLEENE_GROUP_BR_TRAIL_NEG_PAT = _p(
 def _kleene_group_br_trail_neg_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_GROUP_BR_TRAIL_NEG_PAT),
                      mode="flat")
 
@@ -2982,7 +2988,7 @@ _KLEENE_GROUP_BR_TRAIL_EDGE_PAT = _p(
 def _kleene_group_br_trail_edge_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_KLEENE_GROUP_BR_TRAIL_EDGE_PAT),
                      mode="flat")
 
@@ -3163,7 +3169,7 @@ def _udf_pred_pattern() -> Pattern:
 def _udf_pred_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cep_spark.batch import run_batch
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     return run_batch(df, compile_pattern(_udf_pred_pattern()), mode="flat")
 
 
@@ -3202,7 +3208,7 @@ def _multi_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         compile_pattern(dataclasses.replace(CEP_PATTERNS[name], pattern_id=pid))
         for pid, name in _MULTI_SPECS
     ]
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     out = run_batch_multi(df, cps, emit_cols=("event_id",))
     return out.select(
         "user_id",
@@ -3273,7 +3279,7 @@ def _multi_shared_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         compile_pattern(dataclasses.replace(pat, pattern_id=pid))
         for pid, pat in _shared_family()
     ]
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     out = run_batch_multi(df, cps, emit_cols=("event_id",), strategy="shared")
     return out.select(
         "user_id",
@@ -3329,7 +3335,7 @@ def _multi_sliced_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         compile_pattern(dataclasses.replace(pat, pattern_id=pid))
         for pid, pat in _sliced_family()
     ]
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _events(spark, sf_dir)
     out = run_batch_multi_sliced(df, cps, emit_cols=("event_id",))
     return out.select(
         "user_id",
@@ -3376,7 +3382,7 @@ def entry(spark: SparkSession) -> DataFrame:
         Seq(Ev("a", event_type="signup"), Ev("b", event_type="click"), Ev("c", event_type="purchase")),
         window=timedelta(hours=24),
     )
-    df = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    df = _events(spark, "/root/testdata/sf0.001")
     return plan_join(df, compile_pattern(pat))
 
 

@@ -1,41 +1,55 @@
 """Executor shippability.
 
-On a real cluster the package ships via ``spark-submit --py-files
-cep_spark.zip`` (see bench.py / BENCH notes).  For library ergonomics
-(driver-side `pip`-less use, notebooks, tests run from any cwd) we also
-register the engine modules for *by-value* cloudpickle serialization, so
-closures shipped to Python workers are self-contained even when the
-package is not importable on the worker path.  The cost is paid on
-the worker, once per task, when it unpickles the command: timing
-``pyspark.worker.read_command`` on the NFA entries
-``cep_kleene_unbounded`` / ``cep_kleene_and_group`` (sf0.01, local[2],
-4-CPU host, ``cep_spark._pydaemon`` workers) gave a median of 13 ms per
-task on a reused worker (quartiles 8.5-16 ms, max 23 ms, 30 tasks),
-about a fifth of such a task's 57 ms in the worker, and 0.6-0.7 s on a
-worker's first task, which also imports NumPy, pandas and PyArrow.
+Closures shipped to Python workers refer to engine functions and
+classes.  When the session's executors can import ``cep_spark`` (a
+``get_spark`` session puts the directory that holds the package on
+``spark.executorEnv.PYTHONPATH``), cloudpickle pickles those by
+reference and the worker imports the package once.  Otherwise (a plain
+``SparkSession`` in a notebook, tests run from any cwd without
+``--py-files``) the engine modules are registered for *by-value*
+pickling, so the closures are self-contained.  By value costs the
+driver ~30 ms per ``mapInPandas`` / ``applyInPandas(WithState)`` build
+and the worker a median 13 ms per task to unpickle the code (timing
+``pyspark.worker.read_command`` on ``cep_kleene_unbounded`` /
+``cep_kleene_and_group``, sf0.01, local[2], 4-CPU host: quartiles
+8.5-16 ms over 30 tasks on reused workers, about a fifth of such a
+task's 57 ms in the worker).
 """
 
 from __future__ import annotations
 
-_done = False
+import os
+
+_by_value = False
 
 
-def ensure_shippable() -> None:
-    global _done
-    if _done:
-        return
+def _modules():
+    import cep_spark
+
+    from . import batch, compiler, conditions, merge, pattern, skew, stream
+    from .pipeline import multimodal
+
+    return (cep_spark, conditions, pattern, compiler, batch, merge, skew, stream,
+            multimodal)
+
+
+def ensure_shippable(spark) -> None:
+    """Pickle the engine modules by value unless ``spark``'s executors
+    import ``cep_spark`` from its ``spark.executorEnv.PYTHONPATH``."""
+    global _by_value
     try:
         from pyspark import cloudpickle  # vendored in pyspark
     except ImportError:  # pragma: no cover
         import cloudpickle  # type: ignore
-    import cep_spark
-    from . import batch, compiler, conditions, merge, pattern, skew, stream
-    from .pipeline import multimodal
+    from .session import _PKG_ROOT
 
-    for m in (cep_spark, conditions, pattern, compiler, batch, merge, skew,
-              stream, multimodal):
-        try:
+    path = spark.conf.get("spark.executorEnv.PYTHONPATH", None) or ""
+    want = _PKG_ROOT not in path.split(os.pathsep)
+    if want == _by_value:
+        return
+    for m in _modules():
+        if want:
             cloudpickle.register_pickle_by_value(m)
-        except Exception:  # pragma: no cover - old cloudpickle
-            pass
-    _done = True
+        else:
+            cloudpickle.unregister_pickle_by_value(m)
+    _by_value = want

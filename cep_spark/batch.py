@@ -1285,25 +1285,21 @@ def _flush_guard_stats(stats, acc):
 
 def run_batch(df, cp: CompiledPattern, mode="flat", emit_cols=("turn_idx", "role", "tool", "ts"),
               strategy="auto", assume_clustered=False, max_partials_per_state=None):
-    """Batch NFA execution.  Two physical strategies:
+    """Batch NFA execution: repartition(key) +
+    sortWithinPartitions(key, ts, tb) + ONE mapInPandas over each whole
+    partition: unary conditions evaluated vectorized ONCE per partition,
+    group boundaries found by key-change scan, ONE lockstep NFA advance
+    over all key groups (``advance_groups``: one NumPy step per
+    firing-event rank, not one Python iteration per event), one output
+    frame per partition.  Small-group fixed costs (per-group pandas
+    frames, per-group condition eval, per-group Arrow round trip,
+    per-event interpreter overhead) amortize across the partition.
+    Flat and array output both run as the one-pattern case of
+    ``run_batch_multi``'s partition executor; only the row builder
+    differs.  ``strategy`` is ``'auto'`` or ``'partition'`` (both name
+    this executor); any other value raises ValueError.
 
-    * ``partition`` (default) — repartition(key) +
-      sortWithinPartitions(key, ts, tb) + ONE mapInPandas over each
-      whole partition: unary conditions evaluated vectorized ONCE per
-      partition, group boundaries found by key-change scan, ONE lockstep
-      NFA advance over all key groups (``advance_groups``: one NumPy
-      step per firing-event rank, not one Python iteration per event),
-      one output frame per partition.  Small-group fixed costs
-      (per-group pandas frames, per-group condition eval, per-group
-      Arrow round trip, per-event interpreter overhead) amortize across
-      the partition.  Flat and array output both run as the
-      one-pattern case of ``run_batch_multi``'s partition executor;
-      only the row builder differs.
-    * ``group`` — groupBy(key).applyInPandas, one call per key (the
-      reference implementation the partition strategy is tested
-      against).
-
-    Both push the union of unary conditions + column pruning into the
+    It pushes the union of unary conditions + column pruning into the
     scan (Catalyst forwards them to parquet).
 
     ``assume_clustered=True`` skips the repartition(key) shuffle: the
@@ -1320,41 +1316,12 @@ def run_batch(df, cp: CompiledPattern, mode="flat", emit_cols=("turn_idx", "role
     warnings; never silent."""
     from ._serde import ensure_shippable
 
-    ensure_shippable()
-    cap = max_partials_per_state
-    if strategy == "auto":
-        strategy = "partition"
-    if strategy == "partition":
-        # the N=1 case of the partition-amortized multi executor
-        return _run_batch_multi_partition(df, [cp], emit_cols, assume_clustered,
-                                          cap=cap, mode=mode)
-    pat = cp.pattern
-    key_type = df.schema[pat.key].dataType
-    acc = _guard_drops_acc(df, cap)
-    df = prefilter(df, cp, extra_cols=emit_cols if mode == "array" else ())
-    if mode == "flat":
-        schema = match_schema_flat(cp, key_type)
-
-        def fn(key, pdf):
-            g = pdf.sort_values([pat.ts_col, pat.tiebreak_col]).reset_index(drop=True)
-            stats = {}
-            res = match_group_nfa(cp, g, cap=cap, stats=stats)
-            _flush_guard_stats(stats, acc)
-            return matches_to_pdf_flat(cp, g, key[0], res=res)
-
-    else:
-        schema = match_schema_array(pat, emit_cols, key_type)
-
-        def fn(key, pdf):
-            g = pdf.sort_values([pat.ts_col, pat.tiebreak_col]).reset_index(drop=True)
-            stats = {}
-            res = match_group_nfa(cp, g, cap=cap, stats=stats)
-            _flush_guard_stats(stats, acc)
-            return matches_to_pdf_array(cp, g, key[0], emit_cols, res=res)
-
-    out = df.groupBy(pat.key).applyInPandas(fn, schema=schema)
-    out.guard_drops = acc
-    return out
+    if strategy not in ("auto", "partition"):
+        raise ValueError(f"unknown strategy {strategy!r}")
+    ensure_shippable(df.sparkSession)
+    # the N=1 case of the partition-amortized multi executor
+    return _run_batch_multi_partition(df, [cp], emit_cols, assume_clustered,
+                                      cap=max_partials_per_state, mode=mode)
 
 
 def prefilter(df, cp: CompiledPattern, extra_cols=()):
@@ -1407,14 +1374,15 @@ def run_batch_multi(df, cps, emit_cols=("turn_idx", "role", "tool", "ts"),
     over the same frame (unary masks still shared via the cross-pattern
     memo).  ``'auto'`` picks ``'shared'`` when the patterns are
     mergeable and actually share at least one non-initial state, else
-    ``'partition'``.  ``'group'`` keeps the per-key
-    groupBy().applyInPandas reference implementation.
+    ``'partition'``.  Any other value raises ValueError.
 
     All patterns must share (key, ts_col, tiebreak_col); give each a
     distinct ``Pattern.pattern_id``."""
     from ._serde import ensure_shippable
 
-    ensure_shippable()
+    if strategy not in ("auto", "partition", "shared"):
+        raise ValueError(f"unknown strategy {strategy!r}")
+    ensure_shippable(df.sparkSession)
     if not cps:
         raise ValueError("no patterns")
     p0 = cps[0].pattern
@@ -1448,26 +1416,7 @@ def run_batch_multi(df, cps, emit_cols=("turn_idx", "role", "tool", "ts"),
         return _run_batch_multi_partition(
             df, cps, emit_cols, assume_clustered, cap=cap, merged=merged,
         )
-    if strategy == "partition":
-        return _run_batch_multi_partition(df, cps, emit_cols, assume_clustered, cap=cap)
-    key_type = df.schema[p0.key].dataType
-    schema = match_schema_array(p0, emit_cols, key_type)
-    acc = _guard_drops_acc(df, cap)
-    base = prefilter_multi(df, cps, extra_cols=emit_cols)
-
-    def fn(key, pdf):
-        g = pdf.sort_values([p0.ts_col, p0.tiebreak_col]).reset_index(drop=True)
-        stats = {}
-        outs = []
-        for cp in cps:
-            res = match_group_nfa(cp, g, cap=cap, stats=stats)
-            outs.append(matches_to_pdf_array(cp, g, key[0], emit_cols, res=res))
-        _flush_guard_stats(stats, acc)
-        return pd.concat(outs, ignore_index=True)
-
-    out = base.groupBy(p0.key).applyInPandas(fn, schema=schema)
-    out.guard_drops = acc
-    return out
+    return _run_batch_multi_partition(df, cps, emit_cols, assume_clustered, cap=cap)
 
 
 def _run_batch_multi_partition(df, cps, emit_cols, assume_clustered=False, cap=None,

@@ -49,7 +49,7 @@ class CepEngine:
 
         ``strategy`` (multi-pattern engines only): run_batch_multi's
         executor pick — 'auto' (prefix-shared merged automaton when the
-        patterns actually share states), 'shared', 'partition', 'group'.
+        patterns actually share states), 'shared' or 'partition'.
         Single-pattern engines reject a non-default value rather than
         ignoring it."""
         if mode is None:

@@ -44,9 +44,13 @@ def materialize(spark, sf_dir: str, tag: str, build):
 
 def release() -> int:
     """Unpersist every registered pipeline table; returns the count.
+    Also forgets the schemas ``session.read_parquet`` memoized.
 
     Safe to call at any time — subsequent queries re-materialize on
     demand."""
+    from ..session import forget_schemas
+
+    forget_schemas()
     with _LOCK:
         n = 0
         for df in _TABLES.values():

@@ -97,7 +97,9 @@ def _r6(c):
 
 
 def _read_docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    from ..session import read_parquet
+
+    return read_parquet(spark, f"{sf_dir}/documents.parquet")
 
 
 def _words_df(spark, sf_dir):
@@ -407,33 +409,26 @@ SQL_MINHASH_LSH = _sql_minhash()
 # 5. SimHash signature (28-bit, md5 word hashes, occurrence-weighted)
 
 
-def _spark_simhash_cols():
-    from pyspark.sql import functions as F
-
-    h = F.col("h")
-    bit_sums = [
-        F.sum(F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)).alias(
-            f"b{b}"
-        )
-        for b in range(SIMHASH_BITS)
-    ]
-    return bit_sums
+# Spark-SQL text of the signature, beside _sql_simhash_core's DuckDB
+# text: the 28 bit sums as one struct aggregate, the signature as one
+# projection (two expressions, not ~200 Column calls over Py4J)
+_SPARK_SIMHASH_SUMS = "struct({}) AS b".format(", ".join(
+    f"sum(CASE WHEN (shiftright(h, {b}) & 1) = 1 THEN 1 ELSE -1 END) AS b{b}"
+    for b in range(SIMHASH_BITS)
+))
+_SPARK_SIMHASH = "CAST({} AS BIGINT) AS simhash".format(" + ".join(
+    f"(CASE WHEN b.b{b} > 0 THEN {1 << b} ELSE 0 END)" for b in range(SIMHASH_BITS)
+))
 
 
 def q_simhash(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    d = _read_docs(spark, sf_dir)
-    words = d.select(
-        "doc_id",
-        F.explode(F.split(_spark_norm(F.col("text")), " ")).alias("w"),
-    ).select("doc_id", F.expr(_SPARK_H_EXPR.format(s="w")).alias("h"))
-    agg = words.groupBy("doc_id").agg(*_spark_simhash_cols())
-    sim = None
-    for b in range(SIMHASH_BITS):
-        term = F.when(F.col(f"b{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
-        sim = term if sim is None else sim + term
-    return agg.select("doc_id", sim.cast("long").alias("simhash"))
+    words = _read_docs(spark, sf_dir).selectExpr(
+        "doc_id", f"explode(split({_spark_norm_sql_spark()}, ' ')) AS w"
+    ).selectExpr("doc_id", f"{_SPARK_H_EXPR.format(s='w')} AS h")
+    agg = words.groupBy("doc_id").agg(F.expr(_SPARK_SIMHASH_SUMS))
+    return agg.selectExpr("doc_id", _SPARK_SIMHASH)
 
 
 def _sql_simhash_core() -> str:
@@ -458,36 +453,26 @@ SQL_SIMHASH = _sql_simhash_core()
 def q_simhash_pairs(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    sim = q_simhash(spark, sf_dir)
     nblocks = SIMHASH_HAM_D + 1
     width = SIMHASH_BITS // nblocks
-    blocks = [
-        F.struct(
-            F.lit(k).alias("blk"),
-            F.shiftright(F.col("simhash"), k * width)
-            .bitwiseAND(F.lit((1 << width) - 1))
-            .alias("bval"),
-        )
+    blocks = ", ".join(
+        f"named_struct('blk', {k}, 'bval', shiftright(simhash, {k * width}) & {(1 << width) - 1})"
         for k in range(nblocks)
-    ]
-    e = sim.select("doc_id", "simhash", F.explode(F.array(*blocks)).alias("b")).select(
-        "doc_id", "simhash", F.col("b.blk").alias("blk"), F.col("b.bval").alias("bval")
     )
-    x, y = e.alias("x"), e.alias("y")
-    ham = F.bit_count(F.col("x.simhash").bitwiseXOR(F.col("y.simhash")))
+    e = q_simhash(spark, sf_dir).selectExpr(
+        "doc_id", "simhash", f"explode(array({blocks})) AS b"
+    ).selectExpr("doc_id", "simhash", "b.blk AS blk", "b.bval AS bval")
     return (
-        x.join(
-            y,
-            (F.col("x.blk") == F.col("y.blk"))
-            & (F.col("x.bval") == F.col("y.bval"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
+        e.alias("x").join(
+            e.alias("y"),
+            F.expr("x.blk = y.blk AND x.bval = y.bval AND x.doc_id < y.doc_id"),
         )
-        .select(
-            F.col("x.doc_id").alias("doc_id_a"),
-            F.col("y.doc_id").alias("doc_id_b"),
-            ham.cast("int").alias("hamming"),
+        .selectExpr(
+            "x.doc_id AS doc_id_a",
+            "y.doc_id AS doc_id_b",
+            "CAST(bit_count(x.simhash ^ y.simhash) AS INT) AS hamming",
         )
-        .filter(F.col("hamming") <= SIMHASH_HAM_D)
+        .filter(f"hamming <= {SIMHASH_HAM_D}")
         .distinct()
     )
 

@@ -54,7 +54,9 @@ def _r6(c):
 
 
 def _read_emb(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    from ..session import read_parquet
+
+    return read_parquet(spark, f"{sf_dir}/embeddings.parquet")
 
 
 def _spark_dot(a: str, b: str) -> str:

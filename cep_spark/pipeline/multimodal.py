@@ -105,7 +105,7 @@ def media_features(df):
 
     from .._serde import ensure_shippable
 
-    ensure_shippable()
+    ensure_shippable(df.sparkSession)
 
     out_schema = T.StructType(
         [

@@ -64,7 +64,7 @@ def run_batch_sliced(df, cp: CompiledPattern):
 
     from ._serde import ensure_shippable
 
-    ensure_shippable()
+    ensure_shippable(df.sparkSession)
     pat = cp.pattern
     if pat.window is None:
         raise ValueError("run_batch_sliced requires a pattern window (the slice width)")
@@ -143,7 +143,7 @@ def run_batch_multi_sliced(df, cps, emit_cols=("turn_idx", "role", "tool", "ts")
     )
     from .merge import merge_compiled, mergeable
 
-    ensure_shippable()
+    ensure_shippable(df.sparkSession)
     if not cps:
         raise ValueError("no patterns")
     if not mergeable(cps):

@@ -415,7 +415,7 @@ def _stream_query(df, cps, watermark, emit_cols, mode, strategy, cap,
     from ._serde import ensure_shippable
     from .batch import _guard_drops_acc
 
-    ensure_shippable()
+    ensure_shippable(df.sparkSession)
     if not cps:
         raise ValueError("no patterns")
     p0 = cps[0].pattern

@@ -30,7 +30,9 @@ def _r6(c):
 
 
 def _read_events(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
+    from .session import read_parquet
+
+    return read_parquet(spark, f"{sf_dir}/events.parquet")
 
 
 # ---------------------------------------------------------------------------

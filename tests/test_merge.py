@@ -694,6 +694,22 @@ def test_engine_facade_strategy_validation():
         single.run_stream(None, "0 seconds", strategy="rematch")
 
 
+@pytest.mark.parametrize("strategy", ["parition", "group"])
+def test_unknown_batch_strategy_rejected(strategy):
+    """A typo or the deleted per-key 'group' strategy raises instead of
+    running some other executor (validated before df use)."""
+    from cep_spark.batch import run_batch, run_batch_multi
+    from cep_spark.engine import CepEngine
+
+    pats = [_pat(Seq(Ev("a", role="user"), Ev("b", role="tool")), pid=i) for i in (0, 1)]
+    with pytest.raises(ValueError, match="unknown strategy"):
+        run_batch(None, compile_pattern(pats[0]), strategy=strategy)
+    with pytest.raises(ValueError, match="unknown strategy"):
+        run_batch_multi(None, [compile_pattern(p) for p in pats], strategy=strategy)
+    with pytest.raises(ValueError, match="unknown strategy"):
+        CepEngine(*pats).run_batch(None, strategy=strategy)
+
+
 def test_group_identity_in_slot_signature():
     """Regression (found by the 4000-example soak): the first sub-slot
     of Kleene(Seq(user,user)) and Kleene(Seq(user,tool)) share every
