@@ -95,9 +95,9 @@ class CepEngine:
         mode=None auto-picks like run_batch.  A single-pattern engine
         runs stream_matches (the one-pattern case of the multi-pattern
         state function); ``strategy`` applies to multi-pattern engines
-        only (stream_matches_multi: 'auto', 'incremental', 'rematch',
-        'shared') and single-pattern engines reject a non-default value
-        rather than ignoring it.  ``max_partials_per_state`` is the
+        only (stream_matches_multi: 'auto', 'incremental', 'shared')
+        and single-pattern engines reject a non-default value rather
+        than ignoring it.  ``max_partials_per_state`` is the
         opt-in hot-key state guard."""
         if mode is None:
             mode = "flat" if self._single is not None else "array"

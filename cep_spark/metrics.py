@@ -28,16 +28,24 @@ class CepMetricsListener(StreamingQueryListener):
     bench harness can print them after the query finishes.
     """
 
-    def __init__(self, guard_drops=None):
+    def __init__(self, guard_drops=None, late_dropped=None):
         """``guard_drops``: the accumulator a capped streaming query
         attaches as ``.guard_drops`` (stream_matches / stream_matches_
         multi with max_partials_per_state).  When given, every progress
         event records the running dropped-partial count and summary()
         exposes it — the alerting hook for a 100-TB operator running the
         loss-only state guard (drops are deterministic but are LOSS;
-        they must be observable, not just warn-logged on executors)."""
+        they must be observable, not just warn-logged on executors).
+
+        ``late_dropped``: the accumulator every streaming query attaches
+        as ``.late_dropped`` (late rows the state function dropped).
+        Spark's stateful operator drops rows at or below the watermark
+        before they reach the function and reports them per batch as
+        ``numRowsDroppedByWatermark``; ``late_rows_dropped()`` adds the
+        two."""
         self.progress: list[dict] = []
         self.guard_drops = guard_drops
+        self.late_dropped = late_dropped
 
     # -- listener callbacks -------------------------------------------------
 
@@ -57,6 +65,7 @@ class CepMetricsListener(StreamingQueryListener):
                 "state_rows": state.get("numRowsTotal"),
                 "state_bytes": state.get("stateMemory") or state.get("memoryUsedBytes"),
                 "watermark_unix": wm,
+                "late_rows_dropped": state.get("numRowsDroppedByWatermark") or 0,
                 "wall_unix": _parse_iso(p.get("timestamp")),
                 "guard_dropped_partials": (
                     self.guard_drops.value
@@ -106,6 +115,13 @@ class CepMetricsListener(StreamingQueryListener):
                 return x["guard_dropped_partials"]
         return None
 
+    def late_rows_dropped(self) -> int:
+        """Late rows dropped: by Spark's watermark filter in the reported
+        batches, plus by the state function (when its accumulator was
+        attached)."""
+        spark_drops = sum(x["late_rows_dropped"] for x in self.progress)
+        return spark_drops + (self.late_dropped.value if self.late_dropped is not None else 0)
+
     def summary(self) -> dict:
         return {
             "batches": len(self.progress),
@@ -114,4 +130,5 @@ class CepMetricsListener(StreamingQueryListener):
             "p95_batch_ms": self.p95_batch_ms(),
             "max_state_rows": self.max_state_rows(),
             "guard_dropped_partials": self.guard_dropped_partials(),
+            "late_rows_dropped": self.late_rows_dropped(),
         }

@@ -35,10 +35,21 @@ watermark"):
   matched), the persisted partial-match tables, and parked matches
   (accepted, waiting for a trailing negation's look-ahead to seal).
   Partials that can no longer complete and buffer rows older than
-  watermark - window are pruned every batch, so with a window state is
-  bounded by the key's event rate x window span.  Unbounded-window
-  patterns keep the full key history (documented limit; the reference
-  behaves the same).
+  watermark - window are pruned whenever the state is rebuilt, so with
+  a window state is bounded by the key's event rate x window span.
+  Unbounded-window patterns keep the full key history (documented
+  limit; the reference behaves the same).
+* State layout (``fmt`` ``perpat-v2`` / ``shared-v3``): the buffer and
+  the limbo are pickled ``{column: ndarray}`` dicts (the ``_ColStore``
+  layout; the key column is left out unless a condition or emit column
+  reads it), the partial tables and parked matches pickled column
+  tables.  pandas appears only at the edges: the input frames are
+  turned into column arrays on entry, and each call's matches become
+  one output frame.  A call where no limbo row seals, no parked match
+  is due and no rematch fallback runs (every data-batch call of an
+  in-order stream) decodes and re-encodes only the limbo: buffer,
+  partial tables and parked matches are written back as the same
+  bytes.  Checkpoints of the earlier Arrow-IPC layout are refused.
 * Exactly-once: a match seals in exactly one bracket (last_emit_wm, W].
   On failure Spark replays the batch from the checkpoint with the same
   state and the same watermark, reproducing the bracket byte-for-byte;
@@ -50,7 +61,8 @@ advances the persisted partial tables over ONLY the events that sealed
 in it (a sealed match involves only sealed events), so every event is
 matched once, in the batch where it seals.  A key whose partial tables
 outgrow 8x its buffer (Kleene-dense input) falls back, per pattern, to
-re-running ``match_group_nfa`` over the retained buffer each batch.
+re-running the matcher (``match_core``) over the retained buffer each
+batch.
 
 One state function (``_make_multi_fn``) serves every query: a
 single-pattern query (``stream_matches`` / ``run_stream``) is the
@@ -59,6 +71,9 @@ one-pattern case of ``stream_matches_multi``, with flat rows when
 """
 
 from __future__ import annotations
+
+import pickle
+from itertools import repeat
 
 import numpy as np
 import pandas as pd
@@ -69,33 +84,52 @@ from .batch import (
     _Partials,
     _obj_array,
     advance_core,
-    match_group_nfa,
+    array_match_rows,
+    flat_columns,
+    flat_match_rows,
+    match_core,
     match_schema_array,
     match_schema_flat,
-    matches_to_pdf_array,
-    matches_to_pdf_flat,
     prefilter_multi,
+    tagged_array_rows,
     unary_masks,
 )
 
 __all__ = ["run_stream", "stream_matches"]
 
 
-def _ser_buf(pdf: pd.DataFrame) -> bytes:
-    """Arrow-IPC encode the retained-event buffer (state-store value)."""
-    import pyarrow as pa
-
-    table = pa.Table.from_pandas(pdf, preserve_index=False)
-    sink = pa.BufferOutputStream()
-    with pa.ipc.new_stream(sink, table.schema) as w:
-        w.write_table(table)
-    return sink.getvalue().to_pybytes()
+# --------------------------------------------------------------------------
+# event blocks: the sealed buffer and the limbo as {column: ndarray}
 
 
-def _de_buf(raw: bytes) -> pd.DataFrame:
-    import pyarrow as pa
+def _nrows(cols: dict | None) -> int:
+    return len(next(iter(cols.values()))) if cols else 0
 
-    return pa.ipc.open_stream(pa.BufferReader(raw)).read_all().to_pandas()
+
+def _take(cols: dict, idx) -> dict:
+    return {c: a[idx] for c, a in cols.items()}
+
+
+def _cat(a: dict | None, b: dict | None) -> dict | None:
+    if not _nrows(a):
+        return b if _nrows(b) else None
+    if not _nrows(b):
+        return a
+    return {c: np.concatenate([a[c], b[c]]) for c in a}
+
+
+def _ns(ts: np.ndarray) -> np.ndarray:
+    """Event time as int64 ns (a view when already datetime64[ns])."""
+    return ts.astype("datetime64[ns]", copy=False).view(np.int64)
+
+
+def _enc_cols(cols: dict | None) -> bytes | None:
+    """State-store value of an event block: the pickled column dict."""
+    return pickle.dumps(cols, protocol=5) if _nrows(cols) else None
+
+
+def _dec_cols(raw: bytes | None) -> dict | None:
+    return pickle.loads(raw) if raw else None
 
 
 # --------------------------------------------------------------------------
@@ -104,8 +138,6 @@ def _de_buf(raw: bytes) -> pd.DataFrame:
 
 def _ser_tables(tables) -> bytes | None:
     """pickle the non-empty per-state partial tables ({alt: {sid: ...}})."""
-    import pickle
-
     plain = {}
     total = 0
     for alt_id, tmap in tables.items():
@@ -123,8 +155,6 @@ def _ser_tables(tables) -> bytes | None:
 
 
 def _de_tables(raw: bytes | None) -> dict:
-    import pickle
-
     if not raw:
         return {}
     out = {}
@@ -231,7 +261,7 @@ def stream_matches(df, cp: CompiledPattern, watermark: str, mode: str = "flat",
 
     ``max_partials_per_state``: the opt-in hot-key state guard
     (stream_matches_multi docstring); drops are counted on the result's
-    ``guard_drops`` accumulator.
+    ``guard_drops`` accumulator, late arrivals on ``late_dropped``.
 
     The state store uses the multi-pattern layout (with its ``fmt``
     fingerprint column).  Checkpoints written by the earlier
@@ -240,7 +270,7 @@ def stream_matches(df, cp: CompiledPattern, watermark: str, mode: str = "flat",
     state-schema migration").
     """
     return _stream_query(df, [cp], watermark, emit_cols, mode=mode,
-                         strategy="incremental", cap=max_partials_per_state)
+                         shared=False, cap=max_partials_per_state)
 
 
 def _binding_of(p: "_Partials", j: int) -> dict:
@@ -333,32 +363,31 @@ def stream_matches_multi(df, cps, watermark: str,
     outgrew the buffer (per-pattern rematch fallback, tracked as a state
     bitmask).  Output is the array schema with ``pattern_id``.
 
-    ``strategy``: ``"auto"`` — per-pattern incremental-with-fallback,
-    overridable via $CEP_SPARK_STREAM_STRATEGY (rematch / incremental /
-    shared; explicit arguments are never overridden); ``"rematch"`` —
-    force EVERY pattern onto the rematch path; ``"incremental"`` — same
-    as auto's default; ``"shared"`` — merge the patterns into
+    ``strategy``: ``"auto"`` / ``"incremental"`` — per-pattern
+    incremental-with-fallback; ``"shared"`` — merge the patterns into
     prefix-shared automata, ONE per connected component
     (merge.merge_components; windows may differ — max-window pruning
     with exact per-tag span re-checks): shared prefix states live ONCE
     in the state store and advance once per sealed event, acceptance is
     per tag, and trailing-neg parking / rematch fallback apply per
-    COMPONENT.  The persisted partial tables of
-    ``"shared"`` describe the merged automaton — switching an existing
-    checkpoint between ``"shared"`` and the per-pattern strategies is
-    detected via a format marker and fails loudly; start a fresh
-    checkpoint to migrate (the exactly-once sink keeps replays
-    idempotent).
+    COMPONENT.  The persisted partial tables of ``"shared"`` describe
+    the merged automaton — switching an existing checkpoint between
+    ``"shared"`` and the per-pattern strategies is detected via a format
+    marker and fails loudly; start a fresh checkpoint to migrate (the
+    exactly-once sink keeps replays idempotent).
 
     ``max_partials_per_state`` (opt-in hot-key guard, default None=exact):
     per-pattern per-NFA-state bound on the persisted partial tables AND
     on the in-flight matcher tables of per-pattern rematch fallbacks —
     oldest partials dropped deterministically, loss-only, warn-logged
-    (batch.advance_core).  Rejected with strategy='rematch' (that
-    executor's state is the event buffer; the guard bounds nothing).
-    Under strategy='shared' the bound applies per MERGED state — a
-    shared prefix state's table serves every tagged pattern, so the cap
-    bounds their combined partials once rather than N times.
+    (batch.advance_core).  Under strategy='shared' the bound applies per
+    MERGED state — a shared prefix state's table serves every tagged
+    pattern, so the cap bounds their combined partials once rather than
+    N times.
+
+    The result carries two accumulators: ``guard_drops`` (partials the
+    guard dropped; None when it is off) and ``late_dropped`` (late
+    arrivals dropped, module docstring).
 
     ``window_bucket_spread`` (shared strategy only, default 16.0):
     before merging, patterns are bucketed so a bucket's retention
@@ -370,25 +399,10 @@ def stream_matches_multi(df, cps, watermark: str,
     behavior).  Changing the value re-partitions components — the state
     fingerprint refuses stale checkpoints loudly.
     """
-    if strategy not in ("auto", "rematch", "incremental", "shared"):
+    if strategy not in ("auto", "incremental", "shared"):
         raise ValueError(f"unknown strategy {strategy!r}")
-    if strategy == "auto":
-        # CEP_SPARK_STREAM_STRATEGY pins the executor for an existing
-        # checkpoint without code changes (e.g. shared to opt a fleet
-        # in); explicit strategy= arguments are never overridden
-        import os as _os
-
-        env = _os.environ.get("CEP_SPARK_STREAM_STRATEGY")
-        if env and env not in ("rematch", "incremental", "shared"):
-            # a typo in the pin must fail loudly, not silently run the
-            # wrong executor
-            raise ValueError(
-                f"unknown CEP_SPARK_STREAM_STRATEGY {env!r} (expected "
-                "rematch / incremental / shared)"
-            )
-        strategy = env or "incremental"
     return _stream_query(df, cps, watermark, emit_cols, mode="array",
-                         strategy=strategy, cap=max_partials_per_state,
+                         shared=strategy == "shared", cap=max_partials_per_state,
                          window_bucket_spread=window_bucket_spread)
 
 
@@ -403,12 +417,12 @@ def _windows(cps):
     return w_ns_of, [_retention_w_ns(cp, wn) for cp, wn in zip(cps, w_ns_of)]
 
 
-def _stream_query(df, cps, watermark, emit_cols, mode, strategy, cap,
+def _stream_query(df, cps, watermark, emit_cols, mode, shared, cap,
                   window_bucket_spread=None):
     """The keyed stateful query behind stream_matches (one pattern) and
     stream_matches_multi: watermark, union prefilter, one
-    applyInPandasWithState running ``_make_multi_fn``.  ``strategy`` is
-    resolved ('incremental', 'rematch' or 'shared')."""
+    applyInPandasWithState running ``_make_multi_fn`` (``shared``:
+    prefix-shared merged automata instead of one unit per pattern)."""
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -427,13 +441,8 @@ def _stream_query(df, cps, watermark, emit_cols, mode, strategy, cap,
     if len(set(ids)) != len(ids):
         raise ValueError(f"pattern_id values must be distinct, got {ids}")
     key_type = df.schema[p0.key].dataType
-    force_rematch = strategy == "rematch"
-    if force_rematch and cap is not None:
-        raise ValueError(
-            "max_partials_per_state requires the incremental strategy"
-        )
     merged = None
-    if strategy == "shared":
+    if shared:
         from .merge import merge_components_bucketed, mergeable
 
         if not mergeable(cps):
@@ -489,8 +498,9 @@ def _stream_query(df, cps, watermark, emit_cols, mode, strategy, cap,
         ]
     )
     acc = _guard_drops_acc(df, cap)
-    fn = _make_multi_fn(cps, emit_cols, mode=mode, force_rematch=force_rematch,
-                        cap=cap, merged=merged, acc=acc)
+    late_acc = df.sparkSession.sparkContext.accumulator(0)
+    fn = _make_multi_fn(cps, emit_cols, mode=mode, cap=cap, merged=merged,
+                        acc=acc, late_acc=late_acc)
 
     out = df.groupBy(p0.key).applyInPandasWithState(
         fn,
@@ -502,6 +512,9 @@ def _stream_query(df, cps, watermark, emit_cols, mode, strategy, cap,
     # dropped-partial count (None when the guard is off) — same contract
     # as run_batch_multi; feed to CepMetricsListener(guard_drops=...)
     out.guard_drops = acc
+    # late arrivals dropped (ts <= the key's last emission watermark);
+    # like every Spark accumulator it counts a replayed batch again
+    out.late_dropped = late_acc
     return out
 
 
@@ -595,7 +608,7 @@ def _family_fp(cps, w_ns_of, unit_pats) -> str:
 
 
 def _make_multi_fn(cps, emit_cols=(), mode="array", force_rematch: bool = False,
-                   cap=None, merged=None, acc=None):
+                   cap=None, merged=None, acc=None, late_acc=None):
     """The per-key state function of every streaming query (module
     docstring), exposed for the fake-GroupState property harness.
 
@@ -605,10 +618,14 @@ def _make_multi_fn(cps, emit_cols=(), mode="array", force_rematch: bool = False,
 
     ``force_rematch``: every pattern re-runs the matcher over the
     retained buffer each batch instead of advancing persisted partial
-    tables (stream_matches_multi strategy='rematch').
+    tables — the per-key fallback path, forced (the replica sweeps and
+    the fellback-state guard test reach it this way).
 
     ``cap``: per-pattern per-NFA-state partial-table bound
     (advance_core's state guard) — see stream_matches_multi.
+
+    ``acc`` / ``late_acc``: accumulators (anything with ``add``) for the
+    guard's dropped partials and for dropped late arrivals.
 
     ``merged`` (strategy='shared'): the merge.merge_compiled automaton.
     The loop then runs ONE execution unit whose advance emissions carry
@@ -630,12 +647,17 @@ def _make_multi_fn(cps, emit_cols=(), mode="array", force_rematch: bool = False,
     w_ns = None if any(r is None for r in rets) else max(rets)
     trailing_of = [_trailing_alt_ids(cp) for cp in cps]
     merged_mode = merged is not None
-    # v2: shared state is keyed by CONNECTED-COMPONENT index
-    # (merge_components) instead of one whole-family unit — v1 shared
-    # checkpoints refuse loudly on restore
-    _SHARED_FMT = "shared-v2"
-    _PERPAT_FMT = "perpat-v1"
-    my_fmt = _SHARED_FMT if merged_mode else _PERPAT_FMT
+    # v3 / v2: event blocks are pickled column arrays (module docstring);
+    # shared-v2 / perpat-v1 held Arrow-IPC frames and refuse loudly
+    _SHARED_FMT = "shared-v3"
+    _PERPAT_FMT = "perpat-v2"
+    my_layout = _SHARED_FMT if merged_mode else _PERPAT_FMT
+    # the key column is the call's key: stored only if something reads it
+    need = set(emit_cols) | {ts_col, tb_col}
+    for cp in cps:
+        for cs_ in cp.needed_cols.values():
+            need.update(cs_)
+    drop = () if p0.key in need else (p0.key,)
     alts_of = [{alt.alt_id: alt for alt in cp.alternatives} for cp in cps]
     trail_specs_of = [
         {
@@ -707,7 +729,33 @@ def _make_multi_fn(cps, emit_cols=(), mode="array", force_rematch: bool = False,
     # merge_components' partition and the component-index state keys)
     # refuses loudly instead of restoring partial tables against a
     # different automaton.
-    my_fmt = f"{my_fmt}:{_family_fp(cps, w_ns_of, unit_pats)}"
+    my_fmt = f"{my_layout}:{_family_fp(cps, w_ns_of, unit_pats)}"
+
+    def refusal(fmt) -> RuntimeError:
+        layout = fmt.split(":", 1)[0] if isinstance(fmt, str) else fmt
+        if layout == my_layout:
+            return RuntimeError(
+                f"state store fingerprint {fmt!r} does not match "
+                f"this query's pattern family {my_fmt!r}: the "
+                "pattern list was edited or reordered since the "
+                "checkpoint was written (persisted partial tables "
+                "are keyed by component index and merged-state "
+                "sids); restart from a fresh checkpoint"
+            )
+        if layout in (_SHARED_FMT, _PERPAT_FMT):
+            return RuntimeError(
+                f"state store was written by strategy layout "
+                f"{fmt!r} but this query runs {my_fmt!r} "
+                f"({'shared merged-automaton' if merged_mode else 'per-pattern'}); "
+                "restart from a fresh checkpoint to switch strategies"
+            )
+        return RuntimeError(
+            f"state store format {layout!r} is not this version's "
+            f"{my_layout!r}: per-key state moved from Arrow-IPC frames to "
+            "pickled column arrays, and checkpoints written before the "
+            "format change cannot be read; restart from a fresh "
+            "checkpoint (README, 'Streaming state-schema migration')"
+        )
 
     if merged_mode:
         # per-tag window: merged alt ids are (LOCAL pattern idx, alt_id)
@@ -717,105 +765,43 @@ def _make_multi_fn(cps, emit_cols=(), mode="array", force_rematch: bool = False,
         def tag_w(ci, alt_id):
             return unit_w_ns[ci]
 
-    def unit_rows(g, key_val, res, ci):
-        """Output rows for execution unit ci's matches (bindings index g)."""
+    def unit_rows(cols, key_val, res, ci) -> list:
+        """Output rows for execution unit ci's matches (bindings index
+        ``cols``)."""
         if mode == "flat":
-            return matches_to_pdf_flat(run_cps[ci], g, key_val, res=res)
+            return flat_match_rows(run_cps[ci], repeat(key_val), res, cols[tb_col])
         if not merged_mode:
-            return matches_to_pdf_array(run_cps[ci], g, key_val, emit_cols, res=res)
-        # merged emissions are tagged (LOCAL pattern idx, alt_id):
-        # regroup per original (global) pattern for row building
-        by: dict = {}
-        for (li, aid), b in res:
-            by.setdefault(unit_pats[ci][li], []).append((aid, b))
-        return pd.concat(
-            [
-                matches_to_pdf_array(cps[gi], g, key_val, emit_cols, res=lst)
-                for gi, lst in by.items()
-            ],
-            ignore_index=True,
-        )
+            return array_match_rows(run_cps[ci], repeat(key_val), emit_cols, res, cols)
+        # merged emissions are tagged (LOCAL pattern idx, alt_id)
+        return tagged_array_rows([cps[gi] for gi in unit_pats[ci]], res,
+                                 [key_val] * len(res), emit_cols, cols)
 
-    def fn(key, pdf_iter, state):
-        import pickle
+    out_cols = (flat_columns(cps[0]) if mode == "flat"
+                else [p0.key, "pattern_id", "alt_id", "matched"])
 
-        wm_ms = state.getCurrentWatermarkMs()
-        wm_ns = wm_ms * 1_000_000
-        if state.exists:
-            (buf_raw, limbo_raw, parts_raw, parked_raw,
-             last_emit_wm_ms, late_dropped, fellback, fmt) = state.get
-            # validate on EVERY restore, not only when partial tables
-            # exist: a shared run whose merged unit fell back to rematch
-            # persists fellback=1 with no tables — reinterpreting that
-            # bitmask per-pattern would silently drop matches.
-            if fmt != my_fmt:
-                same_layout = (
-                    isinstance(fmt, str)
-                    and fmt.split(":", 1)[0] == my_fmt.split(":", 1)[0]
-                )
-                if same_layout:
-                    raise RuntimeError(
-                        f"state store fingerprint {fmt!r} does not match "
-                        f"this query's pattern family {my_fmt!r}: the "
-                        "pattern list was edited or reordered since the "
-                        "checkpoint was written (persisted partial tables "
-                        "are keyed by component index and merged-state "
-                        "sids); restart from a fresh checkpoint"
-                    )
-                raise RuntimeError(
-                    f"state store was written by strategy layout "
-                    f"{fmt!r} but this query runs {my_fmt!r} "
-                    f"({'shared merged-automaton' if merged_mode else 'per-pattern'}); "
-                    "restart from a fresh checkpoint to switch strategies"
-                )
-            sealed = _de_buf(buf_raw) if buf_raw else None
-            limbo = _de_buf(limbo_raw) if limbo_raw else None
-            parts = pickle.loads(parts_raw) if parts_raw else {}
-            parked_by_ci = pickle.loads(parked_raw) if parked_raw else {}
-        else:
-            sealed, limbo, parts, parked_by_ci = None, None, {}, {}
-            last_emit_wm_ms, late_dropped, fellback = -1, 0, 0
-        lo_ns = last_emit_wm_ms * 1_000_000
+    def next_parked_seal(parked_by_ci) -> int | None:
+        """Earliest seal instant of any parked match."""
+        m = None
+        for ci, raw in parked_by_ci.items():
+            for alt_id, tmap in _de_tables(raw).items():
+                s = int(tmap[0].first_ts.min()) + tag_w(ci, alt_id)
+                m = s if m is None else min(m, s)
+        return m
+
+    def rebuild(key_val, sealed, n_new, limbo, parts, parked_by_ci, fellback,
+                lo_ns, wm_ns):
+        """Advance every unit over the ``n_new`` freshly sealed rows at the
+        end of ``sealed``, emit what sealed in (lo_ns, wm_ns], then prune
+        and evict.  Returns (output rows, buf / parts / parked state
+        bytes, fellback, min_unsealed_ns)."""
+        n_s = _nrows(sealed)
+        ts_s = _ns(sealed[ts_col]) if n_s else None
+        store = _ColStore.from_cols(sealed) if n_s else None
         rematch_mask = static_rematch | fellback
-
-        def ts_i8(pdf):
-            return pdf[ts_col].to_numpy().astype("datetime64[ns]").astype(np.int64)
-
-        chunks = [] if state.hasTimedOut else list(pdf_iter)
-        arrivals = pd.concat(chunks, ignore_index=True) if chunks else None
-        if arrivals is not None and len(arrivals):
-            a_ns = ts_i8(arrivals)
-            late = a_ns <= lo_ns
-            if late.any():
-                late_dropped += int(late.sum())
-                arrivals = arrivals.loc[~late]
-            if len(arrivals):
-                limbo = (
-                    arrivals if limbo is None or not len(limbo)
-                    else pd.concat([limbo, arrivals], ignore_index=True)
-                )
-
-        n_new = 0
-        if limbo is not None and len(limbo):
-            l_ns = ts_i8(limbo)
-            seal_mask = l_ns <= wm_ns
-            if seal_mask.any():
-                fresh = limbo.loc[seal_mask].sort_values([ts_col, tb_col], kind="mergesort")
-                limbo = limbo.loc[~seal_mask]
-                n_new = len(fresh)
-                sealed = (
-                    fresh if sealed is None or not len(sealed)
-                    else pd.concat([sealed, fresh], ignore_index=True)
-                )
-            if not len(limbo):
-                limbo = None
-
         min_unsealed_ns = None
-        outs = []
-        g_sealed = sealed.reset_index(drop=True) if sealed is not None else None
-        sealed = g_sealed
-        store = ts_s = masks = None
-        g_all = ts_all = None
+        rows = []
+        all_cols = ts_all = None
+        all_cache: dict = {}  # predicate masks over sealed + limbo
         tables_out = {}
         parked_out_by_ci = {}
         mask_cache = {}  # shared predicate masks across patterns, per batch
@@ -823,17 +809,18 @@ def _make_multi_fn(cps, emit_cols=(), mode="array", force_rematch: bool = False,
 
         for ci, cp in enumerate(run_cps):
             if rematch_mask & (1 << ci):
-                if g_all is None:
-                    allb = [x for x in (sealed, limbo) if x is not None and len(x)]
-                    if not allb:
+                if all_cols is None:
+                    all_cols = _cat(sealed, limbo)
+                    if all_cols is None:
                         continue
-                    g_all = pd.concat(allb, ignore_index=True).sort_values(
-                        [ts_col, tb_col], kind="mergesort"
-                    ).reset_index(drop=True)
-                    ts_all = ts_i8(g_all)
+                    ts_all = _ns(all_cols[ts_col])
+                    order = np.lexsort((all_cols[tb_col], ts_all))
+                    all_cols, ts_all = _take(all_cols, order), ts_all[order]
                 res_sealed = []
                 fb_stats = {}
-                for a, b in match_group_nfa(cp, g_all, cap=cap, stats=fb_stats):
+                masks = unary_masks(cp, all_cols, len(ts_all), cache=all_cache)
+                for a, b in match_core(cp, _ColStore.from_cols(all_cols), ts_all,
+                                       masks, cap=cap, stats=fb_stats):
                     lts = _seal_ts_ns(b, ts_all, a, unit_trailing[ci], tag_w(ci, a))
                     if lo_ns < lts <= wm_ns:
                         res_sealed.append((a, b))
@@ -841,118 +828,109 @@ def _make_multi_fn(cps, emit_cols=(), mode="array", force_rematch: bool = False,
                         min_unsealed_ns = lts
                 _flush_guard_stats(fb_stats, acc)
                 if res_sealed:
-                    outs.append(unit_rows(g_all, key[0], res_sealed, ci))
-            else:
-                tables = _de_tables(parts.get(ci))
-                parked = _de_tables(parked_by_ci.get(ci))
-                res = []
-                if n_new and g_sealed is not None:
-                    if store is None:
-                        store = _ColStore(g_sealed)
-                        ts_s = ts_i8(g_sealed)
-                    start = len(g_sealed) - n_new
-                    masks_ci = unary_masks(cp, store._cols, len(g_sealed),
-                                           start=start, cache=mask_cache)
-                    stats = {}
-                    res, tables = advance_core(
-                        cp, store, ts_s, masks_ci,
-                        tables_in=tables or None, start=start,
-                        cap=cap, stats=stats,
-                    )
-                    _flush_guard_stats(stats, acc)
-                    # re-verify parked matches against ONLY the freshly-
-                    # sealed trailing-negation candidates (earlier sealed
-                    # candidates were checked at accept / prior batches;
-                    # later ones are above the watermark and cannot
-                    # belong to a parked match's look-ahead once it seals)
-                    if parked:
-                        for alt_id in list(parked):
-                            p = parked[alt_id].get(0)
-                            if p is None or len(p) == 0:
-                                del parked[alt_id]
-                                continue
-                            alt = unit_alts[ci][alt_id]
-                            if merged_mode:
-                                # parked bindings use ORIGINAL var names:
-                                # evaluate the original pattern's neg
-                                # masks (cache-shared with the merged
-                                # automaton's identical predicates)
-                                gi = unit_pats[ci][alt_id[0]]
-                                if gi not in orig_masks_cache:
-                                    orig_masks_cache[gi] = unary_masks(
-                                        cps[gi], store._cols, len(g_sealed),
-                                        start=start, cache=mask_cache,
-                                    )
-                                _, neg_mask = orig_masks_cache[gi][alt_id[1]]
-                            else:
-                                _, neg_mask = masks_ci[alt_id]
-                            ok = np.ones(len(p), dtype=bool)
-                            for si in unit_trail_specs[ci][alt_id]:
-                                fresh_pos = np.nonzero(neg_mask[si][start:])[0] + start
-                                if len(fresh_pos):
-                                    ok &= _edge_ok(
-                                        fresh_pos, alt.negs[si], store, p,
-                                        ts_s, tag_w(ci, alt_id), leading=False,
-                                        bounds=np.array([0, len(ts_s)]),
-                                    )
-                            if not ok.all():
-                                p = p.select(ok)
-                            if len(p):
-                                parked[alt_id] = {0: p}
-                            else:
-                                del parked[alt_id]
-                    # split fresh accepts: trailing matches whose look-
-                    # ahead is still open get parked; the rest emit now
-                    if res and unit_trailing[ci]:
-                        now = []
-                        to_park: dict = {}
-                        for a, b in res:
-                            if a in unit_trailing[ci]:
-                                pos = [
-                                    x for vv in b.values()
-                                    for x in (vv if isinstance(vv, tuple) else (vv,))
-                                ]
-                                seal = int(ts_s[min(pos)]) + tag_w(ci, a)
-                                if seal <= wm_ns:
-                                    now.append((a, b))
-                                else:
-                                    to_park.setdefault(a, []).append(b)
-                            else:
-                                now.append((a, b))
-                        for a, blist in to_park.items():
-                            newp = _park_partials(unit_alts[ci][a], blist, ts_s)
-                            old = parked.get(a, {}).get(0)
-                            if old is not None and len(old):
-                                parked[a][0] = _Partials.concat([old, newp])
-                            else:
-                                parked[a] = {0: newp}
-                        res = now
-                # emit parked matches whose seal the watermark crossed
-                if parked:
-                    for alt_id in list(parked):
-                        p = parked[alt_id][0]
-                        seal_arr = p.first_ts + tag_w(ci, alt_id)
-                        emit_mask = (seal_arr > lo_ns) & (seal_arr <= wm_ns)
-                        if emit_mask.any():
-                            sel = p.select(emit_mask)
-                            res.extend(
-                                (alt_id, _binding_of(sel, j)) for j in range(len(sel))
+                    rows.extend(unit_rows(all_cols, key_val, res_sealed, ci))
+                continue
+            tables = _de_tables(parts.get(ci))
+            parked = _de_tables(parked_by_ci.get(ci))
+            res = []
+            if n_new:
+                start = n_s - n_new
+                masks_ci = unary_masks(cp, sealed, n_s, start=start, cache=mask_cache)
+                stats = {}
+                res, tables = advance_core(
+                    cp, store, ts_s, masks_ci,
+                    tables_in=tables or None, start=start,
+                    cap=cap, stats=stats,
+                )
+                _flush_guard_stats(stats, acc)
+                # re-verify parked matches against ONLY the freshly-
+                # sealed trailing-negation candidates (earlier sealed
+                # candidates were checked at accept / prior batches;
+                # later ones are above the watermark and cannot
+                # belong to a parked match's look-ahead once it seals)
+                for alt_id in list(parked):
+                    p = parked[alt_id].get(0)
+                    if p is None or len(p) == 0:
+                        del parked[alt_id]
+                        continue
+                    alt = unit_alts[ci][alt_id]
+                    if merged_mode:
+                        # parked bindings use ORIGINAL var names:
+                        # evaluate the original pattern's neg masks
+                        # (cache-shared with the merged automaton's
+                        # identical predicates)
+                        gi = unit_pats[ci][alt_id[0]]
+                        if gi not in orig_masks_cache:
+                            orig_masks_cache[gi] = unary_masks(
+                                cps[gi], sealed, n_s, start=start, cache=mask_cache,
                             )
-                            p = p.select(~emit_mask)
-                        if len(p):
-                            parked[alt_id] = {0: p}
-                            m = int((p.first_ts + tag_w(ci, alt_id)).min())
-                            if min_unsealed_ns is None or m < min_unsealed_ns:
-                                min_unsealed_ns = m
+                        _, neg_mask = orig_masks_cache[gi][alt_id[1]]
+                    else:
+                        _, neg_mask = masks_ci[alt_id]
+                    ok = np.ones(len(p), dtype=bool)
+                    for si in unit_trail_specs[ci][alt_id]:
+                        fresh_pos = np.nonzero(neg_mask[si][start:])[0] + start
+                        if len(fresh_pos):
+                            ok &= _edge_ok(
+                                fresh_pos, alt.negs[si], store, p,
+                                ts_s, tag_w(ci, alt_id), leading=False,
+                                bounds=np.array([0, n_s]),
+                            )
+                    if not ok.all():
+                        p = p.select(ok)
+                    if len(p):
+                        parked[alt_id] = {0: p}
+                    else:
+                        del parked[alt_id]
+                # split fresh accepts: trailing matches whose look-ahead
+                # is still open get parked; the rest emit now
+                if res and unit_trailing[ci]:
+                    now = []
+                    to_park: dict = {}
+                    for a, b in res:
+                        if a in unit_trailing[ci]:
+                            pos = [
+                                x for vv in b.values()
+                                for x in (vv if isinstance(vv, tuple) else (vv,))
+                            ]
+                            seal = int(ts_s[min(pos)]) + tag_w(ci, a)
+                            if seal <= wm_ns:
+                                now.append((a, b))
+                            else:
+                                to_park.setdefault(a, []).append(b)
                         else:
-                            del parked[alt_id]
-                if res:
-                    outs.append(unit_rows(g_sealed, key[0], res, ci))
-                tables_out[ci] = tables
-                if parked:
-                    parked_out_by_ci[ci] = parked
-        if outs:
-            yield outs[0] if len(outs) == 1 else pd.concat(outs, ignore_index=True)
+                            now.append((a, b))
+                    for a, blist in to_park.items():
+                        newp = _park_partials(unit_alts[ci][a], blist, ts_s)
+                        old = parked.get(a, {}).get(0)
+                        if old is not None and len(old):
+                            parked[a][0] = _Partials.concat([old, newp])
+                        else:
+                            parked[a] = {0: newp}
+                    res = now
+            # emit parked matches whose seal the watermark crossed
+            for alt_id in list(parked):
+                p = parked[alt_id][0]
+                seal_arr = p.first_ts + tag_w(ci, alt_id)
+                emit_mask = (seal_arr > lo_ns) & (seal_arr <= wm_ns)
+                if emit_mask.any():
+                    sel = p.select(emit_mask)
+                    res.extend(
+                        (alt_id, _binding_of(sel, j)) for j in range(len(sel))
+                    )
+                    p = p.select(~emit_mask)
+                if len(p):
+                    parked[alt_id] = {0: p}
+                    m = int((p.first_ts + tag_w(ci, alt_id)).min())
+                    if min_unsealed_ns is None or m < min_unsealed_ns:
+                        min_unsealed_ns = m
+                else:
+                    del parked[alt_id]
+            if res:
+                rows.extend(unit_rows(sealed, key_val, res, ci))
+            tables_out[ci] = tables
+            if parked:
+                parked_out_by_ci[ci] = parked
 
         # prune per-pattern partials; evict at the SHARED max-retention
         # horizon; shift positions by the shared prefix offset
@@ -960,23 +938,19 @@ def _make_multi_fn(cps, emit_cols=(), mode="array", force_rematch: bool = False,
             for ci, tables in tables_out.items():
                 if unit_w_ns[ci] is not None:
                     _prune_tables(tables, wm_ns - unit_w_ns[ci])
-            if sealed is not None and len(sealed):
-                keep = ts_i8(sealed) > wm_ns - w_ns
+            if n_s:
+                keep = ts_s > wm_ns - w_ns
                 off = int((~keep).sum())
                 if off:
-                    sealed = sealed.loc[keep].reset_index(drop=True)
+                    sealed = _take(sealed, keep) if off < n_s else None
                     for tables in tables_out.values():
                         _shift_tables(tables, off)
                     # parked rows survive eviction by construction: seal
                     # first_ts + W_ci > wm ⇒ first_ts > wm - W_ci ≥ wm - w_ns
                     for parked in parked_out_by_ci.values():
                         _shift_tables(parked, off)
-                    if not len(sealed):
-                        sealed = None
 
-        buflen = (len(sealed) if sealed is not None else 0) + (
-            len(limbo) if limbo is not None else 0
-        )
+        buflen = _nrows(sealed) + _nrows(limbo)
         parts_out = {}
         for ci, tables in tables_out.items():
             if _tables_rows(tables) > max(256, 8 * buflen):
@@ -993,35 +967,108 @@ def _make_multi_fn(cps, emit_cols=(), mode="array", force_rematch: bool = False,
             raw = _ser_tables(parked)
             if raw is not None:
                 parked_ser[ci] = raw
-
-        has_buf = sealed is not None and len(sealed)
-        has_limbo = limbo is not None and len(limbo)
-        if (not has_buf and not has_limbo and not parts_out
-                and not parked_ser and min_unsealed_ns is None):
-            state.remove()
-            return
-        state.update(
-            (
-                _ser_buf(sealed) if has_buf else None,
-                _ser_buf(limbo) if has_limbo else None,
-                pickle.dumps(parts_out, protocol=5) if parts_out else None,
-                pickle.dumps(parked_ser, protocol=5) if parked_ser else None,
-                max(wm_ms, last_emit_wm_ms),
-                late_dropped,
-                fellback,
-                my_fmt,
-            )
+        return (
+            rows,
+            _enc_cols(sealed),
+            pickle.dumps(parts_out, protocol=5) if parts_out else None,
+            pickle.dumps(parked_ser, protocol=5) if parked_ser else None,
+            fellback,
+            min_unsealed_ns,
         )
-        timer = None
-        if has_limbo:
-            min_limbo = int(ts_i8(limbo).min())
-            timer = max(-(-min_limbo // 1_000_000), wm_ms + 1)
-        if min_unsealed_ns is not None:
-            t2 = max(-(-min_unsealed_ns // 1_000_000), wm_ms + 1)
-            timer = t2 if timer is None else min(timer, t2)
-        if timer is None and (has_buf or parts_out) and w_ns is not None:
-            timer = max(wm_ms + w_ns // 1_000_000 + 1, 1)
-        if timer is not None:
-            state.setTimeoutTimestamp(timer)
+
+    def fn(key, pdf_iter, state):
+        wm_ms = state.getCurrentWatermarkMs()
+        wm_ns = wm_ms * 1_000_000
+        if state.exists:
+            (buf_raw, limbo_raw, parts_raw, parked_raw,
+             last_emit_wm_ms, late_dropped, fellback, fmt) = state.get
+            # validate on EVERY restore, not only when partial tables
+            # exist: a shared run whose merged unit fell back to rematch
+            # persists fellback=1 with no tables — reinterpreting that
+            # bitmask per-pattern would silently drop matches.
+            if fmt != my_fmt:
+                raise refusal(fmt)
+        else:
+            buf_raw = limbo_raw = parts_raw = parked_raw = None
+            last_emit_wm_ms, late_dropped, fellback = -1, 0, 0
+        lo_ns = last_emit_wm_ms * 1_000_000
+
+        limbo = _dec_cols(limbo_raw)
+        n_late = 0
+        if not state.hasTimedOut:
+            for pdf in pdf_iter:
+                if not len(pdf):
+                    continue
+                cols = {c: pdf[c].to_numpy() for c in pdf.columns if c not in drop}
+                late = _ns(cols[ts_col]) <= lo_ns
+                if late.any():
+                    n_late += int(late.sum())
+                    cols = _take(cols, ~late)
+                limbo = _cat(limbo, cols)
+        if n_late:
+            late_dropped += n_late
+            if late_acc is not None:
+                late_acc.add(n_late)
+
+        fresh = None
+        if limbo is not None:
+            seal = _ns(limbo[ts_col]) <= wm_ns
+            if seal.any():
+                fresh = _take(limbo, seal)
+                fresh = _take(fresh, np.lexsort((fresh[tb_col], _ns(fresh[ts_col]))))
+                limbo = None if seal.all() else _take(limbo, ~seal)
+
+        # pass-through: nothing seals, no fallback re-runs and no parked
+        # match is due — the buffer, partial tables and parked matches
+        # are written back as the bytes they were read as (pruning and
+        # eviction wait for the next rebuild, which the timer below
+        # brings: a timed-out call always rebuilds)
+        parked_by_ci = pickle.loads(parked_raw) if parked_raw else {}
+        min_unsealed_ns = None
+        passthrough = (fresh is None and not (static_rematch | fellback)
+                       and not state.hasTimedOut)
+        if passthrough and parked_by_ci:
+            min_unsealed_ns = next_parked_seal(parked_by_ci)
+            passthrough = min_unsealed_ns > wm_ns
+        if passthrough:
+            rows = ()
+        else:
+            (rows, buf_raw, parts_raw, parked_raw, fellback,
+             min_unsealed_ns) = rebuild(
+                key[0], _cat(_dec_cols(buf_raw), fresh), _nrows(fresh), limbo,
+                pickle.loads(parts_raw) if parts_raw else {}, parked_by_ci,
+                fellback, lo_ns, wm_ns,
+            )
+
+        if (buf_raw is None and limbo is None and parts_raw is None
+                and parked_raw is None and min_unsealed_ns is None):
+            state.remove()
+        else:
+            state.update(
+                (
+                    buf_raw,
+                    _enc_cols(limbo),
+                    parts_raw,
+                    parked_raw,
+                    max(wm_ms, last_emit_wm_ms),
+                    late_dropped,
+                    fellback,
+                    my_fmt,
+                )
+            )
+            timer = None
+            if limbo is not None:
+                min_limbo = int(_ns(limbo[ts_col]).min())
+                timer = max(-(-min_limbo // 1_000_000), wm_ms + 1)
+            if min_unsealed_ns is not None:
+                t2 = max(-(-min_unsealed_ns // 1_000_000), wm_ms + 1)
+                timer = t2 if timer is None else min(timer, t2)
+            if (timer is None and (buf_raw is not None or parts_raw is not None)
+                    and w_ns is not None):
+                timer = max(wm_ms + w_ns // 1_000_000 + 1, 1)
+            if timer is not None:
+                state.setTimeoutTimestamp(timer)
+        if rows:
+            yield pd.DataFrame(rows, columns=out_cols)
 
     return fn

@@ -33,9 +33,10 @@ from cep_spark.compiler import compile_pattern
 from cep_spark.conditions import attr
 from cep_spark.pattern import Ev, Kleene, Neg, Pattern, Seq
 from cep_spark.stream import (
-    _de_buf,
     _de_tables,
+    _dec_cols,
     _make_multi_fn,
+    _nrows,
     _tables_rows,
 )
 
@@ -46,6 +47,11 @@ from test_stream_fn_property import FakeState  # noqa: E402
 N_BATCHES = int(os.environ.get("SOAK_BATCHES", "400"))
 EVENTS_PER_BATCH = int(os.environ.get("SOAK_EVENTS_PER_BATCH", "40"))
 ROLES = ["user", "assistant", "tool"]
+
+
+def _state_rows(state) -> int:
+    """Rows held in the state's sealed buffer plus its limbo."""
+    return _nrows(_dec_cols(state._val[0])) + _nrows(_dec_cols(state._val[1]))
 
 
 def main() -> None:
@@ -103,8 +109,6 @@ def main() -> None:
             emitted += len(pdf)
         wm = int(b["ts"].max().value // 1_000_000)
         if state.exists:
-            buf = _de_buf(state._val[0]) if state._val[0] else None
-            limbo = _de_buf(state._val[1]) if state._val[1] else None
             import pickle
 
             parts = pickle.loads(state._val[2]) if state._val[2] else {}
@@ -112,10 +116,7 @@ def main() -> None:
                 _tables_rows(_de_tables(raw))
                 for k, raw in parts.items() if isinstance(raw, (bytes, bytearray))
             )
-            buf_series.append(
-                (0 if buf is None else len(buf))
-                + (0 if limbo is None else len(limbo))
-            )
+            buf_series.append(_state_rows(state))
             part_series.append(prow)
 
     half = len(buf_series) // 2
@@ -175,18 +176,13 @@ def _drive(cps, merged, n_batches, events_per_batch, seed=2026):
             emitted += len(pdf)
         wm = int(b["ts"].max().value // 1_000_000)
         if state.exists:
-            buf = _de_buf(state._val[0]) if state._val[0] else None
-            limbo = _de_buf(state._val[1]) if state._val[1] else None
             parts = pickle.loads(state._val[2]) if state._val[2] else {}
             part_series.append(sum(
                 _tables_rows(_de_tables(raw))
                 for _k, raw in parts.items()
                 if isinstance(raw, (bytes, bytearray))
             ))
-            buf_series.append(
-                (0 if buf is None else len(buf))
-                + (0 if limbo is None else len(limbo))
-            )
+            buf_series.append(_state_rows(state))
     return emitted, buf_series, part_series
 
 

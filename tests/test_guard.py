@@ -307,17 +307,6 @@ def test_multi_trailing_neg_parks_instead_of_rematch():
     assert n_pt > 0
 
 
-def test_multi_rematch_strategy_rejects_guard(spark):
-    from cep_spark.stream import stream_matches_multi
-
-    cps = _multi_cps()
-    df = spark.createDataFrame(_hot_frame(n_assist=3, reps=1))
-    with pytest.raises(ValueError, match="incremental strategy"):
-        stream_matches_multi(
-            df, cps, "10 seconds", strategy="rematch", max_partials_per_state=8
-        )
-
-
 class _FakeAcc:
     def __init__(self):
         self.value = 0

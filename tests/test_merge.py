@@ -919,7 +919,7 @@ def test_stream_shared_fellback_state_guard():
     parts_raw, parked_raw = state._val[2], state._val[3]
     assert parts_raw is None and parked_raw is None  # no tables persisted
     # ...but the layout + family fingerprint ARE recorded
-    assert state._val[7].startswith("shared-v2:")
+    assert state._val[7].startswith("shared-v3:")
 
     fn_perpat = _make_multi_fn(cps, ("turn_idx",), merged=None)
     with pytest.raises(RuntimeError, match="fresh checkpoint"):
@@ -1222,30 +1222,16 @@ def test_stream_shared_per_component_fallback():
     assert st2.removed or not st2.exists
 
 
-def test_stream_multi_env_strategy_override(spark, monkeypatch):
-    """CEP_SPARK_STREAM_STRATEGY steers strategy='auto' on the MULTI
-    surface too (round 4); explicit arguments are never overridden."""
+@pytest.mark.parametrize("strategy", ["rematch", "remach"])
+def test_unknown_stream_strategy_rejected(strategy):
+    """The per-batch rematch executor is no longer a strategy: 'rematch'
+    is refused like any other unknown value (the in-state fallback to
+    rematching remains, per key and pattern).  Validated before df use."""
     from cep_spark.stream import stream_matches_multi
 
     cps = [compile_pattern(p) for p in _mergeable_stream_family()]
-    df = spark.createDataFrame(_group(3, n=4))
-    monkeypatch.setenv("CEP_SPARK_STREAM_STRATEGY", "rematch")
-    # auto -> rematch via env; the guard knob is then rejected loudly
-    with pytest.raises(ValueError, match="incremental strategy"):
-        stream_matches_multi(df, cps, watermark="10 seconds",
-                             strategy="auto", max_partials_per_state=8)
-    # explicit incremental wins over the env pin: no raise at strategy
-    # resolution (the call fails later only if the plan is executed)
-    out = stream_matches_multi(df, cps, watermark="10 seconds",
-                               strategy="incremental",
-                               max_partials_per_state=8)
-    assert out is not None
-    # a typo in the env pin fails loudly (round-5: matches the
-    # single-pattern path instead of silently running incremental)
-    monkeypatch.setenv("CEP_SPARK_STREAM_STRATEGY", "remach")
-    with pytest.raises(ValueError, match="CEP_SPARK_STREAM_STRATEGY"):
-        stream_matches_multi(df, cps, watermark="10 seconds",
-                             strategy="auto")
+    with pytest.raises(ValueError, match="unknown strategy"):
+        stream_matches_multi(None, cps, watermark="10 seconds", strategy=strategy)
 
 
 def test_merge_components_bucketed():

@@ -694,6 +694,57 @@ def test_late_events_dropped(spark, events_pdf, tmp_path):
     assert _canon(got.collect()) == _canon(batch.collect())
 
 
+def test_late_rows_dropped_reported(spark, events_pdf, tmp_path):
+    """A late arrival is counted: user 1's purchase at +30 min arrives
+    after user 1's timer fired at the +2 h watermark (one file per
+    micro-batch; the middle file's batch fires the timers).  Spark's
+    stateful operator drops it before the state function sees it, so
+    the listener's ``late_rows_dropped`` (Spark's per-batch count plus
+    the query's ``.late_dropped`` accumulator) reports it once."""
+    import time
+
+    from cep_spark.metrics import CepMetricsListener
+
+    pat = _pat(Seq(Ev("a", event_type="signup"), Ev("b", event_type="purchase")))
+    cp = compile_pattern(pat)
+    t0 = pd.Timestamp("2024-01-01")
+
+    def rows(spec, first_id):
+        df = events_pdf.iloc[:len(spec)].copy()
+        df["user_id"] = [u for u, _, _ in spec]
+        df["event_type"] = [e for _, e, _ in spec]
+        df["ts"] = [t0 + pd.Timedelta(minutes=m) for _, _, m in spec]
+        df["event_id"] = np.arange(first_id, first_id + len(spec))
+        return df
+
+    src = str(tmp_path / "src")
+    os.makedirs(src, exist_ok=True)
+    _write_pq(rows([(1, "signup", 0), (1, "purchase", 60), (2, "signup", 120)], 0),
+              f"{src}/p000.parquet")
+    _write_pq(rows([(3, "signup", 150)], 3), f"{src}/p001.parquet")
+    _write_pq(rows([(1, "purchase", 30)], 4), f"{src}/p002_late.parquet")
+    sm = run_stream(spark, src, cp, watermark="0 seconds")
+    listener = CepMetricsListener(late_dropped=sm.late_dropped)
+    spark.streams.addListener(listener)
+    try:
+        q = (
+            sm.writeStream.format("memory")
+            .queryName("m_late_count")
+            .outputMode("append")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(240)
+        time.sleep(1)  # listener events are delivered asynchronously
+    finally:
+        spark.streams.removeListener(listener)
+    assert q.exception() is None
+    assert spark.sql("SELECT * FROM m_late_count").count() == 1  # (0, 1) only
+    assert listener.late_rows_dropped() == 1
+    assert listener.summary()["late_rows_dropped"] == 1
+
+
 def test_resume_from_checkpoint_exactly_once(spark, events_pdf, tmp_path):
     """Stop after the first files, restart from the checkpoint with more
     files + flush: the union of emissions equals batch, no duplicates."""
@@ -806,6 +857,133 @@ def test_single_pattern_v1_checkpoint_refused(spark, events_pdf, tmp_path):
     # Spark's state-schema check refuses the restart before any batch
     assert "STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE" in str(err.value)
     assert out.committed_batches() == committed
+
+
+# --------------------------------------------------------------------------
+# state layout and counters, driven through a fake GroupState (no Spark)
+
+
+def _conv(roles, t0_s=0, turn0=0):
+    n = len(roles)
+    return pd.DataFrame({
+        "conv_id": "c0",
+        "turn_idx": np.arange(turn0, turn0 + n, dtype=np.int32),
+        "role": roles,
+        "ts": pd.Timestamp("2026-01-01")
+        + pd.to_timedelta(t0_s + 5 * np.arange(n), unit="s"),
+    })
+
+
+def _layout_family():
+    """A funnel that leaves partials waiting for a tool turn, and a
+    trailing-negation rule whose matches park for the window."""
+    from cep_spark.pattern import Neg
+
+    w = timedelta(seconds=600)
+    return [compile_pattern(p) for p in (
+        Pattern(Seq(Ev("a", role="user"), Ev("b", role="assistant"),
+                    Ev("c", role="tool")), window=w, pattern_id="funnel"),
+        Pattern(Seq(Ev("a", role="user"), Ev("b", role="assistant"),
+                    Neg(Ev("n", role="tool"))), window=w, pattern_id="tneg"),
+    )]
+
+
+def _call(fn, state, frames, wm_ms, timed_out=False):
+    state.wm_ms, state.hasTimedOut, state.timer_ms = wm_ms, timed_out, None
+    return list(fn(("c0",), iter(frames), state))
+
+
+def _sealed_state(fn, state):
+    """Feed four turns, then seal them all: the state then holds a
+    buffer, partial tables and parked matches.  Returns the watermark."""
+    first = _conv(["user", "assistant", "user", "assistant"])
+    _call(fn, state, [first], 0)
+    wm = int(first["ts"].max().value // 1_000_000)
+    _call(fn, state, [], wm, timed_out=True)
+    return wm
+
+
+def test_stream_state_passthrough_keeps_bytes():
+    """A call where no limbo row seals and no parked match is due leaves
+    the buffer, partial tables and parked matches byte-identical; only
+    the limbo takes the new rows."""
+    from test_stream_fn_property import FakeState
+
+    from cep_spark.stream import _dec_cols, _make_multi_fn
+
+    fn = _make_multi_fn(_layout_family(), ("turn_idx",))
+    state = FakeState()
+    wm = _sealed_state(fn, state)
+    before = state._val
+    assert all(before[i] is not None for i in (0, 2, 3))
+    assert before[1] is None  # nothing above the watermark yet
+
+    assert _call(fn, state, [_conv(["user", "assistant"], t0_s=20, turn0=4)], wm) == []
+    after = state._val
+    # not re-encoded at all: the very objects that were read
+    assert all(after[i] is before[i] for i in (0, 2, 3))
+    limbo = _dec_cols(after[1])
+    assert list(limbo["turn_idx"]) == [4, 5]
+    assert "conv_id" not in limbo  # the key is the call's, not stored
+    assert state.timer_ms == int(limbo["ts"].min().astype("datetime64[ms]")
+                                 .astype(np.int64))
+
+    # the next seal rebuilds: the tool turn completes the funnel and
+    # kills the parked matches whose look-ahead it falls in
+    tool = _conv(["tool"], t0_s=30, turn0=6)
+    _call(fn, state, [tool], wm)
+    out = _call(fn, state, [], int(tool["ts"].max().value // 1_000_000),
+                timed_out=True)
+    got = pd.concat(out)
+    assert set(got["pattern_id"]) == {"funnel"}
+    assert state._val[3] is None  # no parked match survived the tool turn
+
+
+def test_stream_state_pre_bump_format_refused():
+    """State written in the earlier Arrow-IPC layout (perpat-v1 /
+    shared-v2) is refused with an error that names the format change,
+    not reinterpreted."""
+    import pyarrow as pa
+    from test_stream_fn_property import FakeState
+
+    from cep_spark.merge import merge_compiled
+    from cep_spark.stream import _make_multi_fn
+
+    cps = _layout_family()
+    for merged, old in ((None, "perpat-v1"), (merge_compiled(cps), "shared-v2")):
+        fn = _make_multi_fn(cps, ("turn_idx",), merged=merged)
+        state = FakeState()
+        wm = _sealed_state(fn, state)
+        fp = state._val[7].split(":", 1)[1]
+        table = pa.Table.from_pandas(_conv(["user", "assistant"]), preserve_index=False)
+        sink = pa.BufferOutputStream()
+        with pa.ipc.new_stream(sink, table.schema) as w:
+            w.write_table(table)
+        state._val = (sink.getvalue().to_pybytes(), None, None, None, wm, 0, 0,
+                      f"{old}:{fp}")
+        with pytest.raises(RuntimeError, match=f"format {old!r}.*fresh checkpoint"):
+            _call(fn, state, [_conv(["tool"], t0_s=30, turn0=6)], wm)
+
+
+def test_stream_late_dropped_counted():
+    """A row at or below the key's last emission watermark is dropped
+    and counted once, in state and on the late-drop accumulator; an
+    on-time row in the same call is kept."""
+    from test_guard import _FakeAcc
+    from test_stream_fn_property import FakeState
+
+    from cep_spark.stream import _make_multi_fn
+
+    acc = _FakeAcc()
+    fn = _make_multi_fn(_layout_family(), ("turn_idx",), late_acc=acc)
+    state = FakeState()
+    wm = _sealed_state(fn, state)
+    assert acc.value == 0 and state._val[5] == 0
+    late = _conv(["tool"], t0_s=15, turn0=6)  # ts == the watermark
+    on_time = _conv(["tool"], t0_s=30, turn0=7)
+    _call(fn, state, [late, on_time], wm)
+    assert acc.value == 1
+    assert state._val[5] == 1
 
 
 def test_resume_from_checkpoint_group_units(spark, events_pdf, tmp_path):
