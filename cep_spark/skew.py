@@ -29,7 +29,6 @@ from datetime import timedelta
 
 import numpy as np
 
-from .batch import match_group_nfa, match_schema_flat, matches_to_pdf_flat, prefilter
 from .compiler import CompiledPattern
 
 __all__ = [
@@ -53,70 +52,15 @@ def _slice_expr(ts_col: str, w_us: int):
 
     # cast handles TIMESTAMP_NTZ parquet columns; the session timezone is
     # pinned to UTC (session.py), so the cast is shift-free and the slice
-    # agrees with the naive pandas-side ns bounds in fn()
+    # agrees with the naive pandas-side ns bounds in gen()
     m = F.unix_micros(F.col(ts_col).cast("timestamp"))
     return ((m - F.pmod(m, F.lit(w_us))) / F.lit(w_us)).cast("long")
 
 
 def run_batch_sliced(df, cp: CompiledPattern):
-    """Window-sliced NFA execution: groupBy(key, slice).applyInPandas."""
-    from pyspark.sql import functions as F
-
-    from ._serde import ensure_shippable
-
-    ensure_shippable(df.sparkSession)
-    pat = cp.pattern
-    if pat.window is None:
-        raise ValueError("run_batch_sliced requires a pattern window (the slice width)")
-    w_us = pat.window // timedelta(microseconds=1)
-    w_ns = w_us * 1000
-    key_type = df.schema[pat.key].dataType
-    base = prefilter(df, cp)
-
-    own = _slice_expr(pat.ts_col, w_us)
-    # group k normally holds events in [kW, (k+2)W): every match whose
-    # first event lies in [kW, (k+1)W) is contained (span <= W), and so
-    # are gap/span/trailing negation candidates.  LEADING negation looks
-    # BACK up to W before the first event — into [(k-1)W, kW) — so those
-    # patterns replicate events into a third group (own+1): 3x
-    # duplication instead of 2x, still exact.
-    has_leading = any(
-        n.kind == "leading" for alt in cp.alternatives for n in alt.negs
-    )
-    replicas = [own, own - 1] + ([own + 1] if has_leading else [])
-    sliced = base.withColumn("__slice", F.explode(F.array(*replicas)))
-
-    schema = match_schema_flat(cp, key_type)
-    ts_col, tb_col = pat.ts_col, pat.tiebreak_col
-
-    def fn(key, pdf):
-        key_val, k = key[0], key[1]
-        g = pdf.sort_values([ts_col, tb_col]).reset_index(drop=True)
-        ts_ns = g[ts_col].to_numpy().astype("datetime64[ns]").astype(np.int64)
-        lo, hi = k * w_ns, (k + 1) * w_ns
-        res = []
-        for alt_id, binding in match_group_nfa(cp, g):
-            first = min(
-                pos
-                for p in binding.values()
-                for pos in (p if isinstance(p, tuple) else (p,))
-            )
-            if lo <= ts_ns[first] < hi:
-                res.append((alt_id, binding))
-        return matches_to_pdf_flat(cp, g, key_val, res=res)
-
-    # pin the exchange width: AQE's byte-based coalescing would collapse
-    # this CPU-bound matcher stage to a handful of tasks (the whole point
-    # of slicing is parallelism) — see batch.cpu_parallelism.  The pinned
-    # repartition satisfies applyInPandas' clustered-distribution
-    # requirement, so no second shuffle is added.
-    from .batch import cpu_parallelism
-
-    sliced = sliced.repartition(cpu_parallelism(df), pat.key, "__slice")
-    return (
-        sliced.groupBy(pat.key, "__slice")
-        .applyInPandas(fn, schema=schema)
-    )
+    """Window-sliced NFA execution of one pattern, flat output: the
+    one-pattern case of ``run_batch_multi_sliced``."""
+    return _run_sliced(df, [cp], (), mode="flat")
 
 
 def run_batch_multi_sliced(df, cps, emit_cols=("turn_idx", "role", "tool", "ts")):
@@ -128,6 +72,13 @@ def run_batch_multi_sliced(df, cps, emit_cols=("turn_idx", "role", "tool", "ts")
     one slice + its predecessor replica), and per-tag span re-checks at
     accept keep each pattern exact (merge.py).  Output is the array
     schema with ``pattern_id``, identical to run_batch_multi."""
+    return _run_sliced(df, cps, emit_cols, mode="array")
+
+
+def _run_sliced(df, cps, emit_cols, mode):
+    """The sliced executor.  ``mode='flat'`` (one pattern, run unmerged)
+    builds run_batch's flat rows and reads no emit columns; ``'array'``
+    runs the patterns merged and builds tagged array rows."""
     from pyspark.sql import functions as F
 
     from ._serde import ensure_shippable
@@ -135,8 +86,10 @@ def run_batch_multi_sliced(df, cps, emit_cols=("turn_idx", "role", "tool", "ts")
         _ColStore,
         advance_groups,
         cpu_parallelism,
+        flat_match_rows,
         group_bounds,
         match_schema_array,
+        match_schema_flat,
         prefilter_multi,
         tagged_array_rows,
         unary_masks,
@@ -157,14 +110,25 @@ def run_batch_multi_sliced(df, cps, emit_cols=("turn_idx", "role", "tool", "ts")
             "run_batch_multi_sliced requires a window on every pattern "
             "(the max window is the slice width)"
         )
-    merged = merge_compiled(cps)
-    # slice width = the merged automaton's shared horizon (max window)
-    w_us = merged.pattern.window // timedelta(microseconds=1)
+    # slice width = the shared horizon (max window)
+    w_us = max(cp.pattern.window for cp in cps) // timedelta(microseconds=1)
     w_ns = w_us * 1000
     key_type = df.schema[pat.key].dataType
+    if mode == "flat":
+        auto = cps[0]
+        schema = match_schema_flat(auto, key_type)
+    else:
+        auto = merge_compiled(cps)
+        schema = match_schema_array(pat, emit_cols, key_type)
     base = prefilter_multi(df, cps, extra_cols=emit_cols)
 
     own = _slice_expr(pat.ts_col, w_us)
+    # group k normally holds events in [kW, (k+2)W): every match whose
+    # first event lies in [kW, (k+1)W) is contained (span <= W), and so
+    # are gap/span/trailing negation candidates.  LEADING negation looks
+    # BACK up to W before the first event — into [(k-1)W, kW) — so those
+    # patterns replicate events into a third group (own+1): 3x
+    # duplication instead of 2x, still exact.
     has_leading = any(
         n.kind == "leading"
         for cp in cps for alt in cp.alternatives for n in alt.negs
@@ -172,7 +136,6 @@ def run_batch_multi_sliced(df, cps, emit_cols=("turn_idx", "role", "tool", "ts")
     replicas = [own, own - 1] + ([own + 1] if has_leading else [])
     sliced = base.withColumn("__slice", F.explode(F.array(*replicas)))
 
-    schema = match_schema_array(pat, emit_cols, key_type)
     ts_col, tb_col, key_col = pat.ts_col, pat.tiebreak_col, pat.key
     out_cols = schema.fieldNames()
 
@@ -180,11 +143,9 @@ def run_batch_multi_sliced(df, cps, emit_cols=("turn_idx", "role", "tool", "ts")
     # partition): repartition on (key, slice), sort within partitions,
     # then ONE mapInPandas pass per partition — unary masks evaluate
     # once over the whole partition and every (key, slice) group is a
-    # numpy slice of it.  groupBy().applyInPandas here would pay the
-    # per-group pandas/mask setup ~span/W times PER KEY, which dominates
-    # when slicing runs over non-hot keys (tiny groups); the pinned
-    # repartition also keeps AQE from collapsing the CPU-bound matcher
-    # stage (batch.cpu_parallelism).
+    # numpy slice of it.  The pinned repartition also keeps AQE's
+    # byte-based coalescing from collapsing the CPU-bound matcher stage
+    # (the whole point of slicing is parallelism; batch.cpu_parallelism).
     sliced = sliced.repartition(
         cpu_parallelism(df), key_col, "__slice"
     ).sortWithinPartitions(key_col, "__slice", ts_col, tb_col)
@@ -205,8 +166,8 @@ def run_batch_multi_sliced(df, cps, emit_cols=("turn_idx", "role", "tool", "ts")
         bounds = group_bounds(keys, slices)
         ts_all = cols_all[ts_col].astype("datetime64[ns]").astype(np.int64)
         res, grp, _ = advance_groups(
-            merged, _ColStore.from_cols(cols_all), ts_all,
-            unary_masks(merged, cols_all, n), bounds,
+            auto, _ColStore.from_cols(cols_all), ts_all,
+            unary_masks(auto, cols_all, n), bounds,
         )
         # a (key, slice) group owns the matches whose first event lies
         # in its slice [k*W, (k+1)*W)
@@ -217,88 +178,80 @@ def run_batch_multi_sliced(df, cps, emit_cols=("turn_idx", "role", "tool", "ts")
         )
         lo = slices[bounds[grp]].astype(np.int64) * w_ns
         own = np.nonzero((ts_all[first] >= lo) & (ts_all[first] < lo + w_ns))[0]
-        rows = tagged_array_rows(cps, [res[k] for k in own], keys[bounds[grp[own]]],
-                                 emit_cols, cols_all)
+        kept, key_vals = [res[k] for k in own], keys[bounds[grp[own]]]
+        if mode == "flat":
+            rows = flat_match_rows(auto, key_vals, kept, cols_all[tb_col])
+        else:
+            rows = tagged_array_rows(cps, kept, key_vals, emit_cols, cols_all)
         if rows:
             yield pd.DataFrame(rows, columns=out_cols)
 
     return sliced.mapInPandas(gen, schema=schema)
 
 
-def hot_keys(df, cp: CompiledPattern, threshold: int):
+def hot_keys(df, cps, threshold: int):
     """Keys whose (pattern-relevant) event count exceeds `threshold`, as
     a one-column DataFrame — never collected to the driver, so a skewed
     tail with many hot keys cannot blow up driver memory; callers route
     with a broadcast semi/anti join."""
     from pyspark.sql import functions as F
 
-    pat = cp.pattern
+    from .batch import prefilter_multi
+
+    key = cps[0].pattern.key
     return (
-        prefilter(df, cp)
-        .filter(F.col(pat.key).isNotNull())
-        .groupBy(pat.key)
+        prefilter_multi(df, cps)
+        .filter(F.col(key).isNotNull())
+        .groupBy(key)
         .count()
         .filter(F.col("count") > threshold)
-        .select(pat.key)
+        .select(key)
     )
 
 
 def run_batch_auto(df, cp: CompiledPattern, hot_threshold: int = 100_000):
-    """Plain per-key NFA for normal keys; window-sliced for hot keys.
+    """Plain per-key NFA for normal keys; window-sliced for hot keys
+    (flat output): the one-pattern case of ``run_batch_multi_auto``."""
+    return _run_auto(df, [cp], (), hot_threshold, mode="flat")
 
-    Hot/cold routing is a broadcast semi/anti join against the hot-key
+
+def run_batch_multi_auto(df, cps, emit_cols=("turn_idx", "role", "tool", "ts"),
+                         hot_threshold: int = 100_000):
+    """Normal keys run the (prefix-shared when profitable) multi
+    executor; keys whose pattern-relevant event count exceeds
+    ``hot_threshold`` run window-sliced, prefix-shared.  Requires
+    merge.mergeable patterns when any key is hot (the slice width is the
+    common window)."""
+    return _run_auto(df, cps, emit_cols, hot_threshold, mode="array")
+
+
+def _run_auto(df, cps, emit_cols, hot_threshold, mode):
+    """Hot/cold routing is a broadcast semi/anti join against the hot-key
     aggregate (no collect + isin literals).  Null-key rows never match
     the semi join and always survive the anti join, so they flow down
-    the plain path — identical grouping to `run_batch`."""
+    the plain path — identical grouping to ``run_batch``."""
     from pyspark.sql import functions as F
 
-    from .batch import run_batch
+    from .batch import run_batch, run_batch_multi
 
-    pat = cp.pattern
+    def plain(d):
+        if mode == "flat":
+            return run_batch(d, cps[0], mode="flat")
+        return run_batch_multi(d, cps, emit_cols=emit_cols)
+
+    pat = cps[0].pattern
     if pat.window is None:
-        return run_batch(df, cp, mode="flat")
+        return plain(df)
     # localCheckpoint (not cache): the aggregate feeds isEmpty + two
     # broadcast joins — one scan, not three, the checkpointed side is
     # tiny (only keys above threshold), and its blocks are released by
     # the ContextCleaner once the plan is unreferenced instead of
     # leaking a session-lifetime cache entry per invocation.
-    hot = hot_keys(df, cp, hot_threshold).localCheckpoint()
+    hot = hot_keys(df, cps, hot_threshold).localCheckpoint()
     if hot.isEmpty():
-        return run_batch(df, cp, mode="flat")
+        return plain(df)
     cold_df = df.join(F.broadcast(hot), on=pat.key, how="left_anti")
     hot_df = df.join(F.broadcast(hot), on=pat.key, how="left_semi")
-    return run_batch(cold_df, cp, mode="flat").unionByName(
-        run_batch_sliced(hot_df, cp)
-    )
-
-
-def run_batch_multi_auto(df, cps, emit_cols=("turn_idx", "role", "tool", "ts"),
-                         hot_threshold: int = 100_000):
-    """Multi-pattern analogue of run_batch_auto: normal keys run the
-    (prefix-shared when profitable) multi executor; keys whose
-    pattern-relevant event count exceeds ``hot_threshold`` run
-    window-sliced, prefix-shared.  Requires merge.mergeable patterns
-    when any key is hot (the slice width is the common window)."""
-    from pyspark.sql import functions as F
-
-    from .batch import prefilter_multi, run_batch_multi
-
-    pat = cps[0].pattern
-    if pat.window is None:
-        return run_batch_multi(df, cps, emit_cols=emit_cols)
-    hot = (
-        prefilter_multi(df, cps)
-        .filter(F.col(pat.key).isNotNull())
-        .groupBy(pat.key)
-        .count()
-        .filter(F.col("count") > hot_threshold)
-        .select(pat.key)
-        .localCheckpoint()
-    )
-    if hot.isEmpty():
-        return run_batch_multi(df, cps, emit_cols=emit_cols)
-    cold_df = df.join(F.broadcast(hot), on=pat.key, how="left_anti")
-    hot_df = df.join(F.broadcast(hot), on=pat.key, how="left_semi")
-    return run_batch_multi(cold_df, cps, emit_cols=emit_cols).unionByName(
-        run_batch_multi_sliced(hot_df, cps, emit_cols=emit_cols)
+    return plain(cold_df).unionByName(
+        _run_sliced(hot_df, cps, emit_cols, mode)
     )

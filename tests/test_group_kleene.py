@@ -431,6 +431,16 @@ PATTERNS = {
                             Ev("x", role="tool"))))),
         window=timedelta(minutes=8),
     ),
+    # ... with no anchor before the group and an event after it
+    "and_pos_mem_lead_neg_then_t": Pattern(
+        Seq(Kleene(Seq(Ev("u", role="user"),
+                       And_(Seq(Neg(Ev("n", tool="sql")),
+                                Ev("w", role="assistant"),
+                                Ev("v", role="assistant")),
+                            Ev("x", role="tool")))),
+            Ev("t", role="user")),
+        window=timedelta(minutes=8),
+    ),
     "and_pos_mem_lead_neg_pos0": Pattern(
         Seq(Ev("a0", role="tool"),
             Kleene(Seq(And_(Seq(Neg(Ev("n", tool="sql")),
@@ -556,6 +566,15 @@ PATTERNS = {
                             Ev("w", role="assistant"),
                             Ev("v", role="assistant")),
                         Ev("x", role="user")))),
+        window=timedelta(minutes=8),
+    ),
+    "bare_and_mem_lead_neg_then_t": Pattern(
+        Seq(Ev("a0", role="tool"),
+            Kleene(And_(Seq(Neg(Ev("n", tool="sql")),
+                            Ev("w", role="assistant"),
+                            Ev("v", role="assistant")),
+                        Ev("x", role="user"))),
+            Ev("t", role="tool")),
         window=timedelta(minutes=8),
     ),
     # session 11: Negs inside Or_-member BRANCHES (branch-gated member

@@ -91,9 +91,9 @@ def test_multi_pattern_single_shuffle(spark, events):
     """run_batch_multi: N patterns share ONE scan and ONE shuffle."""
     import re
 
-    from __spark_entry__ import _multi_query
+    from __spark_entry__ import queries
 
-    plan = _formatted(_multi_query(spark, SF))
+    plan = _formatted(queries()["cep_multi"](spark, SF))
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
     # partition-amortized executor: ONE MapInPandas over sorted partitions

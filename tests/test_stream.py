@@ -395,9 +395,19 @@ def test_parity_dist_and_mem_neg_group(spark, events_pdf, tmp_path):
     48h window at sf0.001: 111 rows (123 without the Neg), all three
     extension units bound (6/7/6) — a raw unexcluded gap check zeroes
     the __d2 unit and fails the pin."""
-    import __spark_entry__ as entry_mod
+    from cep_spark.pattern import Or_
 
-    cp = compile_pattern(entry_mod._KLEENE_DIST_AND_MEM_NEG_PAT)
+    pat = _pat(
+        Seq(Kleene(Seq(Ev("u", event_type="view"),
+                       Or_(And_(Seq(Ev("w", event_type="click"),
+                                    Neg(Ev("n", event_type="error")),
+                                    Ev("v", event_type="signup")),
+                                Ev("x", event_type="error")),
+                           Ev("c", event_type="error")))),
+            Ev("p", event_type="purchase")),
+        window=timedelta(hours=48),
+    )
+    cp = compile_pattern(pat)
     src = str(tmp_path / "src")
     with_flush = pd.concat([events_pdf, _flush_row(events_pdf)],
                            ignore_index=True)
