@@ -454,8 +454,9 @@ WHERE p.event_type = 'purchase'
 # round 4 (session B): Kleene over And_ — each repetition binds the
 # leaves in ANY arrival order (permutation assignments count
 # separately), repetitions interleave strictly (all of rep j before all
-# of rep j+1 in (ts, event_id) order).  compiler._collect grp_kind=
-# "and"; the automaton's mid tracks the SET of bound sub-indices.  The
+# of rep j+1 in (ts, event_id) order).  compiler._collect lowers the
+# body to one conjunctive (pos_all) group position; the automaton's mid
+# tracks which members the repetition has bound.  The
 # oracle's recursive CTE joins each repetition's pair with NO order
 # constraint between them, tracking the repetition's (ts, id)-max as
 # the next repetition's strict lower bound.

@@ -726,7 +726,7 @@ def advance_groups(cp: CompiledPattern, store, ts_ns, masks, bounds, tables_in=N
         else:
             tables = {st.sid: _Partials(svars[st.sid], kvars[st.sid]) for st in alt.states}
 
-        # seq-group repetition-count ANCHOR variables per group: the
+        # repetition-count ANCHOR variables per group: the
         # repetition count of a partial is the TOTAL number of binds at
         # the group's first NON-loop position — with Or_ branches that
         # is a SUM across branch vars (each repetition binds exactly
@@ -740,14 +740,13 @@ def advance_groups(cp: CompiledPattern, store, ts_ns, masks, bounds, tables_in=N
         grp_anchor_vars: dict = {}
         anchor_idx: dict = {}
         for s in alt.slots:
-            if (s.group is not None and s.grp_kind != "and"
-                    and not s.grp_loop):
+            if s.group is not None and not s.grp_loop:
                 j = anchor_idx.get(s.group)
                 anchor_idx[s.group] = (
                     s.grp_idx if j is None else min(j, s.grp_idx)
                 )
         for s in alt.slots:
-            if (s.group is not None and s.grp_kind != "and"
+            if (s.group is not None
                     and s.grp_idx == anchor_idx.get(s.group, 0)
                     and not s.grp_loop and s.br_idx == 0
                     and (not s.pos_all or s.br == 0 or s.mem == 0)):
@@ -931,17 +930,13 @@ def advance_groups(cp: CompiledPattern, store, ts_ns, masks, bounds, tables_in=N
                     if tr.rep_start and s.kleene_max is not None:
                         # bounded composite under group lowering: cap
                         # the repetition count at the loop-back bind
-                        # (seq groups: SUM of the anchor position's
-                        # branch tuple lengths — one bind per
-                        # repetition; a branch never bound contributes
-                        # 0; the anchor is the first NON-loop position,
-                        # see grp_anchor_vars above)
-                        vs = (
-                            grp_anchor_vars[s.group]
-                            if s.grp_kind != "and" else [s.var]
-                        )
+                        # (SUM of the anchor position's branch tuple
+                        # lengths — one bind per repetition; a branch
+                        # never bound contributes 0; the anchor is the
+                        # first NON-loop position, see grp_anchor_vars
+                        # above)
                         lens = np.zeros(len(ptbl), dtype=np.int64)
-                        for v in vs:
+                        for v in grp_anchor_vars[s.group]:
                             if v in ptbl.kleene:
                                 lens += np.fromiter(
                                     (len(t) for t in ptbl.kleene[v]),

@@ -39,7 +39,7 @@ to executors inside the stateful UDF closure (broadcast-equivalent).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Optional
 
 from .conditions import Cond, FALSE, TRUE, split_conditions, subst
@@ -62,15 +62,10 @@ class Slot:
     # UNBOUNDED composite Kleene: the sub-structure's leaves become a
     # GROUP of kleene-storage slots cycled by the NFA (sub-automaton
     # repetition) instead of compile-time chain expansion.  `group` is
-    # the group id, `grp_idx` the position within one repetition.
-    # `grp_kind` is "seq" (sub-slots bind strictly in grp_idx order) or
-    # "and" (round 4, session B: Kleene over And_ — each repetition
-    # binds every sub-slot once in ANY arrival order; the automaton's
-    # mid entry tracks the SET of bound sub-indices instead of a
-    # next-index pointer).
+    # the group id, `grp_idx` the position within one repetition
+    # (positions bind strictly in grp_idx order).
     group: Optional[int] = None
     grp_idx: int = 0
-    grp_kind: str = "seq"
     # Or_ branches at one group position (round 5): `br` identifies the
     # branch, `br_idx` the offset within a multi-event (Seq) branch,
     # `br_len` the branch's event count.  A repetition that enters a
@@ -200,8 +195,8 @@ class Transition:
     # group-Kleene repetition bind: the slot's var is ALREADY bound —
     # append the event to its element tuple instead of creating it
     repeat: bool = False
-    # loop-back bind that STARTS a new repetition (ordered groups: the
-    # grp_idx-0 loop-back; unordered "and" groups: any-idx loop-back) —
+    # loop-back bind that STARTS a new repetition (an entry bind at
+    # position 0 — for a conjunctive position, any member's entry) —
     # the executor applies the bounded-composite repetition cap here
     rep_start: bool = False
     # per-transition gap-boundary override for LEADING member gaps in a
@@ -496,13 +491,11 @@ def _validate_group_inner(node: Kleene) -> None:
             for a, b in zip(inner.parts, inner.parts[1:])
         )
     ) or (
-        # Kleene over And_: plain leaves (round 4, session B — the
-        # unordered "and" group; no Negs directly inside) or any valid
-        # conjunctive-position member mix (session 10: Seq-of-leaves /
-        # Or_-of-branches members, member Negs — lowered as a group
-        # with ONE pos_all position, which pins the same semantics:
-        # repetition j+1 strictly after all of repetition j, members
-        # interleaving freely within it)
+        # Kleene over And_: any valid conjunctive-position member mix
+        # (leaves, Seq-of-leaves / Or_-of-branches members, member
+        # Negs; no Negs directly inside) — lowered as a group with ONE
+        # pos_all position: repetition j+1 strictly after all of
+        # repetition j, members interleaving freely within it
         isinstance(inner, And_)
         and len(inner.parts) >= 2
         and _seq_part_ok(inner)
@@ -539,8 +532,8 @@ def _validate_group_inner(node: Kleene) -> None:
             "branches — the repetition binds ONE branch of it; those "
             "branches may carry Negs BETWEEN two leaves or LEADING "
             "them, never trailing); "
-            "the whole body may also be a bare And_ of leaves "
-            "(unordered repetitions).  An Or_ NESTED inside a Seq "
+            "the whole body may also be a bare And_ of such members "
+            "(one conjunctive position).  An Or_ NESTED inside a Seq "
             "branch/member distributes into flat units at compile "
             "time (session 12), a BOUNDED nested Kleene pre-expands "
             "to chains (leaf chains, or per-branch-renamed unit "
@@ -1143,29 +1136,6 @@ def _collect(
             gid = 1 + max(
                 (s.group for s in slots if s.group is not None), default=-1
             )
-            if isinstance(node.inner, And_) and all(
-                isinstance(p, Ev) for p in node.inner.parts
-            ):
-                # Kleene over And_ of LEAVES: each repetition binds
-                # every leaf once in ANY arrival order (permutation
-                # assignments count separately, like a plain And_);
-                # repetition j+1 starts strictly after ALL of
-                # repetition j (automatic — a loop-back bind only fires
-                # from a completed group).  An And_ with Seq/Or_/Neg-
-                # bearing MEMBERS (session 10) falls through to the
-                # position machinery below as ONE pos_all position —
-                # the same repetition semantics with per-member
-                # progress tracking.
-                sids = []
-                for j, part in enumerate(node.inner.parts):
-                    sid = len(slots)
-                    slots.append(
-                        Slot(sid, part.name, part.where, kleene=True,
-                             kleene_max=node.max_len, prereq=prereq,
-                             group=gid, grp_idx=j, grp_kind="and")
-                    )
-                    sids.append(sid)
-                return frozenset(sids)
             sids: list = []
             pos0_sids: list = []
             here = prereq
@@ -1666,10 +1636,10 @@ def _successors(bound: frozenset, mid: frozenset, slots: list, groups: dict) -> 
     """Every legal single-event bind out of automaton state (bound, mid):
     list of (slot, new_bound, new_mid, repeat, rep_start, loop_cont).
 
-    Group rules: a "seq" group's current repetition binds its sub-slots
-    in order (tracked by `mid` as a next-index pointer); an "and" group
-    (Kleene over And_) binds them in ANY order (`mid` tracks the SET of
-    bound sub-indices).  From a COMPLETE group that is still open (no
+    Group rules: a group's current repetition binds its positions in
+    order (tracked by `mid` as a next-index pointer; a conjunctive And_
+    position binds its members in any order, `mid` holding per-member
+    progress).  From a COMPLETE group that is still open (no
     bound successor outside it) a repetition-starting sub-slot may bind
     again (repeat=True — the executor appends to the element tuple;
     rep_start=True marks these loop-backs for the bounded-cap check); a
@@ -1754,102 +1724,92 @@ def _successors(bound: frozenset, mid: frozenset, slots: list, groups: dict) -> 
             continue
         gs = groups[s.group]
         npos = gs[-1].grp_idx + 1  # positions, not slots (Or_ branches)
-        unordered = s.grp_kind == "and"
         if s.group in mid_d:
             cur = mid_d[s.group]
             nm = dict(mid_d)
-            if unordered:
-                if s.grp_idx in cur:
-                    continue  # already bound this repetition
-                nval = frozenset(cur | {s.grp_idx})
-                if len(nval) == npos:
-                    del nm[s.group]
-                else:
-                    nm[s.group] = nval
-            else:
-                # seq-group mid value: int j = waiting for position j's
-                # entry bind; tuple (j, br, k) = inside a multi-event
-                # branch of position j, waiting for its br_idx-k event;
-                # (j, frozenset of (br, cnt)) = inside a conjunctive
-                # (And_) position, cnt = events bound so far for member
-                # br this repetition (absent ⇒ 0; complete ⇒ br_len)
-                if (isinstance(cur, tuple) and len(cur) == 2
-                        and isinstance(cur[1], frozenset)):
-                    jj, prog = cur
-                    if s.grp_idx != jj or not s.pos_all:
-                        continue
-                    cnt = next((c for b, c in prog if b == s.br), 0)
-                    if s.br_idx != cnt:
-                        continue  # wrong next event for this unit
-                        # (cnt == br_len ⇒ unit complete: no slot has
-                        # br_idx == br_len, so complete units never
-                        # re-bind this repetition)
-                    units = _pos_units(s.group, jj)
-                    if s.mem is not None and any(
-                        c > 0 and b != s.br
-                        and units[b][0] == ("m", s.mem)
-                        for b, c in prog
-                    ):
-                        continue  # another branch of this Or_ member
-                        # already chose this repetition (session 9)
-                    nprog = frozenset(
-                        (b, c) for b, c in prog if b != s.br
-                    ) | {(s.br, cnt + 1)}
-                    if _pos_done(nprog, units):
-                        if jj == npos - 1:
-                            del nm[s.group]
-                        else:
-                            nm[s.group] = jj + 1
-                    else:
-                        nm[s.group] = (jj, nprog)
-                    out.append(
-                        (s, bound | {s.sid}, frozenset(nm.items()),
-                         s.sid in bound, False, False)
-                    )
+            # group mid value: int j = waiting for position j's
+            # entry bind; tuple (j, br, k) = inside a multi-event
+            # branch of position j, waiting for its br_idx-k event;
+            # (j, frozenset of (br, cnt)) = inside a conjunctive
+            # (And_) position, cnt = events bound so far for member
+            # br this repetition (absent ⇒ 0; complete ⇒ br_len)
+            if (isinstance(cur, tuple) and len(cur) == 2
+                    and isinstance(cur[1], frozenset)):
+                jj, prog = cur
+                if s.grp_idx != jj or not s.pos_all:
                     continue
-                if isinstance(cur, tuple):
-                    jj, bb, kk = cur
-                    if s.grp_idx != jj or s.br != bb or s.br_idx != kk:
-                        continue
+                cnt = next((c for b, c in prog if b == s.br), 0)
+                if s.br_idx != cnt:
+                    continue  # wrong next event for this unit
+                    # (cnt == br_len ⇒ unit complete: no slot has
+                    # br_idx == br_len, so complete units never
+                    # re-bind this repetition)
+                units = _pos_units(s.group, jj)
+                if s.mem is not None and any(
+                    c > 0 and b != s.br
+                    and units[b][0] == ("m", s.mem)
+                    for b, c in prog
+                ):
+                    continue  # another branch of this Or_ member
+                    # already chose this repetition (session 9)
+                nprog = frozenset(
+                    (b, c) for b, c in prog if b != s.br
+                ) | {(s.br, cnt + 1)}
+                if _pos_done(nprog, units):
+                    if jj == npos - 1:
+                        del nm[s.group]
+                    else:
+                        nm[s.group] = jj + 1
                 else:
-                    if (s.grp_loop and cur == s.grp_idx + 1
-                            and s.sid in bound and s.br_idx == 0):
-                        # self-loop CONTINUE of an unbounded nested
-                        # Kleene (session 16): mid == grp_idx+1
-                        # means the next position's entry has NOT
-                        # bound this repetition, so appending extends
-                        # the CURRENT repetition's run (strict
-                        # position interleaving preserved).  Leaf loop:
-                        # state unchanged — a skip/take fork like the
-                        # leaf Kleene's self-extension.  Composite UNIT
-                        # loop (session 18, br_len > 1): re-entry
-                        # through the unit's FIRST leaf starts another
-                        # inner repetition — the mid returns to
-                        # (grp_idx, 0, 1) and the unit's remaining
-                        # leaves bind through the ordinary tuple path
-                        # before anything outside the unit may bind
-                        if s.br_len == 1:
-                            out.append((s, bound, mid, True, False, True))
-                        else:
-                            nm2 = dict(mid_d)
-                            nm2[s.group] = (s.grp_idx, 0, 1)
-                            out.append((s, bound, frozenset(nm2.items()),
-                                        True, False, True))
-                        continue
-                    if cur != s.grp_idx or s.br_idx != 0:
-                        continue
-                    jj = cur
-                if s.pos_all:
-                    # entry into a conjunctive position (>= 2 members):
-                    # hold the mid at (j, {(first member, 1 event)})
-                    # until every member is fully bound
-                    nm[s.group] = (jj, frozenset({(s.br, 1)}))
-                elif s.br_idx < s.br_len - 1:
-                    nm[s.group] = (jj, s.br, s.br_idx + 1)
-                elif jj == npos - 1:
-                    del nm[s.group]
-                else:
-                    nm[s.group] = jj + 1
+                    nm[s.group] = (jj, nprog)
+                out.append(
+                    (s, bound | {s.sid}, frozenset(nm.items()),
+                     s.sid in bound, False, False)
+                )
+                continue
+            if isinstance(cur, tuple):
+                jj, bb, kk = cur
+                if s.grp_idx != jj or s.br != bb or s.br_idx != kk:
+                    continue
+            else:
+                if (s.grp_loop and cur == s.grp_idx + 1
+                        and s.sid in bound and s.br_idx == 0):
+                    # self-loop CONTINUE of an unbounded nested
+                    # Kleene (session 16): mid == grp_idx+1
+                    # means the next position's entry has NOT
+                    # bound this repetition, so appending extends
+                    # the CURRENT repetition's run (strict
+                    # position interleaving preserved).  Leaf loop:
+                    # state unchanged — a skip/take fork like the
+                    # leaf Kleene's self-extension.  Composite UNIT
+                    # loop (session 18, br_len > 1): re-entry
+                    # through the unit's FIRST leaf starts another
+                    # inner repetition — the mid returns to
+                    # (grp_idx, 0, 1) and the unit's remaining
+                    # leaves bind through the ordinary tuple path
+                    # before anything outside the unit may bind
+                    if s.br_len == 1:
+                        out.append((s, bound, mid, True, False, True))
+                    else:
+                        nm2 = dict(mid_d)
+                        nm2[s.group] = (s.grp_idx, 0, 1)
+                        out.append((s, bound, frozenset(nm2.items()),
+                                    True, False, True))
+                    continue
+                if cur != s.grp_idx or s.br_idx != 0:
+                    continue
+                jj = cur
+            if s.pos_all:
+                # entry into a conjunctive position (>= 2 members):
+                # hold the mid at (j, {(first member, 1 event)})
+                # until every member is fully bound
+                nm[s.group] = (jj, frozenset({(s.br, 1)}))
+            elif s.br_idx < s.br_len - 1:
+                nm[s.group] = (jj, s.br, s.br_idx + 1)
+            elif jj == npos - 1:
+                del nm[s.group]
+            else:
+                nm[s.group] = jj + 1
             out.append(
                 (s, bound | {s.sid}, frozenset(nm.items()), s.sid in bound,
                  False, False)
@@ -1880,14 +1840,11 @@ def _successors(bound: frozenset, mid: frozenset, slots: list, groups: dict) -> 
                     out.append((s, bound, frozenset(nm2.items()),
                                 True, False, True))
             continue
-        if not unordered and (s.grp_idx != 0 or s.br_idx != 0):
-            continue  # a seq-group repetition always starts at position
-            # 0's entry sub-slot
+        if s.grp_idx != 0 or s.br_idx != 0:
+            continue  # a repetition always starts at position 0's entry
+            # sub-slot
         nm = dict(mid_d)
-        if unordered:
-            if npos > 1:
-                nm[s.group] = frozenset({s.grp_idx})
-        elif s.pos_all:
+        if s.pos_all:
             # conjunctive position 0: any member's ENTRY event may start
             # the repetition (the br_idx != 0 gate above holds the
             # others); the rest bind through the in-mid path
@@ -2025,12 +1982,8 @@ def compile_pattern(pat: Pattern, composite: str = "auto") -> CompiledPattern:
         # Or_ flattening inside an unbounded repetition body, session
         # 11) — adopt it; `where` is untouched because no variable was
         # renamed or replicated
-        from dataclasses import replace as _dc_replace
-
-        pat = _dc_replace(pat, structure=expanded)
+        pat = replace(pat, structure=expanded)
     if reps:
-        from dataclasses import replace as _dc_replace
-
         new_conjs = []
         for c in pat.where.conjuncts():
             # apply entries SEQUENTIALLY in registration order (an
@@ -2077,7 +2030,7 @@ def compile_pattern(pat: Pattern, composite: str = "auto") -> CompiledPattern:
         w: Cond = TRUE
         for c in new_conjs:
             w = w & c
-        pat = _dc_replace(pat, structure=expanded, where=w)
+        pat = replace(pat, structure=expanded, where=w)
 
     alternatives = []
     needed: dict[str, set] = {}
@@ -2155,12 +2108,7 @@ def compile_pattern(pat: Pattern, composite: str = "auto") -> CompiledPattern:
             if s.var in unary:
                 u = u & unary[s.var]
             multi.extend(s_multi)
-            slot_list.append(
-                Slot(s.sid, s.var, u, s.kleene, s.kleene_max, s.prereq,
-                     s.adjacent, s.group, s.grp_idx, s.grp_kind,
-                     s.br, s.br_idx, s.br_len, s.pos_all, s.mem,
-                     s.grp_loop)
-            )
+            slot_list.append(replace(s, unary=u))
             if s.adjacent is not None:
                 # {var}__prev reads the same physical columns as {var}
                 for v, col in s.adjacent.cols():
@@ -2172,13 +2120,7 @@ def compile_pattern(pat: Pattern, composite: str = "auto") -> CompiledPattern:
             # in every lowering (FALSE slot unary -> empty NFA mask,
             # FALSE join filter, `WHERE FALSE` oracle) rather than
             # silently dropping the conjunct.
-            slot_list = [
-                Slot(s.sid, s.var, FALSE, s.kleene, s.kleene_max, s.prereq,
-                     s.adjacent, s.group, s.grp_idx, s.grp_kind,
-                     s.br, s.br_idx, s.br_len, s.pos_all, s.mem,
-                     s.grp_loop)
-                for s in slot_list
-            ]
+            slot_list = [replace(s, unary=FALSE) for s in slot_list]
             multi = []
         slots = slot_list
         alt_vars = set(names)
@@ -2441,23 +2383,6 @@ def compile_pattern(pat: Pattern, composite: str = "auto") -> CompiledPattern:
                         for c in multi
                         if c.vars() <= bound_vars | {s.var}
                         and not c.vars() <= bound_vars
-                    )
-                elif s.grp_kind == "and":
-                    # unordered ("and") group repetition bind: which
-                    # sub-slot binds last varies per partial, so group-
-                    # referencing conjuncts re-attach at the bind that
-                    # COMPLETES the repetition (every mate's tuple then
-                    # ends with this repetition's element — the aligned
-                    # evaluation pairs them correctly); non-completing
-                    # binds carry none.
-                    completes = s.group not in dict(nm)
-                    gvars = frozenset(x.var for x in groups[s.group])
-                    conds = tuple(
-                        c
-                        for c in multi
-                        if completes
-                        and (c.vars() & gvars)
-                        and c.vars() <= bound_vars
                     )
                 elif s.pos_all:
                     # conjunctive (And_) position repetition bind: which

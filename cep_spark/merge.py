@@ -302,7 +302,6 @@ def merge_compiled(cps) -> CompiledPattern:
                     None if s.adjacent is None else _cond_sig(s.adjacent, cmap0),
                     s.group,
                     s.grp_idx,
-                    s.grp_kind,
                     s.br,
                     s.br_idx,
                     s.br_len,
@@ -367,7 +366,6 @@ def merge_compiled(cps) -> CompiledPattern:
                         ),
                         None if s.group is None else m_gid[s.group],
                         s.grp_idx,
-                        s.grp_kind,
                         s.br,
                         s.br_idx,
                         s.br_len,
@@ -470,8 +468,9 @@ def merge_compiled(cps) -> CompiledPattern:
             for st in alt.states:
                 ssig = (
                     frozenset(slot_sig[x] for x in st.bound),
-                    # mid values are ints (seq groups) or frozensets
-                    # ("and" groups) — normalize for cross-type sorting
+                    # mid values are ints or tuples (branch / And_-
+                    # position progress) — normalize for cross-type
+                    # sorting
                     tuple(sorted(((m_gid[g], i) for g, i in st.mid),
                                  key=lambda x: (x[0], str(x[1])))),
                     _conds_within(st.bound),

@@ -39,7 +39,7 @@ watermark"):
   a window state is bounded by the key's event rate x window span.
   Unbounded-window patterns keep the full key history (documented
   limit; the reference behaves the same).
-* State layout (``fmt`` ``perpat-v2`` / ``shared-v3``): the buffer and
+* State layout (``fmt`` ``perpat-v3`` / ``shared-v4``): the buffer and
   the limbo are pickled ``{column: ndarray}`` dicts (the ``_ColStore``
   layout; the key column is left out unless a condition or emit column
   reads it), the partial tables and parked matches pickled column
@@ -49,7 +49,9 @@ watermark"):
   is due and no rematch fallback runs (every data-batch call of an
   in-order stream) decodes and re-encodes only the limbo: buffer,
   partial tables and parked matches are written back as the same
-  bytes.  Checkpoints of the earlier Arrow-IPC layout are refused.
+  bytes.  Checkpoints of earlier layouts (Arrow-IPC frames, or the
+  fingerprint before Kleene over an And_ of leaves became one
+  conjunctive position) are refused.
 * Exactly-once: a match seals in exactly one bracket (last_emit_wm, W].
   On failure Spark replays the batch from the checkpoint with the same
   state and the same watermark, reproducing the bracket byte-for-byte;
@@ -542,7 +544,9 @@ def _pattern_fp(cp, w_ns):
     """Structural fingerprint of one compiled pattern: slots (with
     group/kleene shape), negation specs, variable order, window.
     Transitions/states derive deterministically from these at compile
-    time, so slot structure suffices for identity."""
+    time, so slot structure suffices for identity.  Every shape field
+    is a plain entry; frozensets are sorted and conditions go through
+    ``_cond_fp``, so the value is stable across processes."""
     pat = cp.pattern
     alts = []
     for alt in cp.alternatives:
@@ -550,41 +554,16 @@ def _pattern_fp(cp, w_ns):
             (s.sid, s.var, _cond_fp(s.unary), s.kleene, s.kleene_max,
              tuple(sorted(s.prereq)),
              None if s.adjacent is None else _cond_fp(s.adjacent),
-             s.group, s.grp_idx, s.grp_kind)
-            # multi-event Or_ branches extend the tuple (round 5,
-            # session 2) — appended conditionally so fingerprints of
-            # branch-free families (all existing checkpoints) are
-            # unchanged
-            + ((s.br, s.br_idx, s.br_len) if s.br_len > 1 else ())
-            # conjunctive (And_) position members (round 5, session 6)
-            # — appended conditionally so fingerprints of pos_all-free
-            # families (all existing checkpoints) are unchanged
-            + ((("A", s.br),) if s.pos_all else ())
-            # Or_-member unit ownership (session 9) — same conditional
-            # rule: mem-free families keep their fingerprints
-            + ((("O", s.mem),) if s.mem is not None else ())
-            # unbounded nested Kleene position (session 16) — same
-            # conditional rule: loop-free families keep their
-            # fingerprints (continue transitions derive from this flag
-            # at compile time)
-            + (("K",) if s.grp_loop else ())
+             s.group, s.grp_idx, s.br, s.br_idx, s.br_len, s.pos_all,
+             s.mem, s.grp_loop)
             for s in alt.slots
         )
         negs = tuple(
             (sp.var, _cond_fp(sp.unary),
              tuple(_cond_fp(c) for c in sp.multi), sp.kind,
              tuple(sorted(sp.post_slots)), sp.per_repeat, sp.repeat_only,
-             tuple(sp.pre_vars))
-            # branch gate (round 5 trailing-in-branch Negs) — appended
-            # conditionally so fingerprints of guard-free families (all
-            # existing checkpoints) are unchanged
-            + ((tuple(sp.br_guard),) if sp.br_guard else ())
-            # member-scoped gap (session 8) — same conditional rule
-            + (("M",) if sp.mem_gap else ())
-            # leading member gap (per-transition boundary override) —
-            # same conditional rule; the override itself derives from
-            # slots + this flag at compile time
-            + (("L",) if sp.mem_lead else ())
+             tuple(sp.pre_vars), tuple(sp.br_guard), sp.mem_gap,
+             sp.mem_lead)
             for sp in alt.negs
         )
         alts.append((alt.alt_id, slots, negs, tuple(alt.var_order)))
@@ -647,10 +626,17 @@ def _make_multi_fn(cps, emit_cols=(), mode="array", force_rematch: bool = False,
     w_ns = None if any(r is None for r in rets) else max(rets)
     trailing_of = [_trailing_alt_ids(cp) for cp in cps]
     merged_mode = merged is not None
-    # v3 / v2: event blocks are pickled column arrays (module docstring);
-    # shared-v2 / perpat-v1 held Arrow-IPC frames and refuse loudly
-    _SHARED_FMT = "shared-v3"
-    _PERPAT_FMT = "perpat-v2"
+    # v4 / v3: event blocks are pickled column arrays (module docstring)
+    # under the plain-field family fingerprint; every earlier layout
+    # refuses loudly, naming what changed since it
+    _SHARED_FMT = "shared-v4"
+    _PERPAT_FMT = "perpat-v3"
+    ipc_why = ("per-key state moved from Arrow-IPC frames to pickled "
+               "column arrays")
+    fp_why = ("the pattern-family fingerprint was redefined (Kleene over "
+              "an And_ of leaves now compiles to one conjunctive position)")
+    changed_since = {"shared-v2": ipc_why, "perpat-v1": ipc_why,
+                     "shared-v3": fp_why, "perpat-v2": fp_why}
     my_layout = _SHARED_FMT if merged_mode else _PERPAT_FMT
     # the key column is the call's key: stored only if something reads it
     need = set(emit_cols) | {ts_col, tb_col}
@@ -749,10 +735,10 @@ def _make_multi_fn(cps, emit_cols=(), mode="array", force_rematch: bool = False,
                 f"({'shared merged-automaton' if merged_mode else 'per-pattern'}); "
                 "restart from a fresh checkpoint to switch strategies"
             )
+        why = changed_since.get(layout, "the layout is unknown")
         return RuntimeError(
             f"state store format {layout!r} is not this version's "
-            f"{my_layout!r}: per-key state moved from Arrow-IPC frames to "
-            "pickled column arrays, and checkpoints written before the "
+            f"{my_layout!r}: {why}, and checkpoints written before the "
             "format change cannot be read; restart from a fresh "
             "checkpoint (README, 'Streaming state-schema migration')"
         )

@@ -10,6 +10,22 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "spark: needs a SparkSession (deselect with -m 'not spark' to run "
+        "the pure-Python suites without a JVM)",
+    )
+
+
+def pytest_collection_modifyitems(config, items):
+    # fixturenames is the closure, so tests reaching `spark` through
+    # events_df / transcripts_df are marked too
+    for item in items:
+        if "spark" in getattr(item, "fixturenames", ()):
+            item.add_marker(pytest.mark.spark)
+
+
 @pytest.fixture(scope="session")
 def spark():
     from cep_spark.session import get_spark

@@ -15,7 +15,10 @@ import re
 import subprocess
 import sys
 
+import pytest
 
+
+@pytest.mark.spark  # starts Spark in a subprocess
 def test_bucketed_cep_eliminates_shuffles():
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     r = subprocess.run(

@@ -133,11 +133,12 @@ def test_unbounded_composite_kleene_group_lowering():
             if tr.accepting:
                 assert not alt.states[tr.target].mid
     # group lowering supports Seq-of-leaves inners only
-    # Kleene over And_ is supported since round 4 session B: unordered
-    # repetition binds (grp_kind="and")
+    # Kleene over an And_ of leaves compiles to ONE conjunctive
+    # (pos_all) position: every member binds once per repetition
     cp_and = compile_pattern(Pattern(Kleene(And_(Ev("u"), Ev("v")))))
     (alt_and,) = cp_and.alternatives
-    assert all(s.grp_kind == "and" for s in alt_and.slots)
+    assert all(s.grp_idx == 0 and s.pos_all for s in alt_and.slots
+               if s.group is not None)
     assert any(tr.rep_start for st in alt_and.states for tr in st.transitions)
     with pytest.raises(ValueError, match="Seq of plain event leaves"):
         compile_pattern(Pattern(Kleene(Seq(Ev("u")))))

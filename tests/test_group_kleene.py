@@ -944,43 +944,50 @@ def test_trailing_neg_in_and_part_rejected():
 
 
 def test_and_group_chain_parity():
-    """Bounded Kleene(And_) — forced group lowering (unordered
-    repetition binds) must match the chain expansion exactly, including
-    the permutation assignments within each repetition."""
-    for cond in (False, True):
-        pat = Pattern(
-            Seq(Kleene(And_(Ev("u", role="user"), Ev("w", role="assistant")),
-                       max_len=2),
-                Ev("t", role="tool")),
-            where=(attr("w", "value") > attr("u", "value")) if cond else None,
-            window=timedelta(minutes=5),
-        ) if cond else Pattern(
-            Seq(Kleene(And_(Ev("u", role="user"), Ev("w", role="assistant")),
-                       max_len=2),
-                Ev("t", role="tool")),
-            window=timedelta(minutes=5),
-        )
-        cp_group = compile_pattern(pat, composite="group")
-        cp_chain = compile_pattern(pat)
-        rng = np.random.default_rng(47 + cond)
-        nonzero = multirep = 0
+    """Bounded Kleene(And_) — forced group lowering (one conjunctive
+    position, members in any order) must match the chain expansion
+    exactly, including the permutation assignments within each
+    repetition.  The 3-leaf body runs on longer groups where the
+    unbounded lowering finds more repetitions, so the cap — which
+    counts member 0's binds (batch.py grp_anchor_vars) — must fire on a
+    body wider than two members."""
+    u, w = Ev("u", role="user"), Ev("w", role="assistant")
+    cond = attr("w", "value") > attr("u", "value")
+    # (members, last leaf, where, group sizes, window minutes)
+    cases = (
+        ((u, w), Ev("t", role="tool"), TRUE, (3, 11), 5),
+        ((u, w), Ev("t", role="tool"), cond, (3, 11), 5),
+        ((u, w, Ev("x", role="tool")), Ev("t", role="user"), TRUE, (8, 17),
+         30),
+    )
+    for ci, (leaves, last, where, sizes, minutes) in enumerate(cases):
+        def pat(max_len):
+            return Pattern(
+                Seq(Kleene(And_(*leaves), max_len=max_len), last),
+                where=where, window=timedelta(minutes=minutes),
+            )
+        cp_group = compile_pattern(pat(2), composite="group")
+        cp_open = compile_pattern(pat(None))
+        cp_chain = compile_pattern(pat(2))
+        names = [e.name for e in leaves]
+        rng = np.random.default_rng(47 + ci)
+        nonzero = multirep = capped = 0
         for trial in range(60):
-            g = _gen_group(trial * 37 + 13, int(rng.integers(3, 11)))
+            g = _gen_group(trial * 37 + 13, int(rng.integers(*sizes)))
             gs = g.sort_values(["ts", "turn_idx"]).reset_index(drop=True)
             grp = _canon_nfa(match_group_nfa(cp_group, gs))
             folded = []
             for _, b in match_group_nfa(cp_chain, gs):
-                fu = tuple(p for j in (1, 2) for p in
-                           ([b[f"u__{j}"]] if f"u__{j}" in b else []))
-                fw = tuple(p for j in (1, 2) for p in
-                           ([b[f"w__{j}"]] if f"w__{j}" in b else []))
-                folded.append((0, tuple(sorted(
-                    {"u": fu, "w": fw, "t": (b["t"],)}.items()
-                ))))
-                multirep += len(fu) > 1
-            assert grp == sorted(set(folded)), f"cond={cond} trial {trial}\n{g}"
+                fb = {v: tuple(b[f"{v}__{j}"] for j in (1, 2)
+                               if f"{v}__{j}" in b) for v in names}
+                fb[last.name] = (b[last.name],)
+                folded.append((0, tuple(sorted(fb.items()))))
+                multirep += len(fb["u"]) > 1
+            assert grp == sorted(set(folded)), f"case {ci} trial {trial}\n{g}"
             nonzero += bool(grp)
-        assert nonzero > 0 and multirep > 0
+            capped += len(match_group_nfa(cp_open, gs)) > len(grp)
+        assert nonzero > 0 and multirep > 0, ci
+        assert capped > 0 or len(leaves) == 2, ci
 
 
 def test_gap_neg_under_and_interleaving():
@@ -2249,8 +2256,8 @@ def test_nested_bounded_kleene_as_and_member():
 def test_bare_and_member_body_equals_chain_expansion():
     """Session 10: a BARE And_ body with non-leaf members — lowered as
     a single pos_all position — must match the bounded chain expansion
-    exactly (repetition j+1 strictly after all of j; a leaf And_ body
-    keeps the unordered 'and' lowering, pinned by the kinds assert)."""
+    exactly (repetition j+1 strictly after all of j; every group slot
+    sits at the one pos_all position, pinned by the layout assert)."""
     pat = Pattern(
         Seq(Kleene(And_(Seq(Ev("w", role="assistant"),
                             Ev("v", role="assistant")),
@@ -2260,8 +2267,8 @@ def test_bare_and_member_body_equals_chain_expansion():
         window=timedelta(minutes=8),
     )
     cp_group = compile_pattern(pat, composite="group")
-    assert {(s.grp_kind, s.pos_all) for a in cp_group.alternatives
-            for s in a.slots if s.group is not None} == {("seq", True)}
+    assert {(s.grp_idx, s.pos_all) for a in cp_group.alternatives
+            for s in a.slots if s.group is not None} == {(0, True)}
     cp_chain = compile_pattern(pat)
 
     def fold(res):

@@ -106,6 +106,7 @@ def test_daemon_import_is_light():
     assert out.stdout.strip() == "[]"
 
 
+@pytest.mark.spark  # starts Spark in a subprocess
 def test_get_spark_workers_run_patched_method(tmp_path):
     """A get_spark session started outside the repo: its Python workers
     import the daemon through spark.executorEnv.PYTHONPATH."""

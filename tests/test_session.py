@@ -10,6 +10,7 @@ import uuid
 from datetime import timedelta
 
 import pandas as pd
+import pytest
 from conftest import SF_SMOKE
 
 from cep_spark.session import forget_schemas, read_parquet
@@ -87,6 +88,7 @@ def _run_outside_repo(tmp_path, script: str) -> list:
     return json.loads(res.stdout.strip().splitlines()[-1])
 
 
+@pytest.mark.spark  # starts Spark in a subprocess
 def test_new_application_reinfers_and_extra_conf_restores_capture(tmp_path):
     """Two applications in one process: the second infers the schema
     again; ``extra_conf`` turns call-site capture back on."""
@@ -132,6 +134,7 @@ def test_get_spark_ships_engine_by_reference(spark, events_df):
                 if m.startswith("cep_spark")]
 
 
+@pytest.mark.spark  # starts Spark in a subprocess
 def test_session_without_package_path_runs_nfa(tmp_path):
     """A plain SparkSession (stock worker daemon, no executor PYTHONPATH)
     started outside the repo: its workers cannot import cep_spark, so

@@ -950,9 +950,11 @@ def test_stream_state_passthrough_keeps_bytes():
 
 
 def test_stream_state_pre_bump_format_refused():
-    """State written in the earlier Arrow-IPC layout (perpat-v1 /
-    shared-v2) is refused with an error that names the format change,
-    not reinterpreted."""
+    """State written in an earlier layout is refused with an error that
+    names the format change, not reinterpreted: the Arrow-IPC layout
+    (perpat-v1 / shared-v2) and the column-array layout under the
+    fingerprint that still carried the group kind (perpat-v2 /
+    shared-v3)."""
     import pyarrow as pa
     from test_stream_fn_property import FakeState
 
@@ -960,18 +962,28 @@ def test_stream_state_pre_bump_format_refused():
     from cep_spark.stream import _make_multi_fn
 
     cps = _layout_family()
-    for merged, old in ((None, "perpat-v1"), (merge_compiled(cps), "shared-v2")):
+    for merged, old, why in (
+        (None, "perpat-v1", "Arrow-IPC"),
+        (merge_compiled(cps), "shared-v2", "Arrow-IPC"),
+        (None, "perpat-v2", "fingerprint was redefined"),
+        (merge_compiled(cps), "shared-v3", "fingerprint was redefined"),
+    ):
         fn = _make_multi_fn(cps, ("turn_idx",), merged=merged)
         state = FakeState()
         wm = _sealed_state(fn, state)
         fp = state._val[7].split(":", 1)[1]
-        table = pa.Table.from_pandas(_conv(["user", "assistant"]), preserve_index=False)
-        sink = pa.BufferOutputStream()
-        with pa.ipc.new_stream(sink, table.schema) as w:
-            w.write_table(table)
-        state._val = (sink.getvalue().to_pybytes(), None, None, None, wm, 0, 0,
-                      f"{old}:{fp}")
-        with pytest.raises(RuntimeError, match=f"format {old!r}.*fresh checkpoint"):
+        if why == "Arrow-IPC":
+            table = pa.Table.from_pandas(_conv(["user", "assistant"]),
+                                         preserve_index=False)
+            sink = pa.BufferOutputStream()
+            with pa.ipc.new_stream(sink, table.schema) as w:
+                w.write_table(table)
+            state._val = (sink.getvalue().to_pybytes(), None, None, None,
+                          wm, 0, 0, f"{old}:{fp}")
+        else:
+            state._val = state._val[:7] + (f"{old}:{fp}",)
+        with pytest.raises(RuntimeError,
+                           match=f"format {old!r}.*{why}.*fresh checkpoint"):
             _call(fn, state, [_conv(["tool"], t0_s=30, turn0=6)], wm)
 
 
