@@ -455,7 +455,7 @@ WHERE p.event_type = 'purchase'
 # leaves in ANY arrival order (permutation assignments count
 # separately), repetitions interleave strictly (all of rep j before all
 # of rep j+1 in (ts, event_id) order).  compiler._collect lowers the
-# body to one conjunctive (pos_all) group position; the automaton's mid
+# body to one conjunctive group position; the automaton's mid
 # tracks which members the repetition has bound.  The
 # oracle's recursive CTE joins each repetition's pair with NO order
 # constraint between them, tracking the repetition's (ts, id)-max as
@@ -710,7 +710,7 @@ WHERE p.event_type = 'purchase'
 # round 5 (session 6): an And_ at one POSITION of the repetition —
 # every repetition binds a 'view' u_j, then a 'click' w_j AND a
 # 'signup' x_j in ANY arrival order (conjunctive sub-slots at one
-# grp_idx, pos_all=True; the automaton's mid holds the bound-member
+# grp_idx, one member each; the automaton's mid holds the bound-member
 # set), with the next repetition's u strictly after BOTH.  The oracle's
 # recursive CTE joins each repetition's (w, x) pair with no order
 # constraint between them and carries the pair's (ts, id)-max as the

@@ -748,14 +748,12 @@ def advance_groups(cp: CompiledPattern, store, ts_ns, masks, bounds, tables_in=N
         for s in alt.slots:
             if (s.group is not None
                     and s.grp_idx == anchor_idx.get(s.group, 0)
-                    and not s.grp_loop and s.br_idx == 0
-                    and (not s.pos_all or s.br == 0 or s.mem == 0)):
-                # entry sub-slots only: a multi-event (Seq) branch binds
-                # once per repetition at its br_idx-0 event; a
-                # conjunctive (And_) position binds EVERY member each
-                # repetition, so count member 0 alone — when member 0
-                # is an Or_ (session 9), exactly one of its units binds
-                # per repetition, so summing across them stays one per
+                    and not s.grp_loop and s.br_idx == 0 and s.mem == 0):
+                # entry sub-slots of member 0 only: each repetition
+                # binds every member of the position once, through
+                # exactly one of its units (an Or_ branch, or the
+                # member itself), at that unit's br_idx-0 event — so
+                # summing across member 0's units counts one per
                 # repetition
                 grp_anchor_vars.setdefault(s.group, []).append(s.var)
 
@@ -1211,7 +1209,13 @@ def flat_columns(cp) -> list:
 
 
 def match_schema_flat(cp, key_type=None):
-    """key + per-var tiebreak columns; kleene -> len/first/last summary."""
+    """The flat output schema of every executor (``run_batch(mode=
+    "flat")``, ``stream_matches``, ``plan_join``): key + per-var
+    tiebreak columns; kleene -> len/first/last summary.  Every column is
+    nullable: ``applyInPandasWithState`` pads its output columns with
+    nulls on state-only rows, so the streaming executor cannot declare a
+    NOT NULL column, and ``plan_join`` widens its non-null literals
+    (``alt_id``, an always-bound ``*_len``) to match."""
     from pyspark.sql import types as T
 
     key, _, *per_var = flat_columns(cp)
@@ -1348,10 +1352,30 @@ def prefilter_multi(df, cps, extra_cols=()):
             for ng in alt.negs:
                 c = ng.unary.spark_col({ng.var: df})
                 ors = c if ors is None else (ors | c)
-    out = df.select(*[c for c in df.columns if c in needed])
+    out = _select_names(df, [c for c in df.columns if c in needed])
     if ors is not None:
         out = out.filter(ors)
     return out
+
+
+def _select_names(df, names):
+    """``df.select(*names)`` in a fixed number of Py4J round trips.
+    ``df.select`` resolves each name through ``functions.col`` and adds
+    it to a Java list, about five round trips a name; here the names
+    cross as one newline-joined string, are split on the JVM, and go to
+    ``Dataset.select(String, Seq<String>)``, which builds the same
+    ``Column(name)`` per name — the plan and schema are unchanged."""
+    if not names or any(not n or "\n" in n for n in names):
+        return df.select(*names)
+    from py4j.java_gateway import JavaClass
+
+    sc = df.sparkSession.sparkContext
+    client = sc._gateway._gateway_client
+    tok = JavaClass("java.util.StringTokenizer", client)(
+        "\n".join(names[1:]), "\n")
+    rest = sc._jvm.PythonUtils.toSeq(
+        JavaClass("java.util.Collections", client).list(tok))
+    return type(df)(df._jdf.select(names[0], rest), df.sparkSession)
 
 
 def run_batch_multi(df, cps, emit_cols=("turn_idx", "role", "tool", "ts"),

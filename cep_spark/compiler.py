@@ -66,33 +66,24 @@ class Slot:
     # (positions bind strictly in grp_idx order).
     group: Optional[int] = None
     grp_idx: int = 0
-    # Or_ branches at one group position (round 5): `br` identifies the
-    # branch, `br_idx` the offset within a multi-event (Seq) branch,
-    # `br_len` the branch's event count.  A repetition that enters a
-    # branch binds its events in br_idx order before the position
-    # completes (single-event branches: br_idx=0, br_len=1 — the
-    # position completes at the entry bind, as before).
+    # Position layout, the one normal form of a group position: a
+    # position is all-of(members), a member is one-of(units), and a
+    # unit is a Seq of leaves (plus the position's loop flag).  `mem` is
+    # the slot's member (set on every group slot), `br` its unit
+    # (numbered per position, across members), `br_idx` its offset in
+    # the unit and `br_len` the unit's event count.  A plain leaf or a
+    # loop is one member with one unit; an Or_ position is one member
+    # whose units are its branches; an And_ position has one member per
+    # part (an Or_ part's branches are that member's units).  Each
+    # repetition binds every member once — one unit of it, in br_idx
+    # order — members interleaving freely, all strictly between the
+    # neighbouring positions' binds.  Units of a member with more than
+    # one unit bind only in the repetitions that choose them, so their
+    # vars are branch vars (sparse element tuples); every other group
+    # var is a zip-aligned group mate.
     br: int = 0
     br_idx: int = 0
     br_len: int = 1
-    # And_ at one group position of a "seq" group (round 5, session 6):
-    # the repetition binds EVERY member of the position once, in ANY
-    # arrival order, all strictly after the previous position's bind and
-    # before the next position's (position interleaving is preserved
-    # position-wise).  Members reuse `br` as the member index (br_idx=0,
-    # br_len=1) with pos_all=True; the automaton's mid entry holds
-    # ``(grp_idx, frozenset(bound member brs))`` while the position is
-    # in progress.  Unlike Or_ branches, members bind in every
-    # repetition — they are ordinary zip-aligned group mates.
-    pos_all: bool = False
-    # An Or_ MEMBER of an And_ position (round 5, session 9): each of
-    # its branches becomes a distinct UNIT (its own `br` value, br_idx/
-    # br_len indexing the branch's events) and `mem` records which
-    # member the unit belongs to — each repetition binds exactly ONE
-    # unit of the member (plus every other member).  `mem` stays None
-    # for plain members (their member identity is `br` itself); Or_-
-    # member unit vars are branch vars (sparse element tuples, like Or_
-    # position branches).
     mem: Optional[int] = None
     # An UNBOUNDED leaf Kleene at its own position of a "seq" group
     # (round 5, session 16): the slot binds one event to ENTER the
@@ -166,7 +157,7 @@ class NegSpec:
     # gap Neg INSIDE a Seq MEMBER of an And_ position (round 5, session
     # 8): the gap closes at a specific member sub-slot's bind, which may
     # be MID-position (members interleave) — the transition builder's
-    # position-entry gate on pos_all slots must not suppress it.
+    # position-entry gate must not suppress it.
     # Interior member gaps carry pre_vars = (the member's previous
     # leaf,) only: And_ siblings legally bind inside the gap and must
     # not raise its left boundary.  Leading member gaps (before the
@@ -225,8 +216,8 @@ class State:
     kleene_loops: list = field(default_factory=list)  # (slot_id, conds) open kleenes
     accepting: bool = False
     # in-progress composite-Kleene repetitions: frozenset of
-    # (group_id, next_sub_slot_index) — a state is accepting only when
-    # every group's current repetition is complete (mid is empty)
+    # (group_id, mid value) — see _successors; a state is accepting only
+    # when every group's current repetition is complete (mid is empty)
     mid: frozenset = frozenset()
 
 
@@ -276,6 +267,27 @@ class CompiledPattern:
                 if v not in seen:
                     seen.append(v)
         return seen
+
+    def describe(self) -> list[dict]:
+        """Automaton shape per alternative: state and transition counts
+        and one kind string per slot — ``event``, ``kleene``, or for a
+        composite-Kleene group slot ``g{group}.p{position}.m{member}.
+        u{unit}``, plus ``.e{event}/{events}`` inside a multi-event unit
+        and ``.loop`` on a looping position."""
+        def kind(s):
+            if s.group is None:
+                return "kleene" if s.kleene else "event"
+            k = f"g{s.group}.p{s.grp_idx}.m{s.mem}.u{s.br}"
+            if s.br_len > 1:
+                k += f".e{s.br_idx}/{s.br_len}"
+            return k + (".loop" if s.grp_loop else "")
+
+        return [
+            {"alt_id": a.alt_id, "states": len(a.states),
+             "transitions": sum(len(st.transitions) for st in a.states),
+             "slots": [f"{s.var}:{kind(s)}" for s in a.slots]}
+            for a in self.alternatives
+        ]
 
 
 # --------------------------------------------------------------------------
@@ -494,7 +506,7 @@ def _validate_group_inner(node: Kleene) -> None:
         # Kleene over And_: any valid conjunctive-position member mix
         # (leaves, Seq-of-leaves / Or_-of-branches members, member
         # Negs; no Negs directly inside) — lowered as a group with ONE
-        # pos_all position: repetition j+1 strictly after all of
+        # conjunctive position: repetition j+1 strictly after all of
         # repetition j, members interleaving freely within it
         isinstance(inner, And_)
         and len(inner.parts) >= 2
@@ -1141,13 +1153,8 @@ def _collect(
             here = prereq
             open_neg = None  # Neg before a leaf: gap per repetition
             j = 0
-            # Kleene over a bare Or_ (round 5): ONE position whose
-            # branches are the Or_'s leaves — normalize to a
-            # single-part body
+            # a bare Or_ (round 5) or And_ body is ONE position
             inner_parts = (
-                # a bare Or_ (one position of branches) or a bare And_
-                # with non-leaf members (session 10: one pos_all
-                # position) normalizes to a single-position body
                 [node.inner] if isinstance(node.inner, (Or_, And_))
                 else node.inner.parts
             )
@@ -1183,320 +1190,120 @@ def _collect(
                             )
                     open_neg = part
                     continue
-                # an Or_ part (round 5) contributes one sub-slot per
-                # branch EVENT at the SAME grp_idx: each repetition
-                # binds exactly one branch (alternative sub-slots of the
-                # position); a Seq branch's events bind in br_idx order
-                # before the position completes.  Negation specs and the
-                # repetition count key on the ENTRY slots (br_idx == 0 —
-                # exactly one entry bind per repetition).
-                branches = part.parts if isinstance(part, Or_) else (part,)
+                # One position in the normal form: members, each a list
+                # of units, each unit a leaf or a Seq of leaves (with
+                # Negs).  Every unit EVENT becomes a sub-slot at this
+                # grp_idx (mem = member, br = unit, br_idx = offset in
+                # the unit).  Each repetition binds every member once
+                # through one of its units, a unit's events in br_idx
+                # order, members interleaving freely, all strictly
+                # between the neighbouring positions' binds
+                # (_successors).  Negation specs and the repetition
+                # count key on ENTRY slots (br_idx == 0).
+                #  * a plain leaf: one member, one unit;
+                #  * an Or_ (round 5): one member whose units are its
+                #    branches — each repetition binds ONE of them;
+                #  * an And_ (sessions 6–9): one member per part, an Or_
+                #    part's branches being that member's units.  Every
+                #    member's entry sid is an entry sid: a gap INTO the
+                #    position closes at the repetition's first member
+                #    entry (the chain expansion's min-over-members), so
+                #    the transition builder gates per-repeat specs to
+                #    position-entry binds;
+                #  * an UNBOUNDED nested Kleene (sessions 16-19): a
+                #    LOOPING position (Slot.grp_loop), one member whose
+                #    one unit is the leaf or the Seq of leaves.  Its entry
+                #    bind happens once per repetition; further events or
+                #    inner repetitions of the same repetition's run bind
+                #    through loop_cont transitions (no gap specs, never
+                #    repetition starts; a unit re-enters through its
+                #    first leaf).  The element tuple stays FLAT across
+                #    repetitions, so gaps OUT of the position read their
+                #    boundary from the ordinary pre_vars max; only the
+                #    bounded-cap COUNT re-anchors on the first non-loop
+                #    position (batch.py grp_anchor_vars).
+                # A Neg inside a unit guards the gap to the unit's next
+                # leaf in exactly the repetitions that choose the unit:
+                # between two leaves (the unit's own adjacent leaves) or
+                # leading it (from the previous position's bind / the
+                # previous repetition's last event).  In a multi-member
+                # position or a loop the gap may close MID-position, so
+                # it registers as a member gap (NegSpec.mem_gap; pre_vars
+                # = the previous unit leaf, or, leading, every slot
+                # outside this position); otherwise as an ordinary
+                # per-repetition gap.  A Neg TRAILING an Or_ branch
+                # (session 5) guards the gap OUT of the branch: it
+                # closes at a bind outside it (next position, loop-back
+                # or the part after the group), gated dynamically by
+                # NegSpec.br_guard; trailing member Negs reject at
+                # validation (no ordered successor).
                 new_sids = []
                 entry_sids = []
                 trail_here: list = []  # trailing (neg, last_leaf_var) per branch
-                if isinstance(part, Kleene):
-                    # UNBOUNDED nested leaf Kleene (round 5, session
-                    # 16): one LOOPING sub-slot at its own position —
-                    # the repetition binds one event to enter it (the
-                    # ordinary entry transition; a Neg before this part
-                    # guards the gap to that FIRST element) and may
-                    # append more elements of the same repetition's run
-                    # via self-loop continue transitions while no later
-                    # position of the repetition has bound
-                    # (_successors; Slot.grp_loop / Transition.
-                    # loop_cont).  The element tuple stays FLAT across
-                    # repetitions — runs concatenate in bind order, and
-                    # the run's last element is always the tuple's last,
-                    # so gap specs OUT of the position (a following Neg,
-                    # the loop-back / trailing gaps) read their left
-                    # boundary from the ordinary pre_vars max.
-                    # The loop may sit at ANY position, including 0
-                    # (session 17): its ENTRY bind still happens exactly
-                    # once per repetition — continue binds are separate
-                    # loop_cont transitions that carry no gap specs and
-                    # never count as repetition starts — so loop-back
-                    # entry and per-repeat gap machinery key on it
-                    # unchanged; only the bounded-cap repetition COUNT
-                    # re-anchors on the first NON-loop position
-                    # (batch.py grp_anchor_vars; validation guarantees
-                    # one exists).  The inner is a plain leaf — or
-                    # (session 18) a Seq of plain leaves: a looping
-                    # UNIT position with one kleene sub-slot per inner
-                    # leaf, br_idx-ordered exactly like a multi-event
-                    # branch (entries and per-repeat gap specs key on
-                    # the br_idx-0 slot; the unit's leaves bind in
-                    # order through the ordinary (j, 0, k) mid pointer;
-                    # re-entry for another inner repetition goes back
-                    # through the first leaf via loop_cont transitions
-                    # that SET the mid — see _successors).  Unit leaves
-                    # zip-align per inner repetition (same-branch
-                    # alignment, br_len > 1) and are loop vars like the
-                    # leaf case (pairings with group mates reject).
-                    if isinstance(part.inner, Seq):
+                loop = isinstance(part, Kleene)
+                if loop:
+                    members = [(part.inner,)]
+                elif isinstance(part, And_):
+                    members = [m.parts if isinstance(m, Or_) else (m,)
+                               for m in part.parts]
+                else:
+                    members = [part.parts if isinstance(part, Or_)
+                               else (part,)]
+                mem_gaps = loop or len(members) > 1
+                unit = 0
+                for mi, units in enumerate(members):
+                    what = ("Or_ branch" if len(members) == 1
+                            else "Or_-member branch" if len(units) > 1
+                            else "And_ member")
+                    for un in units:
+                        uparts = un.parts if isinstance(un, Seq) else (un,)
+                        n_evs = sum(isinstance(x, Ev) for x in uparts)
                         uhere = here
-                        u_evs = [x for x in part.inner.parts
-                                 if isinstance(x, Ev)]
-                        k2 = 0
-                        u_neg = None  # Neg between two unit leaves
-                        prev_usid = None
-                        for x in part.inner.parts:
+                        u_neg = None  # Neg awaiting the unit's next leaf
+                        prev_sid = None
+                        k = 0
+                        for x in uparts:
                             if isinstance(x, Neg):
-                                # session 19: a per-INNER-repetition
-                                # gap (this unit leaf, next unit leaf)
-                                # — registered as a member-style gap
-                                # (NegSpec.mem_gap) closing at the
-                                # following leaf's bind, which happens
-                                # once per inner repetition (first
-                                # pass AND re-entered units alike;
-                                # those binds go through the ordinary
-                                # tuple path, never loop_cont, so the
-                                # spec fires exactly there); pre_vars
-                                # = the previous leaf only — its
-                                # tuple's last element is always the
-                                # SAME inner repetition's (strict
-                                # in-unit order)
+                                if k == 0 and j == 0 and not prereq:
+                                    # leading the unit at the first
+                                    # position of a pattern-initial
+                                    # group: the first repetition's gap
+                                    # has no left boundary, and the
+                                    # window-bounded edge treatment
+                                    # cannot be made unit-conditional
+                                    raise ValueError(
+                                        f"a leading Neg inside an {what} "
+                                        "at the FIRST group position needs "
+                                        "a positive part before the Kleene "
+                                        "(the first repetition's gap has no "
+                                        "left boundary otherwise)"
+                                    )
                                 u_neg = x
                                 continue
                             sid = len(slots)
                             slots.append(
-                                Slot(sid, x.name, x.where,
-                                     kleene=True, kleene_max=node.max_len,
-                                     prereq=uhere, group=gid, grp_idx=j,
-                                     br=0, br_idx=k2, br_len=len(u_evs),
-                                     grp_loop=True)
-                            )
-                            if k2 == 0:
-                                entry_sids.append(sid)
-                            if u_neg is not None:
-                                negs.append(
-                                    (u_neg, ("repeat_mem",
-                                             frozenset({sid}), prev_usid))
-                                )
-                                u_neg = None
-                            new_sids.append(sid)
-                            uhere = uhere | frozenset({sid})
-                            prev_usid = sid
-                            k2 += 1
-                    else:
-                        sid = len(slots)
-                        slots.append(
-                            Slot(sid, part.inner.name, part.inner.where,
-                                 kleene=True, kleene_max=node.max_len,
-                                 prereq=here, adjacent=part.adjacent,
-                                 group=gid, grp_idx=j, grp_loop=True)
-                        )
-                        new_sids = [sid]
-                        entry_sids = [sid]
-                    branches = ()
-                elif isinstance(part, And_):
-                    # conjunctive position (round 5, sessions 6–7): one
-                    # sub-slot per member EVENT at the SAME grp_idx with
-                    # pos_all=True (br = member index, br_idx = event
-                    # index within a Seq member) — the repetition binds
-                    # EVERY member once, members in ANY interleaving, a
-                    # Seq member's own events in br_idx order, all
-                    # strictly between the neighbouring positions' binds
-                    # (_successors tracks per-member progress in the mid
-                    # pointer).  Members bind in every repetition, so
-                    # their vars are ordinary zip-aligned group mates
-                    # (NOT branch vars); the repetition count uses
-                    # member 0's entry event only.  An adjacent Neg's
-                    # gap closes at the repetition's FIRST member-entry
-                    # bind — the chain expansion's min-over-members —
-                    # so every member's br_idx-0 sid is an entry sid and
-                    # the transition builder gates per-repeat gap specs
-                    # on pos_all slots to position-ENTRY binds.
-                    # Session 8: a Neg INSIDE a Seq member guards a gap
-                    # scoped to that member — interior: (prev member
-                    # leaf_j, next member leaf_j); leading: (previous
-                    # position's bind / previous repetition's last
-                    # event, member's first leaf_j).  Both close at a
-                    # specific sub-slot's bind that may be MID-position
-                    # (members interleave), so the spec carries
-                    # NegSpec.mem_gap to bypass the entry gate, and its
-                    # pre_vars exclude same-position siblings (they
-                    # legally bind inside the gap).  Semantics = the
-                    # bounded chain expansion's (_collect's And_/Seq
-                    # handlers on each repetition copy).
-                    # session 9: `br` is a UNIT counter — one unit per
-                    # plain member (mem=None), one per BRANCH of an Or_
-                    # member (mem = the member's index; each repetition
-                    # binds exactly one unit of that member).  With no
-                    # Or_ members, units == members (br = member index,
-                    # as in sessions 6–8).
-                    unit = 0
-                    for bi, mem in enumerate(part.parts):
-                        if isinstance(mem, Or_):
-                            for brn in mem.parts:
-                                bparts = (brn.parts if isinstance(brn, Seq)
-                                          else (brn,))
-                                b_evs = [y for y in bparts
-                                         if isinstance(y, Ev)]
-                                bhere2 = here
-                                u_neg = None
-                                prev_sid2 = None
-                                k2 = 0
-                                for x in bparts:
-                                    if isinstance(x, Neg):
-                                        # Neg inside an Or_-member
-                                        # BRANCH (session 11): the unit's
-                                        # own binds fire only in
-                                        # repetitions that choose it, so
-                                        # the session-8 member-gap
-                                        # machinery applies unchanged —
-                                        # interior: gap = the unit's own
-                                        # adjacent leaves; leading: gap
-                                        # INTO the position, closing at
-                                        # the unit's entry bind.
-                                        if k2 == 0 and j == 0 and not prereq:
-                                            raise ValueError(
-                                                "a leading Neg inside an "
-                                                "Or_-member branch at the "
-                                                "FIRST group position "
-                                                "needs a positive part "
-                                                "before the Kleene (the "
-                                                "first repetition's gap "
-                                                "has no left boundary "
-                                                "otherwise)"
-                                            )
-                                        u_neg = x
-                                        continue
-                                    ev = x
-                                    sid = len(slots)
-                                    slots.append(
-                                        Slot(sid, ev.name, ev.where,
-                                             kleene=True,
-                                             kleene_max=node.max_len,
-                                             prereq=bhere2,
-                                             group=gid, grp_idx=j, br=unit,
-                                             br_idx=k2, br_len=len(b_evs),
-                                             pos_all=True, mem=bi)
-                                    )
-                                    if k2 == 0:
-                                        entry_sids.append(sid)
-                                    if u_neg is not None:
-                                        negs.append(
-                                            (u_neg, ("repeat_mem",
-                                                     frozenset({sid}),
-                                                     prev_sid2))
-                                        )
-                                        u_neg = None
-                                    new_sids.append(sid)
-                                    bhere2 = bhere2 | frozenset({sid})
-                                    prev_sid2 = sid
-                                    k2 += 1
-                                unit += 1
-                            continue
-                        mparts = mem.parts if isinstance(mem, Seq) else (mem,)
-                        m_evs = [x for x in mparts if isinstance(x, Ev)]
-                        mhere = here
-                        m_neg = None
-                        prev_sid = None
-                        k = 0
-                        for x in mparts:
-                            if isinstance(x, Neg):
-                                if k == 0 and j == 0 and not prereq:
-                                    # LEADING the member at the first
-                                    # position of a pattern-initial
-                                    # group: the first repetition's gap
-                                    # has no left boundary (same rule as
-                                    # the chain expansion and Or_
-                                    # branches)
-                                    raise ValueError(
-                                        "a leading Neg inside an And_ "
-                                        "member at the FIRST group "
-                                        "position needs a positive part "
-                                        "before the Kleene (the first "
-                                        "repetition's gap has no left "
-                                        "boundary otherwise)"
-                                    )
-                                m_neg = x
-                                continue
-                            ev = x
-                            sid = len(slots)
-                            slots.append(
-                                Slot(sid, ev.name, ev.where, kleene=True,
-                                     kleene_max=node.max_len, prereq=mhere,
+                                Slot(sid, x.name, x.where, kleene=True,
+                                     kleene_max=node.max_len, prereq=uhere,
+                                     adjacent=part.adjacent if loop else None,
                                      group=gid, grp_idx=j, br=unit,
-                                     br_idx=k, br_len=len(m_evs),
-                                     pos_all=True)
+                                     br_idx=k, br_len=n_evs, mem=mi,
+                                     grp_loop=loop)
                             )
                             if k == 0:
                                 entry_sids.append(sid)
-                            if m_neg is not None:
-                                # member-scoped per-repetition gap:
-                                # prev_sid None = leading (pre computed
-                                # at spec build: prereq + other
-                                # positions' slots)
-                                negs.append(
-                                    (m_neg, ("repeat_mem",
-                                             frozenset({sid}), prev_sid))
-                                )
-                                m_neg = None
+                            if u_neg is not None:
+                                negs.append((u_neg, (
+                                    ("repeat_mem", frozenset({sid}), prev_sid)
+                                    if mem_gaps
+                                    else ("repeat", frozenset({sid})))))
+                                u_neg = None
                             new_sids.append(sid)
-                            mhere = mhere | frozenset({sid})
+                            uhere = uhere | frozenset({sid})
                             prev_sid = sid
                             k += 1
+                        if u_neg is not None:
+                            trail_here.append((u_neg, slots[sid].var))
                         unit += 1
-                    branches = ()  # skip the Or_-branch loop below
-                for bi, brn in enumerate(branches):
-                    parts_b = brn.parts if isinstance(brn, Seq) else (brn,)
-                    evs = [x for x in parts_b if isinstance(x, Ev)]
-                    bhere = here
-                    br_neg = None  # Neg between two branch leaves
-                    k = 0
-                    for x in parts_b:
-                        if isinstance(x, Neg):
-                            # within-branch gap: guards (prev leaf, next
-                            # leaf) of the SAME repetition — or, BEFORE
-                            # the first leaf, the gap INTO the branch
-                            # (previous position's event; previous
-                            # repetition's last event / the anchor for
-                            # position 0) — re-checked on every bind of
-                            # the following sub-slot, i.e. exactly the
-                            # repetitions that chose this branch
-                            # (_validate_group_inner guarantees a leaf
-                            # after every Neg)
-                            if k == 0 and j == 0 and not prereq:
-                                # LEADING the branch (no leaf bound yet)
-                                # at the first position of a pattern-
-                                # initial group: the first repetition
-                                # has no left boundary, and the window-
-                                # bounded edge treatment cannot be made
-                                # branch-conditional
-                                raise ValueError(
-                                    "a leading Neg inside an Or_ branch "
-                                    "at the FIRST group position needs "
-                                    "a positive part before the Kleene "
-                                    "(the first repetition's gap has no "
-                                    "left boundary otherwise)"
-                                )
-                            br_neg = x
-                            continue
-                        ev = x
-                        sid = len(slots)
-                        slots.append(
-                            Slot(sid, ev.name, ev.where, kleene=True,
-                                 kleene_max=node.max_len, prereq=bhere,
-                                 group=gid, grp_idx=j,
-                                 br=bi, br_idx=k, br_len=len(evs))
-                        )
-                        if k == 0:
-                            entry_sids.append(sid)
-                        if br_neg is not None:
-                            negs.append((br_neg, ("repeat", frozenset({sid}))))
-                            br_neg = None
-                        new_sids.append(sid)
-                        bhere = bhere | frozenset({sid})
-                        k += 1
-                    if br_neg is not None:
-                        # TRAILING the branch (session 5): the gap runs
-                        # from this branch's last leaf to the next bind
-                        # OUTSIDE the branch — registered once the next
-                        # position's entry sids exist (or as loop-back +
-                        # bubbled specs when this position is last),
-                        # branch-gated via NegSpec.br_guard
-                        trail_here.append((br_neg, slots[sid].var))
                 if trail_prev:
                     # trailing branch Negs of the PREVIOUS position: gap
                     # closes at THIS position's entry bind, in exactly
@@ -1637,61 +1444,59 @@ def _successors(bound: frozenset, mid: frozenset, slots: list, groups: dict) -> 
     list of (slot, new_bound, new_mid, repeat, rep_start, loop_cont).
 
     Group rules: a group's current repetition binds its positions in
-    order (tracked by `mid` as a next-index pointer; a conjunctive And_
-    position binds its members in any order, `mid` holding per-member
-    progress).  From a COMPLETE group that is still open (no
-    bound successor outside it) a repetition-starting sub-slot may bind
-    again (repeat=True — the executor appends to the element tuple;
-    rep_start=True marks these loop-backs for the bounded-cap check); a
-    slot whose prereq references a group may only bind while that group
-    is between repetitions (complete), never mid-repetition.
-
-    Or_ branches (round 5): alternative sub-slots share one grp_idx —
-    position count (not slot count) drives the mid pointer / completion
-    set, a prerequisite position is satisfied by ANY bound branch, and a
-    loop-back may enter through a branch not yet in `bound` (the bound
-    set then grows; repeat is per-SLOT — a branch's first bind creates
-    its tuple, later binds append).  A multi-event (Seq) branch holds
-    the mid pointer at (position, branch, next_br_idx) until its last
-    event binds — the position then completes as one unit; entries and
-    loop-backs only go through br_idx-0 sub-slots."""
+    order.  Its `mid` value is ``j`` while waiting for position j's
+    entry bind and ``(j, frozenset((unit, events bound)))`` while inside
+    position j; absent, the group is between repetitions (complete) or
+    not started.  Inside a position, each unit binds its events in
+    br_idx order; once one unit of a member has bound, the member's
+    other units are closed for this repetition; and every bind — the
+    entry bind too — runs one completion test: each member has one fully
+    bound unit.  A
+    one-unit, one-event position therefore completes at its entry bind.
+    From a COMPLETE group that is still open (no bound successor outside
+    it) a position-0 entry sub-slot may bind again (rep_start=True marks
+    these loop-backs for the bounded-cap check; repeat is per SLOT — a
+    unit first chosen at a later repetition creates its tuple, later
+    binds append); a slot whose prereq references a group may only bind
+    while that group is between repetitions, never mid-repetition.  A
+    prerequisite position is satisfied by ANY bound unit of it."""
     mid_d = dict(mid)
     by_sid = {s.sid: s for s in slots}
     pos_sids: dict = {}  # (gid, grp_idx) -> [sids]
+    units: dict = {}  # (gid, grp_idx) -> {unit: (member, unit length)}
     for x in slots:
         if x.group is not None:
             pos_sids.setdefault((x.group, x.grp_idx), []).append(x.sid)
+            units.setdefault((x.group, x.grp_idx), {})[x.br] = (
+                x.mem, x.br_len)
 
-    def _pos_units(gid, jj):
-        # conjunctive position layout: unit br -> (member key, br_len).
-        # A plain member is its own unit (key = its br); an Or_ member's
-        # branches are sibling units sharing key ("m", mem) — exactly
-        # one of them binds per repetition (session 9).
-        out: dict = {}
-        for sid2 in pos_sids[(gid, jj)]:
-            x = by_sid[sid2]
-            key = ("m", x.mem) if x.mem is not None else ("u", x.br)
-            prev = out.get(x.br)
-            out[x.br] = (key, max(x.br_idx + 1, prev[1] if prev else 0))
-        return out
-
-    def _pos_done(nprog, units):
-        # the position completes when EVERY member has one unit fully
-        # bound (cnt == the unit's br_len); for Or_-free positions this
-        # equals the old slot-count sum
+    def bind_mid(s, prog, npos):
+        # the group's mid value after binding s inside its position
+        # (prog = units' progress before the bind); None = the
+        # repetition completes
+        nprog = frozenset(
+            (b, c) for b, c in prog if b != s.br
+        ) | {(s.br, s.br_idx + 1)}
         cnts = dict(nprog)
-        mems: dict = {}
-        for b, (mk, bl) in units.items():
-            mems.setdefault(mk, []).append((b, bl))
-        return all(
-            any(cnts.get(b, 0) == bl for b, bl in us)
-            for us in mems.values()
-        )
+        lay = units[(s.group, s.grp_idx)]
+        if not all(
+            any(cnts.get(b, 0) == bl for b, (m, bl) in lay.items() if m == mem)
+            for mem in {m for m, _ in lay.values()}
+        ):
+            return (s.grp_idx, nprog)
+        return None if s.grp_idx == npos - 1 else s.grp_idx + 1
+
+    def with_mid(gid, val):
+        nm = dict(mid_d)
+        if val is None:
+            nm.pop(gid, None)
+        else:
+            nm[gid] = val
+        return frozenset(nm.items())
 
     def prereq_ok(s):
         # group-owned prereq sids are satisfied POSITION-wise: any bound
-        # branch of the position counts (non-branch groups reduce to the
-        # plain subset test)
+        # unit of the position counts
         seen_pos = set()
         for p in s.prereq:
             sp = by_sid[p]
@@ -1715,6 +1520,14 @@ def _successors(bound: frozenset, mid: frozenset, slots: list, groups: dict) -> 
                 return False
         return True
 
+    def group_open(s, gs):
+        # no slot outside the group that follows it has bound
+        g_sids = {x.sid for x in gs}
+        return not any(
+            o.sid in bound and o.group != s.group and (g_sids & o.prereq)
+            for o in slots
+        )
+
     out = []
     for s in slots:
         if s.group is None:
@@ -1723,198 +1536,75 @@ def _successors(bound: frozenset, mid: frozenset, slots: list, groups: dict) -> 
             out.append((s, bound | {s.sid}, mid, False, False, False))
             continue
         gs = groups[s.group]
-        npos = gs[-1].grp_idx + 1  # positions, not slots (Or_ branches)
-        if s.group in mid_d:
-            cur = mid_d[s.group]
-            nm = dict(mid_d)
-            # group mid value: int j = waiting for position j's
-            # entry bind; tuple (j, br, k) = inside a multi-event
-            # branch of position j, waiting for its br_idx-k event;
-            # (j, frozenset of (br, cnt)) = inside a conjunctive
-            # (And_) position, cnt = events bound so far for member
-            # br this repetition (absent ⇒ 0; complete ⇒ br_len)
-            if (isinstance(cur, tuple) and len(cur) == 2
-                    and isinstance(cur[1], frozenset)):
-                jj, prog = cur
-                if s.grp_idx != jj or not s.pos_all:
-                    continue
-                cnt = next((c for b, c in prog if b == s.br), 0)
-                if s.br_idx != cnt:
-                    continue  # wrong next event for this unit
-                    # (cnt == br_len ⇒ unit complete: no slot has
-                    # br_idx == br_len, so complete units never
-                    # re-bind this repetition)
-                units = _pos_units(s.group, jj)
-                if s.mem is not None and any(
-                    c > 0 and b != s.br
-                    and units[b][0] == ("m", s.mem)
-                    for b, c in prog
-                ):
-                    continue  # another branch of this Or_ member
-                    # already chose this repetition (session 9)
-                nprog = frozenset(
-                    (b, c) for b, c in prog if b != s.br
-                ) | {(s.br, cnt + 1)}
-                if _pos_done(nprog, units):
-                    if jj == npos - 1:
-                        del nm[s.group]
-                    else:
-                        nm[s.group] = jj + 1
-                else:
-                    nm[s.group] = (jj, nprog)
-                out.append(
-                    (s, bound | {s.sid}, frozenset(nm.items()),
-                     s.sid in bound, False, False)
-                )
-                continue
-            if isinstance(cur, tuple):
-                jj, bb, kk = cur
-                if s.grp_idx != jj or s.br != bb or s.br_idx != kk:
-                    continue
-            else:
-                if (s.grp_loop and cur == s.grp_idx + 1
-                        and s.sid in bound and s.br_idx == 0):
-                    # self-loop CONTINUE of an unbounded nested
-                    # Kleene (session 16): mid == grp_idx+1
-                    # means the next position's entry has NOT
-                    # bound this repetition, so appending extends
-                    # the CURRENT repetition's run (strict
-                    # position interleaving preserved).  Leaf loop:
-                    # state unchanged — a skip/take fork like the
-                    # leaf Kleene's self-extension.  Composite UNIT
-                    # loop (session 18, br_len > 1): re-entry
-                    # through the unit's FIRST leaf starts another
-                    # inner repetition — the mid returns to
-                    # (grp_idx, 0, 1) and the unit's remaining
-                    # leaves bind through the ordinary tuple path
-                    # before anything outside the unit may bind
-                    if s.br_len == 1:
-                        out.append((s, bound, mid, True, False, True))
-                    else:
-                        nm2 = dict(mid_d)
-                        nm2[s.group] = (s.grp_idx, 0, 1)
-                        out.append((s, bound, frozenset(nm2.items()),
-                                    True, False, True))
-                    continue
-                if cur != s.grp_idx or s.br_idx != 0:
-                    continue
-                jj = cur
-            if s.pos_all:
-                # entry into a conjunctive position (>= 2 members):
-                # hold the mid at (j, {(first member, 1 event)})
-                # until every member is fully bound
-                nm[s.group] = (jj, frozenset({(s.br, 1)}))
-            elif s.br_idx < s.br_len - 1:
-                nm[s.group] = (jj, s.br, s.br_idx + 1)
-            elif jj == npos - 1:
-                del nm[s.group]
-            else:
-                nm[s.group] = jj + 1
-            out.append(
-                (s, bound | {s.sid}, frozenset(nm.items()), s.sid in bound,
-                 False, False)
-            )
+        npos = gs[-1].grp_idx + 1
+        cur = mid_d.get(s.group)
+        if isinstance(cur, tuple):
+            jj, prog = cur
+            if s.grp_idx != jj or s.br_idx != dict(prog).get(s.br, 0):
+                continue  # wrong position, or not this unit's next event
+                # (a complete unit has cnt == br_len: it never re-binds)
+            lay = units[(s.group, jj)]
+            if any(c > 0 and b != s.br and lay[b][0] == s.mem
+                   for b, c in prog):
+                continue  # a sibling unit of this member already chose
+                # this repetition
+            out.append((s, bound | {s.sid},
+                        with_mid(s.group, bind_mid(s, prog, npos)),
+                        s.sid in bound, False, False))
             continue
-        if (s.grp_loop and s.sid in bound and s.grp_idx == npos - 1):
-            # the loop position ENDS the repetition body and the group
-            # is complete (not in mid): extend the LATEST repetition's
-            # run while the group is still OPEN — once a successor
-            # outside the group binds, or a new repetition starts (mid
-            # present, handled above), extension stops.  The tuple's
-            # last elements are the latest repetition's, so the append
-            # attributes correctly.  A composite UNIT loop (session 18)
-            # re-enters through its FIRST leaf only, and the extension
-            # re-opens the mid at (grp_idx, 0, 1) — the unit must
-            # complete (restoring the group-complete state) before
-            # anything outside it binds.
-            g_sids = {x.sid for x in gs}
-            if s.br_idx == 0 and not any(
-                o.sid in bound and o.group != s.group and (g_sids & o.prereq)
-                for o in slots
-            ):
-                if s.br_len == 1:
-                    out.append((s, bound, mid, True, False, True))
-                else:
-                    nm2 = dict(mid_d)
-                    nm2[s.group] = (s.grp_idx, 0, 1)
-                    out.append((s, bound, frozenset(nm2.items()),
-                                True, False, True))
+        if s.br_idx != 0:
+            continue  # positions are entered through a unit's first event
+        if s.grp_loop and s.sid in bound and (
+            cur == s.grp_idx + 1
+            or (cur is None and s.grp_idx == npos - 1 and group_open(s, gs))
+        ):
+            # self-loop CONTINUE of an unbounded nested Kleene (session
+            # 16): the loop's position is the latest the repetition has
+            # bound (mid == grp_idx+1, or the loop ends the body and the
+            # group is complete but still open), so the append extends
+            # the CURRENT repetition's run.  A leaf loop's position
+            # completes again at once — the state is unchanged, a
+            # skip/take fork like the leaf Kleene's self-extension; a
+            # composite UNIT loop (session 18) re-opens its position
+            # for another inner repetition, whose remaining leaves bind
+            # before anything outside the unit may
+            out.append((s, bound, with_mid(s.group, bind_mid(s, (), npos)),
+                        True, False, True))
             continue
-        if s.grp_idx != 0 or s.br_idx != 0:
-            continue  # a repetition always starts at position 0's entry
-            # sub-slot
-        nm = dict(mid_d)
-        if s.pos_all:
-            # conjunctive position 0: any member's ENTRY event may start
-            # the repetition (the br_idx != 0 gate above holds the
-            # others); the rest bind through the in-mid path
-            nm[s.group] = (0, frozenset({(s.br, 1)}))
-        elif s.br_len > 1:
-            nm[s.group] = (0, s.br, 1)
-        elif npos > 1:
-            nm[s.group] = 1
-        # else: a single-position group over single-event branches
-        # (Kleene over a bare Or_ of leaves) completes its repetition at
-        # the entry bind — it never goes mid
-        fresh = not ({x.sid for x in gs} & bound)
-        if fresh:
+        if cur is not None:
+            if cur == s.grp_idx:  # entry bind of the awaited position
+                out.append((s, bound | {s.sid},
+                            with_mid(s.group, bind_mid(s, (), npos)),
+                            s.sid in bound, False, False))
+            continue
+        if s.grp_idx != 0:
+            continue  # a repetition always starts at position 0
+        nm = with_mid(s.group, bind_mid(s, (), npos))
+        if not ({x.sid for x in gs} & bound):
             # first repetition
-            if not prereq_ok(s) or not prereq_groups_ok(s):
-                continue
-            out.append(
-                (s, bound | {s.sid}, frozenset(nm.items()), False, False,
-                 False)
-            )
-        else:
-            # loop-back: group complete and still open.  A branch slot
-            # first chosen at a LATER repetition enters here with
-            # s.sid not yet in bound — bound grows and repeat=False
-            # creates its tuple (non-branch loop-backs keep the old
-            # bound-unchanged, repeat=True behavior).
-            g_sids = {x.sid for x in gs}
-            if any(
-                o.sid in bound and o.group != s.group and (g_sids & o.prereq)
-                for o in slots
-            ):
-                continue
-            out.append(
-                (s, bound | {s.sid}, frozenset(nm.items()), s.sid in bound,
-                 True, False)
-            )
+            if prereq_ok(s) and prereq_groups_ok(s):
+                out.append((s, bound | {s.sid}, nm, False, False, False))
+        elif group_open(s, gs):
+            # loop-back: group complete and still open
+            out.append((s, bound | {s.sid}, nm, s.sid in bound, True, False))
     return out
 
 
 def _complete_bound(bound: frozenset, slots: list, groups: dict) -> bool:
     """A bound set is match-complete when every non-group slot is bound
-    and every group POSITION has at least one bound branch (Or_ branch
-    slots share a position; a match need not ever bind every branch).
-    For branch-free patterns this equals ``bound == all slot ids``."""
+    and, at every group position, each member has one fully bound unit
+    (a match need not ever bind every unit of a member)."""
     for s in slots:
         if s.group is None and s.sid not in bound:
             return False
     for gs in groups.values():
-        seen = {x.grp_idx for x in gs if x.sid in bound}
-        if len(seen) != gs[-1].grp_idx + 1:
-            return False
-        # conjunctive (And_) positions additionally need EVERY member
-        # bound — for an Or_ member, one fully bound unit (session 9)
-        # (guaranteed by the mid-pointer mechanics once a repetition
-        # completes — kept as a defensive invariant)
-        by_pos: dict = {}
+        units: dict = {}  # (position, member) -> {unit: [bound?]}
         for x in gs:
-            if x.pos_all:
-                by_pos.setdefault(x.grp_idx, []).append(x)
-        for xs in by_pos.values():
-            mems: dict = {}
-            for x in xs:
-                key = ("m", x.mem) if x.mem is not None else ("u", x.br)
-                mems.setdefault(key, {}).setdefault(x.br, []).append(x)
-            for units in mems.values():
-                if not any(
-                    all(u.sid in bound for u in us)
-                    for us in units.values()
-                ):
-                    return False
+            units.setdefault((x.grp_idx, x.mem), {}).setdefault(
+                x.br, []).append(x.sid in bound)
+        if not all(any(all(u) for u in us.values())
+                   for us in units.values()):
+            return False
     return True
 
 
@@ -2287,22 +1977,22 @@ def compile_pattern(pat: Pattern, composite: str = "auto") -> CompiledPattern:
         # zip alignment is undefined.  Reject loudly instead of
         # mis-aligning (the bounded chain expansion silently drops such
         # conjuncts — worse).
-        pos_count: dict = {}
+        mem_units: dict = {}  # (group, position, member) -> units
+        pos_mems: dict = {}  # (group, position) -> members
         for s in slots:
             if s.group is not None:
-                pos_count[(s.group, s.grp_idx)] = (
-                    pos_count.get((s.group, s.grp_idx), 0) + 1
-                )
+                mem_units.setdefault((s.group, s.grp_idx, s.mem),
+                                     set()).add(s.br)
+                pos_mems.setdefault((s.group, s.grp_idx), set()).add(s.mem)
         branch_vars = {
             s.var: s.group for s in slots
-            # conjunctive (And_) position members share a position but
-            # bind in EVERY repetition — ordinary zip-aligned group
-            # mates, not branch vars.  Units of an Or_ MEMBER (session
-            # 9, mem set) bind sparsely like Or_ position branches and
-            # ARE branch vars.
+            # the units of a member with more than one unit (Or_
+            # branches, at a position or as an And_ member) bind only
+            # in the repetitions that choose them: branch vars.  A
+            # one-unit member binds in EVERY repetition — an ordinary
+            # zip-aligned group mate.
             if s.group is not None and (
-                (not s.pos_all and pos_count[(s.group, s.grp_idx)] > 1)
-                or (s.pos_all and s.mem is not None)
+                len(mem_units[(s.group, s.grp_idx, s.mem)]) > 1
                 # an unbounded nested Kleene's variable (session 16)
                 # binds a VARIABLE number of elements per repetition —
                 # per-repetition zip alignment with its group mates
@@ -2384,7 +2074,7 @@ def compile_pattern(pat: Pattern, composite: str = "auto") -> CompiledPattern:
                         if c.vars() <= bound_vars | {s.var}
                         and not c.vars() <= bound_vars
                     )
-                elif s.pos_all:
+                elif len(pos_mems[(s.group, s.grp_idx)]) > 1:
                     # conjunctive (And_) position repetition bind: which
                     # member binds last varies per partial, so conjuncts
                     # touching ANY member of the position attach at the
@@ -2394,12 +2084,8 @@ def compile_pattern(pat: Pattern, composite: str = "auto") -> CompiledPattern:
                     # non-completing binds carry none.  Conjuncts also
                     # referencing a LATER position defer to that
                     # position's own repetition bind, as usual.
-                    cur_g = dict(nm).get(s.group)
-                    pos_complete = not (
-                        isinstance(cur_g, tuple) and len(cur_g) == 2
-                        and isinstance(cur_g[1], frozenset)
-                        and cur_g[0] == s.grp_idx
-                    )
+                    pos_complete = not isinstance(dict(nm).get(s.group),
+                                                  tuple)
                     pos_vars = frozenset(
                         x.var for x in groups[s.group]
                         if x.grp_idx == s.grp_idx
@@ -2437,17 +2123,12 @@ def compile_pattern(pat: Pattern, composite: str = "auto") -> CompiledPattern:
                         and c.vars() <= bound_vars
                         and not (c.vars() & later)
                     )
-                # a gap ending at a conjunctive (And_) position closes
-                # at the repetition's FIRST member bind (the chain
-                # expansion's min-over-members boundary) — mid-position
-                # member binds must not re-check it with a later end
-                pos_entry = True
-                if s.pos_all:
-                    cur_src = dict(st.mid).get(s.group)
-                    pos_entry = not (
-                        isinstance(cur_src, tuple) and len(cur_src) == 2
-                        and isinstance(cur_src[1], frozenset)
-                    )
+                # a gap ending at a position closes at the repetition's
+                # FIRST entry bind there (for an And_ position, the
+                # chain expansion's min-over-members boundary) — later
+                # member entries must not re-check it with a later end
+                cur_src = dict(st.mid).get(s.group)
+                pos_entry = s.br_idx > 0 or not isinstance(cur_src, tuple)
                 gnegs = tuple(
                     gi
                     for gi in gap_idx
@@ -2483,8 +2164,8 @@ def compile_pattern(pat: Pattern, composite: str = "auto") -> CompiledPattern:
                                 f"bound when the gap closes ({sorted(avail)})"
                             )
                 # LEADING member gaps in a SINGLE-position group (a bare
-                # And_ body): static pre_vars reach only the anchor —
-                # there is no other position whose last bind supplies
+                # And_ body; NegSpec.mem_lead): static pre_vars reach
+                # only the anchor — no other position's last bind supplies
                 # the previous repetition's boundary.  Attach the exact
                 # boundary per transition: same-position vars at offset
                 # -2 when the source state's mid pointer shows their
@@ -2496,14 +2177,9 @@ def compile_pattern(pat: Pattern, composite: str = "auto") -> CompiledPattern:
                 lead_gis = tuple(
                     gi for gi in gnegs if neg_specs[gi].mem_lead
                 )
-                if lead_gis and s.pos_all and len(
-                    {x.grp_idx for x in slots if x.group == s.group}
-                ) == 1:
-                    cur_src = dict(st.mid).get(s.group)
-                    cnts: dict = {}
-                    if (isinstance(cur_src, tuple) and len(cur_src) == 2
-                            and isinstance(cur_src[1], frozenset)):
-                        cnts = dict(cur_src[1])
+                if lead_gis:
+                    cnts = (dict(cur_src[1]) if isinstance(cur_src, tuple)
+                            else {})
                     off1, off2 = [], []
                     for x in slots:
                         if x.group != s.group:

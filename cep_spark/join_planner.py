@@ -228,10 +228,13 @@ class _AliasCols:
 
 
 def plan_join(df, cp: CompiledPattern, kleene_arities: int | None = None):
-    """Lower to DataFrame self-joins.  Output = flat oracle schema:
-    key, alt_id, per-var ``{v}_{tiebreak}`` (kleene: ``{v}_len/_first/_last``).
+    """Lower to DataFrame self-joins.  Output = the flat schema
+    (``batch.match_schema_flat``): key, alt_id, per-var
+    ``{v}_{tiebreak}`` (kleene: ``{v}_len/_first/_last``).
     """
     from pyspark.sql import functions as F
+
+    from .batch import _select_names, match_schema_flat
 
     pat = cp.pattern
     key, ts, tb = pat.key, pat.ts_col, pat.tiebreak_col
@@ -242,7 +245,7 @@ def plan_join(df, cp: CompiledPattern, kleene_arities: int | None = None):
     needed = {key, ts, tb}
     for v, cols in cp.needed_cols.items():
         needed.update(cols)
-    base = df.select(*[c for c in df.columns if c in needed])
+    base = _select_names(df, [c for c in df.columns if c in needed])
 
     results = []
     all_vars = cp.all_vars()
@@ -348,14 +351,14 @@ def plan_join(df, cp: CompiledPattern, kleene_arities: int | None = None):
         # projection to the flat output schema
         sel = [
             F.col(f"{bound[0]}.{key}").alias(key),
-            F.lit(fa.alt_id).cast("int").alias("alt_id"),
+            _nullable(F.lit(fa.alt_id).cast("int")).alias("alt_id"),
         ]
         for v in all_vars:
             if v in kleene_all:
                 if v in fa.kleene_emit:
                     r, evs = fa.kleene_emit[v]
                     sel += [
-                        F.lit(r).cast("long").alias(f"{v}_len"),
+                        _nullable(F.lit(r).cast("long")).alias(f"{v}_len"),
                         F.col(f"{evs[0]}.{tb}").cast("long").alias(f"{v}_first"),
                         F.col(f"{evs[-1]}.{tb}").cast("long").alias(f"{v}_last"),
                     ]
@@ -374,7 +377,18 @@ def plan_join(df, cp: CompiledPattern, kleene_arities: int | None = None):
     out = results[0]
     for r in results[1:]:
         out = out.unionByName(r)
-    return out
+    # the flat schema every executor shares (`to` keeps a NOT NULL
+    # column NOT NULL, hence `_nullable` on the literals above)
+    return out.to(match_schema_flat(cp, df.schema[key].dataType))
+
+
+def _nullable(c):
+    """``c`` declared nullable, like every flat output column
+    (``batch.match_schema_flat``): ``NULLIF(c, NULL)`` is ``c``, and the
+    optimizer folds it away."""
+    from pyspark.sql import functions as F
+
+    return F.nullif(c, F.lit(None))
 
 
 # --------------------------------------------------------------------------

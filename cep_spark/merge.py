@@ -305,10 +305,8 @@ def merge_compiled(cps) -> CompiledPattern:
                     s.br,
                     s.br_idx,
                     s.br_len,
-                    s.pos_all,
-                    # Or_-member unit ownership (session 9): a branch
-                    # unit of member m must not merge with a plain
-                    # member of the same event layout
+                    # unit ownership: a branch unit of member m must not
+                    # merge with a plain member of the same event layout
                     s.mem,
                     tuple(sorted(s.prereq)),
                 ) + (
@@ -369,7 +367,6 @@ def merge_compiled(cps) -> CompiledPattern:
                         s.br,
                         s.br_idx,
                         s.br_len,
-                        s.pos_all,
                         s.mem,
                         s.grp_loop,
                     )

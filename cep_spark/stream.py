@@ -39,7 +39,7 @@ watermark"):
   a window state is bounded by the key's event rate x window span.
   Unbounded-window patterns keep the full key history (documented
   limit; the reference behaves the same).
-* State layout (``fmt`` ``perpat-v3`` / ``shared-v4``): the buffer and
+* State layout (``fmt`` ``perpat-v4`` / ``shared-v5``): the buffer and
   the limbo are pickled ``{column: ndarray}`` dicts (the ``_ColStore``
   layout; the key column is left out unless a condition or emit column
   reads it), the partial tables and parked matches pickled column
@@ -554,8 +554,8 @@ def _pattern_fp(cp, w_ns):
             (s.sid, s.var, _cond_fp(s.unary), s.kleene, s.kleene_max,
              tuple(sorted(s.prereq)),
              None if s.adjacent is None else _cond_fp(s.adjacent),
-             s.group, s.grp_idx, s.br, s.br_idx, s.br_len, s.pos_all,
-             s.mem, s.grp_loop)
+             s.group, s.grp_idx, s.br, s.br_idx, s.br_len, s.mem,
+             s.grp_loop)
             for s in alt.slots
         )
         negs = tuple(
@@ -626,17 +626,22 @@ def _make_multi_fn(cps, emit_cols=(), mode="array", force_rematch: bool = False,
     w_ns = None if any(r is None for r in rets) else max(rets)
     trailing_of = [_trailing_alt_ids(cp) for cp in cps]
     merged_mode = merged is not None
-    # v4 / v3: event blocks are pickled column arrays (module docstring)
+    # v5 / v4: event blocks are pickled column arrays (module docstring)
     # under the plain-field family fingerprint; every earlier layout
     # refuses loudly, naming what changed since it
-    _SHARED_FMT = "shared-v4"
-    _PERPAT_FMT = "perpat-v3"
+    _SHARED_FMT = "shared-v5"
+    _PERPAT_FMT = "perpat-v4"
     ipc_why = ("per-key state moved from Arrow-IPC frames to pickled "
                "column arrays")
     fp_why = ("the pattern-family fingerprint was redefined (Kleene over "
               "an And_ of leaves now compiles to one conjunctive position)")
+    pos_why = ("the pattern-family fingerprint was redefined (every "
+               "composite-Kleene group position is now conjunctive: the "
+               "pos_all slot field is gone and every group slot names its "
+               "member)")
     changed_since = {"shared-v2": ipc_why, "perpat-v1": ipc_why,
-                     "shared-v3": fp_why, "perpat-v2": fp_why}
+                     "shared-v3": fp_why, "perpat-v2": fp_why,
+                     "shared-v4": pos_why, "perpat-v3": pos_why}
     my_layout = _SHARED_FMT if merged_mode else _PERPAT_FMT
     # the key column is the call's key: stored only if something reads it
     need = set(emit_cols) | {ts_col, tb_col}

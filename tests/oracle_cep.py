@@ -35,8 +35,9 @@ def _unbounded_group_names(node) -> list:
             # bare Or_ inner is a single position of branches
             positions = (
                 # a bare Or_ or a bare And_ is a single position
-                # (session 10: member And_ bodies lower as one pos_all
-                # position; leaf And_ members fold identically)
+                # (session 10: member And_ bodies lower as one
+                # conjunctive position; leaf And_ members fold
+                # identically)
                 [node.inner] if isinstance(node.inner, (Or_, And_))
                 else node.inner.parts
             )

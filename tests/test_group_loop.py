@@ -175,7 +175,7 @@ LOOP_PATTERNS = {
 # ---- session 18: UNBOUNDED COMPOSITE (Seq-of-leaves) nested Kleene —
 # a looping UNIT position: the repetition binds one-or-more full
 # (b, c) inner repetitions, re-entering through the unit's first leaf
-# (loop_cont transitions that re-open the (j, 0, 1) mid pointer).
+# (loop_cont transitions that re-open the position's mid entry).
 # Unit leaves zip-align per inner repetition (same-branch alignment);
 # pairings with group mates outside the unit reject like leaf loops.
 UNIT_PATTERNS = {

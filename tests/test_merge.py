@@ -207,8 +207,8 @@ def test_group_kleene_merge_parity():
 def test_group_neg_and_andgroup_merge_parity():
     """Round-4 session B shapes through the merged automaton: a shared
     prefix ending in a group Kleene with a trailing Neg (repeat_only +
-    pre_vars in the neg signature), and an And_ group (one pos_all
-    position; grp_idx and pos_all are in the slot signature).  Parity vs
+    pre_vars in the neg signature), and an And_ group (one conjunctive
+    position; grp_idx and mem are in the slot signature).  Parity vs
     per-pattern execution; the And_ group must NOT merge with a Seq
     group of the same leaves."""
     trail = Kleene(Seq(Ev("p", role="assistant"), Ev("q", role="tool"),
@@ -393,7 +393,7 @@ def _suffix_part(draw):
         return [Kleene(Seq(draw(_leaf()), Or_(br, draw(_leaf()))),
                        max_len=None)]
     if kind == "group_and_pos":
-        # session 6: conjunctive (And_) position — pos_all joins the
+        # session 6: conjunctive (And_) position — mem joins the
         # slot signature, so an And_ position never merges with an Or_
         # position of the same member layout (completion semantics
         # differ: ALL members vs ONE branch)
@@ -402,7 +402,7 @@ def _suffix_part(draw):
                        max_len=None)]
     if kind == "group_and_pos_seqmem":
         # session 7: a Seq-of-leaves member inside the And_ position —
-        # br/br_idx/br_len join the slot signature alongside pos_all,
+        # br/br_idx/br_len join the slot signature alongside mem,
         # so a 2-event member never merges with two leaf members
         return [Kleene(Seq(draw(_leaf()),
                            And_(Seq(draw(_leaf()), draw(_leaf())),
@@ -486,7 +486,7 @@ def _suffix_part(draw):
                        max_len=None)]
     if kind == "group_bare_and_mem":
         # session 10: a bare And_ body with a Seq member — lowered as a
-        # single pos_all position, which must never merge with the leaf
+        # single conjunctive position, which must never merge with the leaf
         # bare-And_ body of the same events (br/br_idx/br_len are in
         # the slot signature).  Session 11: sometimes a LEADING member
         # Neg — its per-transition boundary override
@@ -920,7 +920,7 @@ def test_stream_shared_fellback_state_guard():
     parts_raw, parked_raw = state._val[2], state._val[3]
     assert parts_raw is None and parked_raw is None  # no tables persisted
     # ...but the layout + family fingerprint ARE recorded
-    assert state._val[7].startswith("shared-v4:")
+    assert state._val[7].startswith("shared-v5:")
 
     fn_perpat = _make_multi_fn(cps, ("turn_idx",), merged=None)
     with pytest.raises(RuntimeError, match="fresh checkpoint"):
@@ -968,10 +968,11 @@ def test_family_fingerprint_cross_version_stability():
     the exact fingerprint of a representative family (seq / group / Or_
     branches / And_ position with Seq member / edge Negs / leaf
     bare-And_) — the constants below were computed for the
-    ``perpat-v3`` / ``shared-v4`` layout (every shape field a plain
-    entry; Kleene over an And_ of leaves compiled to one pos_all
-    position) and must never change; if a future field genuinely must
-    break them, bump the fmt layout version instead."""
+    ``perpat-v4`` / ``shared-v5`` layout (every shape field a plain
+    entry; every group position conjunctive, so no ``pos_all`` field
+    and every group slot names its member) and must never change; if a
+    future field genuinely must break them, bump the fmt layout version
+    instead."""
     from cep_spark.pattern import Or_
     from cep_spark.stream import _family_fp
 
@@ -1002,9 +1003,9 @@ def test_family_fingerprint_cross_version_stability():
     cps = [compile_pattern(p) for p in fam]
     w_ns_of = [int(p.window.total_seconds() * 1e9) for p in fam]
     assert _family_fp(cps, w_ns_of,
-                      tuple((i,) for i in range(len(cps)))) == "adc8ab369152"
+                      tuple((i,) for i in range(len(cps)))) == "083853dbc716"
     assert _family_fp(cps, w_ns_of,
-                      (tuple(range(len(cps))),)) == "d63ae10decdf"
+                      (tuple(range(len(cps))),)) == "1f022b38a679"
 
 
 def test_stream_shared_spark_parity(spark, tmp_path):

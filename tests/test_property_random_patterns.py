@@ -287,7 +287,7 @@ def kleene_node(draw):
         return Kleene(Seq(draw(leaf()), pos), max_len=None)
     if shape == "group_bare_and_mem":
         # session 10: a BARE And_ body with non-leaf members — one
-        # pos_all position; sometimes with an interior member Neg.
+        # conjunctive position; sometimes with an interior member Neg.
         # (A bounded leaf Kleene member is covered by the dedicated
         # flattened-set parity test instead — its chain units
         # decompose the variable differently from the replica's

@@ -7,7 +7,7 @@ from datetime import timedelta
 import duckdb
 import pytest
 
-from cep_spark.batch import run_batch
+from cep_spark.batch import match_schema_flat, run_batch
 from cep_spark.compiler import compile_pattern
 from cep_spark.conditions import TRUE, attr, lit
 from cep_spark.join_planner import oracle_sql_for, plan_join
@@ -135,10 +135,16 @@ def test_three_way_events(spark, events_df, duck, name):
     o = duck.execute(oracle_sql_for(cp, "events")).fetchdf()
     cols = sorted(o.columns)
     o_rows = _canon(o.to_dict("records"), cols)
-    n_rows = _canon(run_batch(events_df, cp, mode="flat").toPandas().to_dict("records"), cols)
-    j_rows = _canon(plan_join(events_df, cp).toPandas().to_dict("records"), cols)
+    n_df = run_batch(events_df, cp, mode="flat")
+    j_df = plan_join(events_df, cp)
+    n_rows = _canon(n_df.toPandas().to_dict("records"), cols)
+    j_rows = _canon(j_df.toPandas().to_dict("records"), cols)
     assert o_rows == n_rows, f"{name}: NFA != DuckDB oracle"
     assert o_rows == j_rows, f"{name}: join planner != DuckDB oracle"
+    # one flat schema, nullable flags included, for both executors
+    assert n_df.schema.json() == j_df.schema.json(), name
+    assert n_df.schema == match_schema_flat(
+        cp, events_df.schema["user_id"].dataType), name
     assert len(o_rows) > 0, f"{name}: zero matches — weak fixture"
 
 

@@ -286,7 +286,7 @@ def test_parity_loop_unit(spark, events_pdf, tmp_path):
     Kleene nested inside the unbounded repetition — a looping UNIT
     position — through the REAL streaming state store.  A unit
     half-open at a micro-batch cut (click bound, signup pending) must
-    restore with its (j, 0, k) mid pointer and complete from persisted
+    restore with its in-position mid entry and complete from persisted
     state, and re-entries for further inner repetitions must extend
     across cuts.  144h window on sf0.001: 716 matches, 85
     multi-repetition (loop-back) and 107 with more units than
@@ -542,7 +542,7 @@ def test_parity_and_pos_seq_member(spark, events_pdf, tmp_path):
 def test_parity_bare_and_member_body(spark, events_pdf, tmp_path):
     """Round 5, session 10: a BARE And_ body with a Seq member through
     the REAL streaming state store — the whole repetition is ONE
-    pos_all position (no Seq anchor), so the repetition boundary is the
+    conjunctive position (no Seq anchor), so the repetition boundary is the
     position completion itself; the per-member mid pointer and the
     loop-back must survive pickled state roundtrips.  96h on sf0.001:
     497 rows, 44 multi-repetition (probe-pinned)."""
@@ -952,9 +952,10 @@ def test_stream_state_passthrough_keeps_bytes():
 def test_stream_state_pre_bump_format_refused():
     """State written in an earlier layout is refused with an error that
     names the format change, not reinterpreted: the Arrow-IPC layout
-    (perpat-v1 / shared-v2) and the column-array layout under the
+    (perpat-v1 / shared-v2), the column-array layout under the
     fingerprint that still carried the group kind (perpat-v2 /
-    shared-v3)."""
+    shared-v3), and the one whose fingerprint still carried the
+    ``pos_all`` slot field (perpat-v3 / shared-v4)."""
     import pyarrow as pa
     from test_stream_fn_property import FakeState
 
@@ -967,6 +968,8 @@ def test_stream_state_pre_bump_format_refused():
         (merge_compiled(cps), "shared-v2", "Arrow-IPC"),
         (None, "perpat-v2", "fingerprint was redefined"),
         (merge_compiled(cps), "shared-v3", "fingerprint was redefined"),
+        (None, "perpat-v3", "group position is now conjunctive"),
+        (merge_compiled(cps), "shared-v4", "group position is now conjunctive"),
     ):
         fn = _make_multi_fn(cps, ("turn_idx",), merged=merged)
         state = FakeState()

@@ -263,7 +263,7 @@ PATTERNS = {
                             Ev("x", role="tool", tool="python")))),
             Ev("t", role="user")),
         window=timedelta(seconds=180)),
-    # session 10: a BARE And_ body with a Seq member — one pos_all
+    # session 10: a BARE And_ body with a Seq member — one conjunctive
     # position whose per-member mid pointer must survive persisted
     # partial tables across micro-batch cuts
     "group_bare_and_mem": Pattern(
@@ -385,7 +385,7 @@ PATTERNS = {
             Ev("t", role="tool")),
         window=timedelta(seconds=180)),
     # session 18: a composite UNIT loop — a unit half-open at a
-    # micro-batch cut must restore with its (j, 0, k) mid pointer and
+    # micro-batch cut must restore with its in-position mid entry and
     # complete from persisted state; re-entries extend across cuts
     "group_loop_unit": Pattern(
         Seq(Kleene(Seq(Ev("u", role="user"),
