@@ -19,7 +19,6 @@ import os
 import sys
 from collections.abc import Callable
 from datetime import timedelta
-from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -967,8 +966,9 @@ _MULTI_SPECS = [("seq2", "cep_seq2"), ("and3", "cep_and3"), ("neg", "cep_neg")]
 
 
 def _multi_family() -> list:
-    """cep_multi: three catalog patterns run by run_batch_multi's
-    default strategy (per-pattern automata; they share no prefix)."""
+    """cep_multi: three catalog patterns run by run_batch_multi; the
+    plan merges the two that share the signup state (cep_seq2, cep_neg)
+    and runs cep_and3 on its own automaton."""
     return [(pid, CEP_PATTERNS[name]) for pid, name in _MULTI_SPECS]
 
 
@@ -1006,8 +1006,8 @@ def _shared_family() -> list:
 def _sliced_family() -> list:
     """Skew × sharing composition under the correctness gate: a family
     run by run_batch_multi_sliced — window-sliced hot-key decomposition
-    over ONE prefix-shared (per-component) automaton per slice, slice
-    width = the family max window.  It has its OWN family, so a slicing
+    over the family's execution units (here ONE prefix-shared automaton)
+    per slice, slice width = the family max window.  It has its OWN family, so a slicing
     bug that reproduced the shared executor's output still fails this
     row.  SHORT mixed windows (1h/2h/3h) against the 30-day per-user
     event span force MANY (key, slice) cells at sf0.01, so the
@@ -1034,7 +1034,7 @@ def _sliced_family() -> list:
 # name -> (family, executor)
 MULTI_ENTRIES = {
     "cep_multi": (_multi_family, run_batch_multi),
-    "cep_multi_shared": (_shared_family, partial(run_batch_multi, strategy="shared")),
+    "cep_multi_shared": (_shared_family, run_batch_multi),
     "cep_multi_sliced": (_sliced_family, run_batch_multi_sliced),
 }
 

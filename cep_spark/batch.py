@@ -1179,19 +1179,33 @@ def array_match_rows(cp, key_vals, emit_cols, res, cols) -> list:
     ]
 
 
-def tagged_array_rows(cps, res, key_vals, emit_cols, cols) -> list:
-    """Array-mode rows for a merged automaton's emissions, tagged
-    ``((pattern_index, alt_id), binding)``: each owning pattern's
-    matches go through its own ``array_match_rows``."""
-    by_pi: dict = {}
-    for k, ((pi, _), _) in enumerate(res):
-        by_pi.setdefault(pi, []).append(k)
+def unit_matches(cp, res) -> list:
+    """An execution unit's advance emissions keyed one way,
+    ``((local pattern index, alt_id), binding)``: a merged automaton's
+    tags already are (merge.merge_compiled); a one-pattern unit's alt
+    ids belong to local pattern 0."""
+    if cp.alternatives[0].accept_tags is not None:
+        return res
+    return [((0, a), b) for a, b in res]
+
+
+def unit_rows(cps, res, key_vals, mode, emit_cols, cols) -> list:
+    """Output rows of one execution unit's ``unit_matches``: each local
+    pattern ``cps[li]``'s matches become flat rows (``mode='flat'``) or
+    array rows with ``emit_cols``.  ``key_vals`` holds each match's
+    key; the bindings' positions index ``cols``."""
+    by_li: dict = {}
+    for ((li, a), b), kv in zip(res, key_vals):
+        kvs, ms = by_li.setdefault(li, ([], []))
+        kvs.append(kv)
+        ms.append((a, b))
     rows = []
-    for pi, ks in by_pi.items():
-        rows.extend(array_match_rows(
-            cps[pi], [key_vals[k] for k in ks], emit_cols,
-            [(res[k][0][1], res[k][1]) for k in ks], cols,
-        ))
+    for li, (kvs, ms) in by_li.items():
+        cp = cps[li]
+        if mode == "flat":
+            rows.extend(flat_match_rows(cp, kvs, ms, cols[cp.pattern.tiebreak_col]))
+        else:
+            rows.extend(array_match_rows(cp, kvs, emit_cols, ms, cols))
     return rows
 
 
@@ -1283,7 +1297,7 @@ def _flush_guard_stats(stats, acc):
 
 
 def run_batch(df, cp: CompiledPattern, mode="flat", emit_cols=("turn_idx", "role", "tool", "ts"),
-              strategy="auto", assume_clustered=False, max_partials_per_state=None):
+              assume_clustered=False, max_partials_per_state=None):
     """Batch NFA execution: repartition(key) +
     sortWithinPartitions(key, ts, tb) + ONE mapInPandas over each whole
     partition: unary conditions evaluated vectorized ONCE per partition,
@@ -1295,8 +1309,7 @@ def run_batch(df, cp: CompiledPattern, mode="flat", emit_cols=("turn_idx", "role
     per-event interpreter overhead) amortize across the partition.
     Flat and array output both run as the one-pattern case of
     ``run_batch_multi``'s partition executor; only the row builder
-    differs.  ``strategy`` is ``'auto'`` or ``'partition'`` (both name
-    this executor); any other value raises ValueError.
+    differs.
 
     It pushes the union of unary conditions + column pruning into the
     scan (Catalyst forwards them to parquet).
@@ -1313,11 +1326,6 @@ def run_batch(df, cp: CompiledPattern, mode="flat", emit_cols=("turn_idx", "role
     Drop counts surface on the returned DataFrame's ``guard_drops``
     accumulator (read ``.value`` after an action) and as executor-side
     warnings; never silent."""
-    from ._serde import ensure_shippable
-
-    if strategy not in ("auto", "partition"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    ensure_shippable(df.sparkSession)
     # the N=1 case of the partition-amortized multi executor
     return _run_batch_multi_partition(df, [cp], emit_cols, assume_clustered,
                                       cap=max_partials_per_state, mode=mode)
@@ -1379,76 +1387,44 @@ def _select_names(df, names):
 
 
 def run_batch_multi(df, cps, emit_cols=("turn_idx", "role", "tool", "ts"),
-                    strategy="auto", assume_clustered=False,
-                    max_partials_per_state=None):
+                    assume_clustered=False, max_partials_per_state=None):
     """Run N compiled patterns over one keyed scan: single shuffle,
-    single sort, one matcher pass per pattern; output is the array
-    schema with ``pattern_id`` distinguishing the patterns.
+    single sort, one matcher pass per execution unit; output is the
+    array schema with ``pattern_id`` distinguishing the patterns.
 
-    Strategies: ``'shared'`` merges the patterns into ONE prefix-shared
-    automaton (merge.merge_compiled) — states provably holding identical
-    partial tables across patterns are advanced once per event; windows
-    may differ (the merge runs under the max window with exact per-tag
-    span re-checks at accept).  ``'partition'`` runs one automaton per pattern
-    over the same frame (unary masks still shared via the cross-pattern
-    memo).  ``'auto'`` picks ``'shared'`` when the patterns are
-    mergeable and actually share at least one non-initial state, else
-    ``'partition'``.  Any other value raises ValueError.
+    The units are ``merge.plan_units(cps)``: patterns that share a
+    non-initial automaton state (and whose windows are within 16x of
+    each other) run as ONE prefix-shared automaton
+    (merge.merge_compiled) whose shared states advance once per event
+    — windows may differ, with exact per-tag span re-checks at accept;
+    every other pattern runs its own automaton.  Unary masks are shared
+    across units via the cross-pattern predicate memo.
 
-    All patterns must share (key, ts_col, tiebreak_col); give each a
-    distinct ``Pattern.pattern_id``."""
-    from ._serde import ensure_shippable
+    All patterns must share (key, ts_col, tiebreak_col) and carry
+    distinct ``Pattern.pattern_id`` values (ValueError otherwise).
 
-    if strategy not in ("auto", "partition", "shared"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    ensure_shippable(df.sparkSession)
-    if not cps:
-        raise ValueError("no patterns")
-    p0 = cps[0].pattern
-    for cp in cps[1:]:
-        p = cp.pattern
-        if (p.key, p.ts_col, p.tiebreak_col) != (p0.key, p0.ts_col, p0.tiebreak_col):
-            raise ValueError("run_batch_multi patterns must share key/ts/tiebreak columns")
-    ids = [cp.pattern.pattern_id for cp in cps]
-    if len(set(ids)) != len(ids):
-        raise ValueError(f"pattern_id values must be distinct, got {ids}")
-    cap = max_partials_per_state
-    merged = None
-    if strategy == "auto":
-        strategy = "partition"
-        from .merge import merge_compiled, mergeable
-
-        if len(cps) > 1 and mergeable(cps):
-            cand = merge_compiled(cps)
-            n_orig = sum(len(a.states) for cp in cps for a in cp.alternatives)
-            n_alts = sum(len(cp.alternatives) for cp in cps)
-            # the empty state always merges (n_alts-1 saved for free);
-            # pick the shared automaton only when NON-initial states
-            # merge too — that's where per-event work is actually saved
-            if len(cand.alternatives[0].states) < n_orig - (n_alts - 1):
-                strategy, merged = "shared", cand
-    if strategy == "shared":
-        if merged is None:
-            from .merge import merge_compiled
-
-            merged = merge_compiled(cps)
-        return _run_batch_multi_partition(
-            df, cps, emit_cols, assume_clustered, cap=cap, merged=merged,
-        )
-    return _run_batch_multi_partition(df, cps, emit_cols, assume_clustered, cap=cap)
+    ``max_partials_per_state`` (run_batch) bounds each unit's state:
+    per pattern state for a one-pattern unit, per MERGED state
+    otherwise — a shared prefix state's table serves every pattern
+    that owns it, so the cap bounds their combined partials once."""
+    return _run_batch_multi_partition(df, cps, emit_cols, assume_clustered,
+                                      cap=max_partials_per_state)
 
 
 def _run_batch_multi_partition(df, cps, emit_cols, assume_clustered=False, cap=None,
-                               merged=None, mode="array"):
-    """Partition-amortized multi-pattern execution (see run_batch_multi).
+                               mode="array"):
+    """Partition-amortized execution of ``merge.plan_units(cps)`` (see
+    run_batch_multi): each unit advances over all key groups of a
+    partition; its emissions (``unit_matches``) are regrouped per
+    pattern for row building.
 
-    With ``merged`` (a merge.merge_compiled automaton) the N patterns
-    advance as ONE prefix-shared NFA over all key groups of a partition;
-    emissions come back tagged ``((pattern_index, alt_id), binding)``
-    and are regrouped per pattern for row building.
+    ``mode='flat'`` (one pattern: run_batch's flat output) builds flat
+    rows and reads no emit columns."""
+    from ._serde import ensure_shippable
+    from .merge import plan_units
 
-    ``mode='flat'`` (one unmerged pattern: run_batch's flat output)
-    builds flat rows and reads no emit columns."""
+    units = plan_units(cps)  # validates the family before any df use
+    ensure_shippable(df.sparkSession)
     p0 = cps[0].pattern
     key_type = df.schema[p0.key].dataType
     acc = _guard_drops_acc(df, cap)
@@ -1464,7 +1440,7 @@ def _run_batch_multi_partition(df, cps, emit_cols, assume_clustered=False, cap=N
         rep = base.repartition(cpu_parallelism(df), p0.key).sortWithinPartitions(
             p0.key, p0.ts_col, p0.tiebreak_col
         )
-    ts_col, tb_col, key_col = p0.ts_col, p0.tiebreak_col, p0.key
+    ts_col, key_col = p0.ts_col, p0.key
 
     def gen(batches):
         chunks = list(batches)
@@ -1479,20 +1455,15 @@ def _run_batch_multi_partition(df, cps, emit_cols, assume_clustered=False, cap=N
         bounds = group_bounds(keys)
         ts_all = cols_all[ts_col].astype("datetime64[ns]").astype(np.int64)
         store = _ColStore.from_cols(cols_all)
-        shared = {}  # one evaluation per distinct predicate across ALL patterns
+        shared = {}  # one evaluation per distinct predicate across ALL units
         stats = {}
         rows = []
-        for cp in [merged] if merged is not None else cps:
-            masks = unary_masks(cp, cols_all, n, cache=shared)
-            res, grp, _ = advance_groups(cp, store, ts_all, masks, bounds,
+        for ucp, idxs in units:
+            masks = unary_masks(ucp, cols_all, n, cache=shared)
+            res, grp, _ = advance_groups(ucp, store, ts_all, masks, bounds,
                                          cap=cap, stats=stats)
-            key_vals = keys[bounds[grp]]
-            if mode == "flat":
-                rows.extend(flat_match_rows(cp, key_vals, res, cols_all[tb_col]))
-            elif merged is None:
-                rows.extend(array_match_rows(cp, key_vals, emit_cols, res, cols_all))
-            else:
-                rows.extend(tagged_array_rows(cps, res, key_vals, emit_cols, cols_all))
+            rows.extend(unit_rows([cps[i] for i in idxs], unit_matches(ucp, res),
+                                  keys[bounds[grp]], mode, emit_cols, cols_all))
         _flush_guard_stats(stats, acc)
         if rows:
             yield pd.DataFrame(rows, columns=schema.fieldNames())

@@ -35,8 +35,7 @@ class CepEngine:
     _DEFAULT_EMIT = ("turn_idx", "role", "tool", "ts")
 
     def run_batch(self, df, mode: str | None = None, emit_cols=_DEFAULT_EMIT,
-                  max_partials_per_state: int | None = None,
-                  strategy: str = "auto"):
+                  max_partials_per_state: int | None = None):
         """NFA execution over a batch DataFrame.  mode=None auto-picks:
         flat for a single pattern, array (pattern_id column) for multi.
         Explicitly asking a multi-pattern engine for mode='flat' is an
@@ -47,20 +46,13 @@ class CepEngine:
         per-key per-NFA-state partial tables, drop oldest, counted on
         the result's ``guard_drops`` accumulator — batch.run_batch).
 
-        ``strategy`` (multi-pattern engines only): run_batch_multi's
-        executor pick — 'auto' (prefix-shared merged automaton when the
-        patterns actually share states), 'shared' or 'partition'.
-        Single-pattern engines reject a non-default value rather than
-        ignoring it."""
+        A multi-pattern engine runs run_batch_multi: patterns sharing
+        automaton states run as one prefix-shared automaton
+        (merge.plan_units)."""
         if mode is None:
             mode = "flat" if self._single is not None else "array"
         if mode not in ("flat", "array"):
             raise ValueError(f"mode must be 'flat' or 'array', got {mode!r}")
-        if strategy != "auto" and self._single is not None:
-            raise ValueError(
-                "strategy applies to multi-pattern engines only "
-                "(single-pattern execution has no merge choice)"
-            )
         if mode == "flat":
             if self._single is None:
                 raise ValueError(
@@ -79,7 +71,6 @@ class CepEngine:
             return run_batch(df, self._single, mode="array", emit_cols=emit_cols,
                              max_partials_per_state=max_partials_per_state)
         return run_batch_multi(df, self.compiled, emit_cols=emit_cols,
-                               strategy=strategy,
                                max_partials_per_state=max_partials_per_state)
 
     def run_join(self, df, kleene_arities: int | None = None):
@@ -89,16 +80,14 @@ class CepEngine:
         return plan_join(df, self._single, kleene_arities)
 
     def run_stream(self, stream_df, watermark: str, mode: str | None = None,
-                   emit_cols=_DEFAULT_EMIT, strategy: str = "auto",
+                   emit_cols=_DEFAULT_EMIT,
                    max_partials_per_state: int | None = None):
         """Stateful streaming execution (watermark-sealed emission).
         mode=None auto-picks like run_batch.  A single-pattern engine
         runs stream_matches (the one-pattern case of the multi-pattern
-        state function); ``strategy`` applies to multi-pattern engines
-        only (stream_matches_multi: 'auto', 'incremental', 'shared')
-        and single-pattern engines reject a non-default value rather
-        than ignoring it.  ``max_partials_per_state`` is the
-        opt-in hot-key state guard."""
+        state function), a multi-pattern engine stream_matches_multi
+        over the same execution units as run_batch.
+        ``max_partials_per_state`` is the opt-in hot-key state guard."""
         if mode is None:
             mode = "flat" if self._single is not None else "array"
         if mode == "flat" and self._single is None:
@@ -107,16 +96,11 @@ class CepEngine:
                 "multi-pattern output carries a pattern_id column"
             )
         if self._single is not None:
-            if strategy != "auto":
-                raise ValueError(
-                    "strategy applies to multi-pattern engines only "
-                    "(single-pattern streaming has one executor)"
-                )
             return stream_matches(stream_df, self._single, watermark, mode=mode,
                                   emit_cols=emit_cols,
                                   max_partials_per_state=max_partials_per_state)
         return stream_matches_multi(stream_df, self.compiled, watermark,
-                                    emit_cols=emit_cols, strategy=strategy,
+                                    emit_cols=emit_cols,
                                     max_partials_per_state=max_partials_per_state)
 
     def oracle_sql(self, table: str, kleene_arities: int | None = None) -> list[str]:

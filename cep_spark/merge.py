@@ -73,30 +73,100 @@ from .compiler import (
 
 __all__ = [
     "merge_compiled",
-    "merge_components",
-    "merge_components_bucketed",
+    "plan_units",
+    "retention_ns",
+    "window_ns",
     "AcceptTag",
     "mergeable",
 ]
 
+# A bucket's retention windows span at most this factor (plan_units).
+WINDOW_SPREAD = 16
 
-def merge_components(cps) -> list:
-    """Partition patterns into connected components of the merged
-    automaton — patterns sharing at least one non-initial merged state
-    land in one component — and return ``[(merged_cp, idxs)]`` where
-    ``idxs`` are the GLOBAL pattern indices of the component, sorted,
-    and the components are ordered by their smallest index (the
-    partition is deterministic for a fixed pattern list, which is what
-    lets streaming checkpoint state key on the component index).
 
-    Why: the streaming shared strategy's rematch fallback (8x-buffer
-    state-guard breach) used to be whole-automaton — one Kleene-dense
-    rule dragged every merged rule to per-batch rematching.  Per
-    component, an exploding rule only takes down rules it actually
-    shares state with.
-    """
+def window_ns(cp) -> int | None:
+    """A pattern's window in ns (None = unbounded)."""
+    w = cp.pattern.window
+    return None if w is None else int(w.total_seconds() * 1e9)
+
+
+def retention_ns(cp) -> int | None:
+    """How long a pattern's events must stay in a key's buffer, in ns
+    (None = unbounded): the window, or twice it when an alternative has
+    BOTH leading and trailing negations — a match parked for its
+    trailing-neg seal (first.ts + W > wm) can still be killed by a
+    leading neg as old as last.ts - W > wm - 2W."""
+    w_ns = window_ns(cp)
+    if w_ns is None:
+        return None
+    for alt in cp.alternatives:
+        kinds = {n.kind for n in alt.negs}
+        if "trailing" in kinds and "leading" in kinds:
+            return 2 * w_ns
+    return w_ns
+
+
+def plan_units(cps) -> list:
+    """The execution units of a pattern family: ``[(unit_cp, idxs)]``,
+    where ``idxs`` are the sorted GLOBAL indices of the patterns the
+    unit runs and units are ordered by their smallest index.  Every
+    multi-pattern executor (batch, window-sliced and streaming) runs
+    exactly these units, so one rule decides which patterns share one
+    prefix-shared automaton (Kolchinsky & Schuster, VLDB 2018).
+
+    * The family is validated once: shared key / ts / tiebreak columns
+      and distinct ``pattern_id`` values (ValueError otherwise).
+    * Patterns are bucketed by retention window so a bucket's windows
+      span at most ``WINDOW_SPREAD``: mixed-window sharing is exact,
+      but the merged automaton keeps shared-prefix partials to the
+      bucket's MAX window, so a 1h rule merged with a 7-day rule would
+      hold the 1h rule's partials 168x longer than it needs
+      (scripts/soak_stream_state.py --ab measures that state cost).
+    * Each bucket splits into connected components of its merged
+      automaton — patterns sharing at least one non-initial merged
+      state.  In streaming, one Kleene-dense rule's rematch fallback
+      then only drags rules it actually shares state with.
+    * A one-pattern component is the pattern's own ``CompiledPattern``
+      (never a one-pattern merge), so a single-pattern query runs the
+      automaton the compiler built.
+
+    The plan is deterministic for a fixed pattern list: streaming state
+    keys partial tables on the unit index, and its format fingerprint
+    covers the plan."""
+    if not cps:
+        raise ValueError("no patterns")
+    if not mergeable(cps):
+        raise ValueError("patterns must share key/ts/tiebreak columns")
+    ids = [cp.pattern.pattern_id for cp in cps]
+    if len(set(ids)) != len(ids):
+        raise ValueError(f"pattern_id values must be distinct, got {ids}")
+    ret = [retention_ns(cp) for cp in cps]
+    buckets: list = []
+    for i in sorted((i for i in range(len(cps)) if ret[i] is not None),
+                    key=ret.__getitem__):
+        if buckets and ret[i] <= WINDOW_SPREAD * ret[buckets[-1][0]]:
+            buckets[-1].append(i)
+        else:
+            buckets.append([i])
+    unbounded = [i for i in range(len(cps)) if ret[i] is None]
+    if unbounded:
+        buckets.append(unbounded)
+    units = []
+    for b in buckets:
+        # LOCAL order by global index, so a unit's pattern order (and
+        # its persisted tag indices) does not depend on window ties
+        b.sort()
+        units.extend(_components([cps[i] for i in b], b))
+    units.sort(key=lambda u: u[1][0])
+    return units
+
+
+def _components(cps, idxs) -> list:
+    """plan_units' units of one bucket (``idxs``: the global indices of
+    ``cps``)."""
+    if len(cps) == 1:
+        return [(cps[0], idxs)]
     full = merge_compiled(cps)
-    owners = full.alternatives[0].state_owners
     parent = list(range(len(cps)))
 
     def find(x):
@@ -105,7 +175,7 @@ def merge_components(cps) -> list:
             x = parent[x]
         return x
 
-    for sid, own in owners.items():
+    for sid, own in full.alternatives[0].state_owners.items():
         if sid == 0:
             continue  # the empty state is shared by construction
         it = iter(sorted(own))
@@ -121,64 +191,15 @@ def merge_components(cps) -> list:
     if len(comps) == 1:
         # the common case pays ONE merge: the full automaton IS the
         # component's automaton
-        return [(full, list(range(len(cps))))]
-    # Multi-component: re-merge per component rather than filtering the
-    # full automaton down.  Filtering would need a full sid/state/neg
-    # renumbering pass (AcceptTag neg indices, transition targets, group
-    # ids) — as much code as the merge itself for a one-time cost at
-    # stream START (never per batch), and the per-component merges are
-    # strictly smaller inputs.  Deliberate trade-off (round-4 ADVICE).
+        return [(full, idxs)]
+    # Re-merge per component rather than filtering the full automaton
+    # down: filtering needs a full sid/state/neg renumbering pass, the
+    # per-component merges are strictly smaller inputs, and a merged
+    # component stays one component (sharing is pairwise).
     return [
-        (merge_compiled([cps[i] for i in idxs]), idxs)
-        for _, idxs in sorted(comps.items())
+        u for c in comps.values()
+        for u in _components([cps[j] for j in c], [idxs[j] for j in c])
     ]
-
-
-def merge_components_bucketed(cps, w_ns_of, max_spread: float = 16.0) -> list:
-    """merge_components with a WINDOW-DECADE guard (round 5): patterns
-    are first bucketed so that within a bucket max(window)/min(window)
-    <= ``max_spread``, then components are computed per bucket.
-
-    Why: mixed-window sharing is exact (per-tag span re-checks) but the
-    merged automaton retains shared-prefix partials to the bucket's MAX
-    window — a 1h rule merged with a 7-day rule keeps the 1h rule's
-    partials alive 168x longer than a per-pattern run would.  Bucketing
-    caps that state inflation at ``max_spread`` while keeping the
-    sharing win inside each bucket (scripts/bench_merge.py measured the
-    throughput win surviving a 16x spread on a prefix-dominated family;
-    scripts/soak_stream_state.py --ab measures the state cost).
-
-    ``w_ns_of[i]`` is pattern i's RETENTION window in ns (None =
-    unbounded: those patterns bucket together).  Greedy over the
-    window-sorted order; the returned components are re-sorted by
-    smallest global index, so the partition is deterministic for a
-    fixed pattern list (streaming checkpoints key state on the
-    component index; the fmt fingerprint refuses a reshuffle loudly).
-
-    ``max_spread=None`` disables the guard (single bucket)."""
-    n = len(cps)
-    if max_spread is None:
-        return merge_components(cps)
-    bounded = [i for i in range(n) if w_ns_of[i] is not None]
-    unbounded = [i for i in range(n) if w_ns_of[i] is None]
-    buckets: list = []
-    for i in sorted(bounded, key=lambda i: w_ns_of[i]):
-        if buckets and w_ns_of[i] <= max_spread * w_ns_of[buckets[-1][0]]:
-            buckets[-1].append(i)
-        else:
-            buckets.append([i])
-    if unbounded:
-        buckets.append(sorted(unbounded))
-    out = []
-    for b in buckets:
-        b = sorted(b)  # bucket membership by window; LOCAL order by
-        # global index, so a unit's pattern order (and therefore its
-        # persisted tag/parts indices) is independent of window ties
-        for m, idxs in merge_components([cps[i] for i in b]):
-            out.append((m, [b[j] for j in idxs]))
-    out.sort(key=lambda t: t[1][0])
-    return out
-
 
 # (mixed-window sharing cost model, for the curious: under W_max the
 # shared prefix tables hold partials that a short-window pattern would
@@ -253,11 +274,7 @@ def merge_compiled(cps) -> CompiledPattern:
             "merge_compiled requires identical key/ts/tiebreak columns "
             "across patterns"
         )
-    w_ns_of = [
-        None if cp.pattern.window is None
-        else int(cp.pattern.window.total_seconds() * 1e9)
-        for cp in cps
-    ]
+    w_ns_of = [window_ns(cp) for cp in cps]
     # shared pruning horizon = max window (None = unbounded wins)
     shared_window = (
         None if any(w is None for w in (cp.pattern.window for cp in cps))

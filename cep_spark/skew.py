@@ -65,20 +65,21 @@ def run_batch_sliced(df, cp: CompiledPattern):
 
 def run_batch_multi_sliced(df, cps, emit_cols=("turn_idx", "role", "tool", "ts")):
     """Window-sliced MULTI-pattern execution: a hot conversation running
-    N rules parallelizes across ceil(span/W) tasks AND matches all N
-    patterns in one prefix-shared automaton per slice (merge.py) — the
-    composition of the two hot-key answers.  Windows may differ: the
-    slice width is the MAX window (every pattern's match span fits in
-    one slice + its predecessor replica), and per-tag span re-checks at
-    accept keep each pattern exact (merge.py).  Output is the array
-    schema with ``pattern_id``, identical to run_batch_multi."""
+    N rules parallelizes across ceil(span/W) tasks AND runs the
+    family's execution units (merge.plan_units — prefix-shared
+    automata where patterns share states) per slice: the composition
+    of the two hot-key answers.  Windows may differ: the slice width is
+    the MAX window (every pattern's match span fits in one slice + its
+    predecessor replica), and per-tag span re-checks at accept keep
+    each pattern exact (merge.py).  Output is the array schema with
+    ``pattern_id``, identical to run_batch_multi."""
     return _run_sliced(df, cps, emit_cols, mode="array")
 
 
 def _run_sliced(df, cps, emit_cols, mode):
-    """The sliced executor.  ``mode='flat'`` (one pattern, run unmerged)
-    builds run_batch's flat rows and reads no emit columns; ``'array'``
-    runs the patterns merged and builds tagged array rows."""
+    """The sliced executor over ``merge.plan_units(cps)``.
+    ``mode='flat'`` (one pattern) builds run_batch's flat rows and
+    reads no emit columns; ``'array'`` builds array rows."""
     from pyspark.sql import functions as F
 
     from ._serde import ensure_shippable
@@ -86,39 +87,31 @@ def _run_sliced(df, cps, emit_cols, mode):
         _ColStore,
         advance_groups,
         cpu_parallelism,
-        flat_match_rows,
         group_bounds,
         match_schema_array,
         match_schema_flat,
         prefilter_multi,
-        tagged_array_rows,
         unary_masks,
+        unit_matches,
+        unit_rows,
     )
-    from .merge import merge_compiled, mergeable
+    from .merge import plan_units
 
-    ensure_shippable(df.sparkSession)
-    if not cps:
-        raise ValueError("no patterns")
-    if not mergeable(cps):
-        raise ValueError(
-            "run_batch_multi_sliced requires identical key/ts/tiebreak "
-            "columns across patterns"
-        )
-    pat = cps[0].pattern
+    units = plan_units(cps)  # validates the family before any df use
     if any(cp.pattern.window is None for cp in cps):
         raise ValueError(
             "run_batch_multi_sliced requires a window on every pattern "
             "(the max window is the slice width)"
         )
+    ensure_shippable(df.sparkSession)
+    pat = cps[0].pattern
     # slice width = the shared horizon (max window)
     w_us = max(cp.pattern.window for cp in cps) // timedelta(microseconds=1)
     w_ns = w_us * 1000
     key_type = df.schema[pat.key].dataType
     if mode == "flat":
-        auto = cps[0]
-        schema = match_schema_flat(auto, key_type)
+        schema = match_schema_flat(cps[0], key_type)
     else:
-        auto = merge_compiled(cps)
         schema = match_schema_array(pat, emit_cols, key_type)
     base = prefilter_multi(df, cps, extra_cols=emit_cols)
 
@@ -165,24 +158,27 @@ def _run_sliced(df, cps, emit_cols, mode):
         slices = cols_all["__slice"]
         bounds = group_bounds(keys, slices)
         ts_all = cols_all[ts_col].astype("datetime64[ns]").astype(np.int64)
-        res, grp, _ = advance_groups(
-            auto, _ColStore.from_cols(cols_all), ts_all,
-            unary_masks(auto, cols_all, n), bounds,
-        )
-        # a (key, slice) group owns the matches whose first event lies
-        # in its slice [k*W, (k+1)*W)
-        first = np.fromiter(
-            (min(pos for p in b.values() for pos in (p if isinstance(p, tuple) else (p,)))
-             for _, b in res),
-            dtype=np.int64, count=len(res),
-        )
-        lo = slices[bounds[grp]].astype(np.int64) * w_ns
-        own = np.nonzero((ts_all[first] >= lo) & (ts_all[first] < lo + w_ns))[0]
-        kept, key_vals = [res[k] for k in own], keys[bounds[grp[own]]]
-        if mode == "flat":
-            rows = flat_match_rows(auto, key_vals, kept, cols_all[tb_col])
-        else:
-            rows = tagged_array_rows(cps, kept, key_vals, emit_cols, cols_all)
+        store = _ColStore.from_cols(cols_all)
+        shared = {}
+        rows = []
+        for ucp, idxs in units:
+            res, grp, _ = advance_groups(
+                ucp, store, ts_all, unary_masks(ucp, cols_all, n, cache=shared),
+                bounds,
+            )
+            # a (key, slice) group owns the matches whose first event
+            # lies in its slice [k*W, (k+1)*W)
+            first = np.fromiter(
+                (min(pos for p in b.values()
+                     for pos in (p if isinstance(p, tuple) else (p,)))
+                 for _, b in res),
+                dtype=np.int64, count=len(res),
+            )
+            lo = slices[bounds[grp]].astype(np.int64) * w_ns
+            own = np.nonzero((ts_all[first] >= lo) & (ts_all[first] < lo + w_ns))[0]
+            kept = unit_matches(ucp, [res[k] for k in own])
+            rows.extend(unit_rows([cps[i] for i in idxs], kept,
+                                  keys[bounds[grp[own]]], mode, emit_cols, cols_all))
         if rows:
             yield pd.DataFrame(rows, columns=out_cols)
 
@@ -217,11 +213,11 @@ def run_batch_auto(df, cp: CompiledPattern, hot_threshold: int = 100_000):
 
 def run_batch_multi_auto(df, cps, emit_cols=("turn_idx", "role", "tool", "ts"),
                          hot_threshold: int = 100_000):
-    """Normal keys run the (prefix-shared when profitable) multi
-    executor; keys whose pattern-relevant event count exceeds
-    ``hot_threshold`` run window-sliced, prefix-shared.  Requires
-    merge.mergeable patterns when any key is hot (the slice width is the
-    common window)."""
+    """Normal keys run ``run_batch_multi``; keys whose
+    pattern-relevant event count exceeds ``hot_threshold`` run
+    window-sliced (``run_batch_multi_sliced``).  Both run the same
+    execution units (merge.plan_units); the sliced path needs a window
+    on every pattern (the slice width is the max window)."""
     return _run_auto(df, cps, emit_cols, hot_threshold, mode="array")
 
 

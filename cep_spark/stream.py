@@ -39,7 +39,7 @@ watermark"):
   a window state is bounded by the key's event rate x window span.
   Unbounded-window patterns keep the full key history (documented
   limit; the reference behaves the same).
-* State layout (``fmt`` ``perpat-v4`` / ``shared-v5``): the buffer and
+* State layout (``fmt`` ``units-v6``): the buffer and
   the limbo are pickled ``{column: ndarray}`` dicts (the ``_ColStore``
   layout; the key column is left out unless a condition or emit column
   reads it), the partial tables and parked matches pickled column
@@ -49,9 +49,11 @@ watermark"):
   is due and no rematch fallback runs (every data-batch call of an
   in-order stream) decodes and re-encodes only the limbo: buffer,
   partial tables and parked matches are written back as the same
-  bytes.  Checkpoints of earlier layouts (Arrow-IPC frames, or the
-  fingerprint before Kleene over an And_ of leaves became one
-  conjunctive position) are refused.
+  bytes.  Partial tables, parked matches and the rematch-fallback
+  bitmask are kept per execution unit (merge.plan_units); parked
+  matches are keyed ``(local pattern idx, alt_id)``.  Checkpoints of
+  earlier layouts (Arrow-IPC frames, earlier family fingerprints, or
+  the separate per-pattern / shared layouts) are refused.
 * Exactly-once: a match seals in exactly one bracket (last_emit_wm, W].
   On failure Spark replays the batch from the checkpoint with the same
   state and the same watermark, reproducing the bracket byte-for-byte;
@@ -62,14 +64,15 @@ batch ≡ stream parity is structural.  It runs incrementally: each batch
 advances the persisted partial tables over ONLY the events that sealed
 in it (a sealed match involves only sealed events), so every event is
 matched once, in the batch where it seals.  A key whose partial tables
-outgrow 8x its buffer (Kleene-dense input) falls back, per pattern, to
-re-running the matcher (``match_core``) over the retained buffer each
-batch.
+outgrow 8x its buffer (Kleene-dense input) falls back, per execution
+unit, to re-running the matcher (``match_core``) over the retained
+buffer each batch.
 
-One state function (``_make_multi_fn``) serves every query: a
-single-pattern query (``stream_matches`` / ``run_stream``) is the
-one-pattern case of ``stream_matches_multi``, with flat rows when
-``mode='flat'``.
+One state function (``_make_multi_fn``) serves every query over the
+execution units of ``merge.plan_units`` — the plan ``run_batch_multi``
+runs too: a single-pattern query (``stream_matches`` / ``run_stream``)
+is the one-pattern case of ``stream_matches_multi``, with flat rows
+when ``mode='flat'``.
 """
 
 from __future__ import annotations
@@ -86,16 +89,16 @@ from .batch import (
     _Partials,
     _obj_array,
     advance_core,
-    array_match_rows,
     flat_columns,
-    flat_match_rows,
     match_core,
     match_schema_array,
     match_schema_flat,
     prefilter_multi,
-    tagged_array_rows,
     unary_masks,
+    unit_matches,
+    unit_rows,
 )
+from .merge import plan_units, retention_ns, window_ns
 
 __all__ = ["run_stream", "stream_matches"]
 
@@ -216,20 +219,6 @@ def _trailing_alt_ids(cp: CompiledPattern) -> frozenset:
     )
 
 
-def _retention_w_ns(cp: CompiledPattern, w_ns):
-    """Buffer-retention horizon.  2x window when an alternative has BOTH
-    leading and trailing negs: a match parked for its trailing-neg seal
-    (first.ts + W > wm) can still be killed by a leading neg as old as
-    last.ts - W > wm - 2W, so those events must survive eviction."""
-    if w_ns is None:
-        return None
-    for alt in cp.alternatives:
-        kinds = {n.kind for n in alt.negs}
-        if "trailing" in kinds and "leading" in kinds:
-            return 2 * w_ns
-    return w_ns
-
-
 def _seal_ts_ns(binding: dict, ts_ns: np.ndarray, alt_id, trailing_ids, w_ns) -> int:
     """Watermark instant at which a match becomes immutable."""
     first, last = None, -1
@@ -272,7 +261,7 @@ def stream_matches(df, cp: CompiledPattern, watermark: str, mode: str = "flat",
     state-schema migration").
     """
     return _stream_query(df, [cp], watermark, emit_cols, mode=mode,
-                         shared=False, cap=max_partials_per_state)
+                         cap=max_partials_per_state)
 
 
 def _binding_of(p: "_Partials", j: int) -> dict:
@@ -353,115 +342,58 @@ def run_stream(
 
 def stream_matches_multi(df, cps, watermark: str,
                          emit_cols=("turn_idx", "role", "tool", "ts"),
-                         strategy: str = "auto", max_partials_per_state=None,
-                         window_bucket_spread: float | None = 16.0):
+                         max_partials_per_state=None):
     """Streaming multi-pattern execution (reference `CEP(patterns=[...])`,
     SURVEY.md §2.3 E7): ONE keyed state stream runs every compiled
     pattern — one watermark, one shuffle, one event buffer per key
-    (retention = the LARGEST pattern window).  Each pattern uses the
-    incremental executor (persisted partial tables, advance over
-    newly-sealed events; trailing negations handled by PARKING accepted
-    matches until their first.ts + window seal) unless its partial set
-    outgrew the buffer (per-pattern rematch fallback, tracked as a state
-    bitmask).  Output is the array schema with ``pattern_id``.
+    (retention = the LARGEST pattern window).  Output is the array
+    schema with ``pattern_id``.
 
-    ``strategy``: ``"auto"`` / ``"incremental"`` — per-pattern
-    incremental-with-fallback; ``"shared"`` — merge the patterns into
-    prefix-shared automata, ONE per connected component
-    (merge.merge_components; windows may differ — max-window pruning
-    with exact per-tag span re-checks): shared prefix states live ONCE
-    in the state store and advance once per sealed event, acceptance is
-    per tag, and trailing-neg parking / rematch fallback apply per
-    COMPONENT.  The persisted partial tables of ``"shared"`` describe
-    the merged automaton — switching an existing checkpoint between
-    ``"shared"`` and the per-pattern strategies is detected via a format
-    marker and fails loudly; start a fresh checkpoint to migrate (the
-    exactly-once sink keeps replays idempotent).
+    The family runs as ``merge.plan_units(cps)``, the same execution
+    units as ``run_batch_multi``: patterns sharing a non-initial
+    automaton state (windows within 16x) run as ONE prefix-shared
+    automaton whose shared prefix states live once in the state store
+    and advance once per sealed event, with acceptance per pattern tag;
+    every other pattern runs its own automaton.  Each unit uses the
+    incremental executor (persisted partial tables, advance over
+    newly-sealed events; trailing negations handled by PARKING
+    accepted matches until their first.ts + window seal) unless its
+    partial set outgrew the buffer (per-unit rematch fallback, tracked
+    as a state bitmask).  The state's format fingerprint covers the
+    plan, so a checkpoint of an edited or reordered family is refused
+    loudly.
 
     ``max_partials_per_state`` (opt-in hot-key guard, default None=exact):
-    per-pattern per-NFA-state bound on the persisted partial tables AND
-    on the in-flight matcher tables of per-pattern rematch fallbacks —
-    oldest partials dropped deterministically, loss-only, warn-logged
-    (batch.advance_core).  Under strategy='shared' the bound applies per
-    MERGED state — a shared prefix state's table serves every tagged
-    pattern, so the cap bounds their combined partials once rather than
-    N times.
+    bound on each unit's persisted partial tables AND on the in-flight
+    matcher tables of its rematch fallback — per pattern state for a
+    one-pattern unit, per MERGED state otherwise (a shared prefix
+    state's table serves every pattern that owns it, so the cap bounds
+    their combined partials once).  Oldest partials are dropped
+    deterministically, loss-only, warn-logged (batch.advance_core).
 
     The result carries two accumulators: ``guard_drops`` (partials the
     guard dropped; None when it is off) and ``late_dropped`` (late
     arrivals dropped, module docstring).
-
-    ``window_bucket_spread`` (shared strategy only, default 16.0):
-    before merging, patterns are bucketed so a bucket's retention
-    windows span at most this factor — mixed-window sharing is exact
-    but retains shared-prefix partials to the bucket MAX window, so an
-    extreme spread (1h rule merged with a 7-day rule) would inflate the
-    short rule's state up to W_max/W_tag.  The default caps that at
-    16x; pass None to merge regardless of spread (pre-round-5
-    behavior).  Changing the value re-partitions components — the state
-    fingerprint refuses stale checkpoints loudly.
     """
-    if strategy not in ("auto", "incremental", "shared"):
-        raise ValueError(f"unknown strategy {strategy!r}")
     return _stream_query(df, cps, watermark, emit_cols, mode="array",
-                         shared=strategy == "shared", cap=max_partials_per_state,
-                         window_bucket_spread=window_bucket_spread)
+                         cap=max_partials_per_state)
 
 
-def _windows(cps):
-    """Per-pattern window in ns (None = unbounded) and per-pattern
-    buffer retention horizon (_retention_w_ns)."""
-    w_ns_of = [
-        None if cp.pattern.window is None
-        else int(cp.pattern.window.total_seconds() * 1e9)
-        for cp in cps
-    ]
-    return w_ns_of, [_retention_w_ns(cp, wn) for cp, wn in zip(cps, w_ns_of)]
-
-
-def _stream_query(df, cps, watermark, emit_cols, mode, shared, cap,
-                  window_bucket_spread=None):
+def _stream_query(df, cps, watermark, emit_cols, mode, cap):
     """The keyed stateful query behind stream_matches (one pattern) and
     stream_matches_multi: watermark, union prefilter, one
-    applyInPandasWithState running ``_make_multi_fn`` (``shared``:
-    prefix-shared merged automata instead of one unit per pattern)."""
+    applyInPandasWithState running ``_make_multi_fn`` over
+    ``merge.plan_units(cps)``."""
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from ._serde import ensure_shippable
     from .batch import _guard_drops_acc
 
+    units = plan_units(cps)  # validates the family before any df use
     ensure_shippable(df.sparkSession)
-    if not cps:
-        raise ValueError("no patterns")
     p0 = cps[0].pattern
-    for cp in cps[1:]:
-        p = cp.pattern
-        if (p.key, p.ts_col, p.tiebreak_col) != (p0.key, p0.ts_col, p0.tiebreak_col):
-            raise ValueError("patterns must share key/ts/tiebreak columns")
-    ids = [cp.pattern.pattern_id for cp in cps]
-    if len(set(ids)) != len(ids):
-        raise ValueError(f"pattern_id values must be distinct, got {ids}")
     key_type = df.schema[p0.key].dataType
-    merged = None
-    if shared:
-        from .merge import merge_components_bucketed, mergeable
-
-        if not mergeable(cps):
-            raise ValueError(
-                "strategy='shared' requires identical key/ts/tiebreak "
-                "columns across patterns (windows may differ — the merge "
-                "runs under the max window with per-tag span re-checks)"
-            )
-        # one merged automaton per CONNECTED COMPONENT: an exploding
-        # rule's rematch fallback then only drags rules it actually
-        # shares state with (per-unit fellback bits below).  Components
-        # are additionally split by window decade (window_bucket_spread)
-        # so sharing never inflates a short rule's retained state past
-        # that factor.
-        merged = merge_components_bucketed(
-            cps, _windows(cps)[1], max_spread=window_bucket_spread
-        )
 
     # watermarks require TIMESTAMP (tz-aware); the engine's event time is
     # tz-naive — reinterpret under the pinned UTC session timezone
@@ -488,20 +420,20 @@ def _stream_query(df, cps, watermark, emit_cols, mode, shared, cap,
             T.StructField("parked", T.BinaryType()),  # {ci: parked tables}
             T.StructField("last_emit_wm_ms", T.LongType()),
             T.StructField("late_dropped", T.LongType()),
-            T.StructField("fellback", T.LongType()),  # per-pattern bitmask
-            # strategy/format indicator, written UNCONDITIONALLY on every
-            # update and validated on every restore: the fellback bitmask
-            # and partial tables are meaningless under the other layout
-            # (shared = one merged unit, per-pattern = one bit/dict entry
-            # per pattern), and a shared run that fell back to rematch
-            # persists fellback=1 with NO tables — without this column a
-            # per-pattern restart would silently reinterpret that state.
+            T.StructField("fellback", T.LongType()),  # per-unit bitmask
+            # format indicator (layout + family fingerprint), written
+            # UNCONDITIONALLY on every update and validated on every
+            # restore: the fellback bitmask and partial tables are keyed
+            # by unit index, and a unit that fell back to rematch
+            # persists its bit with NO tables — without this column a
+            # restart under another plan would silently reinterpret
+            # that state.
             T.StructField("fmt", T.StringType()),
         ]
     )
     acc = _guard_drops_acc(df, cap)
     late_acc = df.sparkSession.sparkContext.accumulator(0)
-    fn = _make_multi_fn(cps, emit_cols, mode=mode, cap=cap, merged=merged,
+    fn = _make_multi_fn(cps, emit_cols, mode=mode, cap=cap, units=units,
                         acc=acc, late_acc=late_acc)
 
     out = df.groupBy(p0.key).applyInPandasWithState(
@@ -572,8 +504,8 @@ def _pattern_fp(cp, w_ns):
 
 def _family_fp(cps, w_ns_of, unit_pats) -> str:
     """12-hex fingerprint of the whole pattern family INCLUDING the
-    per-component partition and pattern order — persisted state keys
-    partial tables by component index and merged-state sids, so an
+    unit plan and pattern order — persisted state keys partial tables
+    by unit index and merged-state sids, so an
     edited or reordered pattern list must refuse a stale checkpoint
     loudly (ADVICE r4) instead of restoring tables against a different
     automaton."""
@@ -587,50 +519,51 @@ def _family_fp(cps, w_ns_of, unit_pats) -> str:
 
 
 def _make_multi_fn(cps, emit_cols=(), mode="array", force_rematch: bool = False,
-                   cap=None, merged=None, acc=None, late_acc=None):
+                   cap=None, units=None, acc=None, late_acc=None):
     """The per-key state function of every streaming query (module
     docstring), exposed for the fake-GroupState property harness.
 
+    ``units``: the execution units, ``[(unit_cp, global idxs)]``;
+    default ``merge.plan_units(cps)``.  Passing an explicit list is the
+    A/B seam — e.g. one singleton unit per pattern, the per-pattern
+    reference the merged plan is checked against.  Every unit's
+    emissions are keyed ``(local pattern idx, alt_id)``
+    (``batch.unit_matches``), and so are the per-unit lookup tables
+    below (trailing set, alt objects) and the parked matches; parked-match re-verification evaluates the
+    ORIGINAL patterns' negation masks (parked bindings carry original
+    variable names — the shared predicate-mask cache makes those
+    evaluations hits, not re-work).
+
     ``mode``: ``'array'`` rows (array schema, ``emit_cols``) or
-    ``'flat'`` rows (run_batch's flat schema; one unmerged pattern only —
-    the single-pattern surface).
+    ``'flat'`` rows (run_batch's flat schema; one pattern only — the
+    single-pattern surface).
 
-    ``force_rematch``: every pattern re-runs the matcher over the
-    retained buffer each batch instead of advancing persisted partial
-    tables — the per-key fallback path, forced (the replica sweeps and
-    the fellback-state guard test reach it this way).
+    ``force_rematch``: every unit re-runs the matcher over the retained
+    buffer each batch instead of advancing persisted partial tables —
+    the per-key fallback path, forced (the replica sweeps and the
+    fellback-state guard test reach it this way).
 
-    ``cap``: per-pattern per-NFA-state partial-table bound
-    (advance_core's state guard) — see stream_matches_multi.
+    ``cap``: per-unit per-NFA-state partial-table bound (advance_core's
+    state guard) — see stream_matches_multi.
 
     ``acc`` / ``late_acc``: accumulators (anything with ``add``) for the
-    guard's dropped partials and for dropped late arrivals.
-
-    ``merged`` (strategy='shared'): the merge.merge_compiled automaton.
-    The loop then runs ONE execution unit whose advance emissions carry
-    tag keys ``(pattern_index, alt_id)`` instead of plain alt ids; the
-    per-unit lookup tables below (trailing set, alt objects, trailing
-    neg-spec indices) are keyed accordingly, and the parked-match
-    re-verification evaluates the ORIGINAL patterns' negation masks
-    (parked bindings carry original variable names) — the shared
-    predicate-mask cache makes those evaluations hits, not re-work."""
+    guard's dropped partials and for dropped late arrivals."""
     from .batch import _edge_ok, _flush_guard_stats
     if mode not in ("flat", "array"):
         raise ValueError(f"mode must be 'flat' or 'array', got {mode!r}")
-    if mode == "flat" and (merged is not None or len(cps) != 1):
-        raise ValueError("flat rows need exactly one unmerged pattern")
+    if mode == "flat" and len(cps) != 1:
+        raise ValueError("flat rows need exactly one pattern")
+    if units is None:
+        units = plan_units(cps)
     p0 = cps[0].pattern
     ts_col, tb_col = p0.ts_col, p0.tiebreak_col
-    w_ns_of, rets = _windows(cps)
+    w_ns_of = [window_ns(cp) for cp in cps]
+    rets = [retention_ns(cp) for cp in cps]
     # shared eviction horizon = the largest per-pattern retention
     w_ns = None if any(r is None for r in rets) else max(rets)
-    trailing_of = [_trailing_alt_ids(cp) for cp in cps]
-    merged_mode = merged is not None
-    # v5 / v4: event blocks are pickled column arrays (module docstring)
-    # under the plain-field family fingerprint; every earlier layout
-    # refuses loudly, naming what changed since it
-    _SHARED_FMT = "shared-v5"
-    _PERPAT_FMT = "perpat-v4"
+    # v6: one unit layout for every plan; every earlier layout refuses
+    # loudly, naming what changed since it
+    _FMT = "units-v6"
     ipc_why = ("per-key state moved from Arrow-IPC frames to pickled "
                "column arrays")
     fp_why = ("the pattern-family fingerprint was redefined (Kleene over "
@@ -639,133 +572,76 @@ def _make_multi_fn(cps, emit_cols=(), mode="array", force_rematch: bool = False,
                "composite-Kleene group position is now conjunctive: the "
                "pos_all slot field is gone and every group slot names its "
                "member)")
+    unit_why = ("the per-pattern and shared layouts were replaced by one "
+                "execution-unit layout (merge.plan_units), whose parked "
+                "matches are keyed by (pattern, alternative)")
     changed_since = {"shared-v2": ipc_why, "perpat-v1": ipc_why,
                      "shared-v3": fp_why, "perpat-v2": fp_why,
-                     "shared-v4": pos_why, "perpat-v3": pos_why}
-    my_layout = _SHARED_FMT if merged_mode else _PERPAT_FMT
+                     "shared-v4": pos_why, "perpat-v3": pos_why,
+                     "shared-v5": unit_why, "perpat-v4": unit_why}
     # the key column is the call's key: stored only if something reads it
     need = set(emit_cols) | {ts_col, tb_col}
     for cp in cps:
         for cs_ in cp.needed_cols.values():
             need.update(cs_)
     drop = () if p0.key in need else (p0.key,)
-    alts_of = [{alt.alt_id: alt for alt in cp.alternatives} for cp in cps]
-    trail_specs_of = [
-        {
-            alt.alt_id: [
-                si for si, sp in enumerate(alt.negs) if sp.kind == "trailing"
-            ]
-            for alt in cp.alternatives
-            if alt.alt_id in trailing_of[ci]
-        }
-        for ci, cp in enumerate(cps)
+    run_cps = [ucp for ucp, _ in units]
+    unit_pats = [idxs for _, idxs in units]
+    # per-unit PRUNING horizon = the unit's max window (None = unbounded
+    # wins); per-TAG window math (seal instants, park deadlines, edge-neg
+    # intervals) uses tag_w below
+    unit_w_ns = [
+        None if any(w_ns_of[i] is None for i in idxs)
+        else max(w_ns_of[i] for i in idxs)
+        for idxs in unit_pats
     ]
-    if merged_mode:
-        # ``merged``: list of (merged_cp, global pattern idxs) —
-        # merge_components units — or a single merged CompiledPattern
-        # covering all patterns (legacy callers / whole-family merge).
-        # One execution unit (run_cps entry, fellback bit, parts slot)
-        # per component; tag pattern indices inside a unit are LOCAL
-        # and unit_pats maps them back to global.
-        units = (
-            merged if isinstance(merged, list)
-            else [(merged, list(range(len(cps))))]
-        )
-        run_cps = [mc for mc, _ in units]
-        unit_pats = [idxs for _, idxs in units]
-        # per-unit PRUNING horizon = the component's max window
-        # (None = unbounded wins); per-TAG window math (seal instants,
-        # park deadlines, edge-neg intervals) uses tag_w below
-        unit_w_ns = [
-            None if any(w_ns_of[i] is None for i in idxs)
-            else max(w_ns_of[i] for i in idxs)
-            for idxs in unit_pats
-        ]
-        unit_trailing = [
-            frozenset(
-                (li, aid)
-                for li, gi in enumerate(idxs) for aid in trailing_of[gi]
-            )
-            for idxs in unit_pats
-        ]
-        unit_alts = [
-            {
-                (li, alt.alt_id): alt
-                for li, gi in enumerate(idxs)
-                for alt in cps[gi].alternatives
-            }
-            for idxs in unit_pats
-        ]
-        unit_trail_specs = [
-            {
-                (li, aid): specs
-                for li, gi in enumerate(idxs)
-                for aid, specs in trail_specs_of[gi].items()
-            }
-            for idxs in unit_pats
-        ]
-    else:
-        run_cps = cps
-        unit_pats = [[i] for i in range(len(cps))]
-        unit_w_ns = w_ns_of
-        unit_trailing = trailing_of
-        unit_alts = alts_of
-        unit_trail_specs = trail_specs_of
+    unit_alts = [
+        {(li, alt.alt_id): alt
+         for li, gi in enumerate(idxs) for alt in cps[gi].alternatives}
+        for idxs in unit_pats
+    ]
+    unit_trailing = [
+        frozenset((li, aid) for li, gi in enumerate(idxs)
+                  for aid in _trailing_alt_ids(cps[gi]))
+        for idxs in unit_pats
+    ]
     static_rematch = (1 << len(run_cps)) - 1 if force_rematch else 0
 
-    # fmt = <strategy layout>:<family fingerprint> — both validated on
-    # every restore.  The fingerprint covers pattern structure, windows,
-    # order, AND the component partition, so restarting a checkpoint
-    # with an edited/reordered pattern list (which reshuffles
-    # merge_components' partition and the component-index state keys)
-    # refuses loudly instead of restoring partial tables against a
-    # different automaton.
-    my_fmt = f"{my_layout}:{_family_fp(cps, w_ns_of, unit_pats)}"
+    # fmt = <layout>:<family fingerprint> — both validated on every
+    # restore.  The fingerprint covers pattern structure, windows, order
+    # AND the unit plan, so restarting a checkpoint with an
+    # edited/reordered pattern list (which reshuffles the plan and the
+    # unit-index state keys) refuses loudly instead of restoring partial
+    # tables against a different automaton.
+    my_fmt = f"{_FMT}:{_family_fp(cps, w_ns_of, unit_pats)}"
 
     def refusal(fmt) -> RuntimeError:
         layout = fmt.split(":", 1)[0] if isinstance(fmt, str) else fmt
-        if layout == my_layout:
+        if layout == _FMT:
             return RuntimeError(
                 f"state store fingerprint {fmt!r} does not match "
                 f"this query's pattern family {my_fmt!r}: the "
                 "pattern list was edited or reordered since the "
                 "checkpoint was written (persisted partial tables "
-                "are keyed by component index and merged-state "
-                "sids); restart from a fresh checkpoint"
-            )
-        if layout in (_SHARED_FMT, _PERPAT_FMT):
-            return RuntimeError(
-                f"state store was written by strategy layout "
-                f"{fmt!r} but this query runs {my_fmt!r} "
-                f"({'shared merged-automaton' if merged_mode else 'per-pattern'}); "
-                "restart from a fresh checkpoint to switch strategies"
+                "are keyed by unit index and merged-state sids); "
+                "restart from a fresh checkpoint"
             )
         why = changed_since.get(layout, "the layout is unknown")
         return RuntimeError(
             f"state store format {layout!r} is not this version's "
-            f"{my_layout!r}: {why}, and checkpoints written before the "
+            f"{_FMT!r}: {why}, and checkpoints written before the "
             "format change cannot be read; restart from a fresh "
             "checkpoint (README, 'Streaming state-schema migration')"
         )
 
-    if merged_mode:
-        # per-tag window: merged alt ids are (LOCAL pattern idx, alt_id)
-        def tag_w(ci, alt_id):
-            return w_ns_of[unit_pats[ci][alt_id[0]]]
-    else:
-        def tag_w(ci, alt_id):
-            return unit_w_ns[ci]
+    def tag_w(ci, key):
+        """The window of emission ``key`` = (local idx, alt_id) of unit ci."""
+        return w_ns_of[unit_pats[ci][key[0]]]
 
-    def unit_rows(cols, key_val, res, ci) -> list:
-        """Output rows for execution unit ci's matches (bindings index
-        ``cols``)."""
-        if mode == "flat":
-            return flat_match_rows(run_cps[ci], repeat(key_val), res, cols[tb_col])
-        if not merged_mode:
-            return array_match_rows(run_cps[ci], repeat(key_val), emit_cols, res, cols)
-        # merged emissions are tagged (LOCAL pattern idx, alt_id)
-        return tagged_array_rows([cps[gi] for gi in unit_pats[ci]], res,
-                                 [key_val] * len(res), emit_cols, cols)
+    def rows_of(cols, key_val, res, ci) -> list:
+        """Output rows for unit ci's matches (bindings index ``cols``)."""
+        return unit_rows([cps[gi] for gi in unit_pats[ci]], res, repeat(key_val),
+                         mode, emit_cols, cols)
 
     out_cols = (flat_columns(cps[0]) if mode == "flat"
                 else [p0.key, "pattern_id", "alt_id", "matched"])
@@ -774,8 +650,8 @@ def _make_multi_fn(cps, emit_cols=(), mode="array", force_rematch: bool = False,
         """Earliest seal instant of any parked match."""
         m = None
         for ci, raw in parked_by_ci.items():
-            for alt_id, tmap in _de_tables(raw).items():
-                s = int(tmap[0].first_ts.min()) + tag_w(ci, alt_id)
+            for key, tmap in _de_tables(raw).items():
+                s = int(tmap[0].first_ts.min()) + tag_w(ci, key)
                 m = s if m is None else min(m, s)
         return m
 
@@ -796,7 +672,7 @@ def _make_multi_fn(cps, emit_cols=(), mode="array", force_rematch: bool = False,
         tables_out = {}
         parked_out_by_ci = {}
         mask_cache = {}  # shared predicate masks across patterns, per batch
-        orig_masks_cache = {}
+        masks_of = {}  # id(compiled pattern) -> its masks over the fresh rows
 
         for ci, cp in enumerate(run_cps):
             if rematch_mask & (1 << ci):
@@ -810,8 +686,9 @@ def _make_multi_fn(cps, emit_cols=(), mode="array", force_rematch: bool = False,
                 res_sealed = []
                 fb_stats = {}
                 masks = unary_masks(cp, all_cols, len(ts_all), cache=all_cache)
-                for a, b in match_core(cp, _ColStore.from_cols(all_cols), ts_all,
-                                       masks, cap=cap, stats=fb_stats):
+                for a, b in unit_matches(cp, match_core(
+                        cp, _ColStore.from_cols(all_cols), ts_all, masks,
+                        cap=cap, stats=fb_stats)):
                     lts = _seal_ts_ns(b, ts_all, a, unit_trailing[ci], tag_w(ci, a))
                     if lo_ns < lts <= wm_ns:
                         res_sealed.append((a, b))
@@ -819,20 +696,22 @@ def _make_multi_fn(cps, emit_cols=(), mode="array", force_rematch: bool = False,
                         min_unsealed_ns = lts
                 _flush_guard_stats(fb_stats, acc)
                 if res_sealed:
-                    rows.extend(unit_rows(all_cols, key_val, res_sealed, ci))
+                    rows.extend(rows_of(all_cols, key_val, res_sealed, ci))
                 continue
             tables = _de_tables(parts.get(ci))
             parked = _de_tables(parked_by_ci.get(ci))
             res = []
             if n_new:
                 start = n_s - n_new
-                masks_ci = unary_masks(cp, sealed, n_s, start=start, cache=mask_cache)
+                masks_ci = masks_of[id(cp)] = unary_masks(
+                    cp, sealed, n_s, start=start, cache=mask_cache)
                 stats = {}
                 res, tables = advance_core(
                     cp, store, ts_s, masks_ci,
                     tables_in=tables or None, start=start,
                     cap=cap, stats=stats,
                 )
+                res = unit_matches(cp, res)
                 _flush_guard_stats(stats, acc)
                 # re-verify parked matches against ONLY the freshly-
                 # sealed trailing-negation candidates (earlier sealed
@@ -845,25 +724,23 @@ def _make_multi_fn(cps, emit_cols=(), mode="array", force_rematch: bool = False,
                         del parked[alt_id]
                         continue
                     alt = unit_alts[ci][alt_id]
-                    if merged_mode:
-                        # parked bindings use ORIGINAL var names:
-                        # evaluate the original pattern's neg masks
-                        # (cache-shared with the merged automaton's
-                        # identical predicates)
-                        gi = unit_pats[ci][alt_id[0]]
-                        if gi not in orig_masks_cache:
-                            orig_masks_cache[gi] = unary_masks(
-                                cps[gi], sealed, n_s, start=start, cache=mask_cache,
-                            )
-                        _, neg_mask = orig_masks_cache[gi][alt_id[1]]
-                    else:
-                        _, neg_mask = masks_ci[alt_id]
+                    # parked bindings use ORIGINAL var names: evaluate
+                    # the original pattern's neg masks (a one-pattern
+                    # unit's are masks_ci; a merged unit's hit the
+                    # shared predicate cache)
+                    ocp = cps[unit_pats[ci][alt_id[0]]]
+                    if id(ocp) not in masks_of:
+                        masks_of[id(ocp)] = unary_masks(
+                            ocp, sealed, n_s, start=start, cache=mask_cache)
+                    _, neg_mask = masks_of[id(ocp)][alt_id[1]]
                     ok = np.ones(len(p), dtype=bool)
-                    for si in unit_trail_specs[ci][alt_id]:
+                    for si, spec in enumerate(alt.negs):
+                        if spec.kind != "trailing":
+                            continue
                         fresh_pos = np.nonzero(neg_mask[si][start:])[0] + start
                         if len(fresh_pos):
                             ok &= _edge_ok(
-                                fresh_pos, alt.negs[si], store, p,
+                                fresh_pos, spec, store, p,
                                 ts_s, tag_w(ci, alt_id), leading=False,
                                 bounds=np.array([0, n_s]),
                             )
@@ -918,12 +795,12 @@ def _make_multi_fn(cps, emit_cols=(), mode="array", force_rematch: bool = False,
                 else:
                     del parked[alt_id]
             if res:
-                rows.extend(unit_rows(sealed, key_val, res, ci))
+                rows.extend(rows_of(sealed, key_val, res, ci))
             tables_out[ci] = tables
             if parked:
                 parked_out_by_ci[ci] = parked
 
-        # prune per-pattern partials; evict at the SHARED max-retention
+        # prune each unit's partials; evict at the SHARED max-retention
         # horizon; shift positions by the shared prefix offset
         if w_ns is not None and wm_ns > 0:
             for ci, tables in tables_out.items():
@@ -947,7 +824,7 @@ def _make_multi_fn(cps, emit_cols=(), mode="array", force_rematch: bool = False,
             if _tables_rows(tables) > max(256, 8 * buflen):
                 fellback |= 1 << ci
                 # the rematch fallback re-derives pending trailing
-                # matches every batch — drop this pattern's parked set
+                # matches every batch — drop this unit's parked set
                 parked_out_by_ci.pop(ci, None)
             else:
                 raw = _ser_tables(tables)
@@ -974,9 +851,9 @@ def _make_multi_fn(cps, emit_cols=(), mode="array", force_rematch: bool = False,
             (buf_raw, limbo_raw, parts_raw, parked_raw,
              last_emit_wm_ms, late_dropped, fellback, fmt) = state.get
             # validate on EVERY restore, not only when partial tables
-            # exist: a shared run whose merged unit fell back to rematch
-            # persists fellback=1 with no tables — reinterpreting that
-            # bitmask per-pattern would silently drop matches.
+            # exist: a unit that fell back to rematch persists its
+            # fellback bit with no tables — reinterpreting that bitmask
+            # under another plan would silently drop matches.
             if fmt != my_fmt:
                 raise refusal(fmt)
         else:

@@ -195,17 +195,18 @@ class _FakeState:
 
 
 def run_stream(name: str, pats: list, df: pd.DataFrame, n_batches=20) -> None:
-    """Streaming state-fn A/B: per-pattern multi executor vs
-    strategy='shared' (merged tables in the state store), identical
-    watermark schedule, identical emissions asserted."""
+    """Streaming state-fn A/B: one singleton unit per pattern vs one
+    whole-family merged unit (merged tables in the state store), passed
+    as explicit unit lists; identical watermark schedule, identical
+    emissions asserted."""
     from cep_spark.stream import _make_multi_fn
 
     cps = [compile_pattern(p) for p in pats]
     bounds = np.linspace(0, len(df), n_batches + 1).astype(int)
     batches = [df.iloc[bounds[i]:bounds[i + 1]] for i in range(n_batches)]
 
-    def drive(merged):
-        fn = _make_multi_fn(cps, ("event_id",), merged=merged)
+    def drive(units):
+        fn = _make_multi_fn(cps, ("event_id",), units=units)
         state = _FakeState()
         wm = 0
         n_rows = 0
@@ -219,9 +220,10 @@ def run_stream(name: str, pats: list, df: pd.DataFrame, n_batches=20) -> None:
                 wm = max(wm, int(b["ts"].max().value // 1_000_000))
         return time.perf_counter() - t0, n_rows
 
-    drive(None)  # warm
-    t_pp, n_pp = drive(None)
-    t_m, n_m = drive(merge_compiled(cps))
+    per_pattern = [(cp, [i]) for i, cp in enumerate(cps)]
+    drive(per_pattern)  # warm
+    t_pp, n_pp = drive(per_pattern)
+    t_m, n_m = drive([(merge_compiled(cps), list(range(len(cps))))])
     assert n_pp == n_m, (n_pp, n_m)
     print(
         json.dumps(

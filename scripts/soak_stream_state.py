@@ -73,10 +73,7 @@ def main() -> None:
                 window=timedelta(seconds=120), pattern_id="groupneg"),
     ]
     cps = [compile_pattern(p) for p in pats]
-
-    from cep_spark.merge import merge_components
-
-    fn = _make_multi_fn(cps, ("turn_idx",), merged=merge_components(cps))
+    fn = _make_multi_fn(cps, ("turn_idx",))  # the merge.plan_units plan
 
     rng = np.random.default_rng(2026)
     state = FakeState()
@@ -141,12 +138,12 @@ def main() -> None:
     print(json.dumps(out))
 
 
-def _drive(cps, merged, n_batches, events_per_batch, seed=2026):
-    """Run one strategy variant over the SAME generated stream; return
+def _drive(cps, units, n_batches, events_per_batch, seed=2026):
+    """Run one unit plan over the SAME generated stream; return
     (matches_emitted, buffer-rows series, partial-rows series)."""
     import pickle
 
-    fn = _make_multi_fn(cps, ("turn_idx",), merged=merged)
+    fn = _make_multi_fn(cps, ("turn_idx",), units=units)
     rng = np.random.default_rng(seed)
     state = FakeState()
     ts0 = pd.Timestamp("2026-01-01")
@@ -188,13 +185,13 @@ def _drive(cps, merged, n_batches, events_per_batch, seed=2026):
 
 def ab_mixed_windows() -> None:
     """Shared-vs-per-pattern STATE-SIZE A/B on a wide window spread
-    (round-4 verdict #4): 45s rules merged with a 2700s rule (60x).
-    Unbucketed sharing retains the short rules' shared-prefix partials
-    to W_max; the 16x window-decade bucketing
-    (merge.merge_components_bucketed — the streaming shared default)
-    splits them into two units and caps the inflation.  Counts only —
-    host-steal-proof."""
-    from cep_spark.merge import merge_components, merge_components_bucketed
+    (round-4 verdict #4): 45s rules merged with a 900s rule (20x),
+    each plan passed as an explicit unit list.  Unbucketed sharing
+    (one whole-family merged unit) retains the short rules'
+    shared-prefix partials to W_max; merge.plan_units' 16x window
+    bucketing splits them into two units and caps the inflation.
+    Counts only — host-steal-proof."""
+    from cep_spark.merge import merge_compiled, plan_units
 
     a = Ev("a", role="user")
     b = Ev("b", role="assistant")
@@ -206,25 +203,23 @@ def ab_mixed_windows() -> None:
         mk(Seq(a, b, Ev("e", role="tool")), "long_fun", 900),
     ]
     cps = [compile_pattern(p) for p in pats]
-    w_ns_of = [int(p.window.total_seconds() * 1e9) for p in pats]
     variants = {
-        "shared_unbucketed": merge_components(cps),
-        "shared_bucketed16": merge_components_bucketed(
-            cps, w_ns_of, max_spread=16.0),
-        "per_pattern": None,
+        "shared_unbucketed": [(merge_compiled(cps), list(range(len(cps))))],
+        "shared_bucketed16": plan_units(cps),
+        "per_pattern": [(cp, [i]) for i, cp in enumerate(cps)],
     }
     out = {"metric": "mixed_window_state_ab",
            "batches": N_BATCHES, "events_per_batch": EVENTS_PER_BATCH,
            "window_spread": "45s/45s/900s (20x)"}
     baseline = None
-    for name, merged in variants.items():
+    for name, units in variants.items():
         emitted, _bufs, parts = _drive(
-            cps, merged, N_BATCHES, EVENTS_PER_BATCH)
+            cps, units, N_BATCHES, EVENTS_PER_BATCH)
         if baseline is None:
             baseline = emitted
         assert emitted == baseline, (name, emitted, baseline)
         out[name] = {
-            "units": len(cps) if merged is None else len(merged),
+            "units": len(units),
             "partial_rows_max": int(max(parts)),
             "partial_rows_mean": round(float(np.mean(parts)), 1),
         }

@@ -7,8 +7,10 @@ Layers:
 * hypothesis sweep: random pattern families built around a common
   prefix (forcing real state sharing) mixed with unrelated structures
   (forcing coexistence without sharing), vs per-pattern match_group_nfa;
-* Spark end-to-end: run_batch_multi(strategy='shared') ≡ 'partition'
-  on driver testdata, and the 'auto' pick.
+* Spark end-to-end: run_batch_multi (the merge.plan_units plan) ≡ the
+  union of per-pattern run_batch runs on the sf0.001 test data;
+* streaming: the planned state function ≡ explicit per-pattern
+  singleton units ≡ batch, through the fake GroupState and real Spark.
 """
 
 from __future__ import annotations
@@ -24,7 +26,7 @@ from hypothesis import strategies as st
 from cep_spark.batch import match_group_nfa
 from cep_spark.compiler import compile_pattern
 from cep_spark.conditions import TRUE, attr, lit
-from cep_spark.merge import merge_compiled, mergeable
+from cep_spark.merge import merge_compiled, mergeable, plan_units
 from cep_spark.pattern import And_, Ev, Kleene, Neg, Pattern, Seq
 
 ROLES = ["user", "assistant", "tool"]
@@ -612,7 +614,7 @@ def test_renamed_twins_lead_member_neg(roles):
 
 
 def test_renamed_twins_spark_shared_equals_partition(spark):
-    from cep_spark.batch import run_batch_multi
+    from cep_spark.batch import run_batch, run_batch_multi
 
     pdf = pd.concat([_group(s, n=18).assign(conv_id=f"c{s}") for s in range(1, 7)],
                     ignore_index=True)
@@ -621,25 +623,29 @@ def test_renamed_twins_spark_shared_equals_partition(spark):
         ("user", "user", "user", "assistant", "assistant", "user"),
         (timedelta(minutes=10), timedelta(minutes=3)))]
 
-    def rows(strategy):
-        out = run_batch_multi(df, cps, emit_cols=("turn_idx",), strategy=strategy)
-        return sorted(
+    def canon(out):
+        return [
             (r["conv_id"], r["pattern_id"], r["alt_id"],
              tuple((m["var"], m["turn_idx"]) for m in r["matched"]))
             for r in out.collect()
-        )
+        ]
 
-    shared = rows("shared")
-    assert shared == rows("partition")
+    # the twins share every state: the plan is one merged unit
+    assert [idxs for _, idxs in plan_units(cps)] == [[0, 1]]
+    shared = sorted(canon(run_batch_multi(df, cps, emit_cols=("turn_idx",))))
+    per_pattern = sorted(
+        r for cp in cps
+        for r in canon(run_batch(df, cp, mode="array", emit_cols=("turn_idx",))))
+    assert shared == per_pattern
     assert len(shared) > 0
 
 
 # ---------------------------------------------------------------------------
-# Spark end-to-end (sf0.001 events): shared ≡ partition ≡ group
+# Spark end-to-end (sf0.001 events): the plan ≡ per-pattern runs
 
 
 def test_run_batch_multi_shared_spark(spark):
-    from cep_spark.batch import run_batch_multi
+    from cep_spark.batch import run_batch, run_batch_multi
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
 
@@ -668,47 +674,23 @@ def test_run_batch_multi_shared_spark(spark):
     ]
     cps = [compile_pattern(q) for q in pats]
 
-    def rows(strategy):
-        df = run_batch_multi(
-            ev, cps, emit_cols=("event_id", "event_type", "ts"), strategy=strategy
-        )
-        return sorted(
+    emit = ("event_id", "event_type", "ts")
+
+    def canon(df):
+        return [
             (r["user_id"], r["pattern_id"], r["alt_id"],
              tuple((m["var"], m["event_id"]) for m in r["matched"]))
             for r in df.collect()
-        )
+        ]
 
-    shared = rows("shared")
-    assert shared == rows("partition")
-    assert shared == rows("auto")  # auto must pick a correct plan either way
+    # all three share the signup state: one merged unit
+    assert [idxs for _, idxs in plan_units(cps)] == [[0, 1, 2]]
+    shared = sorted(canon(run_batch_multi(ev, cps, emit_cols=emit)))
+    per_pattern = sorted(
+        r for cp in cps
+        for r in canon(run_batch(ev, cp, mode="array", emit_cols=emit)))
+    assert shared == per_pattern
     assert len(shared) > 0
-
-
-def test_engine_facade_strategy_validation():
-    from cep_spark.engine import CepEngine
-
-    single = CepEngine(_pat(Seq(Ev("a", role="user"), Ev("b", role="tool"))))
-    with pytest.raises(ValueError, match="multi-pattern engines only"):
-        single.run_batch(None, strategy="shared")  # validated before df use
-    # single-pattern streaming has one executor: no strategy to pick
-    with pytest.raises(ValueError, match="multi-pattern engines only"):
-        single.run_stream(None, "0 seconds", strategy="rematch")
-
-
-@pytest.mark.parametrize("strategy", ["parition", "group"])
-def test_unknown_batch_strategy_rejected(strategy):
-    """A typo or the deleted per-key 'group' strategy raises instead of
-    running some other executor (validated before df use)."""
-    from cep_spark.batch import run_batch, run_batch_multi
-    from cep_spark.engine import CepEngine
-
-    pats = [_pat(Seq(Ev("a", role="user"), Ev("b", role="tool")), pid=i) for i in (0, 1)]
-    with pytest.raises(ValueError, match="unknown strategy"):
-        run_batch(None, compile_pattern(pats[0]), strategy=strategy)
-    with pytest.raises(ValueError, match="unknown strategy"):
-        run_batch_multi(None, [compile_pattern(p) for p in pats], strategy=strategy)
-    with pytest.raises(ValueError, match="unknown strategy"):
-        CepEngine(*pats).run_batch(None, strategy=strategy)
 
 
 def test_group_identity_in_slot_signature():
@@ -745,7 +727,7 @@ def test_group_identity_in_slot_signature():
 
 
 # ---------------------------------------------------------------------------
-# streaming strategy='shared' — the merged automaton in the state store
+# streaming — merged units in the state store vs per-pattern units
 
 
 def _mergeable_stream_family(mixed_windows=False, with_group=False):
@@ -814,14 +796,15 @@ def _mergeable_stream_family(mixed_windows=False, with_group=False):
        cuts=st.lists(st.integers(0, 24), max_size=4),
        mixed=st.booleans(), grp=st.booleans())
 def test_stream_shared_exactly_once_parity(seed, n, cuts, mixed, grp):
-    """strategy='shared' streaming (merged automaton in the state store,
-    per-tag trailing-neg parking) == per-pattern multi streaming == the
-    union of batch runs over the effective rows — exactly once.  With
-    ``mixed``, the family's windows differ per pattern (round 4)."""
+    """Planned streaming (merged automata in the state store, per-tag
+    trailing-neg parking) == per-pattern singleton units == the union of
+    batch runs over the effective rows — exactly once.  With ``mixed``,
+    the family's windows differ per pattern (round 4)."""
     from test_stream_fn_property import (
         _canon_multi,
         _drive_multi,
         _effective_rows,
+        per_pattern_units,
     )
 
     from cep_spark.batch import matches_to_pdf_array
@@ -835,8 +818,10 @@ def test_stream_shared_exactly_once_parity(seed, n, cuts, mixed, grp):
     batches = [g.iloc[bounds[i]:bounds[i + 1]] for i in range(len(bounds) - 1)]
     final_wm = int(g["ts"].max().value // 1_000_000) + 10_000_000
 
-    out_s, st_s = _drive_multi(cps, batches, final_wm, strategy="shared")
-    out_p, st_p = _drive_multi(cps, batches, final_wm)
+    assert any(len(idxs) > 1 for _, idxs in plan_units(cps))
+    out_s, st_s = _drive_multi(cps, batches, final_wm)
+    out_p, st_p = _drive_multi(cps, batches, final_wm,
+                               units=per_pattern_units(cps))
     got_s, got_p = _canon_multi(out_s), _canon_multi(out_p)
     assert got_s == got_p, f"shared={got_s}\nper-pattern={got_p}"
 
@@ -855,23 +840,21 @@ def test_stream_shared_exactly_once_parity(seed, n, cuts, mixed, grp):
 
 
 def test_stream_shared_checkpoint_format_guard():
-    """A state store written by the per-pattern executor must be refused
-    by strategy='shared' (and vice versa) — loudly, not by corrupting
-    partial tables of the wrong automaton."""
-    from test_stream_fn_property import FakeState, _drive_multi
+    """A state store written under per-pattern units must be refused by
+    the merged plan (and vice versa) — loudly, not by corrupting partial
+    tables of the wrong automaton: the format fingerprint covers the
+    unit plan."""
+    from test_stream_fn_property import FakeState, per_pattern_units
+
+    from cep_spark.stream import _make_multi_fn
 
     cps = [compile_pattern(p) for p in _mergeable_stream_family()]
     g = _group(7, n=16)
     batches = [g.iloc[:8], g.iloc[8:]]
+    plans = {"shared": plan_units(cps), "partition": per_pattern_units(cps)}
 
     def drive_then_switch(first, then):
-        from cep_spark.merge import merge_compiled
-        from cep_spark.stream import _make_multi_fn
-
-        mk_fn = lambda s: _make_multi_fn(
-            cps, ("turn_idx",),
-            merged=merge_compiled(cps) if s == "shared" else None,
-        )
+        mk_fn = lambda s: _make_multi_fn(cps, ("turn_idx",), units=plans[s])
         state = FakeState()
         state.wm_ms = 0
         fn = mk_fn(first)
@@ -882,7 +865,7 @@ def test_stream_shared_checkpoint_format_guard():
             pass
         assert state.exists  # partial tables persisted
         fn2 = mk_fn(then)
-        with pytest.raises(RuntimeError, match="fresh checkpoint"):
+        with pytest.raises(RuntimeError, match="pattern family.*fresh checkpoint"):
             for _ in fn2(("c0",), iter([batches[1]]), state):
                 pass
 
@@ -891,27 +874,24 @@ def test_stream_shared_checkpoint_format_guard():
 
 
 def test_stream_shared_fellback_state_guard():
-    """Round-4 ADVICE (medium): a strategy='shared' run whose merged
-    unit fell back to rematch persists fellback=1 with NO partial
-    tables.  The format indicator must be written unconditionally so a
-    per-pattern restart of that state is refused instead of silently
+    """Round-4 ADVICE (medium): a run whose merged unit fell back to
+    rematch persists fellback=1 with NO partial tables.  The format
+    indicator must be written unconditionally so a restart of that state
+    under per-pattern units is refused instead of silently
     reinterpreting the fellback bitmask (bit 0 = pattern 0) and
     resuming patterns 1..N-1 incrementally with empty tables
     mid-buffer."""
-    from test_stream_fn_property import FakeState
+    from test_stream_fn_property import FakeState, per_pattern_units
 
-    from cep_spark.merge import merge_compiled
     from cep_spark.stream import _make_multi_fn
 
     cps = [compile_pattern(p) for p in _mergeable_stream_family()]
     g = _group(7, n=16)
 
-    # force_rematch stands in for the 8x-buffer fallback: the shared
+    # force_rematch stands in for the 8x-buffer fallback: the merged
     # unit keeps NO partial tables, only buffer + fellback bits
-    fn_shared = _make_multi_fn(
-        cps, ("turn_idx",),
-        merged=merge_compiled(cps), force_rematch=True,
-    )
+    assert [idxs for _, idxs in plan_units(cps)] == [[0, 1, 2, 3]]
+    fn_shared = _make_multi_fn(cps, ("turn_idx",), force_rematch=True)
     state = FakeState()
     state.wm_ms = 0
     for _ in fn_shared(("c0",), iter([g.iloc[:8]]), state):
@@ -920,9 +900,9 @@ def test_stream_shared_fellback_state_guard():
     parts_raw, parked_raw = state._val[2], state._val[3]
     assert parts_raw is None and parked_raw is None  # no tables persisted
     # ...but the layout + family fingerprint ARE recorded
-    assert state._val[7].startswith("shared-v5:")
+    assert state._val[7].startswith("units-v6:")
 
-    fn_perpat = _make_multi_fn(cps, ("turn_idx",), merged=None)
+    fn_perpat = _make_multi_fn(cps, ("turn_idx",), units=per_pattern_units(cps))
     with pytest.raises(RuntimeError, match="fresh checkpoint"):
         for _ in fn_perpat(("c0",), iter([g.iloc[8:]]), state):
             pass
@@ -930,8 +910,8 @@ def test_stream_shared_fellback_state_guard():
 
 def test_stream_family_fingerprint_guard():
     """Round-4 ADVICE (low): persisted parts/fellback/parked are keyed
-    by component index and merged-state sids, so restarting the SAME
-    strategy layout with an edited or reordered pattern list must
+    by unit index and merged-state sids, so restarting the SAME
+    layout with an edited or reordered pattern list must
     refuse loudly (the fmt value carries a family fingerprint) instead
     of restoring partial tables against a different automaton."""
     from test_stream_fn_property import FakeState
@@ -941,23 +921,23 @@ def test_stream_family_fingerprint_guard():
     cps = [compile_pattern(p) for p in _mergeable_stream_family()]
     g = _group(7, n=16)
 
-    fn = _make_multi_fn(cps, ("turn_idx",), merged=None)
+    fn = _make_multi_fn(cps, ("turn_idx",))
     state = FakeState()
     state.wm_ms = 0
     for _ in fn(("c0",), iter([g.iloc[:8]]), state):
         pass
     assert state.exists
 
-    # same layout (perpat), REORDERED family — component-index keys no
-    # longer line up; must refuse with the fingerprint message
-    fn_rev = _make_multi_fn(cps[::-1], ("turn_idx",), merged=None)
+    # same layout, REORDERED family — unit-index keys no longer line
+    # up; must refuse with the fingerprint message
+    fn_rev = _make_multi_fn(cps[::-1], ("turn_idx",))
     with pytest.raises(RuntimeError, match="pattern family"):
         for _ in fn_rev(("c0",), iter([g.iloc[8:]]), state):
             pass
 
     # unchanged family restores cleanly (fingerprint is deterministic
     # across separately-constructed closures)
-    fn_same = _make_multi_fn(cps, ("turn_idx",), merged=None)
+    fn_same = _make_multi_fn(cps, ("turn_idx",))
     for _ in fn_same(("c0",), iter([g.iloc[8:]]), state):
         pass
 
@@ -1009,7 +989,7 @@ def test_family_fingerprint_cross_version_stability():
 
 
 def test_stream_shared_spark_parity(spark, tmp_path):
-    """strategy='shared' through the REAL Structured Streaming state
+    """The merged plan through the REAL Structured Streaming state
     store (availableNow) == union of per-pattern batch runs."""
     from test_stream import _flush_row, _split_files, events_pdf as _mk_pdf
 
@@ -1046,8 +1026,9 @@ def test_stream_shared_spark_parity(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
+    assert [idxs for _, idxs in plan_units(cps)] == [[0, 1, 2]]
     out = stream_matches_multi(sdf, cps, watermark="0 seconds",
-                               emit_cols=emit, strategy="shared")
+                               emit_cols=emit)
     q = (
         out.writeStream.format("memory").queryName("mps").outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
@@ -1071,19 +1052,19 @@ def test_stream_shared_spark_parity(spark, tmp_path):
 
 
 def test_stream_shared_with_state_guard():
-    """strategy='shared' + max_partials_per_state: the loss-only cap
-    applies per MERGED state; output is a subset of the exact run and
-    the state function completes cleanly."""
-    from test_stream_fn_property import FakeState
+    """A merged unit + max_partials_per_state: the loss-only cap
+    applies per MERGED state; the exact merged run equals per-pattern
+    singleton units, the capped one is a subset of it, and the state
+    function completes cleanly."""
+    from test_stream_fn_property import FakeState, per_pattern_units
 
-    from cep_spark.merge import merge_compiled
     from cep_spark.stream import _make_multi_fn
 
     cps = [compile_pattern(p) for p in _mergeable_stream_family()]
     g = _group(11, n=24)
 
-    def drive(cap):
-        fn = _make_multi_fn(cps, ("turn_idx",), merged=merge_compiled(cps), cap=cap)
+    def drive(cap, units=None):
+        fn = _make_multi_fn(cps, ("turn_idx",), units=units, cap=cap)
         state = FakeState()
         rows = []
         wm = 0
@@ -1111,7 +1092,8 @@ def test_stream_shared_with_state_guard():
             for r in rows
         )
 
-    exact = drive(None)
+    exact = drive(None, per_pattern_units(cps))
+    assert drive(None) == exact
     capped = drive(2)
     assert set(capped) <= set(exact)
     assert len(exact) > 0
@@ -1134,7 +1116,7 @@ def test_stream_shared_per_component_fallback():
     """Round-4 VERDICT #3: one exploding rule must not drag rules it
     shares no state with to whole-automaton rematch.  Two disjoint
     components — a benign prefix-shared pair and a Kleene powerset bomb
-    — drive the shared strategy through the fake state; only the bomb's
+    — drive the planned units through the fake state; only the bomb's
     component flips its fellback bit, the benign component keeps its
     partial tables, and emissions match per-pattern batch runs."""
     from test_stream_fn_property import (
@@ -1145,7 +1127,6 @@ def test_stream_shared_per_component_fallback():
     )
 
     from cep_spark.batch import matches_to_pdf_array
-    from cep_spark.merge import merge_components
     from cep_spark.stream import _make_multi_fn
 
     w = timedelta(minutes=30)
@@ -1160,8 +1141,9 @@ def test_stream_shared_per_component_fallback():
              window=w, pid="bomb"),
     ]
     cps = [compile_pattern(p) for p in pats]
-    units = merge_components(cps)
+    units = plan_units(cps)
     assert [idxs for _, idxs in units] == [[0, 1], [2]]
+    assert units[1][0] is cps[2]  # a one-pattern unit is its own automaton
 
     # corpus: the FIRST batch carries 12 tool events (sealed together at
     # the second invocation -> ~2^12 bomb partials > max(256, 8*buflen))
@@ -1189,7 +1171,7 @@ def test_stream_shared_per_component_fallback():
 
     # A/B state inspection: drive the fn directly (not via _drive_multi)
     # so the fellback bitmask / parts can be asserted mid-stream
-    fn = _make_multi_fn(cps, ("turn_idx",), merged=units)
+    fn = _make_multi_fn(cps, ("turn_idx",), units=units)
     state = FakeState()
     out = []
     wm = 0
@@ -1209,7 +1191,7 @@ def test_stream_shared_per_component_fallback():
     assert 0 in parts and 1 not in parts  # benign tables persisted, bomb's dropped
 
     # exactly-once emission parity incl. the drain phase
-    out2, st2 = _drive_multi(cps, batches, final_wm, strategy="shared")
+    out2, st2 = _drive_multi(cps, batches, final_wm)
     eff = _effective_rows(batches)
     want = []
     if len(eff):
@@ -1224,25 +1206,12 @@ def test_stream_shared_per_component_fallback():
     assert st2.removed or not st2.exists
 
 
-@pytest.mark.parametrize("strategy", ["rematch", "remach"])
-def test_unknown_stream_strategy_rejected(strategy):
-    """The per-batch rematch executor is no longer a strategy: 'rematch'
-    is refused like any other unknown value (the in-state fallback to
-    rematching remains, per key and pattern).  Validated before df use."""
-    from cep_spark.stream import stream_matches_multi
-
-    cps = [compile_pattern(p) for p in _mergeable_stream_family()]
-    with pytest.raises(ValueError, match="unknown strategy"):
-        stream_matches_multi(None, cps, watermark="10 seconds", strategy=strategy)
-
-
 def test_merge_components_bucketed():
-    """Round 5: window-decade bucketing before merging — an extreme
-    window spread splits into buckets (capping shared-state retention
-    inflation at max_spread), moderate spreads stay merged, and the
-    partition is deterministic / ordered by smallest global index."""
-    from cep_spark.merge import merge_components, merge_components_bucketed
-
+    """plan_units buckets by retention window before merging: an
+    extreme window spread splits into buckets (capping shared-state
+    retention inflation at merge.WINDOW_SPREAD), moderate spreads stay
+    merged, one-pattern units are the input patterns themselves, and
+    the plan is deterministic / ordered by smallest global index."""
     a = Ev("a", role="user")
     b = Ev("b", role="assistant")
     mk = lambda pid, hours: Pattern(
@@ -1251,37 +1220,49 @@ def test_merge_components_bucketed():
     )
     pats = [mk("p_c", 1), mk("p_d", 168), mk("p_e", 2), mk("p_f", 100)]
     cps = [compile_pattern(p) for p in pats]
-    w_ns_of = [int(p.window.total_seconds() * 1e9) for p in pats]
 
-    comps = merge_components_bucketed(cps, w_ns_of, max_spread=16.0)
-    parts = [idxs for _, idxs in comps]
     # 1h+2h bucket, 100h+168h bucket; ordered by smallest global index
-    assert parts == [[0, 2], [1, 3]]
+    assert [idxs for _, idxs in plan_units(cps)] == [[0, 2], [1, 3]]
 
-    # moderate spread (<= max_spread): single bucket == plain components
-    comps2 = merge_components_bucketed(cps[:1] + cps[2:3],
-                                       [w_ns_of[0], w_ns_of[2]],
-                                       max_spread=16.0)
-    assert [idxs for _, idxs in comps2] == [[0, 1]]
+    # moderate spread (<= 16x): one bucket, one merged unit
+    assert [idxs for _, idxs in plan_units([cps[0], cps[2]])] == [[0, 1]]
 
-    # None disables the guard entirely
-    comps3 = merge_components_bucketed(cps, w_ns_of, max_spread=None)
-    assert [idxs for _, idxs in comps3] == [
-        idxs for _, idxs in merge_components(cps)
-    ]
-
-    # unbounded windows bucket together, after the bounded buckets
+    # unbounded windows bucket together, after the bounded buckets; a
+    # one-pattern unit is its own CompiledPattern
     cps4 = [compile_pattern(Pattern(Seq(a, b, Ev("g", role="tool")),
                                     window=None, pattern_id="p_nw")),
             cps[0]]
-    comps4 = merge_components_bucketed(cps4, [None, w_ns_of[0]],
-                                       max_spread=16.0)
-    assert [idxs for _, idxs in comps4] == [[0], [1]]
+    units4 = plan_units(cps4)
+    assert [idxs for _, idxs in units4] == [[0], [1]]
+    assert units4[0][0] is cps4[0] and units4[1][0] is cps4[1]
+
+
+def test_plan_units_validates_family():
+    """One validation for every executor: shared key/ts/tiebreak columns
+    and distinct pattern_ids — including the window-sliced executor,
+    checked before the DataFrame is touched."""
+    from cep_spark.batch import run_batch_multi
+    from cep_spark.skew import run_batch_multi_sliced
+    from cep_spark.stream import stream_matches_multi
+
+    dup = [compile_pattern(_pat(Seq(Ev("a", role="user"), Ev("b", role="tool")),
+                                pid="same")) for _ in range(2)]
+    for run in (run_batch_multi, run_batch_multi_sliced):
+        with pytest.raises(ValueError, match="pattern_id values must be distinct"):
+            run(None, dup)
+    with pytest.raises(ValueError, match="pattern_id values must be distinct"):
+        stream_matches_multi(None, dup, watermark="10 seconds")
+    other_key = compile_pattern(Pattern(Seq(Ev("a", role="user")), key="user_id",
+                                        pattern_id="k"))
+    with pytest.raises(ValueError, match="key/ts/tiebreak"):
+        plan_units([dup[0], other_key])
+    with pytest.raises(ValueError, match="no patterns"):
+        plan_units([])
 
 
 def test_stream_shared_bucketed_parity(spark, tmp_path):
-    """strategy='shared' with an extreme window spread (bucketed into
-    two components) still equals the union of per-pattern batch runs."""
+    """An extreme window spread (bucketed into two one-pattern units)
+    still equals the union of per-pattern batch runs."""
     import pandas as pd
 
     from cep_spark.batch import run_batch
@@ -1309,8 +1290,9 @@ def test_stream_shared_bucketed_parity(spark, tmp_path):
     sdf = spark.readStream.schema(spark.createDataFrame(pdf2).schema).parquet(
         str(src)
     )
+    assert [idxs for _, idxs in plan_units(cps)] == [[0], [1]]
     out = stream_matches_multi(sdf, cps, watermark="0 seconds",
-                               emit_cols=("turn_idx",), strategy="shared")
+                               emit_cols=("turn_idx",))
     q = (
         out.writeStream.format("memory").queryName("bucketed_par")
         .outputMode("append")

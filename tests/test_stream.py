@@ -954,24 +954,27 @@ def test_stream_state_pre_bump_format_refused():
     names the format change, not reinterpreted: the Arrow-IPC layout
     (perpat-v1 / shared-v2), the column-array layout under the
     fingerprint that still carried the group kind (perpat-v2 /
-    shared-v3), and the one whose fingerprint still carried the
-    ``pos_all`` slot field (perpat-v3 / shared-v4)."""
+    shared-v3), the one whose fingerprint still carried the ``pos_all``
+    slot field (perpat-v3 / shared-v4), and the separate per-pattern /
+    shared layouts that one execution-unit layout replaced (perpat-v4 /
+    shared-v5)."""
     import pyarrow as pa
     from test_stream_fn_property import FakeState
 
-    from cep_spark.merge import merge_compiled
     from cep_spark.stream import _make_multi_fn
 
     cps = _layout_family()
-    for merged, old, why in (
-        (None, "perpat-v1", "Arrow-IPC"),
-        (merge_compiled(cps), "shared-v2", "Arrow-IPC"),
-        (None, "perpat-v2", "fingerprint was redefined"),
-        (merge_compiled(cps), "shared-v3", "fingerprint was redefined"),
-        (None, "perpat-v3", "group position is now conjunctive"),
-        (merge_compiled(cps), "shared-v4", "group position is now conjunctive"),
+    for old, why in (
+        ("perpat-v1", "Arrow-IPC"),
+        ("shared-v2", "Arrow-IPC"),
+        ("perpat-v2", "fingerprint was redefined"),
+        ("shared-v3", "fingerprint was redefined"),
+        ("perpat-v3", "group position is now conjunctive"),
+        ("shared-v4", "group position is now conjunctive"),
+        ("perpat-v4", "one execution-unit layout"),
+        ("shared-v5", "one execution-unit layout"),
     ):
-        fn = _make_multi_fn(cps, ("turn_idx",), merged=merged)
+        fn = _make_multi_fn(cps, ("turn_idx",))
         state = FakeState()
         wm = _sealed_state(fn, state)
         fp = state._val[7].split(":", 1)[1]

@@ -619,14 +619,15 @@ def _effective_rows(batches):
     return pd.concat(keep, ignore_index=True) if keep else pd.DataFrame()
 
 
-def _drive_multi(cps, batches, final_wm_ms, emit_cols=("turn_idx",),
-                 strategy=None):
-    merged = None
-    if strategy == "shared":
-        from cep_spark.merge import merge_components
+def per_pattern_units(cps):
+    """One singleton unit per pattern: the per-pattern reference plan
+    that ``merge.plan_units`` is checked against."""
+    return [(cp, [i]) for i, cp in enumerate(cps)]
 
-        merged = merge_components(cps)
-    fn = _make_multi_fn(cps, emit_cols, merged=merged)
+
+def _drive_multi(cps, batches, final_wm_ms, emit_cols=("turn_idx",),
+                 units=None):
+    fn = _make_multi_fn(cps, emit_cols, units=units)
     state = FakeState()
     out = []
     wm = 0
