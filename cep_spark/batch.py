@@ -14,8 +14,9 @@ Two physical strategies (SURVEY.md §3.4 / §4.2):
   structural.
 
 * ``plan_join``  (join_planner.py) — fixed-arity patterns lowered to
-  pure DataFrame self-joins: all-Catalyst, whole-stage-codegen'd, the
-  100-TB scale path for batch and the shape the DuckDB oracle checks.
+  SQL self-joins run by ``spark.sql``: all-Catalyst,
+  whole-stage-codegen'd, the 100-TB scale path for batch, and the very
+  text the DuckDB oracle runs.
 
 Replaces the reference's single-threaded evaluation-tree loop
 (reference `TreeBasedEvaluationMechanism.py`, SURVEY.md §2.3 E6).
@@ -1345,8 +1346,10 @@ def prefilter(df, cp: CompiledPattern, extra_cols=()):
 
 def prefilter_multi(df, cps, extra_cols=()):
     """Union prefilter across patterns: a row survives if ANY pattern's
-    slot/negation could use it; columns = union of referenced columns."""
-    ors = None
+    slot/negation could use it; columns = union of referenced columns.
+    The filter is one SQL predicate on unqualified column names (one
+    Py4J round trip), which Catalyst pushes into a parquet scan."""
+    ors = {}
     needed = set(extra_cols)
     for cp in cps:
         pat = cp.pattern
@@ -1354,16 +1357,25 @@ def prefilter_multi(df, cps, extra_cols=()):
         for v, cols in cp.needed_cols.items():
             needed.update(cols)
         for alt in cp.alternatives:
-            for s in alt.slots:
-                c = s.unary.spark_col({s.var: df})
-                ors = c if ors is None else (ors | c)
-            for ng in alt.negs:
-                c = ng.unary.spark_col({ng.var: df})
-                ors = c if ors is None else (ors | c)
+            for x in [*alt.slots, *alt.negs]:
+                ors[_scan_sql(x.unary, x.var)] = None
     out = _select_names(df, [c for c in df.columns if c in needed])
-    if ors is not None:
-        out = out.filter(ors)
+    if ors:
+        out = out.filter(" OR ".join(f"({c})" for c in ors))
     return out
+
+
+def _scan_sql(cond, var):
+    """``cond`` on ``var`` as SQL over unqualified columns, without its
+    conjuncts that have no SQL form (UserPred): dropping a conjunct
+    only keeps more rows, and the matcher applies the whole condition."""
+    parts = []
+    for c in cond.conjuncts():
+        try:
+            parts.append(c.sql({var: None}))
+        except NotImplementedError:
+            pass
+    return " AND ".join(parts) or "TRUE"
 
 
 def _select_names(df, names):

@@ -245,9 +245,9 @@ class CompiledAlternative:
     accept_tags: Optional[dict] = None
     # merged automata only: state sid -> frozenset of owning pattern
     # indices (which input patterns touch this merged state).  Drives
-    # merge.merge_components' connected-component partition, so one
-    # exploding rule's streaming rematch fallback doesn't drag rules
-    # that share no state with it.
+    # merge.plan_units' split of a window bucket into connected
+    # components (merge._components), so one exploding rule's streaming
+    # rematch fallback doesn't drag rules that share no state with it.
     state_owners: Optional[dict] = None
 
 
@@ -257,8 +257,6 @@ class CompiledPattern:
     alternatives: list  # list[CompiledAlternative]
     # columns referenced anywhere (for pruning): (var -> set of columns)
     needed_cols: dict
-    # union of per-var unary conditions OR'ed together -> prefilter Column
-    # built lazily in planners to avoid importing pyspark here.
 
     def all_vars(self) -> list[str]:
         seen: list[str] = []

@@ -3,19 +3,21 @@
 The reference expresses conditions as a small Formula/Term algebra over
 user getter-lambdas (reference `Formula.py`, see SURVEY.md §2.2 — the
 reference checkout was empty this session, so citations are to the
-survey's reconstruction).  Ours is declarative: one expression tree that
-compiles to three targets so the engine, Catalyst pushdown, and the
-DuckDB oracle all share a single definition:
+survey's reconstruction).  Ours is declarative: one expression tree with
+two targets, so the engine, Catalyst pushdown, and the DuckDB oracle all
+share a single definition:
 
 * ``pd(env)``      -> vectorized pandas/NumPy evaluation (NFA transitions)
-* ``spark_col()``  -> ``pyspark.sql.Column`` (unary pushdown / join planner)
-* ``sql(aliases)`` -> ANSI SQL string (DuckDB oracle generation)
+* ``sql(aliases)`` -> SQL text that Spark and DuckDB read alike: the scan
+  prefilter (``batch.prefilter_multi``), the Catalyst self-join
+  (``join_planner.plan_join``) and the DuckDB oracle run the same string
 
 No per-row Python anywhere: ``pd`` evaluates whole candidate arrays.
 """
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 from typing import Any, Mapping
 
@@ -41,12 +43,26 @@ __all__ = [
 
 
 def _sql_literal(v: Any) -> str:
+    """``v`` as a SQL literal that Spark and DuckDB read as the same
+    value.  Floats are written with an exponent, which both read as
+    DOUBLE (the NFA's float64), not DECIMAL.  In strings, Spark reads a
+    backslash as an escape and ``spark.sql``'s formatter reads braces, so
+    those characters are spelled ``chr(n)``."""
+    if hasattr(v, "item") and not isinstance(v, (str, bytes)):
+        v = v.item()  # NumPy scalar
     if v is None:
         return "NULL"
     if isinstance(v, bool):
         return "TRUE" if v else "FALSE"
     if isinstance(v, str):
-        return "'" + v.replace("'", "''") + "'"
+        out = "'" + v.replace("'", "''") + "'"
+        for ch in "\\{}":
+            out = out.replace(ch, f"' || chr({ord(ch)}) || '")
+        return f"({out})" if any(ch in v for ch in "\\{}") else out
+    if isinstance(v, float):
+        if not math.isfinite(v):
+            return f"CAST('{v}' AS DOUBLE)"
+        return repr(v) if "e" in repr(v) else f"{v!r}E0"
     return repr(v)
 
 
@@ -64,10 +80,9 @@ class Expr:
         """Evaluate against ``env[var][col]`` (pandas Series or scalars)."""
         raise NotImplementedError
 
-    def sql(self, aliases: Mapping[str, str]) -> str:
-        raise NotImplementedError
-
-    def spark_col(self, var_cols: Mapping[str, Any] | None = None):
+    def sql(self, aliases: Mapping[str, str | None]) -> str:
+        """SQL text with each variable's columns qualified by
+        ``aliases[var]`` (unqualified where it is None)."""
         raise NotImplementedError
 
     # operator sugar ----------------------------------------------------
@@ -141,14 +156,8 @@ class AttrRef(Expr):
         return env[self.var][self.col]
 
     def sql(self, aliases):
-        return f"{aliases[self.var]}.{self.col}"
-
-    def spark_col(self, var_cols=None):
-        from pyspark.sql import functions as F
-
-        if var_cols is not None and self.var in var_cols:
-            return var_cols[self.var][self.col]
-        return F.col(self.col)
+        a = aliases[self.var]
+        return self.col if a is None else f"{a}.{self.col}"
 
     def __repr__(self):
         return f"attr({self.var!r},{self.col!r})"
@@ -169,11 +178,6 @@ class Literal(Expr):
 
     def sql(self, aliases):
         return _sql_literal(self.value)
-
-    def spark_col(self, var_cols=None):
-        from pyspark.sql import functions as F
-
-        return F.lit(self.value)
 
     def __repr__(self):
         return f"lit({self.value!r})"
@@ -205,18 +209,6 @@ class Arith(Expr):
 
     def sql(self, aliases):
         return f"({self.left.sql(aliases)} {self.op} {self.right.sql(aliases)})"
-
-    def spark_col(self, var_cols=None):
-        l, r = self.left.spark_col(var_cols), self.right.spark_col(var_cols)
-        if self.op == "+":
-            return l + r
-        if self.op == "-":
-            return l - r
-        if self.op == "*":
-            return l * r
-        if self.op == "/":
-            return l / r
-        raise ValueError(self.op)
 
     def __repr__(self):
         return f"({self.left!r} {self.op} {self.right!r})"
@@ -274,22 +266,6 @@ class Cmp(Cond):
     def sql(self, aliases):
         return f"({self.left.sql(aliases)} {self.op} {self.right.sql(aliases)})"
 
-    def spark_col(self, var_cols=None):
-        l, r = self.left.spark_col(var_cols), self.right.spark_col(var_cols)
-        if self.op == "=":
-            return l == r
-        if self.op == "<>":
-            return l != r
-        if self.op == "<":
-            return l < r
-        if self.op == "<=":
-            return l <= r
-        if self.op == ">":
-            return l > r
-        if self.op == ">=":
-            return l >= r
-        raise ValueError(self.op)
-
     def __repr__(self):
         return f"({self.left!r} {self.op} {self.right!r})"
 
@@ -319,9 +295,6 @@ class InSet(Cond):
         vals = ", ".join(_sql_literal(v) for v in self.values)
         return f"({self.expr.sql(aliases)} IN ({vals}))"
 
-    def spark_col(self, var_cols=None):
-        return self.expr.spark_col(var_cols).isin(*self.values)
-
     def __repr__(self):
         return f"{self.expr!r}.isin{self.values!r}"
 
@@ -348,10 +321,6 @@ class IsNull(Cond):
         kw = "IS NULL" if self.null else "IS NOT NULL"
         return f"({self.expr.sql(aliases)} {kw})"
 
-    def spark_col(self, var_cols=None):
-        c = self.expr.spark_col(var_cols)
-        return c.isNull() if self.null else c.isNotNull()
-
     def __repr__(self):
         return f"{self.expr!r} {'isnull' if self.null else 'notnull'}"
 
@@ -372,9 +341,6 @@ class BoolAnd(Cond):
 
     def sql(self, aliases):
         return f"({self.left.sql(aliases)} AND {self.right.sql(aliases)})"
-
-    def spark_col(self, var_cols=None):
-        return self.left.spark_col(var_cols) & self.right.spark_col(var_cols)
 
     def conjuncts(self):
         return self.left.conjuncts() + self.right.conjuncts()
@@ -400,9 +366,6 @@ class BoolOr(Cond):
     def sql(self, aliases):
         return f"({self.left.sql(aliases)} OR {self.right.sql(aliases)})"
 
-    def spark_col(self, var_cols=None):
-        return self.left.spark_col(var_cols) | self.right.spark_col(var_cols)
-
     def __repr__(self):
         return f"({self.left!r} | {self.right!r})"
 
@@ -424,9 +387,6 @@ class BoolNot(Cond):
     def sql(self, aliases):
         return f"(NOT {self.inner.sql(aliases)})"
 
-    def spark_col(self, var_cols=None):
-        return ~self.inner.spark_col(var_cols)
-
     def __repr__(self):
         return f"~{self.inner!r}"
 
@@ -439,10 +399,11 @@ class UserPred(Cond):
     ``fn`` receives one pandas/NumPy series per AttrRef argument and
     must return a boolean array (or scalar).  Never called per-row.
 
-    Engine-only: it evaluates in the NFA path (``pd``) and as an
-    Arrow-batched ``pandas_udf`` in DataFrame plans (``spark_col``);
-    it has NO SQL lowering, so patterns using it are excluded from the
-    DuckDB oracle (the driver records a rows-only check)."""
+    Engine-only: it evaluates in the NFA executors (``pd``) and has NO
+    SQL lowering.  The scan prefilter drops its conjuncts (keeping more
+    rows, never fewer), and ``join_planner.plan_join`` /
+    ``oracle_sql_for`` reject it, so patterns using it run on the NFA
+    and carry a hand-written oracle."""
 
     fn: Any
     args: tuple  # tuple[AttrRef, ...]
@@ -477,25 +438,6 @@ class UserPred(Cond):
             f"UserPred {self.name!r} has no SQL lowering (engine-only condition)"
         )
 
-    def spark_col(self, var_cols=None):
-        import pandas as pd  # noqa: F401
-
-        from pyspark.sql.functions import pandas_udf
-
-        f = self.fn
-
-        @pandas_udf("boolean")
-        def _p(*series):
-            import numpy as np
-            import pandas as pd
-
-            r = f(*series)
-            if isinstance(r, (bool, np.bool_)):
-                return pd.Series([bool(r)] * len(series[0]))
-            return pd.Series(np.asarray(r, dtype=bool))
-
-        return _p(*[a.spark_col(var_cols) for a in self.args])
-
     def __repr__(self):
         return f"udf_pred[{self.name}]({', '.join(map(repr, self.args))})"
 
@@ -518,11 +460,6 @@ class TrueCond(Cond):
 
     def sql(self, aliases):
         return "TRUE"
-
-    def spark_col(self, var_cols=None):
-        from pyspark.sql import functions as F
-
-        return F.lit(True)
 
     def conjuncts(self):
         return []
@@ -554,11 +491,6 @@ class FalseCond(Cond):
 
     def sql(self, aliases):
         return "FALSE"
-
-    def spark_col(self, var_cols=None):
-        from pyspark.sql import functions as F
-
-        return F.lit(False)
 
     def __and__(self, o):
         return self

@@ -1,15 +1,19 @@
-"""Fixed-arity lowering: compiled pattern -> pure DataFrame self-joins
-and the equivalent DuckDB oracle SQL, from ONE shared expansion.
+"""Fixed-arity lowering: compiled pattern -> one SQL text of self-joins,
+run by Spark (``plan_join``) and by the DuckDB oracle (``oracle_sql_for``).
 
 This is the 100-TB batch path (SURVEY.md §2.5 "joins" row): all-matches
 CEP over a batch table is exactly a k-way theta self-join on
 (key, time-band, payload predicates) — Kolchinsky & Schuster VLDB'18.
 Everything stays in Catalyst/Tungsten: equi-join on the partition key +
-band conditions on ts, negation as left-anti joins, OR as UNION ALL,
-bounded Kleene as a UNION ALL over arities.  No Python UDFs anywhere.
+band conditions on ts, negation as NOT EXISTS (keyed left-anti joins),
+OR as UNION ALL, bounded Kleene as a UNION ALL over arities.  No Python
+UDFs anywhere.
 
-The same expansion prints the oracle SQL for the driver's DuckDB gate,
-so the Spark plan and the oracle can never drift apart structurally.
+``expand_fixed`` expands the automaton into fixed-arity variants and
+``oracle_sql_for`` renders them once, in SQL both engines read alike
+(``conditions._sql_literal``; the window band as INTERVAL comparisons).
+``plan_join`` hands that text to ``spark.sql``, so the Spark plan and the
+oracle are the same query, built in a handful of Py4J round trips.
 """
 
 from __future__ import annotations
@@ -195,210 +199,46 @@ def _expand_one(cp, alt, arities) -> FixedAlt:
 
 
 # --------------------------------------------------------------------------
-# shared comparison helpers
+# the one SQL rendering
 
 
-def _lex_lt_sql(a, b, ts, tb):
+def _lex_lt(a, b, ts, tb):
     return (
         f"({a}.{ts} < {b}.{ts} OR ({a}.{ts} = {b}.{ts} AND {a}.{tb} < {b}.{tb}))"
     )
 
 
-def _lex_lt_col(A, B, ts, tb):
-    from pyspark.sql import functions as F
-
-    return (F.col(f"{A}.{ts}") < F.col(f"{B}.{ts}")) | (
-        (F.col(f"{A}.{ts}") == F.col(f"{B}.{ts}"))
-        & (F.col(f"{A}.{tb}") < F.col(f"{B}.{tb}"))
-    )
-
-
-class _AliasCols:
-    def __init__(self, alias):
-        self.alias = alias
-
-    def __getitem__(self, col):
-        from pyspark.sql import functions as F
-
-        return F.col(f"{self.alias}.{col}")
-
-
-# --------------------------------------------------------------------------
-# Spark plan
+def _distinct(a, b, ts, tb):
+    return f"({a}.{ts} <> {b}.{ts} OR {a}.{tb} <> {b}.{tb})"
 
 
 def plan_join(df, cp: CompiledPattern, kleene_arities: int | None = None):
-    """Lower to DataFrame self-joins.  Output = the flat schema
+    """Lower to Catalyst self-joins: ``oracle_sql_for``'s text run by
+    ``spark.sql`` over ``df``, in the flat schema
     (``batch.match_schema_flat``): key, alt_id, per-var
-    ``{v}_{tiebreak}`` (kleene: ``{v}_len/_first/_last``).
+    ``{v}_{tiebreak}`` (kleene: ``{v}_len/_first/_last``).  Catalyst
+    prunes the unread columns and pushes each variable's unary
+    conditions into the scan; negations become keyed left-anti joins.
     """
-    from pyspark.sql import functions as F
+    from .batch import match_schema_flat
 
-    from .batch import _select_names, match_schema_flat
-
-    pat = cp.pattern
-    key, ts, tb = pat.key, pat.ts_col, pat.tiebreak_col
-    w = pat.window_seconds()
-    fixed = expand_fixed(cp, kleene_arities)
-
-    # prune columns once: key/ts/tb + any referenced column
-    needed = {key, ts, tb}
-    for v, cols in cp.needed_cols.items():
-        needed.update(cols)
-    base = _select_names(df, [c for c in df.columns if c in needed])
-
-    results = []
-    all_vars = cp.all_vars()
-    kleene_all = set()
-    for a in cp.alternatives:
-        kleene_all |= set(a.kleene_vars)
-
-    for fa in fixed:
-        var_cols = {v: _AliasCols(v) for v, _ in fa.vars}
-        nvar_alias = {}
-        cur = None
-        bound = []
-        pending = list(fa.conds)
-        for v, unary in fa.vars:
-            dv = base.filter(unary.spark_col()).alias(v)
-            if cur is None:
-                cur = dv
-                bound.append(v)
-                continue
-            on = F.col(f"{bound[0]}.{key}") == F.col(f"{v}.{key}")
-            # order constraints involving v and bound vars
-            for a, b in fa.order_pairs:
-                if b == v and a in bound:
-                    on = on & _lex_lt_col(a, v, ts, tb)
-                elif a == v and b in bound:
-                    on = on & _lex_lt_col(v, b, ts, tb)
-            for a, b in fa.distinct_pairs:
-                o = b if a == v else (a if b == v else None)
-                if o is not None and o in bound:
-                    on = on & (
-                        (F.col(f"{v}.{ts}") != F.col(f"{o}.{ts}"))
-                        | (F.col(f"{v}.{tb}") != F.col(f"{o}.{tb}"))
-                    )
-            # window band vs every bound var (≡ span<=W overall; also gives
-            # Catalyst a tight band for pruning)
-            if w is not None:
-                iv = F.expr(f"INTERVAL '{w}' SECOND")
-                for o in bound:
-                    on = (
-                        on
-                        & (F.col(f"{v}.{ts}") >= F.col(f"{o}.{ts}") - iv)
-                        & (F.col(f"{v}.{ts}") <= F.col(f"{o}.{ts}") + iv)
-                    )
-            # payload conditions that become fully bound now
-            for c in list(pending):
-                if c.vars() <= set(bound) | {v} and v in c.vars():
-                    on = on & c.spark_col(var_cols)
-                    pending.remove(c)
-            cur = cur.join(dv, on, "inner")
-            bound.append(v)
-        for c in pending:  # single-var leftovers etc.
-            cur = cur.filter(c.spark_col(var_cols))
-
-        # negation: left-anti joins
-        for ni, (n_unary, n_multi, nvar, pre, post, span, nkind) in enumerate(fa.negs):
-            nalias = f"__neg{ni}"
-            ndf = base.filter(subst(n_unary, {nvar: nalias}).spark_col()).alias(nalias)
-            on = F.col(f"{bound[0]}.{key}") == F.col(f"{nalias}.{key}")
-            if nkind == "gap":
-                for p in pre:
-                    on = on & _lex_lt_col(p, nalias, ts, tb)
-                for p in post:
-                    on = on & _lex_lt_col(nalias, p, ts, tb)
-                # events bound to other match variables are not
-                # negation candidates (an And_ sibling can bind inside
-                # the gap) — same exclusion as the span kind
-                for p in span:
-                    on = on & (
-                        (F.col(f"{nalias}.{ts}") != F.col(f"{p}.{ts}"))
-                        | (F.col(f"{nalias}.{tb}") != F.col(f"{p}.{tb}"))
-                    )
-            elif nkind in ("leading", "trailing"):
-                # n strictly before (after) EVERY positive ≡ before the
-                # earliest (after the latest); window bounds the reach:
-                # leading  : p.ts - n.ts <= W for all p (binds the max)
-                # trailing : n.ts - p.ts <= W for all p (binds the min)
-                iv = F.expr(f"INTERVAL '{w}' SECOND")
-                for p in span:
-                    if nkind == "leading":
-                        on = on & _lex_lt_col(nalias, p, ts, tb)
-                        on = on & (F.col(f"{p}.{ts}") <= F.col(f"{nalias}.{ts}") + iv)
-                    else:
-                        on = on & _lex_lt_col(p, nalias, ts, tb)
-                        on = on & (F.col(f"{p}.{ts}") >= F.col(f"{nalias}.{ts}") - iv)
-            else:
-                after_any = None
-                before_any = None
-                for p in span:
-                    ga = _lex_lt_col(p, nalias, ts, tb)
-                    gb = _lex_lt_col(nalias, p, ts, tb)
-                    after_any = ga if after_any is None else (after_any | ga)
-                    before_any = gb if before_any is None else (before_any | gb)
-                    on = on & (
-                        (F.col(f"{nalias}.{ts}") != F.col(f"{p}.{ts}"))
-                        | (F.col(f"{nalias}.{tb}") != F.col(f"{p}.{tb}"))
-                    )
-                on = on & after_any & before_any
-            ncols = {nalias: _AliasCols(nalias), **var_cols}
-            for c in n_multi:
-                on = on & subst(c, {nvar: nalias}).spark_col(ncols)
-            cur = cur.join(ndf, on, "left_anti")
-
-        # projection to the flat output schema
-        sel = [
-            F.col(f"{bound[0]}.{key}").alias(key),
-            _nullable(F.lit(fa.alt_id).cast("int")).alias("alt_id"),
-        ]
-        for v in all_vars:
-            if v in kleene_all:
-                if v in fa.kleene_emit:
-                    r, evs = fa.kleene_emit[v]
-                    sel += [
-                        _nullable(F.lit(r).cast("long")).alias(f"{v}_len"),
-                        F.col(f"{evs[0]}.{tb}").cast("long").alias(f"{v}_first"),
-                        F.col(f"{evs[-1]}.{tb}").cast("long").alias(f"{v}_last"),
-                    ]
-                else:
-                    sel += [
-                        F.lit(None).cast("long").alias(f"{v}_len"),
-                        F.lit(None).cast("long").alias(f"{v}_first"),
-                        F.lit(None).cast("long").alias(f"{v}_last"),
-                    ]
-            elif any(v == x for x, _ in fa.vars):
-                sel.append(F.col(f"{v}.{tb}").cast("long").alias(f"{v}_{tb}"))
-            else:
-                sel.append(F.lit(None).cast("long").alias(f"{v}_{tb}"))
-        results.append(cur.select(*sel))
-
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
-    # the flat schema every executor shares (`to` keeps a NOT NULL
-    # column NOT NULL, hence `_nullable` on the literals above)
-    return out.to(match_schema_flat(cp, df.schema[key].dataType))
-
-
-def _nullable(c):
-    """``c`` declared nullable, like every flat output column
-    (``batch.match_schema_flat``): ``NULLIF(c, NULL)`` is ``c``, and the
-    optimizer folds it away."""
-    from pyspark.sql import functions as F
-
-    return F.nullif(c, F.lit(None))
-
-
-# --------------------------------------------------------------------------
-# DuckDB oracle SQL (same expansion)
+    text = oracle_sql_for(cp, "{t}", kleene_arities)
+    out = df.sparkSession.sql(text, t=df)
+    return out.to(match_schema_flat(cp, df.schema[cp.pattern.key].dataType))
 
 
 def oracle_sql_for(cp: CompiledPattern, table: str, kleene_arities: int | None = None) -> str:
+    """The fixed-arity lowering as one SQL text over ``table``, read
+    alike by Spark (``plan_join``) and DuckDB (the oracle): per
+    ``expand_fixed`` variant, a self-join on the key with the (ts,
+    tiebreak) order, distinctness, window band and conditions in WHERE,
+    one NOT EXISTS per negation; variants joined by UNION ALL.  Raises
+    NotImplementedError for a condition with no SQL form (UserPred)."""
     pat = cp.pattern
     key, ts, tb = pat.key, pat.ts_col, pat.tiebreak_col
     w = pat.window_seconds()
+    # the window as an exact interval; both engines read this form alike
+    iv = f"INTERVAL '{w}' SECOND"
     fixed = expand_fixed(cp, kleene_arities)
     all_vars = cp.all_vars()
     kleene_all = set()
@@ -414,63 +254,67 @@ def oracle_sql_for(cp: CompiledPattern, table: str, kleene_arities: int | None =
         for v in names[1:]:
             wh.append(f"{names[0]}.{key} = {v}.{key}")
         for a, b in fa.order_pairs:
-            wh.append(_lex_lt_sql(a, b, ts, tb))
+            wh.append(_lex_lt(a, b, ts, tb))
         for a, b in fa.distinct_pairs:
-            wh.append(f"({a}.{ts} <> {b}.{ts} OR {a}.{tb} <> {b}.{tb})")
+            wh.append(_distinct(a, b, ts, tb))
         if w is not None:
             for i in range(len(names)):
                 for j in range(i + 1, len(names)):
                     a, b = names[i], names[j]
-                    wh.append(
-                        f"ABS(EPOCH({a}.{ts}) - EPOCH({b}.{ts})) <= {w!r}"
-                    )
+                    wh.append(f"{b}.{ts} >= {a}.{ts} - {iv}")
+                    wh.append(f"{b}.{ts} <= {a}.{ts} + {iv}")
         for v, unary in fa.vars:
             if not isinstance(unary, type(TRUE)):
                 wh.append(unary.sql(aliases))
         for c in fa.conds:
             wh.append(c.sql(aliases))
-        for n_unary, n_multi, nvar, pre, post, span, nkind in fa.negs:
-            na = {nvar: "n", **aliases}
-            inner = [f"n.{key} = {names[0]}.{key}"]
-            u = n_unary.sql({nvar: "n"})
+        for ni, (n_unary, n_multi, nvar, pre, post, span, nkind) in enumerate(fa.negs):
+            n = f"__neg{ni}"
+            inner = [f"{n}.{key} = {names[0]}.{key}"]
+            u = n_unary.sql({nvar: n})
             if u != "TRUE":
                 inner.append(u)
             if nkind == "gap":
                 for p in pre:
-                    inner.append(_lex_lt_sql(p, "n", ts, tb))
+                    inner.append(_lex_lt(p, n, ts, tb))
                 for p in post:
-                    inner.append(_lex_lt_sql("n", p, ts, tb))
+                    inner.append(_lex_lt(n, p, ts, tb))
                 # exclude events bound to other match variables (an
                 # And_ sibling can bind inside the gap)
                 for p in span:
-                    inner.append(f"(n.{ts} <> {p}.{ts} OR n.{tb} <> {p}.{tb})")
+                    inner.append(_distinct(n, p, ts, tb))
             elif nkind in ("leading", "trailing"):
+                # n strictly before (after) EVERY positive, within the
+                # window of each
                 for p in span:
                     if nkind == "leading":
-                        inner.append(_lex_lt_sql("n", p, ts, tb))
-                        inner.append(f"EPOCH({p}.{ts}) - EPOCH(n.{ts}) <= {w!r}")
+                        inner.append(_lex_lt(n, p, ts, tb))
+                        inner.append(f"{p}.{ts} <= {n}.{ts} + {iv}")
                     else:
-                        inner.append(_lex_lt_sql(p, "n", ts, tb))
-                        inner.append(f"EPOCH(n.{ts}) - EPOCH({p}.{ts}) <= {w!r}")
+                        inner.append(_lex_lt(p, n, ts, tb))
+                        inner.append(f"{p}.{ts} >= {n}.{ts} - {iv}")
             else:
-                inner.append("(" + " OR ".join(_lex_lt_sql(p, "n", ts, tb) for p in span) + ")")
-                inner.append("(" + " OR ".join(_lex_lt_sql("n", p, ts, tb) for p in span) + ")")
+                inner.append("(" + " OR ".join(_lex_lt(p, n, ts, tb) for p in span) + ")")
+                inner.append("(" + " OR ".join(_lex_lt(n, p, ts, tb) for p in span) + ")")
                 for p in span:
-                    inner.append(f"(n.{ts} <> {p}.{ts} OR n.{tb} <> {p}.{tb})")
+                    inner.append(_distinct(n, p, ts, tb))
             for c in n_multi:
-                inner.append(subst(c, {nvar: "n"}).sql(na))
+                inner.append(c.sql({nvar: n, **aliases}))
             wh.append(
-                f"NOT EXISTS (SELECT 1 FROM {table} AS n WHERE "
+                f"NOT EXISTS (SELECT 1 FROM {table} AS {n} WHERE "
                 + " AND ".join(inner)
                 + ")"
             )
-        cols = [f"{names[0]}.{key} AS {key}", f"CAST({fa.alt_id} AS INT) AS alt_id"]
+        # every output column nullable, as in batch.match_schema_flat:
+        # NULLIF(x, NULL) is x, declared nullable
+        cols = [f"{names[0]}.{key} AS {key}",
+                f"NULLIF(CAST({fa.alt_id} AS INT), NULL) AS alt_id"]
         for v in all_vars:
             if v in kleene_all:
                 if v in fa.kleene_emit:
                     r, evs = fa.kleene_emit[v]
                     cols += [
-                        f"CAST({r} AS BIGINT) AS {v}_len",
+                        f"NULLIF(CAST({r} AS BIGINT), NULL) AS {v}_len",
                         f"CAST({evs[0]}.{tb} AS BIGINT) AS {v}_first",
                         f"CAST({evs[-1]}.{tb} AS BIGINT) AS {v}_last",
                     ]
@@ -484,5 +328,6 @@ def oracle_sql_for(cp: CompiledPattern, table: str, kleene_arities: int | None =
                 cols.append(f"CAST({v}.{tb} AS BIGINT) AS {v}_{tb}")
             else:
                 cols.append(f"CAST(NULL AS BIGINT) AS {v}_{tb}")
-        selects.append(f"SELECT {', '.join(cols)} FROM {frm} WHERE " + " AND ".join(wh))
+        selects.append(f"SELECT {', '.join(cols)} FROM {frm} WHERE "
+                       + (" AND ".join(wh) or "TRUE"))
     return "\nUNION ALL\n".join(selects)

@@ -140,7 +140,11 @@ def main() -> None:
 
 def _drive(cps, units, n_batches, events_per_batch, seed=2026):
     """Run one unit plan over the SAME generated stream; return
-    (matches_emitted, buffer-rows series, partial-rows series)."""
+    (matches_emitted, buffer-rows series, partial-rows series, the
+    1-based batch after which a unit's rematch-fallback bit was first
+    set or None, the final fallback bitmask over ``units``).  A unit
+    that falls back persists no partial tables, so its partial-rows
+    series says nothing about its state size."""
     import pickle
 
     fn = _make_multi_fn(cps, ("turn_idx",), units=units)
@@ -148,8 +152,8 @@ def _drive(cps, units, n_batches, events_per_batch, seed=2026):
     state = FakeState()
     ts0 = pd.Timestamp("2026-01-01")
     t_cursor = turn = wm = emitted = 0
-    buf_series, part_series = [], []
-    for _ in range(n_batches):
+    buf_series, part_series, fellback_at = [], [], None
+    for bi in range(n_batches):
         n = events_per_batch
         # sparser than the plateau soak: the A/B's long window must hold
         # a bounded event count or the unbucketed variant's quadratic
@@ -180,7 +184,9 @@ def _drive(cps, units, n_batches, events_per_batch, seed=2026):
                 if isinstance(raw, (bytes, bytearray))
             ))
             buf_series.append(_state_rows(state))
-    return emitted, buf_series, part_series
+            if fellback_at is None and state._val[6]:
+                fellback_at = bi + 1
+    return emitted, buf_series, part_series, fellback_at, state._val[6]
 
 
 def ab_mixed_windows() -> None:
@@ -190,7 +196,9 @@ def ab_mixed_windows() -> None:
     (one whole-family merged unit) retains the short rules'
     shared-prefix partials to W_max; merge.plan_units' 16x window
     bucketing splits them into two units and caps the inflation.
-    Counts only — host-steal-proof."""
+    Counts only — host-steal-proof.  A variant whose unit fell back to
+    rematch reports the batch it did so (``fellback_at_batch``) and no
+    inflation ratio."""
     from cep_spark.merge import merge_compiled, plan_units
 
     a = Ev("a", role="user")
@@ -213,7 +221,7 @@ def ab_mixed_windows() -> None:
            "window_spread": "45s/45s/900s (20x)"}
     baseline = None
     for name, units in variants.items():
-        emitted, _bufs, parts = _drive(
+        emitted, _bufs, parts, fellback_at, mask = _drive(
             cps, units, N_BATCHES, EVENTS_PER_BATCH)
         if baseline is None:
             baseline = emitted
@@ -222,14 +230,19 @@ def ab_mixed_windows() -> None:
             "units": len(units),
             "partial_rows_max": int(max(parts)),
             "partial_rows_mean": round(float(np.mean(parts)), 1),
+            "fellback_at_batch": fellback_at,
+            "fellback_patterns": [
+                pats[i].pattern_id for ui, (_ucp, idxs) in enumerate(units)
+                if mask >> ui & 1 for i in idxs],
         }
     out["matches_emitted_all_equal"] = baseline
-    out["inflation_unbucketed_vs_perpat"] = round(
-        out["shared_unbucketed"]["partial_rows_mean"]
-        / max(out["per_pattern"]["partial_rows_mean"], 1e-9), 2)
-    out["inflation_bucketed_vs_perpat"] = round(
-        out["shared_bucketed16"]["partial_rows_mean"]
-        / max(out["per_pattern"]["partial_rows_mean"], 1e-9), 2)
+    per = out["per_pattern"]
+    for name, tag in (("shared_unbucketed", "unbucketed"),
+                      ("shared_bucketed16", "bucketed")):
+        if out[name]["fellback_at_batch"] is None and per["fellback_at_batch"] is None:
+            out[f"inflation_{tag}_vs_perpat"] = round(
+                out[name]["partial_rows_mean"]
+                / max(per["partial_rows_mean"], 1e-9), 2)
     print(json.dumps(out))
 
 

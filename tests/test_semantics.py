@@ -159,7 +159,7 @@ def test_empty_group():
 
 def test_user_pred_vectorized(spark, events_df):
     """udf_pred == the equivalent declarative condition (NFA + prefilter
-    paths), and is excluded from SQL lowering."""
+    paths), and is excluded from SQL lowering and the join executor."""
     from datetime import timedelta
 
     import pytest
@@ -167,7 +167,7 @@ def test_user_pred_vectorized(spark, events_df):
     from cep_spark.batch import run_batch
     from cep_spark.compiler import compile_pattern
     from cep_spark.conditions import attr, lit, udf_pred
-    from cep_spark.join_planner import oracle_sql_for
+    from cep_spark.join_planner import oracle_sql_for, plan_join
     from cep_spark.pattern import Ev, Pattern, Seq
 
     def mk(cond_b):
@@ -186,6 +186,18 @@ def test_user_pred_vectorized(spark, events_df):
     assert got == want and len(got) > 0
     with pytest.raises(NotImplementedError):
         oracle_sql_for(cp_udf, "events")
+    with pytest.raises(NotImplementedError, match="'2x'"):
+        plan_join(events_df, cp_udf)
+    # a unary udf: the scan prefilter drops only the udf conjunct, so the
+    # declarative one still reaches the parquet scan
+    cp_unary = mk(udf_pred(lambda v: v > 50, attr("b", "value"), name="big"))
+    out = run_batch(events_df, cp_unary, mode="flat")
+    plan = out._sc._jvm.PythonSQLUtils.explainString(
+        out._jdf.queryExecution(), "formatted")
+    assert "EqualTo(event_type,purchase)" in plan
+    want = run_batch(events_df, mk(attr("b", "value") > lit(50)), mode="flat")
+    got = sorted(map(tuple, out.collect()))
+    assert got == sorted(map(tuple, want.collect())) and len(got) > 0
 
 
 def test_per_turn_text_equality(spark, transcripts_df, transcripts_pdf):
