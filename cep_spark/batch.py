@@ -2,8 +2,9 @@
 
 Two physical strategies (SURVEY.md §3.4 / §4.2):
 
-* ``run_batch``  — repartition(key) + sortWithinPartitions(key, ts,
-  tiebreak) + one mapInPandas per partition.  The compiled NFA advances
+* ``run_batch``  — repartition(key) + one mapInPandas per partition,
+  which orders the partition by (key, ts, tiebreak) with one NumPy
+  ``lexsort`` (``_partition_columns``).  The compiled NFA advances
   every key group of the partition in LOCKSTEP (``advance_groups``):
   step t applies the t-th firing event of each key that has one, as
   NumPy operations over the union of all keys' partial-match tables,
@@ -68,6 +69,46 @@ def group_bounds(*cols) -> np.ndarray:
     for c in cols:
         change |= c[1:] != c[:-1]
     return np.concatenate([[0], np.nonzero(change)[0] + 1, [n]]).astype(np.int64)
+
+
+def _sort_keys(a) -> list:
+    """``np.lexsort`` keys (least significant first) that order ``a``
+    ascending with nulls first, as Spark's ascending sort does.  Object
+    columns are factorized: a ``lexsort`` over Python objects compares
+    them one pair at a time."""
+    if a.dtype.kind in "iub":
+        return [a]
+    if a.dtype.kind == "f":
+        return [a, ~np.isnan(a)]
+    return [pd.factorize(a, sort=True)[0]]  # null -> code -1, first
+
+
+def _partition_columns(batches, key_col, ts_col, tb_col, slice_col=None):
+    """One partition of a matcher stage as sorted column arrays:
+    ``(cols, ts_ns, bounds, store)``, or None for an empty partition.
+
+    The chunks are concatenated once and ordered by (key, [slice,] ts,
+    tiebreak) with one ``np.lexsort``, nulls first as in Spark's
+    ascending sort; ``ts_ns`` is the event time as int64 ns
+    (NaT is the int64 minimum, so it sorts first) and ``bounds`` are the
+    row offsets of the (key[, slice]) groups (``group_bounds``)."""
+    chunks = list(batches)
+    if not chunks:
+        return None
+    pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
+    if len(pdf) == 0:
+        return None
+    cols = {c: pdf[c].to_numpy() for c in pdf.columns}
+    ts_ns = cols[ts_col].astype("datetime64[ns]").astype(np.int64)
+    group_cols = [key_col] + ([slice_col] if slice_col else [])
+    keys = _sort_keys(cols[tb_col]) + [ts_ns]
+    for c in reversed(group_cols):
+        keys += _sort_keys(cols[c])
+    order = np.lexsort(keys)
+    cols = {c: v[order] for c, v in cols.items()}
+    ts_ns = ts_ns[order]
+    bounds = group_bounds(*(cols[c] for c in group_cols))
+    return cols, ts_ns, bounds, _ColStore.from_cols(cols)
 
 
 def _obj_array(items) -> np.ndarray:
@@ -1299,11 +1340,11 @@ def _flush_guard_stats(stats, acc):
 
 def run_batch(df, cp: CompiledPattern, mode="flat", emit_cols=("turn_idx", "role", "tool", "ts"),
               assume_clustered=False, max_partials_per_state=None):
-    """Batch NFA execution: repartition(key) +
-    sortWithinPartitions(key, ts, tb) + ONE mapInPandas over each whole
-    partition: unary conditions evaluated vectorized ONCE per partition,
-    group boundaries found by key-change scan, ONE lockstep NFA advance
-    over all key groups (``advance_groups``: one NumPy step per
+    """Batch NFA execution: repartition(key) + ONE mapInPandas over
+    each whole partition: the partition sorted by (key, ts, tb) with one
+    NumPy lexsort, unary conditions evaluated vectorized ONCE per
+    partition, group boundaries found by key-change scan, ONE lockstep
+    NFA advance over all key groups (``advance_groups``: one NumPy step per
     firing-event rank, not one Python iteration per event), one output
     frame per partition.  Small-group fixed costs (per-group pandas
     frames, per-group condition eval, per-group Arrow round trip,
@@ -1316,10 +1357,11 @@ def run_batch(df, cp: CompiledPattern, mode="flat", emit_cols=("turn_idx", "role
     scan (Catalyst forwards them to parquet).
 
     ``assume_clustered=True`` skips the repartition(key) shuffle: the
-    caller asserts every key's rows already live in one partition
-    (bucketed table, pre-partitioned write, or an upstream exchange) —
-    the zero-shuffle path scripts/demo_bucketing.py demonstrates for
-    the join lowering, extended here to the NFA executor.
+    caller asserts every key's rows already live in one partition, in
+    any order (bucketed table, pre-partitioned write, or an upstream
+    exchange) — the zero-shuffle path scripts/demo_bucketing.py
+    demonstrates for the join lowering, extended here to the NFA
+    executor.
 
     ``max_partials_per_state`` (opt-in state guard, default None=exact):
     bound the per-key per-NFA-state partial-match tables, dropping the
@@ -1401,8 +1443,8 @@ def _select_names(df, names):
 def run_batch_multi(df, cps, emit_cols=("turn_idx", "role", "tool", "ts"),
                     assume_clustered=False, max_partials_per_state=None):
     """Run N compiled patterns over one keyed scan: single shuffle,
-    single sort, one matcher pass per execution unit; output is the
-    array schema with ``pattern_id`` distinguishing the patterns.
+    one in-partition sort, one matcher pass per execution unit; output
+    is the array schema with ``pattern_id`` distinguishing the patterns.
 
     The units are ``merge.plan_units(cps)``: patterns that share a
     non-initial automaton state (and whose windows are within 16x of
@@ -1446,27 +1488,16 @@ def _run_batch_multi_partition(df, cps, emit_cols, assume_clustered=False, cap=N
     else:
         schema = match_schema_array(p0, emit_cols, key_type)
     base = prefilter_multi(df, cps, extra_cols=emit_cols)
-    if assume_clustered:
-        rep = base.sortWithinPartitions(p0.key, p0.ts_col, p0.tiebreak_col)
-    else:
-        rep = base.repartition(cpu_parallelism(df), p0.key).sortWithinPartitions(
-            p0.key, p0.ts_col, p0.tiebreak_col
-        )
-    ts_col, key_col = p0.ts_col, p0.key
+    rep = base if assume_clustered else base.repartition(cpu_parallelism(df), p0.key)
+    key_col, ts_col, tb_col = p0.key, p0.ts_col, p0.tiebreak_col
 
     def gen(batches):
-        chunks = list(batches)
-        if not chunks:
+        part = _partition_columns(batches, key_col, ts_col, tb_col)
+        if part is None:
             return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        n = len(pdf)
-        if n == 0:
-            return
-        cols_all = {c: pdf[c].to_numpy() for c in pdf.columns}
+        cols_all, ts_all, bounds, store = part
         keys = cols_all[key_col]
-        bounds = group_bounds(keys)
-        ts_all = cols_all[ts_col].astype("datetime64[ns]").astype(np.int64)
-        store = _ColStore.from_cols(cols_all)
+        n = len(ts_all)
         shared = {}  # one evaluation per distinct predicate across ALL units
         stats = {}
         rows = []

@@ -21,8 +21,11 @@ Scale notes (100 TB path):
   (shuffle on 16-byte keys), verification joins back only candidate
   pairs.  This is the textbook O(n·k) + candidates path.
 * simhash_pairs: hamming<=D via the pigeonhole block trick — D+1
-  blocks, equi-join per block, UNION, verify with bit_count(xor()) —
-  exact (no recall loss), all equi-joins.
+  blocks, one equi-join on (block, value), verify with
+  bit_count(xor()) — exact (no recall loss).  A pair is kept only on
+  the lowest block where both signatures agree, so it is emitted once
+  and needs no DISTINCT (Manku et al., WWW 2007).  The documents are
+  dealt round-robin over the task slots before the regex and md5 work.
 """
 
 from __future__ import annotations
@@ -424,7 +427,17 @@ _SPARK_SIMHASH = "CAST({} AS BIGINT) AS simhash".format(" + ".join(
 def q_simhash(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    words = _read_docs(spark, sf_dir).selectExpr(
+    from ..batch import cpu_parallelism
+
+    d = _read_docs(spark, sf_dir)
+    # the word stage (regex, md5, 28 bit sums) is CPU-bound over few
+    # bytes and a small table is one split: deal the documents round-robin
+    # over the task slots first (batch.cpu_parallelism).  Not hashed on
+    # doc_id: the aggregate would then need no exchange of its own, and
+    # the broadcast and the probe side of simhash_pairs' self-join,
+    # which share that one exchange but not the work above it, would
+    # each run the word stage
+    words = d.repartition(cpu_parallelism(d)).selectExpr(
         "doc_id", f"explode(split({_spark_norm_sql_spark()}, ' ')) AS w"
     ).selectExpr("doc_id", f"{_SPARK_H_EXPR.format(s='w')} AS h")
     agg = words.groupBy("doc_id").agg(F.expr(_SPARK_SIMHASH_SUMS))
@@ -459,13 +472,20 @@ def q_simhash_pairs(spark, sf_dir):
         f"named_struct('blk', {k}, 'bval', shiftright(simhash, {k * width}) & {(1 << width) - 1})"
         for k in range(nblocks)
     )
+    # a pair is kept only on the LOWEST block where the two signatures
+    # agree (every lower block differs), so each pair is emitted once
+    # and no DISTINCT is needed
+    lowest = " AND ".join(
+        f"(x.blk <= {k} OR ((x.simhash ^ y.simhash) >> {k * width}) & {(1 << width) - 1} != 0)"
+        for k in range(nblocks - 1)
+    )
     e = q_simhash(spark, sf_dir).selectExpr(
         "doc_id", "simhash", f"explode(array({blocks})) AS b"
     ).selectExpr("doc_id", "simhash", "b.blk AS blk", "b.bval AS bval")
     return (
         e.alias("x").join(
             e.alias("y"),
-            F.expr("x.blk = y.blk AND x.bval = y.bval AND x.doc_id < y.doc_id"),
+            F.expr(f"x.blk = y.blk AND x.bval = y.bval AND x.doc_id < y.doc_id AND {lowest}"),
         )
         .selectExpr(
             "x.doc_id AS doc_id_a",
@@ -473,7 +493,6 @@ def q_simhash_pairs(spark, sf_dir):
             "CAST(bit_count(x.simhash ^ y.simhash) AS INT) AS hamming",
         )
         .filter(f"hamming <= {SIMHASH_HAM_D}")
-        .distinct()
     )
 
 

@@ -22,12 +22,15 @@ to get it back.
 ``read_parquet`` reads a parquet table with its schema inferred once
 per Spark application: a table path's schema is fixed for the life of
 an application (``cep_spark.pipeline.release_caches()`` forgets the
-memoized schemas).
+memoized schemas).  A warm read is one Py4J round trip, and the frame
+it returns already holds the schema, so ``.columns`` / ``.schema`` cost
+none.
 """
 
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -55,9 +58,13 @@ DEFAULTS = {
     "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
-# (application id, path) -> StructType inferred by the first read; two
-# concurrent first reads both infer, which is harmless
+# (application id, path) -> (StructType inferred by the first read, the
+# JVM session of the reader, a JVM reader that carries the schema, the
+# path as a JVM Seq); two concurrent first reads both infer, which is
+# harmless
 _SCHEMAS: dict = {}
+# SparkContext -> its application id (reading it is two round trips)
+_APP_IDS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
 def get_spark(
@@ -92,14 +99,33 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     Spark application and given to every later read.  Inference runs a
     Spark job on each call (sf0.1 events, local[2], 4-CPU host: a median
     228 ms against 59 ms with the schema given); the file listing stays
-    per call, so files added under ``path`` are read."""
-    key = (spark.sparkContext.applicationId, path)
-    schema = _SCHEMAS.get(key)
-    if schema is None:
+    per call, so files added under ``path`` are read.
+
+    A later read reuses the JVM-side reader that holds the schema and
+    the path (``DataFrameReader.parquet`` only sets its format, the same
+    each time, before it lists and resolves the files), and hands the
+    Python schema to the frame it returns: one Py4J round trip."""
+    sc, jss = spark.sparkContext, spark._jsparkSession
+    app = _APP_IDS.get(sc)
+    if app is None:
+        app = _APP_IDS[sc] = sc.applicationId
+    key = (app, path)
+    if key not in _SCHEMAS:
         df = spark.read.parquet(path)
-        _SCHEMAS[key] = df.schema
+        _SCHEMAS[key] = (df.schema, jss, _reader(jss, df.schema),
+                         sc._jvm.PythonUtils.toSeq([path]))
         return df
-    return spark.read.schema(schema).parquet(path)
+    schema, owner, jreader, jpaths = _SCHEMAS[key]
+    if owner is not jss:  # another session of the same application
+        jreader = _reader(jss, schema)
+        _SCHEMAS[key] = (schema, jss, jreader, jpaths)
+    df = DataFrame(jreader.parquet(jpaths), spark)
+    df.schema = schema  # DataFrame.schema is a cached_property
+    return df
+
+
+def _reader(jss, schema):
+    return jss.read().schema(jss.parseDataType(schema.json()))
 
 
 def forget_schemas() -> int:

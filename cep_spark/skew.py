@@ -84,10 +84,9 @@ def _run_sliced(df, cps, emit_cols, mode):
 
     from ._serde import ensure_shippable
     from .batch import (
-        _ColStore,
+        _partition_columns,
         advance_groups,
         cpu_parallelism,
-        group_bounds,
         match_schema_array,
         match_schema_flat,
         prefilter_multi,
@@ -133,32 +132,24 @@ def _run_sliced(df, cps, emit_cols, mode):
     out_cols = schema.fieldNames()
 
     # partition-amortized execution (mirrors batch._run_batch_multi_
-    # partition): repartition on (key, slice), sort within partitions,
-    # then ONE mapInPandas pass per partition — unary masks evaluate
-    # once over the whole partition and every (key, slice) group is a
-    # numpy slice of it.  The pinned repartition also keeps AQE's
-    # byte-based coalescing from collapsing the CPU-bound matcher stage
-    # (the whole point of slicing is parallelism; batch.cpu_parallelism).
-    sliced = sliced.repartition(
-        cpu_parallelism(df), key_col, "__slice"
-    ).sortWithinPartitions(key_col, "__slice", ts_col, tb_col)
+    # partition): repartition on (key, slice), then ONE mapInPandas pass
+    # per partition that sorts it by (key, slice, ts, tb) in NumPy
+    # (batch._partition_columns) — unary masks evaluate once over the
+    # whole partition and every (key, slice) group is a numpy slice of
+    # it.  The pinned repartition also keeps AQE's byte-based coalescing
+    # from collapsing the CPU-bound matcher stage (the whole point of
+    # slicing is parallelism; batch.cpu_parallelism).
+    sliced = sliced.repartition(cpu_parallelism(df), key_col, "__slice")
 
     def gen(batches):
         import pandas as pd
 
-        chunks = list(batches)
-        if not chunks:
+        part = _partition_columns(batches, key_col, ts_col, tb_col, "__slice")
+        if part is None:
             return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        n = len(pdf)
-        if n == 0:
-            return
-        cols_all = {c: pdf[c].to_numpy() for c in pdf.columns}
-        keys = cols_all[key_col]
-        slices = cols_all["__slice"]
-        bounds = group_bounds(keys, slices)
-        ts_all = cols_all[ts_col].astype("datetime64[ns]").astype(np.int64)
-        store = _ColStore.from_cols(cols_all)
+        cols_all, ts_all, bounds, store = part
+        keys, slices = cols_all[key_col], cols_all["__slice"]
+        n = len(ts_all)
         shared = {}
         rows = []
         for ucp, idxs in units:

@@ -11,8 +11,11 @@ Scale notes: windowed aggregations are hash-aggregates keyed on
 (key, window) — map-side partial aggregation applies, no joins; the
 sliding form fans each row out `window/slide` times before the
 aggregate (that factor is the cost knob).  Session windows in batch
-lower to the classic islands construction (lag + cumulative sum over a
-per-key window) — one shuffle on the key, no self-join.
+run Spark's ``session_window`` aggregate over one exchange on the key,
+pinned to ``batch.cpu_parallelism`` partitions: the stage is CPU-bound
+over few bytes, and AQE's byte-based coalescing ran it as one task.
+The oracle is the classic islands construction (lag + cumulative sum
+over a per-key window) — no self-join.
 """
 
 from __future__ import annotations
@@ -97,7 +100,13 @@ GROUP BY 1, 2
 def q_session(spark, sf_dir):
     from pyspark.sql import functions as F
 
+    from .batch import cpu_parallelism
+
     e = _read_events(spark, sf_dir)
+    # the key exchange is pinned to the task slots (AQE would coalesce
+    # this CPU-bound stage to one task); it satisfies the session
+    # aggregate's clustering, so it is the plan's only shuffle
+    e = e.repartition(cpu_parallelism(e), "user_id")
     w = F.session_window("ts", f"{SESSION_GAP_S} seconds")
     return (
         e.groupBy("user_id", w.alias("w"))

@@ -4,6 +4,7 @@ broadcast of the small side (SURVEY.md §4)."""
 
 from __future__ import annotations
 
+import re
 from datetime import timedelta
 
 import pytest
@@ -89,8 +90,6 @@ def test_edge_neg_anti_join_is_keyed(spark, events):
 
 def test_multi_pattern_single_shuffle(spark, events):
     """run_batch_multi: N patterns share ONE scan and ONE shuffle."""
-    import re
-
     from __spark_entry__ import queries
 
     plan = _formatted(queries()["cep_multi"](spark, SF))
@@ -143,9 +142,8 @@ def test_nfa_stage_parallelism_pinned(spark, events):
 def test_assume_clustered_skips_exchange(spark, events):
     """assume_clustered=True: the caller guarantees key-clustered input
     (bucketed table / pre-partitioned write) and the NFA executor must
-    add NO shuffle of its own — only the in-partition sort."""
-    import re
-
+    add NO shuffle of its own, and no Spark sort: the mapInPandas pass
+    orders each partition itself."""
     from cep_spark.batch import run_batch
 
     pat = Pattern(
@@ -159,7 +157,70 @@ def test_assume_clustered_skips_exchange(spark, events):
     )
     # exactly the caller's own exchange; the executor adds none
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
-    assert "Sort" in plan
+    assert "Sort" not in plan
+
+
+def test_nfa_stages_sort_in_python(spark, events):
+    """Neither NFA executor asks Spark to sort: the plain and the sliced
+    matcher stages are an exchange straight into MapInPandas, which
+    sorts each partition with one NumPy lexsort."""
+    from cep_spark.batch import run_batch_multi
+    from cep_spark.skew import run_batch_multi_sliced
+
+    pats = [
+        Pattern(Seq(Ev("a", event_type="signup"), Ev("b", event_type=t)),
+                window=timedelta(hours=24), key="user_id", ts_col="ts",
+                tiebreak_col="event_id", pattern_id=i)
+        for i, t in enumerate(("purchase", "click"))
+    ]
+    cps = [compile_pattern(p) for p in pats]
+    for out in (run_batch_multi(events, cps), run_batch_multi_sliced(events, cps)):
+        plan = _formatted(out)
+        assert "MapInPandas" in plan
+        assert "Sort" not in plan
+
+
+def _exchanges(plan: str) -> set:
+    """(partitioning, shuffle origin) of each exchange a formatted plan
+    details (AQE's final and initial plans list the same ones)."""
+    return set(re.findall(r"Arguments: (.*), (REPARTITION_BY_NUM|ENSURE_REQUIREMENTS|"
+                      r"REPARTITION_BY_COL)", plan))
+
+
+def test_cpu_bound_catalog_stages_pinned(spark):
+    """``win_session``'s session aggregate and SimHash's word stage are
+    CPU-bound over few bytes, so, like the NFA stage, they run on an
+    exchange pinned to ``cpu_parallelism`` partitions, which AQE's
+    byte-based coalescing leaves alone."""
+    from __spark_entry__ import queries
+
+    from cep_spark.batch import cpu_parallelism
+
+    q = queries()
+    n = cpu_parallelism(spark.range(1))
+    sess = q["win_session"](spark, SF)
+    sess.collect()
+    # the pinned key exchange is the session plan's only shuffle
+    ((part, kind),) = _exchanges(_formatted(sess))
+    assert re.fullmatch(rf"hashpartitioning\(user_id#\d+L?, {n}\)", part), part
+    assert kind == "REPARTITION_BY_NUM"
+    assert sess.rdd.getNumPartitions() == n
+    for name in ("doc_simhash", "doc_simhash_pairs"):
+        df = q[name](spark, SF)
+        df.collect()
+        assert (f"RoundRobinPartitioning({n})", "REPARTITION_BY_NUM") in _exchanges(_formatted(df))
+
+
+def test_simhash_pairs_have_no_distinct(spark):
+    """Each near-duplicate pair is emitted on the lowest block where the
+    two signatures agree, so the plan has no DISTINCT: its only
+    aggregates are the per-document signature sums."""
+    from cep_spark.pipeline.docs import q_simhash_pairs
+
+    qe = q_simhash_pairs(spark, SF)._jdf.queryExecution()
+    assert "Deduplicate" not in qe.analyzed().toString()
+    groups = re.findall(r"Aggregate \[([^\]]*)\]", qe.optimizedPlan().toString())
+    assert groups and all(re.fullmatch(r"doc_id#\d+L?", g) for g in groups), groups
 
 
 def test_whole_stage_codegen_in_join_path(spark, events):

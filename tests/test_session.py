@@ -1,5 +1,6 @@
 """Session defaults (call-site capture off), the schema-memoizing
-parquet reader, and engine-code shipping by reference or by value."""
+parquet reader (one Py4J round trip a warm read), and engine-code
+shipping by reference or by value."""
 
 import json
 import os
@@ -47,6 +48,30 @@ def test_second_read_launches_no_job(spark, tmp_path):
     assert n2 == 0
     assert second.schema == first.schema
     assert second.count() == 10
+
+
+def test_warm_read_is_one_round_trip(spark, tmp_path):
+    """A warm read reuses the JVM-side reader and hands the memoized
+    schema to the frame: one Py4J round trip, none for ``.columns`` /
+    ``.schema``.  Another session of the application gets a reader of
+    its own."""
+    from test_join_sql import _Calls
+
+    path = str(tmp_path / "t.parquet")
+    _write_part(path, "part-0.parquet", 0, 10)
+    first = read_parquet(spark, path)
+    with _Calls() as calls:
+        df = read_parquet(spark, path)
+        cols, schema = df.columns, df.schema
+    assert calls.n == 1
+    assert cols == first.columns == ["id", "v"]
+    assert schema == first.schema
+    assert df.count() == 10
+    other = spark.newSession()
+    df2 = read_parquet(other, path)
+    assert df2._jdf.sparkSession().equals(other._jsparkSession)
+    assert not df2._jdf.sparkSession().equals(spark._jsparkSession)
+    assert df2.count() == 10
 
 
 def test_added_file_is_read(spark, tmp_path):
